@@ -39,8 +39,8 @@ object Scratch {
         // dedup_cluster_banded's edge relation (the row's dominant cost;
         // Components consumes it through its own checkpointed loop)
         case "banded_jaccard" =>
-          graft.ops.Dedup.bandedJaccardPairs(docs, "doc_id", "text",
-            n = 3, k = 32, bandSize = 4, threshold = 0.6).explain("formatted")
+          graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6,
+            candidates = "banded").explain("formatted")
         // the per-micro-batch probe of stream_dedup_indexed /
         // dedup_incremental_indexed (same dedupBatch plan; the stream
         // row wraps it in foreachBatch)
@@ -55,14 +55,11 @@ object Scratch {
         // final summary scan is state-sized either way)
         case "ivm_fold" =>
           import graft.analytics.Incremental
-          import graft.etl.Enrich
           val li = graft.io.Sources.table(spark, dir, "lineitem")
-          val cutoff = li.agg(max(Enrich.deriveDate(col("l_shipdate"))))
-            .head().getDate(0)
-          val isNew = Enrich.deriveDate(col("l_shipdate")) <=> lit(cutoff)
+          val (isNew, isHistory) = Incremental.daySplit(li)
           val st = java.nio.file.Files
             .createTempDirectory("graft_ivm_plan").toString
-          Incremental.lineitemSummaryState(li.filter(!isNew))
+          Incremental.lineitemSummaryState(li.filter(isHistory))
             .write.mode("overwrite").parquet(s"$st/v1")
           Incremental.mergeStates(
               spark.read.parquet(s"$st/v1"),
@@ -70,50 +67,6 @@ object Scratch {
             .explain("formatted")
           org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(st))
         case other => println(s"[scratch] unknown opplan: $other")
-      }
-    }
-    // per-JOB decomposition of one DedupIndex.dedupBatch invocation
-    // (the stream_dedup_indexed micro-batch probe): registers a
-    // listener, runs the probe once warm, and prints every Spark job's
-    // wall + stage count — names where a 2 s micro-batch actually goes
-    // (decision jobs vs checkpoint vs the main anti-join action).
-    args.filter(_ == "ddxjobs").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      import scala.collection.mutable
-      val docs = graft.io.Sources.table(spark, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(10)) === 0)
-      val idx = graft.ops.DedupIndex.ensureBuilt(spark, dir + "#ddxjobs",
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", 3)
-      def once(): Unit = graft.ops.DedupIndex
-        .dedupBatch(spark, batch, idx, "doc_id", "text", 3, 0.5)
-        .localCheckpoint(true).count()
-      once(); once() // warm
-      val jobs = mutable.LinkedHashMap.empty[Int, (Long, Int, String)]
-      val ends = mutable.Map.empty[Int, Long]
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.synchronized { jobs(s.jobId) = (s.time, s.stageIds.size,
-            Option(s.properties.getProperty("spark.job.description"))
-              .orElse(Option(s.properties.getProperty("callSite.short")))
-              .getOrElse("?")) }
-        override def onJobEnd(
-            e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-          ends.synchronized { ends(e.jobId) = e.time }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      once()
-      val wall = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let the listener bus drain
-      spark.sparkContext.removeSparkListener(listener)
-      println(f"[scratch] ddxjobs wall=$wall%.3f s, jobs=${jobs.size}")
-      var prevEnd = 0L
-      jobs.foreach { case (id, (start, nStages, desc)) =>
-        val dur = ends.get(id).map(e => (e - start) / 1e3).getOrElse(-1.0)
-        val gap = if (prevEnd == 0L) 0.0 else (start - prevEnd) / 1e3
-        prevEnd = ends.getOrElse(id, prevEnd)
-        println(f"[scratch] ddxjobs job=$id stages=$nStages dur=$dur%.3f gap=$gap%.3f  $desc%.90s")
       }
     }
     // dedup_decontaminate stage decomposition (VERDICT r19 #7): times
@@ -188,7 +141,7 @@ object Scratch {
         val bands = t("bands_build")(
           Dedup.bandsOfSigs(sigs.select(col("doc_id"),
             array((0 until 32).map(i => col(s"s$i")): _*).as("sig")),
-            "doc_id", 32, 4).drop("__sig_doc_id"))
+            "doc_id").drop("__sig_doc_id"))
         val cand = t("cand_distinct")(
           bands.toDF("doc_a", "band_idx", "band_key")
             .join(bands.toDF("doc_b", "band_idx", "band_key"),
@@ -202,30 +155,14 @@ object Scratch {
             .agg(collect_set(col("gram")).as("gs"), count(lit(1)).as("ng"))
             .localCheckpoint(true))
         val edge = t("edge_full")(
-          Dedup.bandedJaccardPairs(docs, "doc_id", "text",
-              n = 3, k = 32, bandSize = 4, threshold = 0.6)
+          Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6,
+              candidates = "banded")
             .select("doc_a", "doc_b").localCheckpoint(true))
         println(s"[scratch] cbprobe n_edges=${edge.count()}")
         t("components")(
           graft.ops.Components.connectedComponents(edge, "doc_a", "doc_b")
             .count())
       }
-    }
-    // incremental-dedup auto-edge decision probe: prints the predicted
-    // batch-vs-corpus candidate volume and where useBandedEdge lands at
-    // this sf dir (adjudicates the static-oracle choice for
-    // dedup_incremental and the indexed/bloom rows)
-    args.filter(_ == "incauto").foreach { _ =>
-      import org.apache.spark.sql.functions._
-      val docs = graft.io.Sources.table(spark, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val nBatch = batch.count()
-      val cand = graft.ops.Dedup.predictedGramJoinCandidatesBetween(
-        batch, corpus, "doc_id", "text", 3)
-      println(f"[scratch] incauto dir=$dir nBatch=$nBatch predicted=$cand " +
-        f"perDoc=${cand.toDouble / math.max(nBatch, 1)}%.1f " +
-        s"banded=${graft.ops.Dedup.useBandedEdge(nBatch, cand)}")
     }
     // dedup_multi_signal decomposition probe: times the lexical edge,
     // the semantic edge, their union's components, and the full row
@@ -241,9 +178,8 @@ object Scratch {
       }
       val docs = graft.io.Sources.table(spark, dir, "documents")
       val emb = graft.io.Sources.table(spark, dir, "embeddings")
-      val nLex = t("lexicalEdgeAuto(jaccardPairsAuto 0.6)") {
-        graft.ops.Dedup.jaccardPairsAuto(docs, "doc_id", "text",
-          n = 3, threshold = 0.6, k = 32, bandSize = 4)
+      val nLex = t("lexicalEdgeAuto(jaccardPairs auto 0.6)") {
+        graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6)
           .select("doc_a", "doc_b").localCheckpoint(true).count()
       }
       println(s"[scratch] msprobe lexical_edges=$nLex")
@@ -254,8 +190,7 @@ object Scratch {
           .localCheckpoint(true)
       }
       println(s"[scratch] msprobe semantic_edges=${sem.count()}")
-      val lex = graft.ops.Dedup.jaccardPairsAuto(docs, "doc_id", "text",
-          n = 3, threshold = 0.6, k = 32, bandSize = 4)
+      val lex = graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6)
         .select("doc_a", "doc_b").localCheckpoint(true)
       val (compDf, rounds) = t("components(union)") {
         graft.ops.Components.connectedComponentsWithRounds(
@@ -512,8 +447,8 @@ object Scratch {
     val names = args.filterNot(a =>
       a.startsWith("explain:") || a.startsWith("bpe:") || a.startsWith("full:") ||
       a.startsWith("opplan:") ||
-      a == "bktprobe" || a == "tailprobe" || a == "incauto" || a == "msprobe" ||
-      a == "ddxjobs" || a == "cbprobe" || a == "dcprobe" ||
+      a == "bktprobe" || a == "tailprobe" || a == "msprobe" ||
+      a == "cbprobe" || a == "dcprobe" ||
       a == "decontamprobe" ||
       a == "annprobe" || a == "annprobe_raw" || a == "ppprobe")
     names.foreach { n => SparkEntry.queries(n)(spark, dir).count() }

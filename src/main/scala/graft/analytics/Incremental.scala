@@ -1,6 +1,6 @@
 package graft.analytics
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.etl.Enrich
@@ -23,6 +23,32 @@ import graft.etl.Enrich
   * DuckDB oracle the full view uses.
   */
 object Incremental {
+
+  /** The nightly (isNew, isHistory) split of `lineitem` for the
+    * incremental daily summary: the "new day" is the latest ship date
+    * (one bounded 1-row collect). Both sides are RAW-TIMESTAMP RANGE
+    * predicates — to_date(ts) = cutoff under the UTC session is exactly
+    * ts ∈ [cutoff 00:00, cutoff+1d) — so, unlike a derived-column
+    * equality, they push down to the parquet scan (PushedFilters on
+    * l_shipdate) and a date-sorted table reads O(day) row groups for
+    * the day side. A NULL ship date goes to the HISTORY side (the
+    * oracle keeps its NULL group); with no non-NULL ship date at all
+    * (an empty lineitem) there is no new day and everything is
+    * history.
+    */
+  def daySplit(lineitem: DataFrame): (Column, Column) = {
+    val cutoff = lineitem.agg(max(Enrich.deriveDate(col("l_shipdate"))))
+      .head().getDate(0)
+    if (cutoff == null) (lit(false), lit(true))
+    else {
+      val ts = col("l_shipdate")
+      val dayStart = lit(cutoff).cast("timestamp")
+      val dayEnd = lit(java.sql.Date.valueOf(cutoff.toLocalDate.plusDays(1)))
+        .cast("timestamp")
+      (ts >= dayStart && ts < dayEnd,
+        ts.isNull || ts < dayStart || ts >= dayEnd)
+    }
+  }
 
   /** Partial state of the lineitem daily summary: one row per
     * (l_returnflag, l_linestatus, ship_date) with exact decimal sums,

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 /** Persisted dedup state for INCREMENTAL ingest — the production shape
   * of daily dedup against a standing corpus.
   *
-  * [[Dedup.incremental]] is semantically right but re-derives the
-  * corpus's fingerprint set and gram relation FROM RAW TEXT on every
-  * batch: at 100 TB that is a full corpus scan + tokenize + explode
-  * per day. The index materializes that state ONCE:
+  * [[Dedup.incremental]] derives the corpus state ([[CorpusState]])
+  * FROM RAW TEXT on every batch: at 100 TB that is a full corpus scan
+  * + tokenize + explode per day. The index materializes the same state
+  * ONCE:
   *
   *   - `fps/`   — (fp: bigint) distinct 60-bit fingerprints of the
   *     normalized corpus text (exact-dup membership);
@@ -39,7 +39,7 @@ import org.apache.spark.sql.functions._
   *   - `hot/` — (gram: bigint) the capped-out grams, tiny by
   *     construction (at most |corpus grams| / maxDf rows): the batch
   *     side anti-joins it so both sides compute Jaccard over the same
-  *     capped sets, matching [[Dedup.jaccardPairsBetween]] exactly;
+  *     capped sets;
   *   - `bloom/` — one row (nbits, word→bits map): a Bloom filter over
   *     `fps/`, rebuilt from it after every mutation (derived state,
   *     swap-protocol writes). `dedupBatch(useBloom = true)` probes it
@@ -104,37 +104,75 @@ object DedupIndex {
       Layout.rewriteInPlace(spark, s"$path/bloom", commitManifest = false)(writeTo)
   }
 
-  /** MinHash signature width / band slice persisted in `sigs/` —
-    * matches the registry's K=32, bandSize=4 banding so the index
-    * probe is byte-identical to [[Dedup.incrementalBanded]] on the
-    * same state. A k change is an index FORMAT change (rebuild).
+  /** MinHash signature width / band slice of every banded candidate
+    * stage ([[Dedup.jaccardPairs]], [[Dedup.incremental]], the
+    * persisted `sigs/`, and the registry's generated oracle SQL). A k
+    * change is an index FORMAT change (rebuild).
     */
   val SigK: Int = 32
   val SigBandSize: Int = 4
+
+  /** The corpus side of batch dedup, as [[dedupAgainst]] reads it:
+    * `fps` (fp: bigint) fingerprints of the normalized text, `grams`
+    * (doc_id, gram: bigint, n_grams) df-capped gram hashes with each
+    * doc's capped gram count, `hot` (gram: bigint) the capped-out
+    * grams, and `sigs` (doc_id, sig: array<bigint>[SigK]) MinHash
+    * signatures. Each access re-derives the relation: a parquet read
+    * of the index, or a view over the live derivation's checkpoint.
+    */
+  private[ops] trait CorpusState {
+    def fps: DataFrame
+    def grams: DataFrame
+    def hot: DataFrame
+    def sigs: DataFrame
+  }
+
+  /** The state of a live corpus — what [[build]] persists and
+    * [[Dedup.incremental]] probes unpersisted. ONE checkpoint of the
+    * hashed gram relation ([[Dedup.hashedGramTable]]) feeds the df
+    * pass, the capped grams and the signatures, so the corpus text is
+    * tokenized once; the df pass is map-side combined and the hot set
+    * bounded-broadcast ([[Dedup.cappedGrams]]' skew discipline).
+    */
+  private[ops] def corpusState(corpus: DataFrame, idCol: String,
+                               textCol: String, n: Int,
+                               maxDf: Int): CorpusState = new CorpusState {
+    private lazy val raw =
+      Dedup.hashedGramTable(corpus, idCol, textCol, n).localCheckpoint()
+    lazy val hot: DataFrame = Dedup.hotGrams(raw, maxDf)
+    def fps: DataFrame = corpus.select(TextOps.fingerprint(col(textCol)).as("fp"))
+    // per-doc sizes counted after the cap: a map-side-combined
+    // aggregate joined back on the doc key
+    def grams: DataFrame = {
+      val kept = raw.join(hot, Seq("gram"), "left_anti").select("doc_id", "gram")
+      kept.join(kept.groupBy("doc_id").agg(count(lit(1)).as("n_grams")), "doc_id")
+    }
+    def sigs: DataFrame =
+      Dedup.sigArrays(Dedup.minhashSignaturesOfHashedGrams(raw, SigK))
+  }
+
+  /** The persisted state under an index `path`. */
+  private def indexState(spark: SparkSession, path: String): CorpusState =
+    new CorpusState {
+      def fps: DataFrame = spark.read.parquet(s"$path/fps")
+      def grams: DataFrame = spark.read.parquet(s"$path/grams")
+      def hot: DataFrame = spark.read.parquet(s"$path/hot")
+      def sigs: DataFrame = spark.read.parquet(s"$path/sigs")
+    }
 
   /** Materialize the corpus's dedup state under `path` (overwrite). */
   def build(corpus: DataFrame, idCol: String, textCol: String, n: Int,
             path: String, nFiles: Int = 32,
             maxDf: Int = Dedup.DefaultMaxDf): Unit = {
-    corpus.select(TextOps.fingerprint(col(textCol)).as("fp")).distinct()
-      .write.mode("overwrite").parquet(s"$path/fps")
+    val st = corpusState(corpus, idCol, textCol, n, maxDf)
+    st.fps.distinct().write.mode("overwrite").parquet(s"$path/fps")
     rebuildBloom(corpus.sparkSession, path)
-    // sigs/ — (doc_id, sig: array<bigint> of SigK MinHash components):
-    // the banded candidate stage's corpus side. ~256 bytes/doc,
-    // independent of document length — the relation that lets a
-    // gram-saturated standing corpus keep LINEAR daily candidates
-    // (band equi-join on signature slices) with corpus text untouched
-    writeSigs(corpus, idCol, textCol, n, s"$path/sigs", overwrite = true)
-    val raw = rawGrams(corpus, idCol, textCol, n)
-    raw.groupBy("gram").agg(count(lit(1)).as("__df"))
-      .filter(col("__df") > maxDf).select("gram")
-      .write.mode("overwrite").parquet(s"$path/hot")
-    val spark = corpus.sparkSession
-    val capped = raw
-      .join(spark.read.parquet(s"$path/hot"), Seq("gram"), "left_anti")
-      .withColumn("n_grams",
-        count(lit(1)).over(Window.partitionBy(col("doc_id"))))
-    Layout.writeRangeSorted(capped, s"$path/grams", nFiles, "gram")
+    // sigs/ — ~256 bytes/doc, independent of document length: the
+    // relation that lets a gram-saturated standing corpus keep LINEAR
+    // daily candidates (band equi-join on signature slices)
+    st.sigs.write.mode("overwrite").parquet(s"$path/sigs")
+    st.hot.write.mode("overwrite").parquet(s"$path/hot")
+    Layout.writeRangeSorted(st.grams, s"$path/grams", nFiles, "gram")
   }
 
   /** Write a deduped batch's state back into the index (append) — the
@@ -177,7 +215,7 @@ object DedupIndex {
     // until the next build — the same degrade-then-re-layout contract
     // as the range layout above
     val fGrams = Future {
-      rawGrams(s, idCol, textCol, n)
+      Dedup.hashedGramTable(s, idCol, textCol, n)
         .join(spark.read.parquet(s"$path/hot"), Seq("gram"), "left_anti")
         .withColumn("n_grams",
           count(lit(1)).over(Window.partitionBy(col("doc_id"))))
@@ -185,7 +223,8 @@ object DedupIndex {
         .write.mode("append").parquet(s"$path/grams")
     }
     val fSigs = Future {
-      writeSigs(s, idCol, textCol, n, s"$path/sigs", overwrite = false)
+      Dedup.sigArrays(Dedup.minhashSignatures(s, idCol, textCol, n, SigK))
+        .write.mode("append").parquet(s"$path/sigs")
     }
     // await ALL THREE before surfacing any failure (ADVICE r19): an
     // early throw on the first await would propagate while the other
@@ -210,14 +249,6 @@ object DedupIndex {
     rebuildBloom(spark, path)
   }
 
-  private def writeSigs(docs: DataFrame, idCol: String, textCol: String,
-                        n: Int, dst: String, overwrite: Boolean): Unit = {
-    val sigs = Dedup.minhashSignatures(docs, idCol, textCol, n, SigK)
-      .select(col("doc_id"),
-        array((0 until SigK).map(i => col(s"s$i")): _*).as("sig"))
-    sigs.write.mode(if (overwrite) "overwrite" else "append").parquet(dst)
-  }
-
   /** Restore the gram table's range layout after a run of [[append]]s
     * (appended files overlap the original gram ranges — pruning
     * degrades gracefully but monotonically until re-layout) and
@@ -239,13 +270,6 @@ object DedupIndex {
     }
   }
 
-  /** The index's raw gram relation for a document set: (doc_id, gram
-    * hash) before the df cap. Hashes only — text never persists.
-    */
-  private def rawGrams(docs: DataFrame, idCol: String, textCol: String,
-                       n: Int): DataFrame =
-    Dedup.hashedGramTable(docs, idCol, textCol, n)
-
   /** [[Dedup.incremental]] against the PERSISTED index instead of the
     * corpus: byte-identical output FOR THE INDEXED STATE — the only
     * corpus-sized relations in the plan are the index parquet tables;
@@ -261,24 +285,40 @@ object DedupIndex {
                  idCol: String, textCol: String, n: Int,
                  threshold: Double, useBloom: Boolean = false,
                  candidates: String = "auto"): DataFrame = {
-    require(Set("auto", "gram", "banded")(candidates),
-      s"candidates must be auto|gram|banded, got $candidates")
     // self-heal a crashed relayout before reading (a stranded dir
     // would fail the read loudly; restoring is strictly better)
     Layout.restoreIfCrashed(spark, s"$indexPath/grams")
     Layout.restoreIfCrashed(spark, s"$indexPath/fps")
     Layout.restoreIfCrashed(spark, s"$indexPath/bloom")
     Layout.restoreIfCrashed(spark, s"$indexPath/sigs")
+    dedupAgainst(batch, indexState(spark, indexPath), idCol, textCol, n,
+      threshold, candidates, "dedup_index",
+      bloom = if (useBloom) Some(spark.read.parquet(s"$indexPath/bloom")) else None)
+  }
+
+  /** The batch-vs-corpus dedup kernel behind [[dedupBatch]] (persisted
+    * state) and [[Dedup.incremental]] (live state): in-batch exact
+    * winners, the fingerprint anti join, and the near-dup anti join
+    * with the candidate stage chosen per `candidates`. The auto
+    * decision's statistic and selected edge are recorded under
+    * `attr` ("<attr>.decision", ".batch_cand_per_doc", ".edge_banded").
+    * `bloom`, when given, is the persisted sidecar row over `fps`.
+    */
+  private[ops] def dedupAgainst(batch: DataFrame, corpus: CorpusState,
+                                idCol: String, textCol: String, n: Int,
+                                threshold: Double, candidates: String,
+                                attr: String,
+                                bloom: Option[DataFrame] = None): DataFrame = {
+    Dedup.requireCandidates(candidates)
     // no .distinct() on the fps relation (r20): it only ever feeds
     // LeftAnti probes (directly, or through the bloom-pruned path),
-    // which are duplicate-insensitive — the distinct was a
-    // corpus-sized aggregate + exchange per batch for nothing
-    // (guide §2.4)
-    val corpusFps = spark.read.parquet(s"$indexPath/fps")
-      .select(col("fp").as("__fp"))
-    val corpusGrams = spark.read.parquet(s"$indexPath/grams")
+    // which are duplicate-insensitive (guide §2.4)
+    val corpusFps = corpus.fps.select(col("fp").as("__fp"))
+    // a pinned banded stage never reads the corpus gram relation (on a
+    // live state that would pay the corpus df pass for nothing)
+    val corpusGrams = Option.when(candidates != "banded")(corpus.grams
       .select(col("doc_id").as("right_id"), col("gram"),
-        col("n_grams").as("nr"))
+        col("n_grams").as("nr")))
     val b1 = Dedup.exact(batch, idCol, textCol)
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
     // The membership anti join's EXPENSIVE side is the corpus: its
@@ -296,9 +336,8 @@ object DedupIndex {
     //   - the persisted `bloom/` sidecar routes definitely-new winners
     //     around the join entirely, so the probe side carries only
     //     true duplicates plus ~0.5% false positives.
-    val b2 =
-      if (useBloom) {
-        val bloomRow = spark.read.parquet(s"$indexPath/bloom")
+    val b2 = bloom match {
+      case Some(bloomRow) =>
         val nBits = bloomRow.select("nbits").head().getInt(0)
         // b1 feeds the corpus-side filter build AND both branches of
         // the union below — materialize the (batch-sized) winner set
@@ -320,29 +359,22 @@ object DedupIndex {
         val verified = probed.filter(mightMatch).drop("bloom")
           .join(prunedCorpus, Seq("__fp"), "left_anti")
         definitelyNew.unionByName(verified).drop("__fp")
-      } else {
+      case None =>
         b1.join(corpusFps, Seq("__fp"), "left_anti").drop("__fp")
-      }
-    // Candidate-stage selection — the same [[Dedup.useBandedEdge]]
-    // decision rule as incrementalAuto, but priced off the INDEX: the
+    }
+    // Candidate-stage selection ([[Dedup.useBandedEdge]]): the
     // predicted exact-join volume Σ_g df_b(g)·df_c(g) is one pass over
-    // the (range-pruned) index gram table behind a broadcast of the
-    // batch's per-gram counts; corpus text is never touched either
-    // way. The exact path keeps recall-lossless Jaccard while the
-    // prediction stays O(|batch|); the banded path probes the
-    // persisted sigs/ relation — candidates collide on signature
-    // equality, so a gram-saturated standing corpus (the r16 docs
-    // ladder's 4.4×-for-3× regime) stays linear per day.
-    // ONE materialization of the batch's hashed gram relation per
-    // batch (r20, guide §1.2): the auto decision's per-gram counts
-    // AND the selected candidate stage (MinHash signatures on the
-    // banded path, capped batch grams on the gram path) all consume
-    // it — previously the batch was tokenized once inside the
-    // decision and AGAIN inside the probe plan, a full extra batch
-    // scan per micro-batch. Batch-sized (long, long) rows, executor-
-    // resident; the eager localCheckpoint is the one action that
-    // resolves the folded batch-count Observation (must-run-an-action
-    // contract, ADVICE r19 — pinned in OpsSpec).
+    // the corpus gram relation (range-pruned on the index) behind a
+    // broadcast of the batch's per-gram counts. The exact path keeps
+    // recall-lossless Jaccard while the prediction stays O(|batch|);
+    // the banded path probes the corpus signatures — candidates collide
+    // on signature equality, so a gram-saturated standing corpus (the
+    // r16 docs ladder's 4.4×-for-3× regime) stays linear per day.
+    // ONE materialization of the batch's hashed gram relation feeds
+    // the decision AND the selected stage (signatures on the banded
+    // path, capped batch grams on the gram path). Batch-sized (long,
+    // long) rows, executor-resident; the eager localCheckpoint is the
+    // one action that resolves the folded batch-count Observation.
     val obs = new org.apache.spark.sql.Observation()
     lazy val bGrams = Dedup.hashedGramTable(
         batch.observe(obs, count(lit(1)).as("n")), idCol, textCol, n)
@@ -351,62 +383,48 @@ object DedupIndex {
       case "banded" => true
       case "gram"   => false
       case _ =>
-        val (cand, nBatch) =
-          graft.BenchAttribution.timed("dedup_index.decision") {
-            // the section now includes the shared gram materialization
-            // (it was previously re-derived inside boundedBroadcast);
-            // the probe-side reuse is what pays it back
-            val c = predictedIndexJoinCandidatesOfGrams(spark, bGrams,
-              indexPath)
-            (c, obs.get("n").asInstanceOf[Long])
-          }
+        val (cand, nBatch) = graft.BenchAttribution.timed(s"$attr.decision") {
+          val c = predictedIndexJoinCandidatesOfGrams(bGrams, corpus.grams)
+          (c, obs.get.getOrElse("n", 0L).asInstanceOf[Long])
+        }
         val banded = Dedup.useBandedEdge(nBatch, cand)
         // the selected edge is part of the row's CONTRACT (banded =
         // MinHash-estimate membership, gram = exact Jaccard) and the
         // static oracles state one branch — surface the decision in
         // the bench artifact so a flip reads as a named change, not
         // an unexplained hash mismatch (ADVICE r17)
-        graft.BenchAttribution.record("dedup_index.batch_cand_per_doc",
+        graft.BenchAttribution.record(s"$attr.batch_cand_per_doc",
           cand.toDouble / math.max(nBatch, 1L))
-        graft.BenchAttribution.record("dedup_index.edge_banded",
+        graft.BenchAttribution.record(s"$attr.edge_banded",
           if (banded) 1.0 else 0.0)
         banded
     }
+    // hits come from the RAW batch, not b2: the anti join below can
+    // only remove rows already gone from b2, and keeping the
+    // exact-dedup aggregate out of the gram pipeline avoids
+    // re-executing it there
     val hits =
       if (useBanded) {
-        // banded candidates + MinHash-estimate membership: the corpus
-        // side is the persisted sigs/ table (SigK-component signatures,
-        // ~256 B/doc); batch signatures are computed live from today's
-        // batch. Byte-identical to Dedup.incrementalBanded on the
-        // indexed state — both sides band through Dedup.bandsOfSigs
-        val corpusBands = Dedup.bandsOfSigs(
-          spark.read.parquet(s"$indexPath/sigs"), "right_id",
-          SigK, SigBandSize)
-        // signatures from the SHARED gram checkpoint (values identical
-        // to minhashSignatures on the raw batch by construction)
-        val batchSigs = Dedup
-          .minhashSignaturesOfHashedGrams(bGrams, SigK)
-          .select(col("doc_id"),
-            array((0 until SigK).map(i => col(s"s$i")): _*).as("sig"))
-        val batchBands = Dedup.bandsOfSigs(batchSigs, "left_id",
-          SigK, SigBandSize)
-        Dedup.bandedPairsFromBands(batchBands, corpusBands, SigK, threshold)
+        // MinHash-estimate membership: both sides band through
+        // Dedup.bandsOfSigs; batch signatures come from the shared gram
+        // checkpoint (values identical to minhashSignatures by
+        // construction)
+        val corpusBands = Dedup.bandsOfSigs(corpus.sigs, "right_id")
+        val batchBands = Dedup.bandsOfSigs(
+          Dedup.sigArrays(Dedup.minhashSignaturesOfHashedGrams(bGrams, SigK)),
+          "left_id")
+        Dedup.bandedPairsFromBands(batchBands, corpusBands, threshold)
           .select(col("left_id").as(idCol)).distinct()
       } else {
-        // batch grams from the RAW batch (not b2) — same subplan-
-        // isolation reasoning as Dedup.incremental: the anti join below
-        // can only remove rows already gone from b2, and keeping the
-        // exact-dedup window out of the gram pipeline avoids
-        // re-executing it there. Hot corpus grams (df > maxDf at build)
-        // are dropped BEFORE the size window so the batch's n_grams
-        // match the index's capped sets. Reads the shared checkpoint.
+        // hot corpus grams are dropped BEFORE the size window so the
+        // batch's n_grams match the corpus's capped sets
         val bg = bGrams
-          .join(spark.read.parquet(s"$indexPath/hot"), Seq("gram"), "left_anti")
+          .join(corpus.hot, Seq("gram"), "left_anti")
           .withColumn("n_grams",
             count(lit(1)).over(Window.partitionBy(col("doc_id"))))
           .select(col("doc_id").as("left_id"), col("gram"),
             col("n_grams").as("nl"))
-        bg.join(corpusGrams, "gram")
+        bg.join(corpusGrams.get, "gram")
           .groupBy("left_id", "right_id")
           .agg(count(lit(1)).as("n_inter"),
             max(col("nl")).as("nl"), max(col("nr")).as("nr"))
@@ -430,40 +448,32 @@ object DedupIndex {
   def predictedIndexJoinCandidates(spark: SparkSession, batch: DataFrame,
                                    indexPath: String, idCol: String,
                                    textCol: String, n: Int): Long =
-    // checkpoint so the gram pipeline (and any Observation the caller
-    // attached to `batch`) evaluates exactly once — the OfGrams body
-    // consumes its input in two actions (bound count + prediction)
-    predictedIndexJoinCandidatesOfGrams(spark,
-      rawGrams(batch, idCol, textCol, n).localCheckpoint(true), indexPath)
+    predictedIndexJoinCandidatesOfGrams(
+      Dedup.hashedGramTable(batch, idCol, textCol, n).localCheckpoint(true),
+      indexState(spark, indexPath).grams)
 
-  /** [[predictedIndexJoinCandidates]] over an already-built (usually
-    * checkpointed) batch gram relation — [[dedupBatch]] feeds the
-    * SAME materialization to this prediction and to the selected
-    * candidate stage, so the batch is tokenized once per micro-batch.
+  /** Σ_g df_b(g)·df_c(g) of a batch gram relation against a corpus's
+    * capped gram relation ([[CorpusState.grams]]).
     *
-    * CONTRACT (ADVICE r19): runs EXACTLY ONE action (the terminal
-    * `.head()`) — when the caller's gram relation carries an
-    * `Observation` (or is the eagerly-checkpointed relation that
-    * resolved one), laziness here would hang `obs.get`, and a plan
-    * that consumed the observed subtree twice would double-count the
-    * metric. Pinned in OpsSpec.
+    * CONTRACT (ADVICE r19/r20): `batchGrams` must already be
+    * materialized — both callers pass the eager checkpoint — because
+    * the body runs TWO actions over it: `count()` bounds the broadcast,
+    * then `.head()` computes the sum. Over an un-materialized input
+    * each action would re-run the gram pipeline, and an `Observation`
+    * on it would resolve on the first and never see the second.
     */
   private[ops] def predictedIndexJoinCandidatesOfGrams(
-      spark: SparkSession, batchGrams: DataFrame,
-      indexPath: String): Long = {
+      batchGrams: DataFrame, corpusGrams: DataFrame): Long = {
     val bdf = batchGrams.groupBy("gram").agg(count(lit(1)).as("dfl"))
     // bounded broadcast WITHOUT boundedBroadcast's own checkpoint +
     // count jobs (r20): |bdf| ≤ |batchGrams| by construction (one row
-    // per distinct gram), and the caller hands us the (usually
-    // checkpointed) gram relation, so one cheap count of it bounds the
-    // broadcast — the aggregate then evaluates once inside the
-    // broadcast build instead of paying a separate materialization job
-    // per micro-batch. Over the bound, the join degrades to the
+    // per distinct gram), so one cheap count of the materialized input
+    // bounds the broadcast. Over the bound, the join degrades to the
     // AQE-planned shuffle exactly like boundedBroadcast.
     val bdfSide =
       if (batchGrams.count() <= Dedup.HotBroadcastMaxRows) broadcast(bdf)
       else bdf
-    val predicted = spark.read.parquet(s"$indexPath/grams")
+    val predicted = corpusGrams
       .join(bdfSide, "gram")
       .agg(sum(col("dfl")).as("s2")).head()
     if (predicted.isNullAt(0)) 0L else predicted.getLong(0)

@@ -131,29 +131,9 @@ object AnalyticsQueries {
          |ORDER BY ship_date DESC, l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
       import graft.analytics.Incremental
       val li = table(s, dir, "lineitem")
-      // the "new day" = the latest ship date (bounded 1-row collect)
-      val cutoff = graft.BenchAttribution.timed("view_ivm.cutoff") {
-        li.agg(max(Enrich.deriveDate(col("l_shipdate"))))
-          .head().getDate(0)
+      val (isNew, isHistory) = graft.BenchAttribution.timed("view_ivm.cutoff") {
+        Incremental.daySplit(li)
       }
-      // The day/history split as RAW-TIMESTAMP RANGE predicates (r20):
-      // to_date(ts) = cutoff under the UTC session is exactly
-      // ts ∈ [cutoff 00:00, cutoff+1d) — and unlike a derived-column
-      // equality, the range comparison PUSHES DOWN to the parquet scan
-      // (PushedFilters on l_shipdate), so on a date-sorted/partitioned
-      // production table the day side reads O(day) row groups instead
-      // of rescanning history (guide §6; at the unsorted gate corpus
-      // min/max spans everything and the gain is the removed per-row
-      // cast only). Null handling matches the old null-safe <=> split:
-      // a NULL ship date goes to the HISTORY side explicitly (a bare
-      // !(range) would drop it from both — the oracle keeps its NULL
-      // group).
-      val dayStart = lit(cutoff).cast("timestamp")
-      val dayEnd = lit(java.sql.Date.valueOf(cutoff.toLocalDate.plusDays(1)))
-        .cast("timestamp")
-      val isNew = col("l_shipdate") >= dayStart && col("l_shipdate") < dayEnd
-      val isHistory = col("l_shipdate").isNull ||
-        col("l_shipdate") < dayStart || col("l_shipdate") >= dayEnd
       val stateDir = java.nio.file.Files
         .createTempDirectory("graft_ivm_state").toString
       try {

@@ -165,7 +165,8 @@ object ExtensionQueries {
        |  FROM scored) WHERE rank <= 3 ORDER BY q_id, rank""".stripMargin
 
   // ---- generated MinHash SQL (coefficients shared with Dedup) ----
-  private val K = 32
+  private val K = graft.ops.DedupIndex.SigK
+  private val BandSize = graft.ops.DedupIndex.SigBandSize
   private val coeffs = Dedup.hashCoeffs(K)
   private[queries] val minhashSigSql: String = {
     val mins = coeffs.zipWithIndex.map { case ((a, b), i) =>
@@ -177,8 +178,9 @@ object ExtensionQueries {
        |  FROM gh GROUP BY doc_id)""".stripMargin
   }
   private[queries] val minhashBandsSql: String = {
-    val bands = (0 until K / 4).map { bIdx =>
-      val key = (bIdx * 4 until bIdx * 4 + 4).map(i => s"s$i").mkString("::VARCHAR || ',' || ")
+    val bands = (0 until K / BandSize).map { bIdx =>
+      val key = (bIdx * BandSize until (bIdx + 1) * BandSize)
+        .map(i => s"s$i").mkString("::VARCHAR || ',' || ")
       s"SELECT doc_id, $bIdx AS band_idx, $key AS band_key FROM sig"
     }.mkString("\n  UNION ALL ")
     s"bands AS (\n  $bands)"
@@ -241,50 +243,42 @@ object ExtensionQueries {
   private val htmlSuffix =
     " &amp; more &lt;markup&gt;&nbsp;&quot;here&quot;</p><br/></body></html>"
 
-  /** The trigram Jaccard ≥ 0.6 pair relation shared by the cluster
-    * family (dedup_cluster, dedup_near_corpus, dedup_multi_signal's
-    * lexical edge): each query independently rebuilding it cost ~3 s
-    * × 3 locally, all spent in the same gram explode + band join. One
-    * eager localCheckpoint per (application, sf dir) materializes the
-    * (doc_a, doc_b) edge list once — which is also the production
-    * shape: a pair relation IS a pipeline artifact, written once and
-    * consumed by clustering, representative election, and reporting
-    * alike, not recomputed per consumer. Keyed like DedupIndex's
-    * cache so a new application rebuilds.
+  /** The cluster family's trigram Jaccard ≥ 0.6 lexical edge
+    * (dedup_cluster, dedup_near_corpus, dedup_multi_signal) with the
+    * given [[Dedup.jaccardPairs]] candidate stage: "auto" is the
+    * family's DEFAULT — on the gate corpora it lands on BANDED at every
+    * graded scale (28–253 predicted candidates/doc vs the 8/doc budget;
+    * the fixed 31-word vocabulary saturates immediately), so the static
+    * oracles state the banded edge — and "gram" the recall-lossless
+    * baseline of the _exact/_recall_tune rows. One eager
+    * localCheckpoint per (application, sf dir, stage) materializes the
+    * (doc_a, doc_b) edge list once: a pair relation IS a pipeline
+    * artifact, written once and consumed by clustering, representative
+    * election, and reporting alike. Keyed like DedupIndex's cache so a
+    * new application rebuilds.
     */
-  private val pairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.DataFrame]()
-  private def trigramPairs(s: org.apache.spark.sql.SparkSession,
-                           dir: String): org.apache.spark.sql.DataFrame =
-    pairCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ =>
-      Dedup.ngramJaccardPairs(table(s, dir, "documents"), "doc_id", "text", 3, 0.6)
+  private val pairCache = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, String), org.apache.spark.sql.DataFrame]()
+  private def lexicalEdge(s: org.apache.spark.sql.SparkSession, dir: String,
+                          candidates: String): org.apache.spark.sql.DataFrame =
+    pairCache.computeIfAbsent((s.sparkContext.applicationId, dir, candidates), _ =>
+      Dedup.jaccardPairs(table(s, dir, "documents"), "doc_id", "text", 3, 0.6,
+          candidates)
         .select("doc_a", "doc_b").localCheckpoint(true))
 
-  /** The cluster family's DEFAULT lexical edge: construction
-    * auto-selected from corpus statistics ([[Dedup.jaccardPairsAuto]]
-    * — exact gram join while its predicted candidate volume is O(n),
-    * MinHash-banded exact-verify once the gram space saturates). On
-    * the gate corpora the rule lands on BANDED at every graded scale
-    * (28–253 predicted candidates/doc vs the 8/doc budget — the fixed
-    * 31-word vocabulary saturates immediately), so the static oracles
-    * state the banded edge; the flip point is a corpus whose
-    * vocabulary grows with the data. Cached per (application, sf dir)
-    * like the exact relation — a pair relation is a pipeline
-    * artifact, not recomputed per consumer.
+  /** The daily-ingest split of the incremental dedup rows: (batch =
+    * doc_id % 5 == 0, standing corpus = the rest).
     */
-  private val autoPairCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), org.apache.spark.sql.DataFrame]()
-  private def lexicalEdgeAuto(s: org.apache.spark.sql.SparkSession,
-                              dir: String): org.apache.spark.sql.DataFrame =
-    autoPairCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ =>
-      Dedup.jaccardPairsAuto(table(s, dir, "documents"), "doc_id", "text",
-          n = 3, threshold = 0.6, k = K, bandSize = 4)
-        .select("doc_a", "doc_b").localCheckpoint(true))
+  private def dailySplit(s: org.apache.spark.sql.SparkSession, dir: String) = {
+    val docs = table(s, dir, "documents")
+    val inBatch = pmod(col("doc_id"), lit(5)) === 0
+    (docs.filter(inBatch), docs.filter(!inBatch))
+  }
 
   /** Banded-edge CTE block shared by the cluster family's oracles
     * (dedup_cluster, dedup_cluster_banded, dedup_near_corpus):
     * MinHash-banded candidates verified by exact df-capped Jaccard —
-    * the SQL mirror of [[Dedup.bandedJaccardPairs]]. Ends with
+    * the SQL mirror of [[Dedup.jaccardPairs]]' "banded" edge. Ends with
     * `jac(da, db)`, the ≥ 0.6 edge relation.
     */
   private lazy val bandedJacCtes: String =
@@ -1356,8 +1350,8 @@ object ExtensionQueries {
          |FROM inter JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
          |WHERE CAST(ni AS DOUBLE) / CAST(sa.nn + sb.nn - ni AS DOUBLE) >= 0.6::DOUBLE
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      Dedup.bandedJaccardPairs(table(s, dir, "documents"), "doc_id", "text",
-          n = 3, k = K, bandSize = 4, threshold = 0.6)
+      Dedup.jaccardPairs(table(s, dir, "documents"), "doc_id", "text", 3, 0.6,
+          candidates = "banded")
         .orderBy("doc_a", "doc_b")
     },
 
@@ -1382,7 +1376,8 @@ object ExtensionQueries {
          |FROM inter JOIN sizes sa ON sa.doc_id = da JOIN sizes sb ON sb.doc_id = db
          |WHERE CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) >= 0.6::DOUBLE
          |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-      Dedup.ngramJaccardPairs(table(s, dir, "documents"), "doc_id", "text", 3, 0.6)
+      Dedup.jaccardPairs(table(s, dir, "documents"), "doc_id", "text", 3, 0.6,
+          candidates = "gram")
         .orderBy("doc_a", "doc_b")
     },
 
@@ -1440,10 +1435,11 @@ object ExtensionQueries {
          |  END AS recall
          |FROM m""".stripMargin) { (s, dir) =>
       val docs = table(s, dir, "documents")
-      val exactP = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.6)
+      val exactP = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6,
+          candidates = "gram")
         .select(col("doc_a"), col("doc_b"), lit(1L).as("src"))
-      val bandP = Dedup.bandedJaccardPairs(docs, "doc_id", "text",
-          n = 3, k = K, bandSize = 4, threshold = 0.6)
+      val bandP = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.6,
+          candidates = "banded")
         .select(col("doc_a"), col("doc_b"), lit(2L).as("src"))
       exactP.unionByName(bandP)
         .groupBy("doc_a", "doc_b").agg(sum(col("src")).as("sv"))
@@ -1471,7 +1467,7 @@ object ExtensionQueries {
          |FROM cand JOIN sig sa ON sa.doc_id = da JOIN sig sb ON sb.doc_id = db
          |WHERE $minhashEstSql >= 0.5 ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
       Dedup.minhashLshPairs(table(s, dir, "documents"), "doc_id", "text",
-          n = 3, k = K, bandSize = 4, threshold = 0.5)
+          n = 3, threshold = 0.5)
         .orderBy("doc_a", "doc_b")
     },
 
@@ -1985,7 +1981,7 @@ object ExtensionQueries {
       * near-dup graph (iterative min-label propagation; DuckDB
       * verifies with a recursive CTE transitive closure). Turns pair
       * matches into dedup groups. The LEXICAL EDGE is auto-selected
-      * from corpus statistics ([[Dedup.jaccardPairsAuto]] — exact
+      * from corpus statistics ([[Dedup.jaccardPairs]] "auto" — exact
       * gram join only while its predicted candidate volume is O(n);
       * the gate corpora's saturated 31-word vocabulary puts the rule
       * on the BANDED edge at every graded scale, which the static
@@ -1997,7 +1993,7 @@ object ExtensionQueries {
          |$closureCtes
          |SELECT node, component FROM comp ORDER BY node""".stripMargin) { (s, dir) =>
       graft.ops.Components.connectedComponents(
-          lexicalEdgeAuto(s, dir), "doc_a", "doc_b")
+          lexicalEdge(s, dir, "auto"), "doc_a", "doc_b")
         .orderBy("node")
     },
 
@@ -2019,7 +2015,7 @@ object ExtensionQueries {
          |$closureCtes
          |SELECT node, component FROM comp ORDER BY node""".stripMargin) { (s, dir) =>
       graft.ops.Components.connectedComponents(
-          trigramPairs(s, dir), "doc_a", "doc_b")
+          lexicalEdge(s, dir, "gram"), "doc_a", "doc_b")
         .orderBy("node")
     },
 
@@ -2040,8 +2036,8 @@ object ExtensionQueries {
          |$closureCtes
          |SELECT node, component FROM comp ORDER BY node""".stripMargin) { (s, dir) =>
       graft.ops.Components.connectedComponents(
-          Dedup.bandedJaccardPairs(table(s, dir, "documents"), "doc_id", "text",
-            n = 3, k = K, bandSize = 4, threshold = 0.6)
+          Dedup.jaccardPairs(table(s, dir, "documents"), "doc_id", "text", 3, 0.6,
+              candidates = "banded")
             .select("doc_a", "doc_b"),
           "doc_a", "doc_b")
         .orderBy("node")
@@ -2058,7 +2054,7 @@ object ExtensionQueries {
       * max(8, ⌈log₂ n⌉ − 7) — SCALING.md §3's sizing rule as code),
       * so bucket population stays bounded as the corpus grows; the
       * lexical edge is the cluster family's AUTO-SELECTED relation
-      * ([[lexicalEdgeAuto]] / [[Dedup.jaccardPairsAuto]] — exact gram
+      * ([[lexicalEdge]] / [[Dedup.jaccardPairs]] "auto" — exact gram
       * join while predicted candidates stay O(n), MinHash-banded
       * exact-verify once gram space saturates). The r16 docs ladder
       * measured exactly why the lexical edge cannot stay on the raw
@@ -2073,7 +2069,7 @@ object ExtensionQueries {
       * explicitly-suffixed _recall_tune twin. */
     Q("dedup_multi_signal",
       multiSignalSql(NBANDS_AUTO, bandedLexical = true)) { (s, dir) =>
-      val lexical = lexicalEdgeAuto(s, dir)
+      val lexical = lexicalEdge(s, dir, "auto")
       val semantic = Similarity.lshPairsAuto(
           table(s, dir, "embeddings"), "vec_id", "embedding",
           nBands = NBANDS_AUTO, threshold = 0.4)
@@ -2096,7 +2092,7 @@ object ExtensionQueries {
       * suffixed so the obvious key carries the scale-safe defaults
       * and reaching for this one is a deliberate small-corpus choice. */
     Q("dedup_multi_signal_recall_tune", multiSignalSql(NBANDS_MS)) { (s, dir) =>
-      val lexical = trigramPairs(s, dir)
+      val lexical = lexicalEdge(s, dir, "gram")
       val semantic = Similarity.lshPairs(
           table(s, dir, "embeddings"), "vec_id", "embedding",
           nPlanes = NPLANES, nBands = NBANDS_MS, threshold = 0.4)
@@ -2110,7 +2106,7 @@ object ExtensionQueries {
       * the corpus with every Jaccard ≥ 0.6 cluster collapsed to its
       * minimum-id representative (pairs → components → anti join).
       * Consumes the family's shared AUTO-SELECTED lexical edge
-      * ([[lexicalEdgeAuto]] — banded on the gate corpora, mirrored by
+      * ([[lexicalEdge]] — banded on the gate corpora, mirrored by
       * the static oracle). Local wall time is dominated by the pair
       * generation plus the components loop's per-round driver
       * actions, not data volume: every exchange carries ids or gram
@@ -2125,7 +2121,7 @@ object ExtensionQueries {
          |WHERE doc_id NOT IN (SELECT node FROM comp WHERE node <> component)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       val docs = table(s, dir, "documents")
-      Dedup.keepRepresentatives(docs, "doc_id", lexicalEdgeAuto(s, dir),
+      Dedup.keepRepresentatives(docs, "doc_id", lexicalEdge(s, dir, "auto"),
           "doc_a", "doc_b")
         .select("doc_id", "n_chars").orderBy("doc_id")
     },
@@ -2296,10 +2292,10 @@ object ExtensionQueries {
       * corpus (batch = doc_id % 5 == 0, corpus = the rest): in-batch
       * exact winners, fingerprint anti join vs corpus text, near-dup
       * anti join with the candidate stage AUTO-SELECTED from corpus
-      * statistics ([[Dedup.incrementalAuto]] — exact two-sided gram
+      * statistics ([[Dedup.incremental]] "auto" — exact two-sided gram
       * Jaccard while predicted Σ df_b·df_c candidates stay O(|batch|),
       * MinHash-banded once gram space saturates, the same decision
-      * rule as the cluster family's [[lexicalEdgeAuto]]). The r16
+      * rule as the cluster family's [[lexicalEdge]]). The r16
       * docs ladder measured why the raw gram join cannot be the
       * default: 7.2× cost for 3× data on the fixed-vocab corpus. On
       * the gate corpora the rule lands on BANDED at every graded
@@ -2309,11 +2305,8 @@ object ExtensionQueries {
       * cost scales with the batch, which is what makes daily dedup of
       * a 100-TB corpus affordable at all. */
     Q("dedup_incremental", incrementalBandedSql) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      Dedup.incrementalAuto(batch, corpus, "doc_id", "text",
-          n = 3, threshold = 0.5, k = K, bandSize = 4)
+      val (batch, corpus) = dailySplit(s, dir)
+      Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5)
         .select("doc_id", "n_chars").orderBy("doc_id")
     },
 
@@ -2353,15 +2346,14 @@ object ExtensionQueries {
          |SELECT doc_id, n_chars FROM b2
          |WHERE doc_id NOT IN (SELECT bid FROM hits)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5)
+      val (batch, corpus) = dailySplit(s, dir)
+      Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5,
+          candidates = "gram")
         .select("doc_id", "n_chars").orderBy("doc_id")
     },
 
     /** dedup_incremental_banded — the SCALE-SAFE twin of
-      * dedup_incremental (graft.ops.Dedup.incrementalBanded): same
+      * dedup_incremental (Dedup.incremental "banded"): same
       * exact-winner and fingerprint stages, but batch-vs-corpus
       * near-dup candidates come from a MinHash band equi-join instead
       * of shared raw grams. The exact twin's gram candidates are
@@ -2376,11 +2368,9 @@ object ExtensionQueries {
       * explicit pinned-construction form next to the auto default,
       * mirroring dedup_cluster_banded vs dedup_cluster. */
     Q("dedup_incremental_banded", incrementalBandedSql) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      Dedup.incrementalBanded(batch, corpus, "doc_id", "text",
-          n = 3, k = K, bandSize = 4, threshold = 0.5)
+      val (batch, corpus) = dailySplit(s, dir)
+      Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5,
+          candidates = "banded")
         .select("doc_id", "n_chars").orderBy("doc_id")
     },
 
@@ -2401,10 +2391,8 @@ object ExtensionQueries {
       * survives a 100-TB standing corpus (plan pinned in PlansSpec:
       * no corpus relation in the physical plan). */
     Q("dedup_incremental_indexed", incrementalBandedSql) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val idx = graft.ops.DedupIndex.ensureBuilt(s, dir,
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", 3)
+      val (batch, corpus) = dailySplit(s, dir)
+      val idx = graft.ops.DedupIndex.ensureBuilt(s, dir, corpus, "doc_id", "text", 3)
       graft.ops.DedupIndex.dedupBatch(s, batch, idx, "doc_id", "text", 3, 0.5)
         .select("doc_id", "n_chars").orderBy("doc_id")
     },
@@ -2423,10 +2411,8 @@ object ExtensionQueries {
       * graceful-degradation contract are at DedupIndex.bloomSizeBits;
       * the measured gate-scale overhead vs crossover is in SCALING.md. */
     Q("dedup_incremental_bloom", incrementalBandedSql) { (s, dir) =>
-      val docs = table(s, dir, "documents")
-      val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
-      val idx = graft.ops.DedupIndex.ensureBuilt(s, dir,
-        docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", 3)
+      val (batch, corpus) = dailySplit(s, dir)
+      val idx = graft.ops.DedupIndex.ensureBuilt(s, dir, corpus, "doc_id", "text", 3)
       graft.ops.DedupIndex.dedupBatch(s, batch, idx, "doc_id", "text", 3, 0.5,
           useBloom = true)
         .select("doc_id", "n_chars").orderBy("doc_id")

@@ -45,10 +45,11 @@ class EdgeCasesSpec extends SparkSpec {
 
   test("dedup family handles empty and single-doc corpora") {
     assert(Dedup.exact(noDocs, "doc_id", "text").count() == 0)
-    assert(Dedup.ngramJaccardPairs(noDocs, "doc_id", "text", 3, 0.5).count() == 0)
     assert(Dedup.simhashPairs(noDocs, "doc_id", "text").count() == 0)
     val one = Seq((1L, "just one tiny document here")).toDF("doc_id", "text")
-    assert(Dedup.ngramJaccardPairs(one, "doc_id", "text", 3, 0.5).count() == 0)
+    for (c <- Seq("auto", "gram", "banded"); d <- Seq(noDocs, one))
+      assert(Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.5, candidates = c)
+        .count() == 0, c)
     assert(Dedup.minhashLshPairs(one, "doc_id", "text").count() == 0)
   }
 
@@ -119,6 +120,24 @@ class EdgeCasesSpec extends SparkSpec {
     val n = Seq((1L, Option.empty[String])).toDF("id", "u")
       .select(graft.ops.TextOps.normalizeUrl($"u")).collect()(0)
     assert(n.isNullAt(0))
+  }
+
+  test("incremental daily summary on an empty lineitem: everything is history, no crash") {
+    // no ship date means no "new day": the split must not dereference
+    // the NULL cutoff, and the maintained view is empty like the oracle
+    val dir = java.nio.file.Files.createTempDirectory("edge_ivm").toString
+    Sources.table(spark, sf, "lineitem").filter(lit(false))
+      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    val li = Sources.table(spark, dir, "lineitem")
+    val (isNew, isHistory) = graft.analytics.Incremental.daySplit(li)
+    assert(li.filter(isNew).count() == 0 && li.filter(isHistory).count() == 0)
+    assert(SparkEntry.queries("view_daily_summary_incremental")(spark, dir)
+      .count() == 0)
+    // one NULL-dated row: still history (the oracle keeps its NULL group)
+    val nullDated = Sources.table(spark, sf, "lineitem").limit(1)
+      .withColumn("l_shipdate", lit(null).cast("timestamp_ntz"))
+    val (n1, h1) = graft.analytics.Incremental.daySplit(nullDated)
+    assert(nullDated.filter(n1).count() == 0 && nullDated.filter(h1).count() == 1)
   }
 
   test("round-6 ops on degenerate input: zero-row zorder/resize/LM, reserved-column guards") {

@@ -20,7 +20,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("ngram jaccard: dup pair = 1.0, near-dup high, unrelated absent") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.3)
+    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3,
+        candidates = "gram")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(pairs((1L, 2L)) == 1.0)
     assert(pairs((1L, 3L)) > 0.4 && pairs((1L, 3L)) < 1.0)
@@ -28,10 +29,11 @@ class OpsSpec extends SparkSpec {
   }
 
   test("banded jaccard: subset of exact relation, jaccard values exact, dup pair found") {
-    val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.3)
+    val exact = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3,
+        candidates = "gram")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    val banded = Dedup.bandedJaccardPairs(docs, "doc_id", "text",
-        n = 3, k = 32, bandSize = 4, threshold = 0.3)
+    val banded = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3,
+        candidates = "banded")
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     // every banded pair IS an exact pair with the identical jaccard —
     // banding only filters candidates, the verification is exact
@@ -60,9 +62,9 @@ class OpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val nSat = Dedup.predictedGramJoinCandidates(sat, "doc_id", "text", 3)
     assert(Dedup.useBandedEdge(40L, nSat), s"expected saturated, got $nSat")
-    val autoSat = Dedup.jaccardPairsAuto(sat, "doc_id", "text", 3, 0.3)
-    val bandedSat = Dedup.bandedJaccardPairs(sat, "doc_id", "text",
-      n = 3, threshold = 0.3)
+    val autoSat = Dedup.jaccardPairs(sat, "doc_id", "text", 3, 0.3)
+    val bandedSat = Dedup.jaccardPairs(sat, "doc_id", "text", 3, 0.3,
+      candidates = "banded")
     assert(autoSat.count() == bandedSat.count() &&
       autoSat.except(bandedSat).count() == 0)
     // sparse fixture (per-doc vocabulary): prediction is O(n) and the
@@ -72,8 +74,9 @@ class OpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val nSparse = Dedup.predictedGramJoinCandidates(sparse, "doc_id", "text", 3)
     assert(!Dedup.useBandedEdge(40L, nSparse), s"expected sparse, got $nSparse")
-    val autoSparse = Dedup.jaccardPairsAuto(sparse, "doc_id", "text", 3, 0.3)
-    val exactSparse = Dedup.ngramJaccardPairs(sparse, "doc_id", "text", 3, 0.3)
+    val autoSparse = Dedup.jaccardPairs(sparse, "doc_id", "text", 3, 0.3)
+    val exactSparse = Dedup.jaccardPairs(sparse, "doc_id", "text", 3, 0.3,
+      candidates = "gram")
     assert(autoSparse.count() == exactSparse.count() &&
       autoSparse.except(exactSparse).count() == 0)
   }
@@ -129,8 +132,8 @@ class OpsSpec extends SparkSpec {
     // capped: the boilerplate gram never enters candidate generation,
     // and the unique remainder produces zero pairs — O(n) total work
     assert(candidateRows(50) == 0L)
-    assert(Dedup.ngramJaccardPairs(boiler, "doc_id", "text", 3, 0.05,
-      maxDf = 50).count() == 0L)
+    assert(Dedup.jaccardPairs(boiler, "doc_id", "text", 3, 0.05,
+      candidates = "gram", maxDf = 50).count() == 0L)
   }
 
   test("df pass skew: one gram in every doc stays map-side bounded, no single-task pileup") {
@@ -201,13 +204,14 @@ class OpsSpec extends SparkSpec {
       (3L, "b1 b2 b3 z y x w")
     ).toDF("doc_id", "text")
     // uncapped: the boilerplate trigram (df 3) links all three docs
-    val raw = Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.05,
-        maxDf = Int.MaxValue)
+    val raw = Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.05,
+        candidates = "gram", maxDf = Int.MaxValue)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(raw.keySet == Set((1L, 2L), (1L, 3L), (2L, 3L)))
     // maxDf=2 drops exactly [b1 b2 b3]; docs 1-2 keep 4 grams each with
     // 3 shared → J = 3/(4+4-3) = 0.6, and doc 3 pairs with nothing
-    val capped = Dedup.ngramJaccardPairs(d, "doc_id", "text", 3, 0.05, maxDf = 2)
+    val capped = Dedup.jaccardPairs(d, "doc_id", "text", 3, 0.05,
+        candidates = "gram", maxDf = 2)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(capped.keySet == Set((1L, 2L)))
     assert(math.abs(capped((1L, 2L)) - 0.6) < 1e-12)
@@ -223,12 +227,17 @@ class OpsSpec extends SparkSpec {
       (1L, "b1 b2 b3 totally unrelated fresh words"),  // shares only boilerplate
       (2L, "b1 b2 b3 one two three five")              // real overlap with 10
     ).toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairsBetween(batch, corpus, "doc_id", "text",
-        3, 0.05, maxDf = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(!pairs.exists(_._1 == 1L),
+    def kept(maxDf: Int) = Dedup.incremental(batch, corpus, "doc_id", "text",
+        3, 0.05, candidates = "gram", maxDf = maxDf)
+      .select("doc_id").as[Long].collect().sorted.toSeq
+    // [b1 b2 b3] has df 3 in the corpus (hot at maxDf = 2) but only 2
+    // in the batch: a batch doc sharing only that boilerplate survives,
+    // while doc 2's real overlap with 10 (J = 3/5 over the capped sets)
+    // still drops it
+    assert(kept(2) == Seq(1L),
       "a batch doc sharing only corpus boilerplate must not pair")
-    assert(pairs.contains((2L, 10L)))
+    // uncapped, the shared boilerplate alone pairs doc 1 (J = 1/9)
+    assert(kept(Int.MaxValue) == Seq.empty)
   }
 
   test("minhash LSH finds the exact-dup pair with estimate 1.0") {
@@ -473,7 +482,8 @@ class OpsSpec extends SparkSpec {
   }
 
   test("keepRepresentatives drops near-dup cluster members, keeps the min id") {
-    val pairs = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 3, 0.3)
+    val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3,
+        candidates = "gram")
       .select("doc_a", "doc_b")
     val kept = Dedup.keepRepresentatives(docs, "doc_id", pairs, "doc_a", "doc_b")
       .select("doc_id").as[Long].collect().sorted
@@ -746,14 +756,18 @@ class OpsSpec extends SparkSpec {
       (13L, "an entirely novel document with fresh unseen content"), // in-batch dup of 12
       (14L, "short unrelated text")
     ).toDF("doc_id", "text")
-    val kept = Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(12L, 14L))
-    // the between-pairs relation itself is asymmetric and directional
-    val pairs = Dedup.jaccardPairsBetween(batch, corpus, "doc_id", "text", 3, 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs.contains((10L, 1L)) && pairs.contains((11L, 1L)))
-    assert(pairs.forall { case (l, _) => l >= 10L })
+    def kept(b: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame,
+             threshold: Double) =
+      Dedup.incremental(b, c, "doc_id", "text", 3, threshold, candidates = "gram")
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept(batch, corpus, 0.5) == Seq(12L, 14L))
+    // 11 drops on the near-dup stage alone (0.5 ≤ J(11, 1) < 1): at
+    // threshold 1.0 it survives, while 10 still drops (fingerprint and
+    // J(10, 1) = 1.0)
+    assert(kept(batch, corpus, 1.0) == Seq(11L, 12L, 14L))
+    // directional: only the batch side is filtered — the corpus deduped
+    // against the batch loses just its exact dup of 10
+    assert(kept(corpus, batch, 0.5) == Seq(2L))
   }
 
   test("banded incremental dedup: exact/fingerprint stages identical, banded near-dups drop") {
@@ -768,19 +782,23 @@ class OpsSpec extends SparkSpec {
       (13L, "an entirely novel document with fresh unseen content"), // in-batch dup of 12
       (14L, "short unrelated text")
     ).toDF("doc_id", "text")
-    val kept = Dedup.incrementalBanded(batch, corpus, "doc_id", "text",
-        n = 3, k = 32, bandSize = 4, threshold = 0.5)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    assert(kept == Seq(12L, 14L))
-    // the between-pairs relation: directional, estimate in [0,1], and
-    // a batch doc identical to a corpus doc estimates exactly 1.0
-    val pairs = Dedup.minhashPairsBetween(batch, corpus, "doc_id", "text",
-        n = 3, k = 32, bandSize = 4, threshold = 0.5)
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(pairs.keySet.contains((10L, 1L)) && pairs((10L, 1L)) == 1.0)
-    assert(pairs.keySet.contains((11L, 1L)))
-    assert(pairs.keys.forall { case (l, _) => l >= 10L })
-    assert(pairs.values.forall(e => e >= 0.5 && e <= 1.0))
+    def kept(b: org.apache.spark.sql.DataFrame, c: org.apache.spark.sql.DataFrame,
+             threshold: Double) =
+      Dedup.incremental(b, c, "doc_id", "text", 3, threshold, candidates = "banded")
+        .select("doc_id").as[Long].collect().sorted.toSeq
+    assert(kept(batch, corpus, 0.5) == Seq(12L, 14L))
+    // 11 drops on its band estimate alone (0.5 ≤ est < 1.0): at
+    // threshold 1.0 it survives
+    assert(kept(batch, corpus, 1.0) == Seq(11L, 12L, 14L))
+    // directional: the corpus deduped against the batch loses just its
+    // exact dup of 10
+    assert(kept(corpus, batch, 0.5) == Seq(2L))
+    // a batch doc whose gram SET equals a corpus doc's (different text,
+    // so no fingerprint hit) estimates exactly 1.0: it drops even at
+    // threshold 1.0
+    val sameGrams = Seq((20L, "x y z x y z x y z")).toDF("doc_id", "text")
+    val rep = Seq((30L, "x y z x y z")).toDF("doc_id", "text")
+    assert(kept(sameGrams, rep, 1.0).isEmpty)
   }
 
   test("tfidf: rare term outranks common term; stopword-like terms sink") {
@@ -1442,8 +1460,42 @@ class OpsSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, 10L), (3L, 10L), (4L, 20L), (6L, 20L)))
   }
 
-  test("indexed incremental dedup is byte-identical to the direct form") {
+  // Builds an index over `corpus`, then runs every candidate stage on
+  // the live form and on the index probe: the two must emit the same
+  // survivors, and "auto" must price `autoEdge` on both paths and route
+  // to exactly that stage's result.
+  private def assertLiveMatchesIndex(name: String,
+      batch: org.apache.spark.sql.DataFrame, corpus: org.apache.spark.sql.DataFrame,
+      autoEdge: String): Unit = {
     import graft.ops.{Dedup, DedupIndex}
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().sorted.toSeq
+    def edgeBanded(attr: String): Boolean =
+      graft.BenchAttribution.snapshot.toMap.apply(s"$attr.edge_banded") == 1.0
+    val dir = java.nio.file.Files.createTempDirectory(s"dedup_idx_$name").toString
+    DedupIndex.build(corpus, "doc_id", "text", 3, dir, nFiles = 2)
+    for (c <- Seq("auto", "gram", "banded")) {
+      val live = ids(Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5,
+        candidates = c))
+      if (c == "auto")
+        assert(edgeBanded("dedup.incremental") == (autoEdge == "banded"),
+          s"$name: live auto must price the $autoEdge edge")
+      val indexed = ids(DedupIndex.dedupBatch(spark, batch, dir, "doc_id", "text",
+        3, 0.5, candidates = c))
+      if (c == "auto")
+        assert(edgeBanded("dedup_index") == (autoEdge == "banded"),
+          s"$name: index auto must price the $autoEdge edge")
+      assert(indexed == live, s"$name/$c: index probe diverged from the live form")
+      if (c == "auto")
+        assert(live == ids(Dedup.incremental(batch, corpus, "doc_id", "text", 3,
+          0.5, candidates = autoEdge)), s"$name: auto must route to $autoEdge")
+    }
+  }
+
+  test("indexed incremental dedup is byte-identical to the direct form") {
+    import graft.ops.Dedup
+    // sparse vocabulary: auto prices the exact join as affordable
+    // (predicted candidates ≪ 8/doc) and selects it
     val corpus = Seq(
       (10L, "the quick brown fox jumps over the lazy dog"),
       (11L, "lorem ipsum dolor sit amet consectetur"),
@@ -1456,60 +1508,28 @@ class OpsSpec extends SparkSpec {
       (4L, "a wholly new document about training data pipelines"), // in-batch exact dup of 3
       (5L, "short text") // < 3 tokens: no grams, survives
     ).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("dedup_idx").toString
-    DedupIndex.build(corpus, "doc_id", "text", 3, dir, nFiles = 4)
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").as[Long].collect().sorted.toSeq
-    val direct = Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5)
-    val indexed = DedupIndex.dedupBatch(spark, batch, dir, "doc_id", "text",
-      3, 0.5, candidates = "gram")
-    assert(ids(direct) == Seq(3L, 5L))
-    assert(ids(indexed) == ids(direct))
-    // banded candidate stage probes the persisted sigs/ relation and is
-    // byte-identical to the live banded form on the same state
-    val directBanded = Dedup.incrementalBanded(batch, corpus, "doc_id",
-      "text", n = 3, k = 32, bandSize = 4, threshold = 0.5)
-    val indexedBanded = DedupIndex.dedupBatch(spark, batch, dir, "doc_id",
-      "text", 3, 0.5, candidates = "banded")
-    assert(ids(indexedBanded) == ids(directBanded))
-    // auto on this sparse-vocabulary corpus prices the exact join as
-    // affordable (predicted candidates ≪ 8/doc) and selects it
-    val auto = DedupIndex.dedupBatch(spark, batch, dir, "doc_id", "text",
-      3, 0.5)
-    assert(ids(auto) == ids(direct))
+    assertLiveMatchesIndex("sparse", batch, corpus, autoEdge = "gram")
+    assert(Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5,
+      candidates = "gram").select("doc_id").as[Long].collect().sorted.toSeq
+      == Seq(3L, 5L))
   }
 
   test("auto candidate stage flips to banded on a gram-saturated corpus, matching incrementalAuto") {
-    import graft.ops.{Dedup, DedupIndex}
     // fixed 6-word vocabulary: every doc shares grams with most others,
     // so predicted candidates blow past the 8/doc budget — the regime
-    // the r16 docs ladder measured going quadratic on the exact join
+    // the r16 docs ladder measured going quadratic on the exact join.
+    // The live auto form (Dedup.incremental, candidates = "auto") and
+    // the index auto probe must both route to the banded stage.
     val words = Array("alpha", "beta", "gamma", "delta", "epsilon", "zeta")
     def doc(i: Int): String =
       (0 until 8).map(j => words((i * 7 + j * 5) % 6)).mkString(" ") + s" uid$i"
-    val corpus = (100 until 160).map(i => (i.toLong, doc(i)))
-      .toDF("doc_id", "text")
-    val batch = (0 until 20).map(i => (i.toLong, doc(i)))
-      .toDF("doc_id", "text")
-    val predicted = Dedup.predictedGramJoinCandidatesBetween(
-      batch, corpus, "doc_id", "text", 3)
-    assert(Dedup.useBandedEdge(20L, predicted),
-      s"saturated corpus must price banded (predicted=$predicted)")
-    def ids(df: org.apache.spark.sql.DataFrame) =
-      df.select("doc_id").as[Long].collect().sorted.toSeq
-    val banded = Dedup.incrementalBanded(batch, corpus, "doc_id", "text",
-      n = 3, k = 32, bandSize = 4, threshold = 0.5)
-    assert(ids(Dedup.incrementalAuto(batch, corpus, "doc_id", "text"))
-      == ids(banded), "incrementalAuto must route to the banded twin")
-    val dir = java.nio.file.Files.createTempDirectory("dedup_idx_auto").toString
-    DedupIndex.build(corpus, "doc_id", "text", 3, dir, nFiles = 2)
-    assert(ids(DedupIndex.dedupBatch(spark, batch, dir, "doc_id", "text",
-        3, 0.5))
-      == ids(banded), "index auto must route to the banded probe")
+    val corpus = (100 until 160).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
+    val batch = (0 until 20).map(i => (i.toLong, doc(i))).toDF("doc_id", "text")
+    assertLiveMatchesIndex("saturated", batch, corpus, autoEdge = "banded")
   }
 
-  test("predictedGramJoinCandidatesBetween is the capped df dot product") {
-    import graft.ops.Dedup
+  test("the auto-edge statistic is the capped df dot product, live and indexed") {
+    import graft.ops.{Dedup, DedupIndex}
     // left: two docs sharing the gram "a b c" (df_l = 2); right: three
     // docs with it (df_r = 3) → 6, plus "x y z" 1×1 → 7 total
     val left = Seq((1L, "a b c q w"), (2L, "a b c r t"), (3L, "x y z"))
@@ -1517,60 +1537,80 @@ class OpsSpec extends SparkSpec {
     val right = Seq((10L, "a b c"), (11L, "a b c k"), (12L, "m a b c"),
         (13L, "x y z"))
       .toDF("doc_id", "text")
-    assert(Dedup.predictedGramJoinCandidatesBetween(
-      left, right, "doc_id", "text", 3) == 2L * 3L + 1L)
-    // the right-side df cap removes a boilerplate gram entirely
-    assert(Dedup.predictedGramJoinCandidatesBetween(
-      left, right, "doc_id", "text", 3, maxDf = 2) == 1L)
+    // the live decision runs when incremental is called (3 batch docs)
+    def live(maxDf: Int): Long = {
+      Dedup.incremental(left, right, "doc_id", "text", 3, 0.5, maxDf = maxDf)
+      math.round(graft.BenchAttribution.snapshot.toMap
+        .apply("dedup.incremental.batch_cand_per_doc") * 3)
+    }
+    def indexed(maxDf: Int): Long = {
+      val dir = java.nio.file.Files.createTempDirectory("dedup_idx_dot").toString
+      DedupIndex.build(right, "doc_id", "text", 3, dir, nFiles = 2, maxDf = maxDf)
+      DedupIndex.predictedIndexJoinCandidates(spark, left, dir, "doc_id", "text", 3)
+    }
+    assert(live(Dedup.DefaultMaxDf) == 2L * 3L + 1L)
+    assert(indexed(Dedup.DefaultMaxDf) == 2L * 3L + 1L)
+    // the corpus-side df cap removes a boilerplate gram entirely
+    assert(live(2) == 1L)
+    assert(indexed(2) == 1L)
   }
 
   test("auto-edge observations count each input row exactly once (VERDICT r19 #8)") {
     import graft.ops.{Dedup, DedupIndex}
     import org.apache.spark.sql.Observation
-    // The auto-edge decisions fold the doc/batch count into the
-    // prediction job as an observed metric. That is valid ONLY while
-    // (a) the prediction runs an action over the observed plan (else
-    // obs.get hangs the driver) and (b) the observed subtree is
-    // evaluated exactly once within it — a refactor that self-joins
-    // or re-consumes the candidate side would double-count silently,
-    // flip useBandedEdge at a different corpus size, and change
-    // emitted pairs at scale while staying green at the gate. Pinned
-    // here against a direct count on a saturated fixture whose gram
-    // relation is many rows wide per doc (the tempting self-join
-    // shape).
+    // The auto-edge decisions fold the doc/batch count into the gram
+    // checkpoint job as an observed metric. That is valid ONLY while
+    // (a) an action runs over the observed plan before obs.get (else
+    // it hangs the driver) and (b) the observed subtree is evaluated
+    // exactly once within it — a refactor that self-joins or
+    // re-consumes the un-materialized side would double-count
+    // silently, flip useBandedEdge at a different corpus size, and
+    // change emitted pairs at scale while staying green at the gate.
+    // Pinned here against a direct count on a saturated fixture whose
+    // gram relation is many rows wide per doc (the tempting self-join
+    // shape), through each merged entry point.
     val docs = (0L until 30L).map(i =>
       (i, s"alpha beta gamma delta epsilon zeta token${i % 3} eta"))
       .toDF("doc_id", "text")
     val obs1 = new Observation()
-    Dedup.predictedGramJoinCandidates(
-      docs.observe(obs1, count(lit(1)).as("n")), "doc_id", "text", 3)
+    Dedup.jaccardPairs(docs.observe(obs1, count(lit(1)).as("n")),
+      "doc_id", "text", 3, 0.3).count()
     assert(obs1.get("n") == 30L,
+      "self-join auto decision must count each doc exactly once")
+    val obs1b = new Observation()
+    Dedup.predictedGramJoinCandidates(
+      docs.observe(obs1b, count(lit(1)).as("n")), "doc_id", "text", 3)
+    assert(obs1b.get("n") == 30L,
       "self-join prediction must count each doc exactly once")
-    // the index-priced twin (resolves through the shared batch-gram
-    // checkpoint inside dedupBatch; same seam here)
+    // the batch-vs-corpus kernel, on the index and on live text
     val batch = (0L until 10L).map(i =>
       (i, s"alpha beta gamma delta token$i")).toDF("doc_id", "text")
     val idxDir = java.nio.file.Files
       .createTempDirectory("graft_obs_idx").toString
     DedupIndex.build(docs, "doc_id", "text", 3, idxDir, nFiles = 2)
     val obs2 = new Observation()
-    DedupIndex.predictedIndexJoinCandidates(spark,
-      batch.observe(obs2, count(lit(1)).as("n")), idxDir,
-      "doc_id", "text", 3)
+    DedupIndex.dedupBatch(spark, batch.observe(obs2, count(lit(1)).as("n")),
+      idxDir, "doc_id", "text", 3, 0.5).count()
     assert(obs2.get("n") == 10L,
+      "index auto decision must count each batch row exactly once")
+    val obs3 = new Observation()
+    DedupIndex.predictedIndexJoinCandidates(spark,
+      batch.observe(obs3, count(lit(1)).as("n")), idxDir,
+      "doc_id", "text", 3)
+    assert(obs3.get("n") == 10L,
       "index prediction must count each batch row exactly once")
-    // and the two-sided auto decision: the statistic incrementalAuto
-    // computes from its shared gram materialization must equal the
-    // standalone prediction (identity of the decision input, not just
-    // the route)
-    val corpus = (100L until 160L).map(i =>
-      (i, s"alpha beta gamma delta epsilon zeta token${i % 3} eta"))
-      .toDF("doc_id", "text")
-    val expected = Dedup.predictedGramJoinCandidatesBetween(
-      batch, corpus, "doc_id", "text", 3)
-    Dedup.incrementalAuto(batch, corpus, "doc_id", "text").count()
+    val obs4 = new Observation()
+    Dedup.incremental(batch.observe(obs4, count(lit(1)).as("n")), docs,
+      "doc_id", "text", 3, 0.5).count()
+    assert(obs4.get("n") == 10L,
+      "live auto decision must count each batch row exactly once")
+    // and the identity of the decision INPUT, not just the route: the
+    // statistic the live kernel folds from its gram checkpoint equals
+    // the standalone index prediction over the same corpus
     val perDoc = graft.BenchAttribution.snapshot.toMap
-      .apply("dedup.incrementalAuto.cand_per_doc")
+      .apply("dedup.incremental.batch_cand_per_doc")
+    val expected = DedupIndex.predictedIndexJoinCandidates(spark, batch, idxDir,
+      "doc_id", "text", 3)
     assert(math.round(perDoc * 10L) == expected,
       s"folded statistic ${perDoc * 10L} must equal standalone $expected")
   }
@@ -1620,8 +1660,8 @@ class OpsSpec extends SparkSpec {
     // against the grown corpus (pins sigs/ append + relayout survival)
     assert(ids(DedupIndex.dedupBatch(spark, batch2, dir, "doc_id", "text",
         3, 0.5, candidates = "banded"))
-      == ids(Dedup.incrementalBanded(batch2, grown, "doc_id", "text",
-        n = 3, k = 32, bandSize = 4, threshold = 0.5)))
+      == ids(Dedup.incremental(batch2, grown, "doc_id", "text", 3, 0.5,
+        candidates = "banded")))
   }
 
   test("bloom sidecar: probed dedup byte-identical, no false negatives, refreshed by append") {
@@ -2168,12 +2208,13 @@ class OpsSpec extends SparkSpec {
       // the incremental rows' batch/corpus split (batch = doc_id%5==0)
       val batch = docs.filter(pmod(col("doc_id"), lit(5)) === 0)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
-      val nBatch = batch.count()
-      val candB = Dedup.predictedGramJoinCandidatesBetween(
-        batch, corpus, "doc_id", "text", 3)
-      assert(Dedup.useBandedEdge(nBatch, candB),
+      // the auto decision runs when incremental is called, before any
+      // action on its result
+      Dedup.incremental(batch, corpus, "doc_id", "text", 3, 0.5)
+      val snap = graft.BenchAttribution.snapshot.toMap
+      assert(snap("dedup.incremental.edge_banded") == 1.0,
         s"$dir: dedup_incremental auto edge flipped to EXACT " +
-          s"(${candB / math.max(nBatch, 1L)} cand/doc vs budget " +
+          s"(${snap("dedup.incremental.batch_cand_per_doc")} cand/doc vs budget " +
           s"${Dedup.DefaultCandBudgetPerDoc}) — re-state the oracles")
       // the cluster family / dedup_ngram_jaccard self-join decision
       val nDocs = docs.count()

@@ -365,6 +365,45 @@ class PlansSpec extends SparkSpec {
       "each doc keeps its 3 sub-cap grams")
   }
 
+  test("jaccardPairs auto: the documents are tokenized once across the decision and edge queries") {
+    // the auto decision and the chosen edge read ONE checkpoint of the
+    // hashed gram relation; a second tokenize (a prediction re-deriving
+    // grams from text) is a full extra corpus scan per evaluation
+    import spark.implicits._
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val docs = (1L to 40L)
+      .map(i => (i, s"alpha beta gamma delta epsilon token${i % 3} eta theta"))
+      .toDF("doc_id", "text")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add((f, qe))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      graft.ops.Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3).collect()
+      // execution events arrive on the async listener bus
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (System.nanoTime() < deadline &&
+          !seen.toArray.exists(_.asInstanceOf[(String, QueryExecution)]._1 == "collect"))
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.exists(_._1 == "collect"), "the edge query was not observed")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val tokenizes = seen.asScala.toSeq.map { case (_, qe) =>
+      helper.collectWithSubqueries(qe.executedPlan) {
+        case g: GenerateExec
+            if g.generator.references.exists(a => a.name == "__toks" || a.name == "text") => g
+      }.size
+    }.sum
+    assert(tokenizes == 1,
+      s"expected one text tokenize per evaluation, got $tokenizes across " +
+        seen.asScala.map(_._1).mkString(", "))
+  }
+
   test("text_unigram_lm: model join keyed by the token hash, scalar N broadcast") {
     val p = plan("text_unigram_lm")
     assert(p.contains("hashpartitioning(h"),

@@ -15,6 +15,16 @@ class RegistrySpec extends SparkSpec {
     assert(oracleLess.isEmpty, oracleLess)
   }
 
+  test("README states the registry size") {
+    val readme = new java.io.File("README.md")
+    assert(readme.exists(), s"README.md not found from ${new java.io.File(".").getAbsolutePath}")
+    val src = scala.io.Source.fromFile(readme, "UTF-8")
+    val stated = try """(\d+) operator queries""".r.findFirstMatchIn(src.mkString)
+      .map(_.group(1).toInt) finally src.close()
+    assert(stated.contains(SparkEntry.queries.size),
+      s"README says $stated operator queries, the registry has ${SparkEntry.queries.size}")
+  }
+
   test("approx aggregates report in-bound sketches per group") {
     val rows = SparkEntry.queries("agg_approx")(spark, sf).collect()
     assert(rows.nonEmpty)
