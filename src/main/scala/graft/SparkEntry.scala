@@ -22,7 +22,9 @@ object SparkEntry {
   /** Flagship: the reference's full 5-stage ETL pipeline (clean →
     * normalize → enrich → validate) over the corpus events table,
     * finished with the daily-summary view (reference:
-    * src/transform.py:40-69 + sql/schema.sql:82-97) — one lazy plan.
+    * src/transform.py:40-69 + sql/schema.sql:82-97). The transform
+    * runs here and is materialized ([[graft.etl.Pipeline.transform]]);
+    * the returned view is a lazy plan over that batch.
     */
   def entry(spark: SparkSession): DataFrame = {
     val events = Sources.table(spark, "/root/testdata/sf0.001", "events")

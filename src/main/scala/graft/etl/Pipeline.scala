@@ -3,12 +3,16 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Stage composition — the lazy-plan analogue of the reference's eager
+/** Stage composition — the Spark analogue of the reference's eager
   * 5-stage pandas pipeline (reference: src/transform.py:40-69). Each
-  * stage is a pure DataFrame => DataFrame; the pipeline is their fold.
-  * Nothing materializes until an action, so Catalyst optimizes across
-  * stage boundaries (e.g. pushes the validation filter below the 12
-  * enrichment projections).
+  * stage is a pure DataFrame => DataFrame. Folding [[stages]] gives one
+  * lazy plan, so Catalyst optimizes across stage boundaries (e.g.
+  * pushes the validation filter below the 12 enrichment projections);
+  * callers that compose the transform into a larger plan (or a
+  * streaming query) fold them themselves. [[transform]] executes that
+  * plan once and returns the materialized batch — the boundary where
+  * the reference passes the transformed batch between DAG tasks as a
+  * file (reference: airflow_dag/weather_etl_dag.py:124-148).
   */
 object Pipeline {
 
@@ -28,9 +32,23 @@ object Pipeline {
     * `dedupTieBreak` pins the keep-first winner when two rows share the
     * key AND the exact timestamp (pandas keeps input order; a shuffle
     * has no input order, so ties need a total order to be stable).
+    *
+    * MATERIALIZED: the fold of [[stages]] ends in one eager
+    * `localCheckpoint`, so the quality metrics, the gate and the load
+    * that follow read the same rows, and the input (a live weather poll
+    * included) is read once per transform instead of once per
+    * downstream action. Size bound: at most the input batch's rows —
+    * dedup, the critical-null drop and validation only remove rows, the
+    * other stages only add or rewrite columns. Lineage: a local
+    * checkpoint, not `persist`, on purpose — an evicted persisted block
+    * is recomputed from lineage, which re-polls the source and can hand
+    * the load a different fetch than the gate judged; the checkpoint
+    * spills to local disk instead and cuts the lineage (losing an
+    * executor before the batch is consumed fails the job rather than
+    * silently re-fetching).
     */
   def transform(df: DataFrame, dedupTieBreak: Seq[String] = Nil): DataFrame =
-    stages(dedupTieBreak).foldLeft(df)((d, s) => s(d))
+    stages(dedupTieBreak).foldLeft(df)((d, s) => s(d)).localCheckpoint()
 
   /** Deterministic adapter: project the corpus `events` table into the
     * weather schema so the full reference pipeline can run against the

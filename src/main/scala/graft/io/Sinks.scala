@@ -540,11 +540,14 @@ object Sinks {
                         partitionCol: String,
                         updatePriority: Seq[String] = Nil,
                         strictKeyPartition: Boolean = false): Unit = {
+    // derive the batch ONCE: the contract checks, the touched-partition
+    // list and the merge write all read this, so a lazy input (a
+    // transform over a live source) is evaluated once and every step
+    // sees the same rows. Bounded by the batch itself.
+    val batch = materialized(updates)
+    lazy val spread = partitionSpread(batch, keys, partitionCol)
     if (!keys.contains(partitionCol)) {
-      val inBatchMoves = updates.groupBy(keys.map(col): _*)
-        .agg(countDistinct(col(partitionCol)).as("__np"))
-        .filter(col("__np") > 1).limit(1).count()
-      require(inBatchMoves == 0,
+      require(!spread.keyMoves,
         s"upsertPartitioned: a key maps to multiple '$partitionCol' values " +
           s"within this batch — '$partitionCol' must be functionally " +
           s"determined by keys ${keys.mkString("(", ",", ")")}")
@@ -572,7 +575,7 @@ object Sinks {
       val cols = (keys :+ partitionCol).map(col)
       val moved = spark.read.parquet(path).select(cols: _*)
         .withColumnRenamed(partitionCol, "__oldp")
-        .join(updates.select(cols: _*), keys)
+        .join(batch.select(cols: _*), keys)
         .filter(col("__oldp") =!= col(partitionCol)).limit(1).count()
       require(moved == 0,
         s"upsertPartitioned: an update changes a key's '$partitionCol' " +
@@ -590,13 +593,12 @@ object Sinks {
     if (!targetExists) {
       // first batch dedups by key too (several rows per key must pick
       // the same winner a merge would)
-      partitioned(upsert(updates.limit(0), updates, keys, updatePriority))
+      partitioned(upsert(batch.limit(0), batch, keys, updatePriority))
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(path)
       Manifest.commit(spark, path)
     } else {
-      val touched = updates.select(col(partitionCol)).distinct()
-        .collect().map(_.get(0))
+      val touched = spread.values
       // a NULL partition value would silently lose data: isInCollection
       // never matches NULL, so the existing null-partition rows would
       // be excluded from the merge while the stage swap still replaces
@@ -611,11 +613,11 @@ object Sinks {
       val existing = spark.read.parquet(path)
         .filter(col(partitionCol).isInCollection(touched))
         // partition col is read back last — realign to the update schema
-        .select(updates.columns.map(col).toIndexedSeq: _*)
-      // no materialization barrier needed: the stage write reads the
-      // target's partitions while they are still fully intact — the
-      // target is only touched by the post-write metadata renames
-      val merged = upsert(existing, updates, keys, updatePriority)
+        .select(batch.columns.map(col).toIndexedSeq: _*)
+      // no materialization barrier needed on the target: the stage
+      // write reads its partitions while they are still fully intact —
+      // the target is only touched by the post-write metadata renames
+      val merged = upsert(existing, batch, keys, updatePriority)
       // stage the ENTIRE merge first (crash here: target untouched,
       // stage discarded next run), then commit via the txn marker
       val stage = new org.apache.hadoop.fs.Path(root, UpsertStageName)
@@ -624,6 +626,42 @@ object Sinks {
         .partitionBy(partitionCol).parquet(stage.toString)
       commitStagedPartitions(spark, fs, root, stage, path)
     }
+  }
+
+  /** `df` itself when it is already materialized (a checkpoint, or
+    * rows held in the plan), else its eager local checkpoint.
+    */
+  private def materialized(df: DataFrame): DataFrame =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed => df
+      case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df
+      case _ => df.localCheckpoint()
+    }
+
+  /** What a batch says about its partition column: the distinct values
+    * it touches (NULL included) and whether some key spans several
+    * non-NULL values.
+    */
+  private final case class PartitionSpread(values: Array[Any], keyMoves: Boolean)
+
+  /** One aggregate pass for both sides of [[upsertPartitioned]]'s
+    * contract: per key, the least and greatest partition value and
+    * whether any is NULL (least != greatest is exactly "more than one
+    * distinct non-NULL value"), then one row per least value. The
+    * result is bounded by the distinct partition values of the batch.
+    */
+  private def partitionSpread(batch: DataFrame, keys: Seq[String],
+                              partitionCol: String): PartitionSpread = {
+    val p = col(partitionCol)
+    val rows = batch.groupBy(keys.map(col): _*)
+      .agg(min(p).as("__lo"), max(p).as("__hi"), max(p.isNull).as("__null"))
+      .groupBy(col("__lo"))
+      .agg(max(coalesce(col("__lo") =!= col("__hi"), lit(false))).as("__moves"),
+        max(col("__null")).as("__null"))
+      .collect()
+    val values = rows.map(_.get(0)) ++
+      (if (rows.exists(_.getBoolean(2))) Array[Any](null) else Array.empty[Any])
+    PartitionSpread(values.distinct, rows.exists(_.getBoolean(1)))
   }
 
   /** The commit half of the staged-partition protocol, shared by

@@ -144,6 +144,72 @@ class SinksSpec extends SparkSpec {
     assert(spark.read.parquet(dir).count() == 1)
   }
 
+  test("partitioned upsert refuses a key that maps to several partitions in the batch") {
+    val dir = Files.createTempDirectory("graft_movepart").toString + "/t"
+    val base = Seq(("London", "GB", 1L, 15.5, "2023-11-01"))
+      .toDF("city", "country", "ts", "temp", "date")
+    Sinks.upsertPartitioned(spark, base, dir, keys, "date")
+    // one key, two dates: whichever row wins the merge, the other date's
+    // partition would keep a stale copy of the key
+    val split = Seq(
+      ("Tokyo", "JP", 1L, 22.3, "2023-11-01"),
+      ("Tokyo", "JP", 1L, 23.0, "2023-11-02")
+    ).toDF("city", "country", "ts", "temp", "date")
+    val e = intercept[IllegalArgumentException](
+      Sinks.upsertPartitioned(spark, split, dir, keys, "date"))
+    assert(e.getMessage.contains("a key maps to multiple 'date' values"))
+    // the first batch is checked too, before anything is written
+    val fresh = Files.createTempDirectory("graft_movepart").toString + "/t"
+    intercept[IllegalArgumentException](
+      Sinks.upsertPartitioned(spark, split, fresh, keys, "date"))
+    assert(!new java.io.File(fresh).exists())
+    assert(spark.read.parquet(dir).count() == 1)
+  }
+
+  test("strict partitioned upsert refuses a key that moves partition across batches") {
+    val dir = Files.createTempDirectory("graft_strictpart").toString + "/t"
+    val base = Seq(
+      ("London", "GB", 1L, 15.5, "2023-11-01"),
+      ("Tokyo", "JP", 1L, 22.3, "2023-11-02")
+    ).toDF("city", "country", "ts", "temp", "date")
+    Sinks.upsertPartitioned(spark, base, dir, keys, "date")
+    val moved = Seq(("London", "GB", 1L, 9.9, "2023-11-02"))
+      .toDF("city", "country", "ts", "temp", "date")
+    val e = intercept[IllegalArgumentException](
+      Sinks.upsertPartitioned(spark, moved, dir, keys, "date",
+        strictKeyPartition = true))
+    assert(e.getMessage.contains("changes a key's 'date' value"))
+    val temps = spark.read.parquet(dir).select("city", "temp")
+      .as[(String, Double)].collect().toMap
+    assert(temps == Map("London" -> 15.5, "Tokyo" -> 22.3))
+  }
+
+  test("partitioned upsert evaluates a lazy batch once") {
+    val dir = Files.createTempDirectory("graft_lazybatch").toString + "/t"
+    val base = Seq(
+      ("London", "GB", 1L, 15.5, "2023-11-01"),
+      ("Tokyo", "JP", 1L, 22.3, "2023-11-02")
+    ).toDF("city", "country", "ts", "temp", "date")
+    Sinks.upsertPartitioned(spark, base, dir, keys, "date")
+    // every row of the batch passes through the UDF on the key column,
+    // which the contract check, the touched-partition list and the
+    // merge all read
+    val evals = spark.sparkContext.longAccumulator("upsert_batch_evals")
+    val tick = udf { (c: String) => evals.add(1); c }
+    val batch = Seq(
+      ("London", "GB", 1L, 9.9, "2023-11-01"),
+      ("Paris", "FR", 1L, 18.0, "2023-11-03"),
+      ("Cairo", "EG", 1L, 30.0, "2023-11-03")
+    ).toDF("city", "country", "ts", "temp", "date")
+      .withColumn("city", tick(col("city")))
+    Sinks.upsertPartitioned(spark, batch, dir, keys, "date")
+    assert(evals.value == 3L, s"batch rows evaluated ${evals.value} times, want 3")
+    val temps = spark.read.parquet(dir).select("city", "temp")
+      .as[(String, Double)].collect().toMap
+    assert(temps == Map("London" -> 9.9, "Tokyo" -> 22.3, "Paris" -> 18.0,
+      "Cairo" -> 30.0))
+  }
+
   test("partitioned upsert recovers a crash to a consistent table") {
     val dir = Files.createTempDirectory("graft_crash").toString + "/t"
     val fs = new org.apache.hadoop.fs.Path(dir)

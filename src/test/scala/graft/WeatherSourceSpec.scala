@@ -106,6 +106,36 @@ class WeatherSourceSpec extends SparkSpec {
     assert(WeatherMetrics.skipCount(metric) == 0L)
   }
 
+  test("the daily job polls the source once: the gate and the load read the transformed batch") {
+    import graft.etl.{Pipeline, Quality}
+    import graft.io.weather.WeatherMetrics
+    val found = Seq(("London", "GB", 15.5), ("Tokyo", "JP", 22.0),
+      ("Paris", "FR", 12.0), ("Cairo", "EG", 28.0), ("Lima", "PE", 19.0))
+    val dir = writeFixtures(found: _*)
+    val metric = "graft-weather.skips.transform-once"
+    val raw = spark.read.format("graft-weather")
+      .option("cities",
+        (found.map { case (c, cc, _) => s"$c:$cc" } :+ "Atlantis:XX").mkString(","))
+      .option("urlTemplate", s"file://$dir/{city}.json")
+      .option("maxRetries", "0").option("backoffMs", "1")
+      .option("skipMetricName", metric)
+      .load()
+    WeatherMetrics.reset(metric)
+    val out = Pipeline.transform(raw)
+    val afterTransform = WeatherMetrics.skipCount(metric)
+    val qm = Quality.qualityMetrics(out, found.size.toLong).head()
+    Quality.gate(qm)
+    val table = Files.createTempDirectory("graft_weather_load").toString + "/t"
+    graft.io.Sinks.upsertPartitioned(spark, out, table,
+      Seq("city", "country", "timestamp"), "date")
+    // each poll skips Atlantis once, so the skip count is the poll count
+    assert(WeatherMetrics.skipCount(metric) == afterTransform,
+      s"the gate and the load re-polled the source: ${WeatherMetrics.skipCount(metric)} " +
+        s"skips after the load, $afterTransform after transform")
+    assert(afterTransform >= 1L, "transform did not poll the source")
+    assert(spark.read.parquet(table).count() == found.size)
+  }
+
   test("streaming read polls every city once per trigger") {
     val dir = writeFixtures(("London", "GB", 15.5), ("Tokyo", "JP", 22.0))
     val stream = spark.readStream.format("graft-weather")
