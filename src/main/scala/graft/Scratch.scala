@@ -57,15 +57,14 @@ object Scratch {
           import graft.analytics.Incremental
           val li = graft.io.Sources.table(spark, dir, "lineitem")
           val (isNew, isHistory) = Incremental.daySplit(li)
-          val st = java.nio.file.Files
-            .createTempDirectory("graft_ivm_plan").toString
-          Incremental.lineitemSummaryState(li.filter(isHistory))
-            .write.mode("overwrite").parquet(s"$st/v1")
-          Incremental.mergeStates(
-              spark.read.parquet(s"$st/v1"),
-              Incremental.lineitemSummaryState(li.filter(isNew)))
-            .explain("formatted")
-          org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(st))
+          graft.io.TempScope.perCall("ivm_plan") { scope =>
+            Incremental.lineitemSummaryState(li.filter(isHistory))
+              .write.mode("overwrite").parquet(scope.path("v1"))
+            Incremental.mergeStates(
+                spark.read.parquet(scope.path("v1")),
+                Incremental.lineitemSummaryState(li.filter(isNew)))
+              .explain("formatted")
+          }
         case other => println(s"[scratch] unknown opplan: $other")
       }
     }
@@ -246,31 +245,30 @@ object Scratch {
     // can be attributed before diagnosing a plan regression
     args.filter(_ == "bktprobe").foreach { _ =>
       import org.apache.spark.sql.functions._
-      val base = java.nio.file.Files.createTempDirectory("graft_bkt").toString
       (1 to 3).foreach { it =>
-        val liT = s"li_probe_$it"; val ordT = s"ord_probe_$it"
-        val t0 = System.nanoTime()
-        graft.io.Sources.table(spark, dir, "lineitem")
-          .select("l_orderkey", "l_quantity")
-          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$base/$liT").saveAsTable(liT)
-        graft.io.Sources.table(spark, dir, "orders")
-          .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
-          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$base/$ordT").saveAsTable(ordT)
-        val tw = (System.nanoTime() - t0) / 1e9
-        val t1 = System.nanoTime()
-        spark.table(liT).hint("merge")
-          .join(spark.table(ordT).hint("merge"), "l_orderkey")
-          .groupBy("o_orderstatus")
-          .agg(count(lit(1)).as("n_items"))
-          .count()
-        val tj = (System.nanoTime() - t1) / 1e9
-        println(f"[scratch] bktprobe iter$it write=$tw%.3f s join=$tj%.3f s")
-        spark.sql(s"DROP TABLE IF EXISTS $liT")
-        spark.sql(s"DROP TABLE IF EXISTS $ordT")
+        graft.io.TempScope.perCall("bkt") { scope =>
+          val liT = scope.name("li_probe")
+          val ordT = scope.name("ord_probe")
+          val t0 = System.nanoTime()
+          graft.io.Sources.table(spark, dir, "lineitem")
+            .select("l_orderkey", "l_quantity")
+            .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+            .option("path", scope.path(liT)).saveAsTable(liT)
+          graft.io.Sources.table(spark, dir, "orders")
+            .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
+            .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
+            .option("path", scope.path(ordT)).saveAsTable(ordT)
+          val tw = (System.nanoTime() - t0) / 1e9
+          val t1 = System.nanoTime()
+          spark.table(liT).hint("merge")
+            .join(spark.table(ordT).hint("merge"), "l_orderkey")
+            .groupBy("o_orderstatus")
+            .agg(count(lit(1)).as("n_items"))
+            .count()
+          val tj = (System.nanoTime() - t1) / 1e9
+          println(f"[scratch] bktprobe iter$it write=$tw%.3f s join=$tj%.3f s")
+        }
       }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(base))
     }
     // IVF bucket-occupancy spread probe (VERDICT r12 #8): hot buckets
     // are ANN's skew analogue. Measures max/median member count per

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -629,9 +629,10 @@ object Sinks {
   }
 
   /** `df` itself when it is already materialized (a checkpoint, or
-    * rows held in the plan), else its eager local checkpoint.
+    * rows held in the plan), else its eager local checkpoint. Also
+    * the result rule of [[TempScope.perCall]].
     */
-  private def materialized(df: DataFrame): DataFrame =
+  private[graft] def materialized[R](df: Dataset[R]): Dataset[R] =
     df.queryExecution.logical match {
       case r: org.apache.spark.sql.execution.LogicalRDD if r.rdd.isCheckpointed => df
       case _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => df

@@ -374,9 +374,8 @@ object Dedup {
     // (built once, probed per batch/micro-batch), so it follows the
     // same materialize-once discipline: checkpoint the gram rows,
     // sizes via a map-side-combined aggregate joined back — no window
-    val bg = gramTable(bench, idCol, textCol, n)
-      .select(col("doc_id").as("bench_id"),
-        Parity.md5_60(col("gram")).as("gram"))
+    val bg = hashedGramTable(bench, idCol, textCol, n)
+      .select(col("doc_id").as("bench_id"), col("gram"))
       .localCheckpoint()
     bg.join(bg.groupBy("bench_id").agg(count(lit(1)).as("nb")), "bench_id")
   }
@@ -460,14 +459,22 @@ object Dedup {
     val candGrams = cg.join(boundedBroadcast(candIds,
         attributionKey = "dedup.containment.verify_broadcast"),
       Seq("corpus_id"), "left_semi")
-    candGrams.join(broadcast(bg), "gram")
+    containmentHits(candGrams, bg, threshold)
+  }
+
+  /** The containment verify both probes share: (corpus_id, gram) rows
+    * against the broadcast bench relation ([[benchGrams]]), n_inter per
+    * (corpus_id, bench_id), kept where n_inter / nb ≥ `threshold`.
+    */
+  private def containmentHits(cg: DataFrame, bg: DataFrame,
+                              threshold: Double): DataFrame =
+    cg.join(broadcast(bg), "gram")
       .groupBy("corpus_id", "bench_id")
       .agg(count(lit(1)).as("n_inter"), max(col("nb")).as("nb"))
       .withColumn("containment",
         col("n_inter").cast("double") / col("nb").cast("double"))
       .filter(col("containment") >= threshold)
       .select("corpus_id", "bench_id", "containment")
-  }
 
   /** [[decontaminate]] against a PREBUILT benchmark gram relation
     * ([[benchGrams]]) — the ingest-time shape: the standing relation
@@ -481,14 +488,9 @@ object Dedup {
   def decontaminateBatch(batch: DataFrame, bg: DataFrame,
                          idCol: String, textCol: String,
                          n: Int, threshold: Double): DataFrame = {
-    val cg = gramTable(batch, idCol, textCol, n)
-      .select(col("doc_id").as("corpus_id"),
-        Parity.md5_60(col("gram")).as("gram"))
-    val hits = cg.join(broadcast(bg), "gram")
-      .groupBy("corpus_id", "bench_id")
-      .agg(count(lit(1)).as("n_inter"), max(col("nb")).as("nb"))
-      .filter(col("n_inter").cast("double") / col("nb").cast("double")
-        >= threshold)
+    val cg = hashedGramTable(batch, idCol, textCol, n)
+      .select(col("doc_id").as("corpus_id"), col("gram"))
+    val hits = containmentHits(cg, bg, threshold)
       .select(col("corpus_id").as(idCol)).distinct()
     batch.join(hits, Seq(idCol), "left_anti")
   }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -269,19 +267,12 @@ object TextIndex {
     * [[AnnIndex.ensureBuilt]] memoization: registry rows pay the
     * tokenize+layout once and probe thereafter.
     */
-  private val built = new ConcurrentHashMap[(String, String), String]()
-
   def ensureBuilt(spark: SparkSession, cacheKey: String,
                   corpus: => DataFrame, idCol: String,
                   textCol: String): String =
-    built.computeIfAbsent((spark.sparkContext.applicationId, cacheKey), _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_text_index").toString
+    graft.io.TempScope.perApp(spark, cacheKey, "text_index") { dir =>
       build(corpus, idCol, textCol, dir)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))))
-      dir
-    })
+    }
 
   /** [[ensureBuilt]] for the build → daily-append → relayout
     * lifecycle: the memoized state is an index BUILT on `base` with
@@ -291,14 +282,9 @@ object TextIndex {
   def ensureBuiltAppended(spark: SparkSession, cacheKey: String,
                           base: => DataFrame, batch: => DataFrame,
                           idCol: String, textCol: String): String =
-    built.computeIfAbsent((spark.sparkContext.applicationId, cacheKey), _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_text_index_app").toString
+    graft.io.TempScope.perApp(spark, cacheKey, "text_index_app") { dir =>
       build(base, idCol, textCol, dir)
       append(batch, idCol, textCol, dir)
       relayout(spark, dir)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))))
-      dir
-    })
+    }
 }

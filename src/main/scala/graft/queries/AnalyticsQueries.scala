@@ -29,19 +29,13 @@ object AnalyticsQueries {
     * inference; UTC session TZ makes the cast identical to the
     * oracle's CAST(ts AS DATE).
     */
-  private val dppFactCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   private def dppFactDir(s: org.apache.spark.sql.SparkSession,
                          dir: String): String =
-    dppFactCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val out = java.nio.file.Files.createTempDirectory("graft_dpp_fact").toString
+    graft.io.TempScope.perApp(s, dir, "dpp_fact") { out =>
       table(s, dir, "events")
         .withColumn("d", col("ts").cast("date"))
         .write.mode("overwrite").partitionBy("d").parquet(out)
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(out))))
-      out
-    })
+    }
 
   val all: Seq[Q] = Seq(
 
@@ -134,9 +128,8 @@ object AnalyticsQueries {
       val (isNew, isHistory) = graft.BenchAttribution.timed("view_ivm.cutoff") {
         Incremental.daySplit(li)
       }
-      val stateDir = java.nio.file.Files
-        .createTempDirectory("graft_ivm_state").toString
-      try {
+      graft.io.TempScope.perCall("ivm_state") { scope =>
+        val stateDir = scope.root
         // nightly cadence: persist the standing state, fold the day in.
         // r20 job-shape changes (guide §2.6 / §6), result identical:
         //  - the history-state and day-state builds scan DISJOINT
@@ -171,13 +164,9 @@ object AnalyticsQueries {
           m.coalesce(1).write.mode("overwrite").parquet(s"$stateDir/v2")
           m
         }
-        graft.BenchAttribution.timed("view_ivm.finalize") {
-          Incremental.summaryFromState(merged)
-            .orderBy(col("ship_date").desc, col("l_returnflag"), col("l_linestatus"))
-            .localCheckpoint(true)
-        }
-      } finally
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(stateDir))
+        Incremental.summaryFromState(merged)
+          .orderBy(col("ship_date").desc, col("l_returnflag"), col("l_linestatus"))
+      }
     },
 
     /** view_latest_weather (reference: sql/schema.sql:100-115) —

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.Q
-import graft.io.{Sinks, Sources}
+import graft.io.{Sinks, Sources, TempScope}
 import graft.io.Sources.table
 
 /** Write-then-read-back registrations for the side-effecting §2
@@ -18,15 +18,15 @@ import graft.io.Sources.table
   * as literals for fixture-driven sources). A lossy round trip —
   * dropped rows, type drift, format truncation — breaks the hash.
   *
-  * Each invocation gets a fresh temp dir / unique table name:
-  * re-running a query (Bench runs each 3×) must not see the previous
-  * run's appends.
+  * Each invocation gets a fresh [[TempScope]] (temp dir, unique table
+  * names): re-running a query (Bench runs each 3×) must not see the
+  * previous run's appends, and the scope's teardown after the
+  * read-back is materialized keeps a soak-looped bench from
+  * accumulating copies.
   */
 object IoQueries {
 
   private val ctr = new java.util.concurrent.atomic.AtomicLong()
-  private def tmp(tag: String): String =
-    Files.createTempDirectory(s"graft_$tag").toString
   private def uniq(tag: String): String = s"${tag}_${ctr.incrementAndGet()}"
 
   private val derbyUrl = "jdbc:derby:memory:graftio;create=true"
@@ -86,13 +86,9 @@ object IoQueries {
     * version before sweeping), never live data, so all four rows keep
     * the identical oracle.
     */
-  private val upsertStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   private def stagedUpsertDir(s: org.apache.spark.sql.SparkSession,
                               dir: String): String =
-    upsertStageCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_upsert_stage").toString + "/t"
+    TempScope.perApp(s, dir, "upsert_stage") { out =>
       val base = table(s, dir, "events")
         .filter(col("event_id") % 50 === 0)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -114,11 +110,7 @@ object IoQueries {
         .withColumn("d", to_date(col("ts")))
       Sinks.upsertPartitioned(s, changed.unionByName(inserted), out,
         Seq("event_id"), "d")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(out).getParentFile)))
-      out
-    })
+    }
 
   /** ONE standing-table build + targeted purge per (application,
     * corpus) for maintain_delete_keys — same memoization rationale as
@@ -127,13 +119,9 @@ object IoQueries {
     * pruned, crash-atomic rewrite; re-running the (idempotent) purge
     * per bench pass would only re-probe an already-clean table.
     */
-  private val deleteStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   private def stagedDeleteDir(s: org.apache.spark.sql.SparkSession,
                               dir: String): String =
-    deleteStageCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_delete_stage").toString + "/t"
+    TempScope.perApp(s, dir, "delete_stage") { out =>
       val base = table(s, dir, "events")
         .filter(col("event_id") % 20 === 0)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -143,11 +131,7 @@ object IoQueries {
       val doomed = table(s, dir, "events")
         .filter(col("user_id") % 97 === 0).select("user_id").distinct()
       Sinks.deleteKeysPartitioned(s, doomed, out, Seq("user_id"), "d")
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(out).getParentFile)))
-      out
-    })
+    }
 
   /** ONE standing-table build + retention drop per (application,
     * corpus) for maintain_retention — the [[stagedUpsertDir]]
@@ -155,13 +139,9 @@ object IoQueries {
     * equalling the oracle's retained window after the partition-level
     * TTL drop; a re-run would drop nothing further.
     */
-  private val retentionStageCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
   private def stagedRetentionDir(s: org.apache.spark.sql.SparkSession,
                                  dir: String): String =
-    retentionStageCache.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_retention_stage").toString + "/t"
+    TempScope.perApp(s, dir, "retention_stage") { out =>
       val base = table(s, dir, "events")
         .filter(col("event_id") % 30 === 0)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -172,11 +152,7 @@ object IoQueries {
       // data so the row is corpus-size-independent (one bounded agg)
       val cutoff = base.agg(date_sub(max(col("d")), 9)).head().getDate(0)
       Sinks.dropPartitions(s, out, "d", v => v >= lit(cutoff))
-      Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(out).getParentFile)))
-      out
-    })
+    }
 
   /** The four protocol rows' common projection over any read-back. */
   private def upsertReadBack(back: org.apache.spark.sql.DataFrame) =
@@ -247,9 +223,10 @@ object IoQueries {
         |FROM supplier ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
       val sup = table(s, dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-      val out = tmp("sink_csv")
-      Sinks.csv(sup, out)
-      Sources.csv(s, out, sup.schema).orderBy("s_suppkey")
+      TempScope.perCall("sink_csv") { scope =>
+        Sinks.csv(sup, scope.root)
+        Sources.csv(s, scope.root, sup.schema).orderBy("s_suppkey")
+      }
     },
 
     /** sink_json (reference: src/transform.py:326-327): customer →
@@ -258,9 +235,10 @@ object IoQueries {
       """SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
         |FROM customer ORDER BY c_custkey""".stripMargin) { (s, dir) =>
       val c = table(s, dir, "customer")
-      val out = tmp("sink_json")
-      Sinks.json(c, out)
-      Sources.json(s, out, c.schema).orderBy("c_custkey")
+      TempScope.perCall("sink_json") { scope =>
+        Sinks.json(c, scope.root)
+        Sources.json(s, scope.root, c.schema).orderBy("c_custkey")
+      }
     },
 
     /** sink_parquet (reference: src/transform.py:328-329): orders →
@@ -271,9 +249,10 @@ object IoQueries {
         |  o_orderdate, o_orderpriority
         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
-      val out = tmp("sink_parquet")
-      Sinks.parquet(o, out)
-      s.read.parquet(out).orderBy("o_orderkey")
+      TempScope.perCall("sink_parquet") { scope =>
+        Sinks.parquet(o, scope.root)
+        s.read.parquet(scope.root).orderBy("o_orderkey")
+      }
     },
 
     /** sink_orc — the second columnar format (Spark-native ORC):
@@ -287,9 +266,10 @@ object IoQueries {
         |FROM part ORDER BY p_partkey""".stripMargin) { (s, dir) =>
       val p = table(s, dir, "part")
         .select("p_partkey", "p_name", "p_brand", "p_size", "p_retailprice")
-      val out = tmp("sink_orc")
-      p.write.mode("overwrite").orc(out)
-      s.read.orc(out).orderBy("p_partkey")
+      TempScope.perCall("sink_orc") { scope =>
+        p.write.mode("overwrite").orc(scope.root)
+        s.read.orc(scope.root).orderBy("p_partkey")
+      }
     },
 
     /** sink_avro — the row-oriented interchange format, completing the
@@ -308,9 +288,10 @@ object IoQueries {
         .filter(col("o_orderkey") % 7 === 0)
         .select("o_orderkey", "o_custkey", "o_orderstatus",
           "o_totalprice", "o_orderdate")
-      val out = tmp("sink_avro")
-      graft.io.Avro.write(o, out)
-      graft.io.Avro.read(s, out, o.schema).orderBy("o_orderkey")
+      TempScope.perCall("sink_avro") { scope =>
+        graft.io.Avro.write(o, scope.root)
+        graft.io.Avro.read(s, scope.root, o.schema).orderBy("o_orderkey")
+      }
     },
 
     /** sink_avro_evolve — Avro schema-resolution evolution plus the
@@ -345,8 +326,6 @@ object IoQueries {
             .otherwise(concat(lit("n"), col("o_custkey").cast("string")))
             .as("note"),
           col("o_totalprice").as("val_d"))
-      val out = tmp("sink_avro_evolve")
-      graft.io.Avro.write(v1, out)
       val v2 = StructType(Seq(
         StructField("o_orderkey", LongType),
         StructField("old_ts", TimestampType),
@@ -354,8 +333,11 @@ object IoQueries {
         StructField("note", StringType),
         StructField("price_d", DoubleType),
         StructField("added_flag", IntegerType)))
-      graft.io.Avro.read(s, out, v2, aliases = Map("price_d" -> "val_d"))
-        .orderBy("o_orderkey")
+      TempScope.perCall("sink_avro_evolve") { scope =>
+        graft.io.Avro.write(v1, scope.root)
+        graft.io.Avro.read(s, scope.root, v2, aliases = Map("price_d" -> "val_d"))
+          .orderBy("o_orderkey")
+      }
     },
 
     /** sink_append_evolve — schema evolution on a standing parquet
@@ -372,8 +354,8 @@ object IoQueries {
         |SELECT n_nationkey + 100, n_name, n_regionkey FROM nation
         |ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
       val n = table(s, dir, "nation")
-      val out = tmp("sink_evolve") + "/t"
-      try {
+      TempScope.perCall("sink_evolve") { scope =>
+        val out = scope.path("t")
         Sinks.appendEvolved(s, n.select("n_nationkey", "n_name"), out)
         Sinks.appendEvolved(s, n.select(
           (col("n_nationkey") + 100).as("n_nationkey"),
@@ -381,10 +363,7 @@ object IoQueries {
         Sinks.readEvolved(s, out)
           .select("n_nationkey", "n_name", "n_regionkey")
           .orderBy("n_nationkey")
-          .localCheckpoint(true)
-      } finally
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(out).getParentFile)
+      }
     },
 
     /** sink_overwrite_dynamic — dynamic partition overwrite
@@ -412,8 +391,8 @@ object IoQueries {
       val base = table(s, dir, "events")
         .filter(col("event_id") % 40 === 0)
         .select(col("event_id"), to_date(col("ts")).as("d"), col("value"))
-      val out = tmp("sink_dynover") + "/t"
-      try {
+      TempScope.perCall("sink_dynover") { scope =>
+        val out = scope.path("t")
         Sinks.overwriteDynamic(
           base.withColumn("src", lit("v1")).repartition(col("d")),
           out, Seq("d"))
@@ -424,10 +403,8 @@ object IoQueries {
         s.read.parquet(out)
           .select(col("event_id"), col("d").cast("date").as("d"),
             col("src"), col("value"))
-          .orderBy("event_id").localCheckpoint(true)
-      } finally
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(out).getParentFile)
+          .orderBy("event_id")
+      }
     },
 
     /** maintain_delete_keys — the right-to-be-forgotten purge
@@ -584,9 +561,10 @@ object IoQueries {
         |             (SELECT count(*) FROM nation) AS n_nations)""".stripMargin) { (s, dir) =>
       val m = table(s, dir, "region").agg(count(lit(1)).as("n_regions"))
         .crossJoin(table(s, dir, "nation").agg(count(lit(1)).as("n_nations")))
-      val out = tmp("sink_metrics")
-      Sinks.appendMetrics(m, out)
-      s.read.parquet(out).select("n_regions", "n_nations", "metrics_json")
+      TempScope.perCall("sink_metrics") { scope =>
+        Sinks.appendMetrics(m, scope.root)
+        s.read.parquet(scope.root).select("n_regions", "n_nations", "metrics_json")
+      }
     },
 
     /** sink_history (reference: src/load.py:523-554): run-level audit
@@ -597,14 +575,15 @@ object IoQueries {
         |  (1, (SELECT count(*) FROM region)),
         |  (2, (SELECT count(*) FROM nation))) AS t(batch_id, n_rows)
         |ORDER BY batch_id""".stripMargin) { (s, dir) =>
-      val out = tmp("sink_history")
       val b1 = table(s, dir, "region").agg(count(lit(1)).as("n_rows"))
         .select(lit(1).as("batch_id"), col("n_rows"))
       val b2 = table(s, dir, "nation").agg(count(lit(1)).as("n_rows"))
         .select(lit(2).as("batch_id"), col("n_rows"))
-      Sinks.append(b1, out)
-      Sinks.append(b2, out)
-      s.read.parquet(out).orderBy("batch_id")
+      TempScope.perCall("sink_history") { scope =>
+        Sinks.append(b1, scope.root)
+        Sinks.append(b2, scope.root)
+        s.read.parquet(scope.root).orderBy("batch_id")
+      }
     },
 
     /** ddl_create (reference: src/load.py:80-263, sql/schema.sql:9-39):
@@ -614,11 +593,12 @@ object IoQueries {
       """SELECT n_nationkey, n_name, n_regionkey
         |FROM nation ORDER BY n_nationkey""".stripMargin) { (s, dir) =>
       val n = table(s, dir, "nation")
-      val path = tmp("ddl_create")
-      Sinks.parquet(n, path)
-      val name = uniq("graft_ddl")
-      Sinks.registerTable(s, name, path)
-      s.table(name).orderBy("n_nationkey")
+      TempScope.perCall("ddl_create") { scope =>
+        Sinks.parquet(n, scope.root)
+        val name = scope.name("graft_ddl")
+        Sinks.registerTable(s, name, scope.root)
+        s.table(name).orderBy("n_nationkey")
+      }
     },
 
     /** join_bucketed — co-located join over bucketed tables: both
@@ -635,10 +615,12 @@ object IoQueries {
         |  CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
         |FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         |GROUP BY o_orderstatus ORDER BY o_orderstatus""".stripMargin) { (s, dir) =>
-      val wh = tmp("join_bucketed")
-      val liT = uniq("li_bkt")
-      val ordT = uniq("ord_bkt")
-      try {
+      // the tables and their files go with the scope once the result
+      // is materialized — a soak-looped bench must not accumulate two
+      // lineitem-sized copies per invocation
+      TempScope.perCall("join_bucketed") { scope =>
+        val liT = scope.name("li_bkt")
+        val ordT = scope.name("ord_bkt")
         // repartition by the bucket key into exactly the bucket count
         // BEFORE the bucketed write: repartition's HashPartitioning and
         // bucketing's bucket id are the same pmod(Murmur3) expression,
@@ -650,27 +632,18 @@ object IoQueries {
         table(s, dir, "lineitem").select("l_orderkey", "l_quantity")
           .repartition(8, col("l_orderkey"))
           .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$wh/$liT").saveAsTable(liT)
+          .option("path", scope.path(liT)).saveAsTable(liT)
         table(s, dir, "orders")
           .select(col("o_orderkey").as("l_orderkey"), col("o_orderstatus"))
           .repartition(8, col("l_orderkey"))
           .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", s"$wh/$ordT").saveAsTable(ordT)
+          .option("path", scope.path(ordT)).saveAsTable(ordT)
         s.table(liT).hint("merge")
           .join(s.table(ordT).hint("merge"), "l_orderkey")
           .groupBy("o_orderstatus")
           .agg(count(lit(1)).as("n_items"),
             graft.functions.Parity.dsum(col("l_quantity")).as("sum_qty"))
           .orderBy("o_orderstatus")
-          .localCheckpoint(true)
-      } finally {
-        // result is checkpointed, so both external tables AND their
-        // files can go — a soak-looped bench must not accumulate two
-        // lineitem-sized copies per invocation (the stream_sessionize
-        // lesson from round 5)
-        s.sql(s"DROP TABLE IF EXISTS $liT")
-        s.sql(s"DROP TABLE IF EXISTS $ordT")
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(wh))
       }
     },
 
@@ -683,9 +656,10 @@ object IoQueries {
         |ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders").filter(col("o_orderkey") % 150 === 0)
         .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderdate")
-      val out = tmp("src_csv")
-      Sinks.csv(o, out)
-      Sources.csv(s, out, o.schema).orderBy("o_orderkey")
+      TempScope.perCall("src_csv") { scope =>
+        Sinks.csv(o, scope.root)
+        Sources.csv(s, scope.root, o.schema).orderBy("o_orderkey")
+      }
     },
 
     /** src_config_json (reference: src/ingest.py:192-213, config/
@@ -696,14 +670,16 @@ object IoQueries {
         |  ('Lima', 'PE'), ('London', 'GB'), ('Oslo', 'NO'), ('Quito', 'EC'))
         |  AS t(city, country_code)
         |ORDER BY city""".stripMargin) { (s, _) =>
-      val cfg = Files.createTempDirectory("graft_cfg").resolve("cities.json")
-      Files.writeString(cfg,
-        """{"city": "Oslo", "country_code": "NO"}
-          |{"city": "Lima", "country_code": "PE"}
-          |{"city": "London", "country_code": "GB"}
-          |{"city": "Quito", "country_code": "EC"}
-          |""".stripMargin)
-      Sources.citiesConfig(s, cfg.toString).orderBy("city")
+      TempScope.perCall("cfg") { scope =>
+        val cfg = scope.path("cities.json")
+        Files.writeString(java.nio.file.Paths.get(cfg),
+          """{"city": "Oslo", "country_code": "NO"}
+            |{"city": "Lima", "country_code": "PE"}
+            |{"city": "London", "country_code": "GB"}
+            |{"city": "Quito", "country_code": "EC"}
+            |""".stripMargin)
+        Sources.citiesConfig(s, cfg).orderBy("city")
+      }
     },
 
     /** src_http_json (reference: src/ingest.py:63-120): the DSv2
@@ -723,16 +699,18 @@ object IoQueries {
         |       pressure, description, wind_speed, wind_direction, cloudiness,
         |       visibility, lat, lon)
         |ORDER BY city""".stripMargin) { (s, _) =>
-      val dir = Files.createTempDirectory("graft_api")
-      Files.writeString(dir.resolve("London.json"),
-        weatherFixture("London", "GB", 15.5, 65))
-      Files.writeString(dir.resolve("Tokyo.json"),
-        weatherFixture("Tokyo", "JP", 22.0, 71))
-      s.read.format("graft-weather")
-        .option("cities", "London:GB,Tokyo:JP")
-        .option("urlTemplate", s"file://$dir/{city}.json")
-        .load()
-        .orderBy("city")
+      TempScope.perCall("api") { scope =>
+        Seq(("London", "GB", 15.5, 65), ("Tokyo", "JP", 22.0, 71)).foreach {
+          case (city, country, temp, humidity) =>
+            Files.writeString(java.nio.file.Paths.get(scope.path(s"$city.json")),
+              weatherFixture(city, country, temp, humidity))
+        }
+        s.read.format("graft-weather")
+          .option("cities", "London:GB,Tokyo:JP")
+          .option("urlTemplate", s"file://${scope.root}/{city}.json")
+          .load()
+          .orderBy("city")
+      }
     },
 
     /** compact_files: table maintenance for append-accumulated small
@@ -745,11 +723,13 @@ object IoQueries {
         |FROM supplier ORDER BY s_suppkey""".stripMargin) { (s, dir) =>
       val sup = table(s, dir, "supplier")
         .select("s_suppkey", "s_name", "s_nationkey", "s_acctbal")
-      val frag = tmp("compact_in")
-      val out = tmp("compact_out")
-      sup.repartition(32).write.mode("overwrite").parquet(frag)
-      graft.ops.Compaction.compactAndRead(s, frag, out, targetBytes = 8L << 20)
-        .orderBy("s_suppkey")
+      TempScope.perCall("compact") { scope =>
+        val frag = scope.path("in")
+        sup.repartition(32).write.mode("overwrite").parquet(frag)
+        graft.ops.Compaction.compactAndRead(s, frag, scope.path("out"),
+            targetBytes = 8L << 20)
+          .orderBy("s_suppkey")
+      }
     },
 
     /** layout_range_sort: range-partitioned, sorted-within-file
@@ -764,9 +744,10 @@ object IoQueries {
         |FROM orders ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val out = tmp("layout_range")
-      graft.ops.Layout.writeRangeSorted(o, out, nFiles = 8, keyCol = "o_orderkey")
-      s.read.parquet(out).orderBy("o_orderkey")
+      TempScope.perCall("layout_range") { scope =>
+        graft.ops.Layout.writeRangeSorted(o, scope.root, nFiles = 8, keyCol = "o_orderkey")
+        s.read.parquet(scope.root).orderBy("o_orderkey")
+      }
     },
 
     /** compact_partitioned: IN-PLACE compaction of a Hive-partitioned
@@ -784,17 +765,13 @@ object IoQueries {
       val sup = table(s, dir, "supplier")
         .filter(col("s_nationkey") < 5)
         .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
-      val root = tmp("compact_part")
-      try {
+      TempScope.perCall("compact_part") { scope =>
         sup.repartition(16).write.mode("overwrite")
-          .partitionBy("s_nationkey").parquet(root)
-        graft.ops.Compaction.compactPartitioned(s, root, targetBytes = 8L << 20)
-        s.read.parquet(root)
+          .partitionBy("s_nationkey").parquet(scope.root)
+        graft.ops.Compaction.compactPartitioned(s, scope.root, targetBytes = 8L << 20)
+        s.read.parquet(scope.root)
           .select("s_suppkey", "s_name", "s_acctbal", "s_nationkey")
           .orderBy("s_suppkey")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(root))
       }
     },
 
@@ -819,18 +796,12 @@ object IoQueries {
     }) { (s, dir) =>
       val li = table(s, dir, "lineitem")
         .select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
-      val out = tmp("layout_zorder")
-      try {
-        graft.ops.Layout.writeZOrdered(li, out, nFiles = 8,
+      TempScope.perCall("layout_zorder") { scope =>
+        graft.ops.Layout.writeZOrdered(li, scope.root, nFiles = 8,
           colA = "l_partkey", colB = "l_suppkey", bits = 16)
-        // checkpoint the read-back so the lineitem-sized temp copy can
-        // be deleted per invocation (the join_bucketed discipline)
-        s.read.parquet(out)
+        s.read.parquet(scope.root)
           .select("zkey", "l_orderkey", "l_linenumber", "l_partkey", "l_suppkey")
           .orderBy("zkey", "l_orderkey", "l_linenumber")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
       }
     },
 
@@ -849,18 +820,14 @@ object IoQueries {
         |WHERE o_orderkey BETWEEN 200 AND 900 ORDER BY o_orderkey""".stripMargin) { (s, dir) =>
       val o = table(s, dir, "orders")
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val data = tmp("zonemap_data")
-      val zm = tmp("zonemap_idx")
-      try {
+      TempScope.perCall("zonemap") { scope =>
+        val data = scope.path("data")
+        val zm = scope.path("idx")
         graft.ops.Layout.writeRangeSorted(o, data, nFiles = 8, keyCol = "o_orderkey")
         graft.ops.Layout.writeZonemap(s, data, "o_orderkey", zm)
         graft.ops.Layout.readPruned(s, data, zm, "o_orderkey",
             lit(200L), lit(900L))
           .orderBy("o_orderkey")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(data))
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(zm))
       }
     },
 
@@ -930,17 +897,13 @@ object IoQueries {
       val merged = graft.ops.Scd.merge2(dim0, snapshot, "c_custkey",
         Seq("c_name", "c_nationkey", "c_acctbal", "c_mktsegment"),
         lit(java.sql.Date.valueOf("1998-07-01")))
-      val out = tmp("scd2")
-      try {
-        merged.write.mode("overwrite").partitionBy("is_current").parquet(out)
-        s.read.parquet(out)
+      TempScope.perCall("scd2") { scope =>
+        merged.write.mode("overwrite").partitionBy("is_current").parquet(scope.root)
+        s.read.parquet(scope.root)
           .select(col("c_custkey"), col("c_name"), col("c_nationkey"),
             col("c_acctbal"), col("c_mktsegment"), col("valid_from"),
             col("valid_to"), col("is_current").cast("boolean").as("is_current"))
           .orderBy("c_custkey", "valid_from")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
       }
     },
 
@@ -957,17 +920,11 @@ object IoQueries {
         |    AS shuffle_key, doc_id, n_chars
         |FROM documents ORDER BY shuffle_key, doc_id""".stripMargin) { (s, dir) =>
       val docs = table(s, dir, "documents").select("doc_id", "n_chars")
-      val out = tmp("corpus_shuffle")
-      try {
-        graft.ops.Layout.writeShuffled(docs, out, nFiles = 8,
+      TempScope.perCall("corpus_shuffle") { scope =>
+        graft.ops.Layout.writeShuffled(docs, scope.root, nFiles = 8,
           seed = "graft-epoch-0", idCol = "doc_id")
-        // checkpoint the read-back so the shuffled copy can be deleted
-        // per invocation rather than accumulating across a bench soak
-        s.read.parquet(out).select("shuffle_key", "doc_id", "n_chars")
+        s.read.parquet(scope.root).select("shuffle_key", "doc_id", "n_chars")
           .orderBy("shuffle_key", "doc_id")
-          .localCheckpoint(true)
-      } finally {
-        org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(out))
       }
     },
 

@@ -1,10 +1,10 @@
 package graft.queries
 
-import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.Q
+import graft.io.TempScope
+import graft.streaming.{StreamHarness, StreamingOps}
 
 /** Structured Streaming, oracle-verified: the query fn runs a REAL
   * streaming query over the corpus (file source → windowed aggregate →
@@ -15,40 +15,6 @@ import graft.Q
   * stand-in.
   */
 object StreamingQueries {
-
-  private val runId = new AtomicLong(0)
-
-  /** Decompose a finished streaming row's wall time into engine fixed
-    * floor vs micro-batch work (VERDICT r18 #6): the rows flagged
-    * "RocksDB/AvailableNow startup variance" since r7 get MEASURED
-    * sections instead of an attribution-by-plausibility. Sections
-    * come from the engine's own per-batch progress (`recentProgress`
-    * `durationMs`): `trigger_exec` is the summed in-batch execution,
-    * `add_batch` the data-plane part of it, `state_commit` the
-    * offset/WAL commit overhead, and `engine_floor` = start call +
-    * await wall − trigger_exec — the query-lifecycle cost (planning,
-    * state-store init, source listing, inter-batch gaps) that scales
-    * with engine startup, not with corpus. Advisory overlay only,
-    * same contract as every BenchAttribution section.
-    */
-  private def recordStreamSections(prefix: String,
-      q: org.apache.spark.sql.streaming.StreamingQuery,
-      startSec: Double, awaitSec: Double): Unit = {
-    graft.BenchAttribution.record(s"$prefix.start_call", startSec)
-    graft.BenchAttribution.record(s"$prefix.await", awaitSec)
-    val prog = q.recentProgress
-    def sumMs(key: String): Double =
-      prog.map(p => Option(p.durationMs.get(key))
-        .map(_.longValue).getOrElse(0L)).sum / 1000.0
-    val trig = sumMs("triggerExecution")
-    graft.BenchAttribution.record(s"$prefix.trigger_exec", trig)
-    graft.BenchAttribution.record(s"$prefix.add_batch", sumMs("addBatch"))
-    graft.BenchAttribution.record(s"$prefix.state_commit",
-      sumMs("commitOffsets") + sumMs("walCommit"))
-    graft.BenchAttribution.record(s"$prefix.n_batches", prog.length.toDouble)
-    graft.BenchAttribution.record(s"$prefix.engine_floor",
-      math.max(0.0, startSec + awaitSec - trig))
-  }
 
   val all: Seq[Q] = Seq(
     Q("stream_windowed_counts",
@@ -62,29 +28,11 @@ object StreamingQueries {
         .groupBy(window(col("ts"), "1 day"), col("event_type"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).cast("double").as("sum_value"))
-      val name = s"graft_stream_out_${runId.incrementAndGet()}"
-      // stateful agg: one state store per shuffle partition, each
-      // loaded + committed per micro-batch — size the streaming shuffle
-      // to the state volume (a few hundred (day, type) groups), not the
-      // CPU count, same discipline and setting as stream_join_attrib /
-      // stream_sessionize (r19: trigger_exec 1.15 s → ~0.5 s; the
-      // checkpoint is fresh per invocation, so batch conf is restored)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val t0 = System.nanoTime()
-      val q =
-        try agg.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      val tStart = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      q.awaitTermination()
-      recordStreamSections("stream_windowed_counts", q, tStart,
-        (System.nanoTime() - t1) / 1e9)
-      s.table(name)
-        .select(col("window.start").as("ws"), col("event_type"),
-          col("n"), col("sum_value"))
-        .orderBy("ws", "event_type")
+      StreamHarness.memory("stream_windowed_counts", agg, "complete") {
+        _.select(col("window.start").as("ws"), col("event_type"),
+            col("n"), col("sum_value"))
+          .orderBy("ws", "event_type")
+      }
     },
 
     /** Watermarked stream-stream interval join: each click joined to
@@ -107,31 +55,15 @@ object StreamingQueries {
           col("ts").as("click_ts"))
       val views = base.filter(col("event_type") === "view")
         .select(col("user_id").as("view_user"), col("ts").as("view_ts"))
-      val joined = graft.streaming.StreamingOps.intervalJoinStream(
+      val joined = StreamingOps.intervalJoinStream(
         clicks, views, "user_id", "view_user", "click_ts", "view_ts",
         before = "60 minutes", lateness = "1 hour")
-      val name = s"graft_stream_join_${runId.incrementAndGet()}"
-      // a stream-stream join maintains FOUR state stores per shuffle
-      // partition, each snapshotted per micro-batch — size the streaming
-      // shuffle to the state volume, not the CPU count, or store commit
-      // overhead dominates (32 → 8 partitions is ~4× faster here; a
-      // fresh checkpoint pins this per query, so batch conf is restored)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val t0 = System.nanoTime()
-      val q =
-        try joined.writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      val tStart = (System.nanoTime() - t0) / 1e9
-      val t1 = System.nanoTime()
-      q.awaitTermination()
-      recordStreamSections("stream_join_attrib", q, tStart,
-        (System.nanoTime() - t1) / 1e9)
-      s.table(name).groupBy("user_id")
-        .agg(count(lit(1)).as("n_view_click_pairs"),
-          countDistinct(col("click_id")).as("n_attributed_clicks"))
-        .orderBy("user_id")
+      StreamHarness.memory("stream_join_attrib", joined, "append") {
+        _.groupBy("user_id")
+          .agg(count(lit(1)).as("n_view_click_pairs"),
+            countDistinct(col("click_id")).as("n_attributed_clicks"))
+          .orderBy("user_id")
+      }
     },
 
     /** foreachBatch + upsert sink end to end: the event stream merges
@@ -149,18 +81,17 @@ object StreamingQueries {
         |ORDER BY user_id, event_type""".stripMargin) { (s, dir) =>
       val stream = graft.io.Sources.eventsStream(s, dir)
         .select("user_id", "event_type", "event_id", "value", "ts")
-      val out = java.nio.file.Files.createTempDirectory("graft_stream_upsert")
-        .toString + s"/t${runId.incrementAndGet()}"
-      val q = stream.writeStream
-        .foreachBatch((b: org.apache.spark.sql.DataFrame, id: Long) =>
-          graft.streaming.StreamingOps.upsertSink(b, id, out,
+      TempScope.perCall("stream_upsert") { scope =>
+        val out = scope.path("t")
+        StreamHarness.foreachBatch("stream_upsert_latest", stream) { (b, id) =>
+          StreamingOps.upsertSink(b, id, out,
             keys = Seq("user_id", "event_type"),
-            updatePriority = Seq("ts", "event_id")))
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      s.read.parquet(out)
-        .select("user_id", "event_type", "event_id", "value")
-        .orderBy("user_id", "event_type")
+            updatePriority = Seq("ts", "event_id"))
+        }
+        s.read.parquet(out)
+          .select("user_id", "event_type", "event_id", "value")
+          .orderBy("user_id", "event_type")
+      }
     },
 
     /** stream_rerun_dynamic — the idempotent streaming day-load: each
@@ -180,25 +111,23 @@ object StreamingQueries {
     Q("stream_rerun_dynamic",
       """SELECT event_id, user_id, event_type, value, CAST(ts AS DATE) AS d
         |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-      val out = java.nio.file.Files.createTempDirectory("graft_stream_rerun")
-        .toString + s"/t${runId.incrementAndGet()}"
-      def runOnce(): Unit = {
-        val stream = graft.io.Sources.eventsStream(s, dir)
+      TempScope.perCall("stream_rerun") { scope =>
+        val out = scope.path("t")
+        // twice, each run with a fresh checkpoint: the full-reprocess
+        // replay; each run records its own sections (.run1, .run2)
+        (1 to 2).foreach { i =>
+          val stream = graft.io.Sources.eventsStream(s, dir)
+            .select(col("event_id"), col("user_id"), col("event_type"),
+              col("value"), to_date(col("ts")).as("d"))
+          StreamHarness.foreachBatch(s"stream_rerun_dynamic.run$i", stream) { (b, _) =>
+            graft.io.Sinks.overwriteDynamic(b.repartition(col("d")), out, Seq("d"))
+          }
+        }
+        s.read.parquet(out)
           .select(col("event_id"), col("user_id"), col("event_type"),
-            col("value"), to_date(col("ts")).as("d"))
-        val q = stream.writeStream
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-            graft.io.Sinks.overwriteDynamic(
-              b.repartition(col("d")), out, Seq("d")))
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+            col("value"), col("d").cast("date").as("d"))
+          .orderBy("event_id")
       }
-      runOnce()
-      runOnce() // fresh checkpoint: the full-reprocess replay
-      s.read.parquet(out)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          col("value"), col("d").cast("date").as("d"))
-        .orderBy("event_id")
     },
 
     /** Keyed streaming dedup through the engine
@@ -216,23 +145,12 @@ object StreamingQueries {
         |FROM events ORDER BY user_id, ts_hour""".stripMargin) { (s, dir) =>
       val stream = graft.io.Sources.eventsStream(s, dir)
         .select("user_id", "ts")
-      val dd = graft.streaming.StreamingOps.dedupHourlyStream(
+      val dd = StreamingOps.dedupHourlyStream(
         stream, keys = Seq("user_id"), tsCol = "ts")
-      val name = s"graft_stream_dedup_${runId.incrementAndGet()}"
-      // dropDuplicates keeps one state store per shuffle partition —
-      // size the streaming shuffle to the state volume ((user, hour)
-      // keys), not the CPU count; same setting as stream_join_attrib.
-      // Emitted KEY set is partitioning-independent (only the winner
+      // emitted KEY set is partitioning-independent (only the winner
       // ROW would race, and only keys are emitted)
-      val prev = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      val q =
-        try dd.select("user_id", "ts_hour")
-          .writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        finally s.conf.set("spark.sql.shuffle.partitions", prev)
-      q.awaitTermination()
-      s.table(name).orderBy("user_id", "ts_hour")
+      StreamHarness.memory("stream_dedup", dd.select("user_id", "ts_hour"),
+        "append")(_.orderBy("user_id", "ts_hour"))
     },
 
     /** stream_dedup_indexed — the composed production ingest shape:
@@ -311,7 +229,6 @@ object StreamingQueries {
          |  (SELECT * FROM sA UNION ALL SELECT * FROM sB)
          |ORDER BY doc_id""".stripMargin
     }) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
       val docs = graft.io.Sources.table(s, dir, "documents")
         .select("doc_id", "text", "n_chars")
       // one TEMPLATE index per (application, corpus), copied fresh per
@@ -329,57 +246,26 @@ object StreamingQueries {
         graft.ops.DedupIndex.ensureBuilt(s, dir + "#streamtpl",
           docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", 3)
       }
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_ddx")
-      val idx = s"$root/idx"
-      graft.BenchAttribution.timed("stream_dedup_indexed.copy_index") {
-        org.apache.commons.io.FileUtils.copyDirectory(
-          new java.io.File(tpl), new java.io.File(idx))
-      }
-      val in = s"$root/in"
-      val out = s"$root/out"
-      val fs = new Path(in).getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        // two single-file micro-batches with pinned (mtime, name)
-        // order: A = doc_id % 10 = 0, then B = doc_id % 10 = 5
-        graft.BenchAttribution.timed("stream_dedup_indexed.stage_input") {
-          Seq(("00", lit(0)), ("01", lit(5))).foreach { case (nm, residue) =>
-            val stage = s"$root/stage$nm"
-            docs.filter(pmod(col("doc_id"), lit(10)) === residue)
-              .coalesce(1).write.parquet(stage)
-            val part = fs.listStatus(new Path(stage))
-              .map(_.getPath).find(_.getName.startsWith("part-")).get
-            fs.mkdirs(new Path(in))
-            require(fs.rename(part, new Path(in, s"$nm.parquet")))
-            fs.setTimes(new Path(in, s"$nm.parquet"),
-              1700000000000L + nm.toLong * 60000L, -1)
+      TempScope.perCall("stream_ddx") { scope =>
+        val idx = scope.path("idx")
+        graft.BenchAttribution.timed("stream_dedup_indexed.copy_index") {
+          org.apache.commons.io.FileUtils.copyDirectory(
+            new java.io.File(tpl), new java.io.File(idx))
+        }
+        // two micro-batches: A = doc_id % 10 = 0, then B = doc_id % 10 = 5
+        val stream = graft.BenchAttribution.timed("stream_dedup_indexed.stage_input") {
+          StreamHarness.stage(scope,
+            Seq(0, 5).map(r => docs.filter(pmod(col("doc_id"), lit(10)) === r)))
+        }
+        val out = scope.path("out")
+        graft.BenchAttribution.timed("stream_dedup_indexed.stream") {
+          StreamHarness.foreachBatch("stream_dedup_indexed", stream) { (b, id) =>
+            StreamingOps.dedupIndexedBatch(s, b, id, idx, out,
+              "doc_id", "text", 3, 0.5, keep = Seq("doc_id", "n_chars"))
           }
         }
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType), StructField("n_chars", LongType))))
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        graft.BenchAttribution.timed("stream_dedup_indexed.stream") {
-          val q = stream.writeStream
-            .foreachBatch { (b: org.apache.spark.sql.DataFrame, bid: Long) =>
-              val surv = graft.BenchAttribution.timed(
-                  s"stream_dedup_indexed.b${bid}_dedup") {
-                graft.ops.DedupIndex.dedupBatch(s, b, idx,
-                  "doc_id", "text", 3, 0.5).localCheckpoint(true)
-              }
-              surv.select("doc_id", "n_chars")
-                .write.mode("append").parquet(out)
-              graft.BenchAttribution.timed(
-                  s"stream_dedup_indexed.b${bid}_append") {
-                graft.ops.DedupIndex.append(surv, "doc_id", "text", 3, idx)
-              }
-            }
-            .trigger(Trigger.AvailableNow()).start()
-          q.awaitTermination()
-        }
-        s.read.parquet(out).select("doc_id", "n_chars")
-          .orderBy("doc_id").localCheckpoint(true)
-      } finally
-        org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+        s.read.parquet(out).select("doc_id", "n_chars").orderBy("doc_id")
+      }
     },
 
     /** stream_decontaminate — ingest-time benchmark decontamination:
@@ -412,48 +298,24 @@ object StreamingQueries {
          |SELECT doc_id, n_chars FROM documents
          |WHERE doc_id % 5 = 0 AND doc_id NOT IN (SELECT cid FROM hits)
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
       val docs = graft.io.Sources.table(s, dir, "documents")
         .select("doc_id", "text", "n_chars")
       // the standing benchmark artifact: built once, reused per batch
       val bg = graft.ops.Dedup.benchGrams(
         docs.filter(pmod(col("doc_id"), lit(97)) === 0),
         "doc_id", "text", 3).localCheckpoint(true)
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_dc")
-      val in = s"$root/in"
-      val out = s"$root/out"
-      val fs = new Path(in).getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        // two single-file micro-batches with pinned (mtime, name)
-        // order: A = doc_id % 10 = 0, then B = doc_id % 10 = 5
-        Seq(("00", lit(0)), ("01", lit(5))).foreach { case (nm, residue) =>
-          val stage = s"$root/stage$nm"
-          docs.filter(pmod(col("doc_id"), lit(10)) === residue)
-            .coalesce(1).write.parquet(stage)
-          val part = fs.listStatus(new Path(stage))
-            .map(_.getPath).find(_.getName.startsWith("part-")).get
-          fs.mkdirs(new Path(in))
-          require(fs.rename(part, new Path(in, s"$nm.parquet")))
-          fs.setTimes(new Path(in, s"$nm.parquet"),
-            1700000000000L + nm.toLong * 60000L, -1)
+      TempScope.perCall("stream_dc") { scope =>
+        // two micro-batches: A = doc_id % 10 = 0, then B = doc_id % 10 = 5
+        val stream = StreamHarness.stage(scope,
+          Seq(0, 5).map(r => docs.filter(pmod(col("doc_id"), lit(10)) === r)))
+        val out = scope.path("out")
+        StreamHarness.foreachBatch("stream_decontaminate", stream) { (b, _) =>
+          graft.ops.Dedup.decontaminateBatch(b, bg, "doc_id", "text", 3, 0.8)
+            .select("doc_id", "n_chars")
+            .write.mode("append").parquet(out)
         }
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("doc_id", LongType),
-            StructField("text", StringType), StructField("n_chars", LongType))))
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        val q = stream.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-            graft.ops.Dedup.decontaminateBatch(b, bg,
-                "doc_id", "text", 3, 0.8)
-              .select("doc_id", "n_chars")
-              .write.mode("append").parquet(out)
-          }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        s.read.parquet(out).select("doc_id", "n_chars")
-          .orderBy("doc_id").localCheckpoint(true)
-      } finally
-        org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+        s.read.parquet(out).select("doc_id", "n_chars").orderBy("doc_id")
+      }
     },
 
     /** stream_summary_incremental — streaming warehouse ingest: each
@@ -476,58 +338,31 @@ object StreamingQueries {
          |  COUNT(*) AS record_count
          |FROM lineitem WHERE l_orderkey % 5 = 0 GROUP BY 1, 2, 3
          |ORDER BY ship_date DESC, l_returnflag, l_linestatus""".stripMargin) { (s, dir) =>
-      import org.apache.hadoop.fs.Path
       import graft.analytics.Incremental
       val li = graft.io.Sources.table(s, dir, "lineitem")
         .select("l_orderkey", "l_returnflag", "l_linestatus",
           "l_shipdate", "l_quantity", "l_extendedprice")
-      val root = java.nio.file.Files.createTempDirectory("graft_stream_ivm")
-      val in = s"$root/in"
-      val fs = new Path(in).getFileSystem(s.sparkContext.hadoopConfiguration)
-      try {
-        Seq(("00", lit(0)), ("01", lit(5))).foreach { case (nm, residue) =>
-          val stage = s"$root/stage$nm"
-          li.filter(pmod(col("l_orderkey"), lit(10)) === residue)
-            .coalesce(1).write.parquet(stage)
-          val part = fs.listStatus(new Path(stage))
-            .map(_.getPath).find(_.getName.startsWith("part-")).get
-          fs.mkdirs(new Path(in))
-          require(fs.rename(part, new Path(in, s"$nm.parquet")))
-          fs.setTimes(new Path(in, s"$nm.parquet"),
-            1700000000000L + nm.toLong * 60000L, -1)
-        }
+      TempScope.perCall("stream_ivm") { scope =>
+        val stream = StreamHarness.stage(scope,
+          Seq(0, 5).map(r => li.filter(pmod(col("l_orderkey"), lit(10)) === r)))
         val latestState = new java.util.concurrent.atomic.AtomicReference[String](null)
-        val stream = s.readStream
-          .schema(StructType(Seq(
-            StructField("l_orderkey", LongType),
-            StructField("l_returnflag", StringType),
-            StructField("l_linestatus", StringType),
-            StructField("l_shipdate", TimestampType),
-            StructField("l_quantity", DoubleType),
-            StructField("l_extendedprice", DoubleType))))
-          .option("maxFilesPerTrigger", 1).parquet(in)
-        val q = stream.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-            val bs = Incremental.lineitemSummaryState(b)
-            val merged = Option(latestState.get()) match {
-              case Some(prev) => Incremental.mergeStates(s.read.parquet(prev), bs)
-              case None => bs
-            }
-            val out = s"$root/state_$id"
-            // summary-sized state: one file per version (guide §6) —
-            // the NEXT batch's merge re-reads this table, so a
-            // shuffle-width spray of KB parts costs listing + open
-            // overhead every fold
-            merged.coalesce(1).write.mode("overwrite").parquet(out)
-            latestState.set(out)
+        StreamHarness.foreachBatch("stream_summary_incremental", stream) { (b, id) =>
+          val bs = Incremental.lineitemSummaryState(b)
+          val merged = Option(latestState.get()) match {
+            case Some(prev) => Incremental.mergeStates(s.read.parquet(prev), bs)
+            case None => bs
           }
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          val out = scope.path(s"state_$id")
+          // summary-sized state: one file per version (guide §6) —
+          // the NEXT batch's merge re-reads this table, so a
+          // shuffle-width spray of KB parts costs listing + open
+          // overhead every fold
+          merged.coalesce(1).write.mode("overwrite").parquet(out)
+          latestState.set(out)
+        }
         Incremental.summaryFromState(s.read.parquet(latestState.get()))
           .orderBy(col("ship_date").desc, col("l_returnflag"), col("l_linestatus"))
-          .localCheckpoint(true)
-      } finally
-        org.apache.commons.io.FileUtils.deleteDirectory(root.toFile)
+      }
     },
 
     /** Gap sessionization through the REAL streaming engine on Spark
@@ -574,45 +409,13 @@ object StreamingQueries {
       val maxSec = ev.agg(max(unix_timestamp(col("ts")))).head().getLong(0)
       val sentinels = ev.select("user_id").distinct()
         .withColumn("ts", timestamp_seconds(lit(maxSec + 1800 + 3600)))
-      // the prepared input is a throwaway copy — delete the whole temp
-      // root once the run finishes (bench warmup + retries invoke this
-      // repeatedly; leaking a parquet copy of events per invocation is
-      // the same unbounded soak-loop growth the Derby sinks fixed with
-      // their finally-teardown). The memory sink holds the RESULT in
-      // driver memory, so deleting the input after awaitTermination is
-      // safe even though the returned DataFrame evaluates later.
-      val inRoot = java.nio.file.Files.createTempDirectory("graft_stream_sess")
-      val in = inRoot.toString + s"/in${runId.incrementAndGet()}"
-      ev.unionByName(sentinels).coalesce(1).write.parquet(in)
-      val provKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProv = s.conf.getOption(provKey)
-      val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val stream = s.readStream
-          .schema(StructType(Seq(StructField("user_id", LongType),
-            StructField("ts", TimestampType))))
-          .parquet(in)
+      TempScope.perCall("stream_sess") { scope =>
+        val stream = StreamHarness.stage(scope, Seq(ev.unionByName(sentinels)))
           .toDF("_1", "_2").as[(Long, java.sql.Timestamp)]
-        val sessions = graft.streaming.StreamingOps.sessionizeStreamTws(
+        val sessions = StreamingOps.sessionizeStreamTws(
           stream, gapSeconds = 1800, lateness = "30 days")
-        val name = s"graft_stream_sess_${runId.incrementAndGet()}"
-        val q = sessions.toDF().writeStream.format("memory").queryName(name)
-          .outputMode("append").trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        // materialize out of the memory sink before the input is
-        // deleted in the finally (localCheckpoint = driver/executor
-        // memory, no file dependency)
-        s.table(name).orderBy("user_id", "start_s").localCheckpoint(true)
-      } finally {
-        prevProv match {
-          case Some(v) => s.conf.set(provKey, v)
-          case None => s.conf.unset(provKey)
-        }
-        s.conf.set("spark.sql.shuffle.partitions", prevParts)
-        org.apache.commons.io.FileUtils.deleteDirectory(inRoot.toFile)
+        StreamHarness.memory("stream_sessionize", sessions.toDF(), "append",
+          StreamHarness.RocksDb)(_.orderBy("user_id", "start_s"))
       }
     })
 }

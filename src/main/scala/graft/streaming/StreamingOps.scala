@@ -58,6 +58,37 @@ object StreamingOps {
   final case class ClosedSession(
       user_id: Long, start_s: Long, n_events: Long, duration_s: Long)
 
+  /** The gap fold both sessionizers share: the key's event seconds,
+    * sorted, folded into its open session. An event within the gap of
+    * the open session extends it — never moving start forward or last
+    * backward; the lower bound matters, because an event far OLDER
+    * than the session start also satisfies t - last <= gap (negative
+    * delta) but belongs to an earlier, already-closed session. Such a
+    * too-old event is dropped like a watermark-late row. Any later
+    * event closes the session and opens a new one. Returns the closed
+    * sessions and the open one.
+    */
+  private def foldSession(user: Long, seconds: Iterator[Long],
+                          open: Option[SessionState],
+                          gapSeconds: Long): (Iterator[ClosedSession], Option[SessionState]) = {
+    val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
+    var st = open
+    seconds.toArray.sorted.foreach { t =>
+      st match {
+        case Some(s) if t - s.last <= gapSeconds && t >= s.start - gapSeconds =>
+          st = Some(SessionState(math.min(s.start, t), math.max(s.last, t), s.n + 1))
+        case Some(s) if t < s.start - gapSeconds =>
+          () // too-old: its session already closed and emitted
+        case Some(s) =>
+          closed += ClosedSession(user, s.start, s.n, s.last - s.start)
+          st = Some(SessionState(t, t, 1))
+        case None =>
+          st = Some(SessionState(t, t, 1))
+      }
+    }
+    (closed.iterator, st)
+  }
+
   /** Custom per-key state via flatMapGroupsWithState: gap-based
     * sessionization. A session closes (and emits) when a later event
     * for the key arrives more than `gapSeconds` after the last one, OR
@@ -93,33 +124,8 @@ object StreamingOps {
             state.remove()
             Iterator.single(ClosedSession(user, s.start, s.n, s.last - s.start))
           } else {
-            val times = it.map(_._2.getTime / 1000).toArray.sorted
-            val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-            var st = state.getOption
-            times.foreach { t =>
-              st match {
-                case Some(s) if t - s.last <= gapSeconds &&
-                    t >= s.start - gapSeconds =>
-                  // late in-session event: extend membership but never
-                  // move start forward or last backward. The lower
-                  // bound matters: an event far OLDER than the session
-                  // start also satisfies t - last <= gap (negative
-                  // delta) but belongs to an earlier, already-closed
-                  // session — merging it would drag `start` arbitrarily
-                  // backwards, diverging from the batch twin.
-                  st = Some(SessionState(math.min(s.start, t),
-                    math.max(s.last, t), s.n + 1))
-                case Some(s) if t < s.start - gapSeconds =>
-                  // too-old: its session already closed and emitted;
-                  // treat like a watermark-late event and drop it
-                  ()
-                case Some(s) =>
-                  closed += ClosedSession(user, s.start, s.n, s.last - s.start)
-                  st = Some(SessionState(t, t, 1))
-                case None =>
-                  st = Some(SessionState(t, t, 1))
-              }
-            }
+            val (closed, st) = foldSession(user,
+              it.map(_._2.getTime / 1000), state.getOption, gapSeconds)
             st.foreach { s =>
               state.update(s)
               // idle eviction: fire once the watermark passes the gap
@@ -128,7 +134,7 @@ object StreamingOps {
               state.setTimeoutTimestamp(
                 math.max(deadline, state.getCurrentWatermarkMs() + 1))
             }
-            closed.iterator
+            closed
           }
       }
   }
@@ -173,29 +179,14 @@ object StreamingOps {
 
     override def handleInputRows(user: Long, rows: Iterator[(Long, Timestamp)],
                                  timers: TimerValues): Iterator[ClosedSession] = {
-      val times = rows.map(_._2.getTime / 1000).toArray.sorted
-      val closed = scala.collection.mutable.ArrayBuffer.empty[ClosedSession]
-      var st = if (session.exists()) Some(session.get()) else None
-      times.foreach { t =>
-        st match {
-          case Some(s) if t - s.last <= gapSeconds && t >= s.start - gapSeconds =>
-            st = Some(SessionState(math.min(s.start, t), math.max(s.last, t), s.n + 1))
-          case Some(s) if t < s.start - gapSeconds =>
-            () // too-old (pre-dates the open session by > gap): its
-               // session already closed — drop like a watermark-late row
-          case Some(s) =>
-            closed += ClosedSession(user, s.start, s.n, s.last - s.start)
-            st = Some(SessionState(t, t, 1))
-          case None =>
-            st = Some(SessionState(t, t, 1))
-        }
-      }
+      val (closed, st) = foldSession(user, rows.map(_._2.getTime / 1000),
+        if (session.exists()) Some(session.get()) else None, gapSeconds)
       st.foreach { s =>
         session.update(s)
         getHandle.registerTimer(
           math.max(deadlineMs(s), timers.getCurrentWatermarkInMs() + 1))
       }
-      closed.iterator
+      closed
     }
 
     override def handleExpiredTimer(user: Long, timers: TimerValues,
@@ -249,4 +240,27 @@ object StreamingOps {
                  keys: Seq[String], updatePriority: Seq[String] = Nil): Unit =
     graft.io.Sinks.load(batch.sparkSession, batch, path, "upsert", keys,
       updatePriority)
+
+  /** One micro-batch of indexed streaming dedup — the foreachBatch body
+    * of the stream_dedup_indexed row: the batch's survivors against the
+    * dedup index at `indexPath` ([[graft.ops.DedupIndex.dedupBatch]],
+    * materialized once), their `keep` columns appended to `out`, then
+    * the survivors appended to the index, so the next micro-batch
+    * dedups against the standing corpus plus every earlier batch's
+    * accepted docs.
+    */
+  def dedupIndexedBatch(spark: org.apache.spark.sql.SparkSession,
+                        batch: DataFrame, batchId: Long, indexPath: String,
+                        out: String, idCol: String, textCol: String,
+                        n: Int, threshold: Double, keep: Seq[String]): Unit = {
+    val surv = graft.BenchAttribution.timed(
+        s"stream_dedup_indexed.b${batchId}_dedup") {
+      graft.ops.DedupIndex.dedupBatch(spark, batch, indexPath,
+        idCol, textCol, n, threshold).localCheckpoint(true)
+    }
+    surv.select(keep.map(col): _*).write.mode("append").parquet(out)
+    graft.BenchAttribution.timed(s"stream_dedup_indexed.b${batchId}_append") {
+      graft.ops.DedupIndex.append(surv, idCol, textCol, n, indexPath)
+    }
+  }
 }

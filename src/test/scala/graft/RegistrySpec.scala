@@ -47,6 +47,39 @@ class RegistrySpec extends SparkSpec {
     }
   }
 
+  test("a second pass over every scratch-owning key leaves no temp dir, catalog name or conf behind") {
+    // the IoQueries keys that write a per-call temp dir
+    val ioScratch = Seq("sink_csv", "sink_json", "sink_parquet", "sink_orc",
+      "sink_avro", "sink_avro_evolve", "sink_append_evolve",
+      "sink_overwrite_dynamic", "sink_metrics", "sink_history", "ddl_create",
+      "join_bucketed", "src_csv", "src_config_json", "src_http_json",
+      "compact_files", "layout_range_sort", "compact_partitioned",
+      "layout_zorder", "scan_zonemap_pruned", "sink_scd2", "corpus_shuffle")
+    val keys = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted ++
+      ioScratch :+ "view_daily_summary_incremental"
+    assert(keys.count(_.startsWith("stream_")) == 9)
+    def pass(): Unit = keys.foreach(k => SparkEntry.queries(k)(spark, sf).count())
+    // a per-run dir in forked test runs (build.sbt), so only this
+    // JVM's scratch is listed
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def snapshot() = (
+      // hidden `.graft_*` siblings too: an in-place rewrite keeps its
+      // trash beside the root it rewrote
+      tmp.list().filter(_.stripPrefix(".").startsWith("graft_")).toSet,
+      spark.catalog.listTables().collect().map(_.name).toSet,
+      spark.conf.get("spark.sql.shuffle.partitions"),
+      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass"))
+    // pass one builds the application-lifetime memos (the stream
+    // template index); pass two must add nothing
+    pass()
+    val before = snapshot()
+    pass()
+    val after = snapshot()
+    assert(after._1 -- before._1 == Set.empty, "temp dirs left behind")
+    assert(after._2 -- before._2 == Set.empty, "catalog names left behind")
+    assert(after == before)
+  }
+
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -271,9 +271,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming indexed dedup equals the batch twin: same survivors, same final index state") {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.functions._
     val corpus = Seq(
       (100L, "the quick brown fox jumps over the lazy dog today", 49L),
       (101L, "completely different words about spark and shuffles here", 56L)
@@ -306,42 +303,21 @@ class StreamingSpec extends SparkSpec {
         spark.read.parquet(s"$idx/grams").count())
     }
 
-    def runStreaming(): (Seq[Long], Long, Long) = {
-      val root = java.nio.file.Files.createTempDirectory("ddx_stream")
-      val idx = s"$root/idx"
-      graft.ops.DedupIndex.build(corpus, "doc_id", "text", 3, idx)
-      val in = s"$root/in"
-      val out = s"$root/out"
-      val fs = new org.apache.hadoop.fs.Path(in)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      Seq(("00", bA), ("01", bB)).foreach { case (nm, df) =>
-        val stage = s"$root/stage$nm"
-        df.coalesce(1).write.parquet(stage)
-        val part = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-          .map(_.getPath).find(_.getName.startsWith("part-")).get
-        fs.mkdirs(new org.apache.hadoop.fs.Path(in))
-        require(fs.rename(part, new org.apache.hadoop.fs.Path(in, s"$nm.parquet")))
-        fs.setTimes(new org.apache.hadoop.fs.Path(in, s"$nm.parquet"),
-          1700000000000L + nm.toLong * 60000L, -1)
-      }
-      val stream = spark.readStream
-        .schema(StructType(Seq(StructField("doc_id", LongType),
-          StructField("text", StringType), StructField("n_chars", LongType))))
-        .option("maxFilesPerTrigger", 1).parquet(in)
-      val q = stream.writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-          val surv = graft.ops.DedupIndex.dedupBatch(spark, b, idx,
-            "doc_id", "text", 3, 0.5).localCheckpoint(true)
-          surv.select("doc_id", "n_chars").write.mode("append").parquet(out)
-          graft.ops.DedupIndex.append(surv, "doc_id", "text", 3, idx)
+    def runStreaming(): (Seq[Long], Long, Long) =
+      graft.io.TempScope.perCall("ddx_stream") { scope =>
+        val idx = scope.path("idx")
+        graft.ops.DedupIndex.build(corpus, "doc_id", "text", 3, idx)
+        val out = scope.path("out")
+        val stream = graft.streaming.StreamHarness.stage(scope, Seq(bA, bB))
+        graft.streaming.StreamHarness.foreachBatch("ddx_stream", stream) { (b, id) =>
+          StreamingOps.dedupIndexedBatch(spark, b, id, idx, out,
+            "doc_id", "text", 3, 0.5, keep = Seq("doc_id", "n_chars"))
         }
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      val ids = spark.read.parquet(out)
-        .select("doc_id").as[Long].collect().sorted.toSeq
-      (ids, spark.read.parquet(s"$idx/fps").distinct().count(),
-        spark.read.parquet(s"$idx/grams").count())
-    }
+        val ids = spark.read.parquet(out)
+          .select("doc_id").as[Long].collect().sorted.toSeq
+        (ids, spark.read.parquet(s"$idx/fps").distinct().count(),
+          spark.read.parquet(s"$idx/grams").count())
+      }
 
     val (twinIds, twinFps, twinGrams) = runBatchTwin()
     val (strIds, strFps, strGrams) = runStreaming()
