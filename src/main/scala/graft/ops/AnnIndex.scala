@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,9 +57,9 @@ object AnnIndex {
     // written relation, so the two outputs are also guaranteed
     // consistent with each other
     val asg = Similarity.assignTo(all.select("vec_id", "v"),
-      spark.read.parquet(s"$dir/centroids"))
+      Layout.readTable(spark, s"$dir/centroids"))
     Layout.writeRangeSorted(asg, s"$dir/assignments", nFiles = 8, keyCol = "vec_id")
-    spark.read.parquet(s"$dir/assignments").join(all, "vec_id")
+    Layout.readTable(spark, s"$dir/assignments").join(all, "vec_id")
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/members")
   }
 
@@ -86,21 +86,25 @@ object AnnIndex {
   def append(batch: DataFrame, idCol: String, vecCol: String,
              dir: String): Unit = {
     val spark = batch.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val cs = graft.functions.GraftFunctions.cosineSim _
     // mode-append writes would silently recreate directories a crashed
     // rebalance/relayout left stranded in trash siblings — repair the
     // root and both sub-tables before touching them
     recoverAll(spark, dir)
-    val all = Similarity.prepared(batch, idCol, vecCol).localCheckpoint(true)
+    // every count below rides on a checkpoint that runs anyway (an
+    // Observation resolves with the eager checkpoint's action)
+    val sizes = new Observation()
+    val all = Similarity.prepared(batch, idCol, vecCol)
+      .observe(sizes, count(lit(1)).as("n")).localCheckpoint(true)
+    val nAll = sizes.get("n").asInstanceOf[Long]
     // duplicate ids within the batch would collapse to one row in the
     // assignment aggregate but fan back out in the asg.join(all)
     // members write — duplicate member rows (a probe returns one
     // neighbor at several ranks, exactly what the retry state machine
     // below exists to prevent) and skewed nPrior/nBatch retry counts.
-    // Same countDistinct discipline as build's centroid seeding.
-    val nAll = all.count()
-    require(all.agg(countDistinct(col("vec_id"))).head().getLong(0) == nAll,
+    // Same countDistinct discipline as build's centroid seeding; the
+    // fresh path reads the distinct count off the assignment aggregate
+    // (one row per vec_id), checked before either write.
+    def requireDistinct(nDistinct: Long): Unit = require(nDistinct == nAll,
       "append: batch contains duplicate vec_ids — dedupe the batch " +
         "before indexing (duplicate member rows would corrupt probe ranks)")
     // RETRY state machine. A crashed-and-rerun ingest job must neither
@@ -117,10 +121,13 @@ object AnnIndex {
     //     already-committed assignments;
     //   - anything partial    → not a state this protocol produces —
     //     refuse loudly rather than guess.
-    val priorAsg = spark.read.parquet(s"$dir/assignments")
-      .join(all.select("vec_id"), "vec_id").localCheckpoint(true)
-    val nPrior = priorAsg.count()
+    val prior = new Observation()
+    val priorAsg = Layout.readTable(spark, s"$dir/assignments")
+      .join(all.select("vec_id"), "vec_id")
+      .observe(prior, count(lit(1)).as("n")).localCheckpoint(true)
+    val nPrior = prior.get("n").asInstanceOf[Long]
     if (nPrior > 0) {
+      requireDistinct(all.agg(countDistinct(col("vec_id"))).head().getLong(0))
       val nBatch = nAll
       require(nPrior == nBatch,
         s"append: $nPrior of $nBatch batch vec_ids are already assigned — " +
@@ -130,7 +137,7 @@ object AnnIndex {
         .collect().map(_.getLong(0))
       // membership check pruned to the batch's own buckets — never a
       // full members scan
-      val nInMembers = spark.read.parquet(s"$dir/members")
+      val nInMembers = Layout.readTable(spark, s"$dir/members")
         .withColumn("bucket", col("bucket").cast("long"))
         .filter(col("bucket").isin(buckets.toIndexedSeq: _*))
         .select("vec_id")
@@ -145,15 +152,17 @@ object AnnIndex {
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/members")
       return
     }
-    val cent = spark.read.parquet(s"$dir/centroids").select("cid", "cv")
+    val cent = Layout.readTable(spark, s"$dir/centroids").select("cid", "cv")
     // the exact build-time assignment aggregate against the stored
     // trained model — an appended vector lands in the same bucket a
     // rebuild-with-these-centroids would give it.
     // one materialization feeds both writes: the assignment aggregate
     // must not replan per sink, and the members write must never read
     // assignments/ files mid-append
+    val assigned = new Observation()
     val asg = Similarity.assignTo(all.select("vec_id", "v"), cent)
-      .localCheckpoint(true)
+      .observe(assigned, count(col("vec_id")).as("n")).localCheckpoint(true)
+    requireDistinct(assigned.get("n").asInstanceOf[Long])
     asg.sortWithinPartitions("vec_id")
       .write.mode("append").parquet(s"$dir/assignments")
     asg.join(all, "vec_id").select("vec_id", "v", "nrm", "bucket")
@@ -183,7 +192,7 @@ object AnnIndex {
     */
   def bucketSpreadOf(spark: SparkSession, dir: String): (Int, Long, Long, Double) = {
     recoverAll(spark, dir)
-    Similarity.bucketSpread(spark.read.parquet(s"$dir/assignments"))
+    Similarity.bucketSpread(Layout.readTable(spark, s"$dir/assignments"))
   }
 
   /** The SCALING.md ANN-skew sizing rule as an index maintenance
@@ -239,10 +248,10 @@ object AnnIndex {
     val before = bucketSpreadOf(spark, dir)
     if (!Similarity.needsRebalance(before._4)) None
     else {
-      val n = spark.read.parquet(s"$dir/members").count()
-      val nlist = nlistOverride.getOrElse(Similarity.nlistFor(n))
+      val members = Layout.readTable(spark, s"$dir/members")
+      val nlist = nlistOverride.getOrElse(Similarity.nlistFor(members.count()))
       Layout.rewriteInPlace(spark, dir, commitManifest = false) { tmp =>
-        build(spark.read.parquet(s"$dir/members").select("vec_id", "v"),
+        build(members.select("vec_id", "v"),
           "vec_id", "v", nlist, tmp, trainSteps)
       }
       Some((before, bucketSpreadOf(spark, dir)))
@@ -264,7 +273,7 @@ object AnnIndex {
                targetBytes: Long = 128L << 20): Seq[(String, Int)] = {
     Layout.restoreIfCrashed(spark, dir)
     Layout.rewriteInPlace(spark, s"$dir/assignments") { tmp =>
-      Layout.writeRangeSorted(spark.read.parquet(s"$dir/assignments"),
+      Layout.writeRangeSorted(Layout.readTable(spark, s"$dir/assignments"),
         tmp, nFiles = 8, keyCol = "vec_id")
     }
     Compaction.compactPartitioned(spark, s"$dir/members", targetBytes,
@@ -280,66 +289,113 @@ object AnnIndex {
     * (rank 1 is always the probe's own bucket — assignment is argmax
     * centroid cosine). Output schema and values match
     * [[Similarity.ivfTopK]] exactly (same stored model, same
-    * multi-probe expansion).
+    * multi-probe expansion, same cosine arithmetic and tie order).
+    *
+    * The bucket ranking is planned on the driver ([[planProbes]]); the
+    * candidates are scored in ONE members scan where each partition
+    * keeps a bounded top-k per probe, so the final window ranks at
+    * most k × probes × partitions rows instead of every (probe,
+    * candidate) pair.
     */
   def probe(spark: SparkSession, indexPath: String, probePred: Column,
             k: Int, maxProbes: Long = 100000L, nprobe: Int = 3): DataFrame = {
-    // self-heal a crashed rebalance/relayout before reading (driver-
-    // side listing checks only; a stranded dir would otherwise fail
-    // the read)
-    recoverAll(spark, indexPath)
-    graft.functions.GraftFunctions.register(spark)
-    val cs = graft.functions.GraftFunctions.cosineSim _
-    // partition-column inference reads bucket back as INT; restore the
-    // assignment's LONG so the indexed and direct plans agree bit-wise
-    val members = spark.read.parquet(s"$indexPath/members")
-      .withColumn("bucket", col("bucket").cast("long"))
-    val cent = spark.read.parquet(s"$indexPath/centroids")
-      .select("cid", "cv")
-    val probeAsg = spark.read.parquet(s"$indexPath/assignments")
-      .filter(probePred).localCheckpoint(true)
-    val nProbes = probeAsg.count()
-    require(nProbes <= maxProbes,
-      s"probe: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are broadcast, so the predicate must pick a small probe set")
-    // bucket lists are collected and pruned STATICALLY (an IN filter
-    // on the partition column, visible in the scan's PartitionFilters
-    // at plan time): distinct buckets are bounded by the centroid
-    // count — the model is broadcast-sized by construction — so the
-    // collect is bounded, and unlike dynamic pruning the pruning can
-    // never silently degrade to a full members scan when a heuristic
-    // declines (the probe relations are checkpointed RDDs, which
-    // Spark's DPP rule does not treat as a selective filter side)
-    val probeBuckets = probeAsg.select("bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val probes = members
-      .filter(col("bucket").isin(probeBuckets: _*))
-      .join(broadcast(probeAsg.select("vec_id")), "vec_id")
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .localCheckpoint(true)
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("cid").asc)
-    // materialized eagerly: qb (probe-bounded) feeds both the probed-
-    // bucket pruning and the scoring join — without the barrier the
-    // centroid-ranking window would replan into each branch
-    val qb = probes.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("qv"), col("cid"),
-        cs(col("qv"), col("cv")).as("ccos"))
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("cid").as("bucket"), col("qv"))
-      .localCheckpoint(true)
-    val candBuckets = qb.select("bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    val cand = members.filter(col("bucket").isin(candBuckets: _*))
-    val scored = cand.join(broadcast(qb), "bucket")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cs(col("qv"), col("v")))
+    val plan = planProbes(spark, indexPath, probePred, maxProbes, nprobe,
+      "probe", "probes are broadcast, so the predicate must pick a small probe set")
+    import spark.implicits._
+    val bcProbes = spark.sparkContext.broadcast(plan.probes)
+    val idType = plan.members.schema("vec_id").dataType
+    val scored = plan.members.filter(col("bucket").isin(plan.buckets: _*))
+      .select("vec_id", "bucket", "v").as[(Long, Long, Array[Double])]
+      .mapPartitions(rows => topKPerProbe(bcProbes.value, rows, k))
+      .toDF("q_id", "vec_id", "bucket", "cos")
     val wTop = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     scored.withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("bucket"),
+      .select(col("q_id").cast(idType).as("q_id"),
+        col("vec_id").cast(idType).as("neighbor_id"), col("bucket"),
         col("cos"), col("rank").cast("long").as("rank"))
+  }
+
+  /** The probes as (q_id, vector, its `nprobe` nearest buckets best
+    * first) and the members relation, bucket restored to the
+    * assignment's LONG (partition inference reads it back as INT).
+    * `buckets`, every probed bucket, is bounded by the centroid count:
+    * a static IN filter on the partition column at plan time, which
+    * unlike dynamic pruning can never decline into a full members scan.
+    */
+  private final case class ProbePlan(members: DataFrame,
+                                     probes: Array[(Long, Array[Double], Array[Long])]) {
+    def buckets: Seq[Long] = probes.flatMap(_._3).distinct.sorted.toSeq
+  }
+
+  /** [[probe]] and [[probePq]]'s driver-side planning: three bounded
+    * collects — the probe set (`limit(maxProbes + 1)`; only a set past
+    * the bound is counted, so the refusal names its exact size), the
+    * probe vectors from their own bucket partitions, the centroids —
+    * then each probe's buckets ranked by [[Similarity.nearestBuckets]].
+    */
+  private def planProbes(spark: SparkSession, indexPath: String,
+                         probePred: Column, maxProbes: Long, nprobe: Int,
+                         caller: String, why: String): ProbePlan = {
+    // self-heal a crashed rebalance/relayout before reading (driver-
+    // side listing checks only; a stranded dir would otherwise fail
+    // the read)
+    recoverAll(spark, indexPath)
+    import spark.implicits._
+    val members = Layout.readTable(spark, s"$indexPath/members")
+      .withColumn("bucket", col("bucket").cast("long"))
+    val selected = Layout.readTable(spark, s"$indexPath/assignments")
+      .filter(probePred)
+    val asg = selected.select("vec_id", "bucket")
+      .limit(math.min(maxProbes, Int.MaxValue - 1L).toInt + 1)
+      .as[(Long, Long)].collect()
+    require(asg.length <= maxProbes,
+      s"$caller: probePred selected ${selected.count()} probes (> $maxProbes); $why")
+    val vecs = members
+      .filter(col("bucket").isin(asg.map(_._2).distinct.toSeq: _*) &&
+        col("vec_id").isin(asg.map(_._1).toSeq: _*))
+      .select("vec_id", "v").as[(Long, Array[Double])].collect().sortBy(_._1)
+    val cent = Layout.readTable(spark, s"$indexPath/centroids")
+      .select("cid", "cv").as[(Long, Array[Double])].collect()
+    ProbePlan(members, vecs.map { case (qid, qv) =>
+      (qid, qv, Similarity.nearestBuckets(qv, cent, nprobe)) })
+  }
+
+  /** One members partition scored against every probe that searches
+    * the row's bucket (a member lives in one bucket, so each (probe,
+    * member) pair scores at most once), keeping each probe's k best
+    * under (cos DESC, vec_id ASC): returns (q_id, vec_id, bucket, cos).
+    * The global top-k of a probe is contained in the union of these
+    * per-partition top-k sets.
+    */
+  private def topKPerProbe(probes: Array[(Long, Array[Double], Array[Long])],
+                           rows: Iterator[(Long, Long, Array[Double])],
+                           k: Int): Iterator[(Long, Long, Long, Double)] = {
+    val byBucket = probes.indices
+      .flatMap(i => probes(i)._3.map(_ -> i)).groupMap(_._1)(_._2)
+    // heap head = the kept (cos, vec_id, bucket) that ranks last
+    val worstFirst: java.util.Comparator[(Double, Long, Long)] =
+      (a, b) => Similarity.rankCompare(b._1, b._2, a._1, a._2)
+    val heaps = Array.fill(probes.length)(
+      new java.util.PriorityQueue[(Double, Long, Long)](worstFirst))
+    rows.foreach { case (id, bucket, v) =>
+      byBucket.getOrElse(bucket, Nil).foreach { i =>
+        val (qid, qv, _) = probes(i)
+        if (qid != id) {
+          val cand = (Similarity.cosK(qv, v), id, bucket)
+          val h = heaps(i)
+          if (h.size < k) h.add(cand)
+          else if (k > 0 && worstFirst.compare(cand, h.peek) > 0) {
+            h.poll(); h.add(cand)
+          }
+        }
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    heaps.iterator.zip(probes.iterator).flatMap { case (h, (qid, _, _)) =>
+      h.iterator.asScala.map { case (c, id, b) => (qid, id, b, c) }
+    }
   }
 
   /** PQ sidecar for a built index — the IVFADC serving layout: every
@@ -361,7 +417,7 @@ object AnnIndex {
     val dsub = dims / m
     recoverAll(spark, dir)
     import spark.implicits._
-    val members = spark.read.parquet(s"$dir/members")
+    val members = Layout.readTable(spark, s"$dir/members")
       .withColumn("bucket", col("bucket").cast("long"))
     // codebook = sub-vectors of the ksub lowest-id members (the pqTopK
     // seeding rule applied to the indexed corpus)
@@ -428,26 +484,10 @@ object AnnIndex {
   def probePq(spark: SparkSession, indexPath: String, probePred: Column,
               k: Int, maxProbes: Long = 100000L, nprobe: Int = 3,
               m: Int = 8, ksub: Int = 256): DataFrame = {
-    recoverAll(spark, indexPath)
+    val plan = planProbes(spark, indexPath, probePred, maxProbes, nprobe,
+      "probePq", "probes are collected and broadcast, so the predicate " +
+        "must pick a small probe set")
     import spark.implicits._
-    val members = spark.read.parquet(s"$indexPath/members")
-      .withColumn("bucket", col("bucket").cast("long"))
-    val probeAsg = spark.read.parquet(s"$indexPath/assignments")
-      .filter(probePred).localCheckpoint(true)
-    val nProbes = probeAsg.count()
-    require(nProbes <= maxProbes,
-      s"probePq: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are collected and broadcast, so the predicate must pick " +
-        "a small probe set")
-    val probeBuckets = probeAsg.select("bucket").distinct()
-      .collect().map(_.getLong(0)).toSeq
-    // probe vectors: statically pruned to the probes' own buckets,
-    // collected (bounded by the maxProbes guard)
-    val probes = members.filter(col("bucket").isin(probeBuckets: _*))
-      .join(broadcast(probeAsg.select("vec_id")), "vec_id")
-      .select("vec_id", "v").as[(Long, Array[Double])].collect()
-    val cent = spark.read.parquet(s"$indexPath/centroids")
-      .select("cid", "cv").as[(Long, Array[Double])].collect().sortBy(_._1)
     // the stored encoding's parameters are AUTHORITATIVE: a caller m
     // that merely divides dims would pass every shape check below yet
     // sum mis-shaped LUT entries against the persisted codes —
@@ -463,7 +503,7 @@ object AnnIndex {
             s"probe requested (m=$m, ksub=$ksub) — re-run buildPq or " +
             "probe with the stored parameters")
     }
-    val seed = spark.read.parquet(s"$indexPath/pqseed")
+    val seed = Layout.readTable(spark, s"$indexPath/pqseed")
       .select("vec_id", "v").as[(Long, Array[Double])].collect().sortBy(_._1)
     require(seed.length == ksub,
       s"probePq: pqseed has ${seed.length} rows, expected $ksub — " +
@@ -473,22 +513,15 @@ object AnnIndex {
       s"probePq: stored dims ($dims) do not split into m ($m) subspaces")
     val dsub = dims / m
     val cb = Array.tabulate(m, ksub, dsub)((mm, c, d) => seed(c)._2(mm * dsub + d))
-    // per-probe nprobe nearest buckets + ADC LUT, driver-side over the
-    // bounded model — identical rule and arithmetic to ivfPqTopK
-    val centN = cent.map { case (cid, cv) => (cid, cv, Similarity.normK(cv)) }
-    val plan = probes.map { case (qid, qv) =>
-      val nq = Similarity.normK(qv)
-      val buckets = centN
-        .map { case (cid, cv, cn) => (cid, Similarity.dotK(qv, cv) / (nq * cn)) }
-        .sortBy { case (cid, c) => (-c, cid) }
-        .take(nprobe).map(_._1)
-      (qid, buckets.toSet, Similarity.adcLutK(qv, cb, m, ksub, dsub))
-    }
-    val bcPlan = spark.sparkContext.broadcast(plan)
-    val allowed = plan.flatMap(_._2).distinct.sorted
-    val codes = spark.read.parquet(s"$indexPath/codes")
+    // per-probe ADC LUT over the planned buckets — identical rule and
+    // arithmetic to ivfPqTopK
+    val bcPlan = spark.sparkContext.broadcast(plan.probes.map {
+      case (qid, qv, buckets) =>
+        (qid, buckets.toSet, Similarity.adcLutK(qv, cb, m, ksub, dsub))
+    })
+    val codes = Layout.readTable(spark, s"$indexPath/codes")
       .withColumn("bucket", col("bucket").cast("long"))
-      .filter(col("bucket").isin(allowed: _*))
+      .filter(col("bucket").isin(plan.buckets: _*))
       .select("vec_id", "bucket", "code").as[(Long, Long, Array[Int])]
     val scored = codes.mapPartitions { rows =>
       val qs = bcPlan.value
@@ -541,12 +574,6 @@ object AnnIndex {
       build(emb, idCol, vecCol, nCentroids, dir)
     }
 
-  /** [[ensureBuilt]] for the build-then-daily-append lifecycle: the
-    * memoized state is an index BUILT on `base` with `batch` appended
-    * afterwards — the registry's ann_ivf_appended row probes it. With
-    * `withRelayout` the appended index is also [[relayout]]ed — the
-    * full build → append → maintain lifecycle (ann_ivf_relayout).
-    */
   /** Incremental SemDeDup served ENTIRELY from the persisted index —
     * the daily-ingest shape of [[Similarity.semDedup]]: after
     * [[append]] has assigned a new batch against the STORED
@@ -570,7 +597,7 @@ object AnnIndex {
     recoverAll(spark, indexPath)
     graft.functions.GraftFunctions.register(spark)
     val dp = graft.functions.GraftFunctions.dotProduct _
-    val members = spark.read.parquet(s"$indexPath/members")
+    val members = Layout.readTable(spark, s"$indexPath/members")
       .withColumn("bucket", col("bucket").cast("long"))
     val batch = members.filter(isBatch(col("vec_id")))
     val batchBuckets = batch.select("bucket").distinct()
@@ -589,6 +616,12 @@ object AnnIndex {
       .select(col("vec_id"), col("bucket").as("cluster"))
   }
 
+  /** [[ensureBuilt]] for the build-then-daily-append lifecycle: the
+    * memoized state is an index BUILT on `base` with `batch` appended
+    * afterwards — the registry's ann_ivf_appended row probes it. With
+    * `withRelayout` the appended index is also [[relayout]]ed — the
+    * full build → append → maintain lifecycle (ann_ivf_relayout).
+    */
   def ensureBuiltAppended(spark: SparkSession, cacheKey: String,
                           base: => DataFrame, batch: => DataFrame,
                           idCol: String, vecCol: String,

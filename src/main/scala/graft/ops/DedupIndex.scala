@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -85,7 +85,7 @@ object DedupIndex {
     * old sidecar intact.
     */
   private def rebuildBloom(spark: SparkSession, path: String): Unit = {
-    val fps = spark.read.parquet(s"$path/fps")
+    val fps = Layout.readTable(spark, s"$path/fps")
     val nBits = bloomSizeBits(fps.count())
     def writeTo(dst: String): Unit =
       RuntimeFilter.bloomBits(fps, "fp", nBits)
@@ -153,10 +153,10 @@ object DedupIndex {
   /** The persisted state under an index `path`. */
   private def indexState(spark: SparkSession, path: String): CorpusState =
     new CorpusState {
-      def fps: DataFrame = spark.read.parquet(s"$path/fps")
-      def grams: DataFrame = spark.read.parquet(s"$path/grams")
-      def hot: DataFrame = spark.read.parquet(s"$path/hot")
-      def sigs: DataFrame = spark.read.parquet(s"$path/sigs")
+      def fps: DataFrame = Layout.readTable(spark, s"$path/fps")
+      def grams: DataFrame = Layout.readTable(spark, s"$path/grams")
+      def hot: DataFrame = Layout.readTable(spark, s"$path/hot")
+      def sigs: DataFrame = Layout.readTable(spark, s"$path/sigs")
     }
 
   /** Materialize the corpus's dedup state under `path` (overwrite). */
@@ -215,7 +215,7 @@ object DedupIndex {
     // as the range layout above
     val fGrams = Future {
       Dedup.hashedGramTable(s, idCol, textCol, n)
-        .join(spark.read.parquet(s"$path/hot"), Seq("gram"), "left_anti")
+        .join(Layout.readTable(spark, s"$path/hot"), Seq("gram"), "left_anti")
         .withColumn("n_grams",
           count(lit(1)).over(Window.partitionBy(col("doc_id"))))
         .sortWithinPartitions("gram")
@@ -258,7 +258,7 @@ object DedupIndex {
   def relayout(spark: SparkSession, path: String, nFiles: Int = 32,
                fpTargetBytes: Long = 128L << 20): Unit = {
     Layout.rewriteInPlace(spark, s"$path/grams") { tmp =>
-      Layout.writeRangeSorted(spark.read.parquet(s"$path/grams"),
+      Layout.writeRangeSorted(Layout.readTable(spark, s"$path/grams"),
         tmp, nFiles, keyCol = "gram")
     }
     Layout.rewriteInPlace(spark, s"$path/fps") { tmp =>
@@ -292,7 +292,7 @@ object DedupIndex {
     Layout.restoreIfCrashed(spark, s"$indexPath/sigs")
     dedupAgainst(batch, indexState(spark, indexPath), idCol, textCol, n,
       threshold, candidates, "dedup_index",
-      bloom = if (useBloom) Some(spark.read.parquet(s"$indexPath/bloom")) else None)
+      bloom = Option.when(useBloom)(Layout.readTable(spark, s"$indexPath/bloom")))
   }
 
   /** The batch-vs-corpus dedup kernel behind [[dedupBatch]] (persisted
@@ -314,10 +314,9 @@ object DedupIndex {
     // which are duplicate-insensitive (guide §2.4)
     val corpusFps = corpus.fps.select(col("fp").as("__fp"))
     // a pinned banded stage never reads the corpus gram relation (on a
-    // live state that would pay the corpus df pass for nothing)
-    val corpusGrams = Option.when(candidates != "banded")(corpus.grams
-      .select(col("doc_id").as("right_id"), col("gram"),
-        col("n_grams").as("nr")))
+    // live state that would pay the corpus df pass for nothing); bound
+    // once, it feeds both the auto prediction and the gram edge
+    lazy val grams = corpus.grams
     val b1 = Dedup.exact(batch, idCol, textCol)
       .withColumn("__fp", TextOps.fingerprint(col(textCol)))
     // The membership anti join's EXPENSIVE side is the corpus: its
@@ -373,17 +372,21 @@ object DedupIndex {
     // the decision AND the selected stage (signatures on the banded
     // path, capped batch grams on the gram path). Batch-sized (long,
     // long) rows, executor-resident; the eager localCheckpoint is the
-    // one action that resolves the folded batch-count Observation.
-    val obs = new org.apache.spark.sql.Observation()
+    // one action that resolves the folded batch-count and gram-count
+    // Observations.
+    val obs = new Observation()
+    val gramObs = new Observation()
     lazy val bGrams = Dedup.hashedGramTable(
         batch.observe(obs, count(lit(1)).as("n")), idCol, textCol, n)
+      .observe(gramObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     val useBanded = candidates match {
       case "banded" => true
       case "gram"   => false
       case _ =>
         val (cand, nBatch) = graft.BenchAttribution.timed(s"$attr.decision") {
-          val c = predictedIndexJoinCandidatesOfGrams(bGrams, corpus.grams)
+          val c = predictedIndexJoinCandidatesOfGrams(bGrams,
+            gramObs.get("n").asInstanceOf[Long], grams)
           (c, obs.get.getOrElse("n", 0L).asInstanceOf[Long])
         }
         val banded = Dedup.useBandedEdge(nBatch, cand)
@@ -423,7 +426,8 @@ object DedupIndex {
             count(lit(1)).over(Window.partitionBy(col("doc_id"))))
           .select(col("doc_id").as("left_id"), col("gram"),
             col("n_grams").as("nl"))
-        bg.join(corpusGrams.get, "gram")
+        bg.join(grams.select(col("doc_id").as("right_id"), col("gram"),
+            col("n_grams").as("nr")), "gram")
           .groupBy("left_id", "right_id")
           .agg(count(lit(1)).as("n_inter"),
             max(col("nl")).as("nl"), max(col("nr")).as("nr"))
@@ -446,31 +450,34 @@ object DedupIndex {
     */
   def predictedIndexJoinCandidates(spark: SparkSession, batch: DataFrame,
                                    indexPath: String, idCol: String,
-                                   textCol: String, n: Int): Long =
-    predictedIndexJoinCandidatesOfGrams(
-      Dedup.hashedGramTable(batch, idCol, textCol, n).localCheckpoint(true),
-      indexState(spark, indexPath).grams)
+                                   textCol: String, n: Int): Long = {
+    val nGrams = new Observation()
+    val grams = Dedup.hashedGramTable(batch, idCol, textCol, n)
+      .observe(nGrams, count(lit(1)).as("n")).localCheckpoint(true)
+    predictedIndexJoinCandidatesOfGrams(grams,
+      nGrams.get("n").asInstanceOf[Long], indexState(spark, indexPath).grams)
+  }
 
   /** Σ_g df_b(g)·df_c(g) of a batch gram relation against a corpus's
     * capped gram relation ([[CorpusState.grams]]).
     *
     * CONTRACT (ADVICE r19/r20): `batchGrams` must already be
-    * materialized — both callers pass the eager checkpoint — because
-    * the body runs TWO actions over it: `count()` bounds the broadcast,
-    * then `.head()` computes the sum. Over an un-materialized input
-    * each action would re-run the gram pipeline, and an `Observation`
-    * on it would resolve on the first and never see the second.
+    * materialized — both callers pass the eager checkpoint — and
+    * `nBatchGrams` is its row count, which both callers read off an
+    * `Observation` resolved by that checkpoint. The body runs ONE
+    * action over the input (`.head()` of the sum); over an
+    * un-materialized input that action would re-run the gram pipeline.
     */
   private[ops] def predictedIndexJoinCandidatesOfGrams(
-      batchGrams: DataFrame, corpusGrams: DataFrame): Long = {
+      batchGrams: DataFrame, nBatchGrams: Long, corpusGrams: DataFrame): Long = {
     val bdf = batchGrams.groupBy("gram").agg(count(lit(1)).as("dfl"))
     // bounded broadcast WITHOUT boundedBroadcast's own checkpoint +
     // count jobs (r20): |bdf| ≤ |batchGrams| by construction (one row
-    // per distinct gram), so one cheap count of the materialized input
-    // bounds the broadcast. Over the bound, the join degrades to the
+    // per distinct gram), so the materialized input's row count bounds
+    // the broadcast. Over the bound, the join degrades to the
     // AQE-planned shuffle exactly like boundedBroadcast.
     val bdfSide =
-      if (batchGrams.count() <= Dedup.HotBroadcastMaxRows) broadcast(bdf)
+      if (nBatchGrams <= Dedup.HotBroadcastMaxRows) broadcast(bdf)
       else bdf
     val predicted = corpusGrams
       .join(bdfSide, "gram")

@@ -1,7 +1,15 @@
 package graft.ops
 
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Physical-layout operators — the write-side half of scan pruning.
   *
@@ -103,6 +111,36 @@ object Layout {
         s"rewriteInPlace: crash recovery $trash -> $target failed")
       true
     } else false
+  }
+
+  /** `spark.read.parquet(path)` without the schema-inference job. Spark
+    * writes each file's relation schema into its footer under
+    * `ParquetReadSupport.SPARK_METADATA_KEY`, and inference (schema
+    * merging off) returns exactly that schema from one file — but runs
+    * a Spark job to read it. Here the driver reads one data file's
+    * footer (the files Spark's file index would list: no `_`/`.` names
+    * but `k=v` dirs) and reads with that schema; partition columns are
+    * still discovered from the directory names. Without a data file
+    * whose footer carries the key (an empty or missing dir, another
+    * writer) this IS `spark.read.parquet`, schema or error. Assumes the
+    * table's files share one schema, as every index table's do.
+    */
+  def readTable(spark: SparkSession, path: String): DataFrame = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(path).getFileSystem(conf)
+    def firstFile(s: FileStatus): Option[FileStatus] =
+      if (s.isFile) Some(s)
+      else fs.listStatus(s.getPath).filter { c =>
+        val n = c.getPath.getName
+        !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+      }.sortBy(_.getPath.getName).iterator.flatMap(firstFile).nextOption()
+    Try(fs.getFileStatus(new Path(path))).toOption.flatMap(firstFile)
+      .flatMap(f => Try(DataType.fromJson(ParquetFileReader.readFooter(
+          HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+        .getFileMetaData.getKeyValueMetaData
+        .get(ParquetReadSupport.SPARK_METADATA_KEY))).toOption)
+      .collect { case schema: StructType => spark.read.schema(schema).parquet(path) }
+      .getOrElse(spark.read.parquet(path))
   }
 
   /** Deterministic seeded key for a reproducible global shuffle:

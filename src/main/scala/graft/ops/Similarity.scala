@@ -48,6 +48,40 @@ object Similarity {
     math.sqrt(acc)
   }
 
+  /** `cosine_sim` ([[graft.functions.CosineSimilarity]]) on the JVM: one
+    * sequential pass over dot, |a|² and |b|², then dot / (√|a|²·√|b|²)
+    * — bit-identical to the SQL function and to dotK / (normK·normK).
+    */
+  private[ops] def cosK(a: Array[Double], b: Array[Double]): Double = {
+    var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+    while (i < a.length) {
+      dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
+
+  /** (cosA, idA) against (cosB, idB) under ORDER BY cos DESC, id ASC
+    * as Spark sorts doubles (NaN above every number, -0.0 equal to
+    * 0.0): negative when A comes first.
+    */
+  private[ops] def rankCompare(cosA: Double, idA: Long,
+                               cosB: Double, idB: Long): Int = {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+      .compareDoubles(cosB, cosA)
+    if (c != 0) c else java.lang.Long.compare(idA, idB)
+  }
+
+  /** A probe's `nprobe` nearest centroids (cid, cv), best first: the
+    * (ccos DESC, cid ASC) row_number of [[ivfTopK]]'s bucket window,
+    * computed on the driver over the bounded model.
+    */
+  private[ops] def nearestBuckets(qv: Array[Double],
+                                  cent: Array[(Long, Array[Double])],
+                                  nprobe: Int): Array[Long] =
+    cent.map { case (cid, cv) => (cosK(qv, cv), cid) }
+      .sortWith { case ((ca, ia), (cb, ib)) => rankCompare(ca, ia, cb, ib) < 0 }
+      .take(nprobe).map(_._2)
+
   /** Typed corpus: (vec_id, double vector). */
   private def typed(emb: DataFrame, idCol: String, vecCol: String) = {
     import emb.sparkSession.implicits._
@@ -715,15 +749,9 @@ object Similarity {
     val probes = probeDs.collect()
     // per-probe nprobe nearest buckets, ranked driver-side with the
     // SAME fold + (ccos DESC, cid ASC) tie rule as ivfTopK's window
-    val centN = cent.map { case (cid, cv) => (cid, cv, normK(cv)) }
     val cb = pqCodebook(emb, idCol, vecCol, m, ksub, dsub)
     val probePlan = probes.map { case (qid, qv) =>
-      val nq = normK(qv)
-      val buckets = centN
-        .map { case (cid, cv, cn) => (cid, dotK(qv, cv) / (nq * cn)) }
-        .sortBy { case (cid, c) => (-c, cid) }
-        .take(nprobe).map(_._1)
-      (qid, buckets.toSet, adcLutK(qv, cb, m, ksub, dsub))
+      (qid, nearestBuckets(qv, cent, nprobe).toSet, adcLutK(qv, cb, m, ksub, dsub))
     }
     val bcPlan = spark.sparkContext.broadcast(probePlan)
     val bcCb = spark.sparkContext.broadcast(cb)
@@ -808,13 +836,8 @@ object Similarity {
         "probes are collected and broadcast, so the predicate must pick " +
         "a small probe set")
     val probes = probeDs.collect()
-    val centN = cent.map { case (cid, cv) => (cid, cv, normK(cv)) }
     val probePlan = probes.map { case (qid, qv) =>
-      val nq = normK(qv)
-      val buckets = centN
-        .map { case (cid, cv, cn) => (cid, dotK(qv, cv) / (nq * cn)) }
-        .sortBy { case (cid, c) => (-c, cid) }
-        .take(nprobe).map(_._1)
+      val buckets = nearestBuckets(qv, cent, nprobe)
       val qdotc = buckets.map(b => b -> dotK(qv, centMap(b))).toMap
       (qid, buckets.toSet, qdotc, adcLutK(qv, cb, m, ksub, dsub))
     }

@@ -66,6 +66,40 @@ class GuardBoundarySpec extends SparkSpec {
       ksub = 16, maxProbes = nProbes - 1).count())
   }
 
+  /** One persisted index (with its PQ sidecar) over the shipped corpus. */
+  private lazy val annIndex: String = {
+    val dir = java.nio.file.Files.createTempDirectory("guard_ann_idx").toString
+    graft.ops.AnnIndex.build(emb, "vec_id", "embedding", nCentroids = 4, dir = dir)
+    graft.ops.AnnIndex.buildPq(spark, dir, m = 8, ksub = 16, dims = 64)
+    dir
+  }
+
+  // the indexed probes collect the probe set with limit(maxProbes + 1):
+  // the bound itself must pass, one past it must refuse, and the
+  // refusal must report the exact count, not the limit's
+  test("AnnIndex.probe admits maxProbes and refuses maxProbes+1 probes") {
+    assert(graft.ops.AnnIndex.probe(spark, annIndex, probe, k = 3,
+      maxProbes = nProbes).count() > 0)
+    refuses("probe")(graft.ops.AnnIndex.probe(spark, annIndex, probe, k = 3,
+      maxProbes = nProbes - 1).count())
+    val e = intercept[IllegalArgumentException](graft.ops.AnnIndex.probe(
+      spark, annIndex, lit(true), k = 3, maxProbes = nProbes).count())
+    assert(e.getMessage.contains(s"selected ${emb.count()} probes (> $nProbes)"),
+      e.getMessage)
+  }
+
+  test("AnnIndex.probePq admits maxProbes and refuses maxProbes+1 probes") {
+    assert(graft.ops.AnnIndex.probePq(spark, annIndex, probe, k = 3,
+      maxProbes = nProbes, m = 8, ksub = 16).count() > 0)
+    refuses("probePq")(graft.ops.AnnIndex.probePq(spark, annIndex, probe,
+      k = 3, maxProbes = nProbes - 1, m = 8, ksub = 16).count())
+    val e = intercept[IllegalArgumentException](graft.ops.AnnIndex.probePq(
+      spark, annIndex, lit(true), k = 3, maxProbes = nProbes, m = 8,
+      ksub = 16).count())
+    assert(e.getMessage.contains(s"selected ${emb.count()} probes (> $nProbes)"),
+      e.getMessage)
+  }
+
   test("cosinePairs admits the corpus at the cap and refuses one below") {
     val n = emb.count()
     // at the boundary: n <= maxExactCorpus passes

@@ -178,4 +178,45 @@ class LayoutSpec extends SparkSpec {
     assert(none.count() == 0)
     assert(none.columns.toSeq == spark.read.parquet(data).columns.toSeq)
   }
+
+  test("readTable: the footer schema equals spark.read.parquet's for every index table") {
+    def parity(dir: String, tables: Seq[String]): Unit = tables.foreach { t =>
+      val p = s"$dir/$t"
+      assert(Layout.readTable(spark, p).schema == spark.read.parquet(p).schema,
+        s"$t: ${Layout.readTable(spark, p).schema.treeString} vs " +
+          spark.read.parquet(p).schema.treeString)
+      assert(Layout.readTable(spark, p).count() == spark.read.parquet(p).count(), t)
+    }
+    val dedupTables = Seq("fps", "grams", "hot", "sigs", "bloom")
+    val texts = Seq("the quick brown fox jumps over the lazy dog",
+      "lorem ipsum dolor sit amet consectetur adipiscing",
+      "the quick brown fox jumps over the lazy cat")
+    // INT and BIGINT doc ids: the id type must come back as written
+    for ((ids, tag) <- Seq(texts.indices.map(i => (i + 1, texts(i))).toDF("doc_id", "text") -> "int",
+        texts.indices.map(i => (i + 1L, texts(i))).toDF("doc_id", "text") -> "bigint")) {
+      val dir = Files.createTempDirectory(s"layout_read_dedup_$tag").toString
+      graft.ops.DedupIndex.build(ids, "doc_id", "text", 3, dir, nFiles = 2)
+      parity(dir, dedupTables)
+    }
+    val emb = (0L until 40L).map(i => (i, Array.tabulate(8)(d => (i + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val ann = Files.createTempDirectory("layout_read_ann").toString
+    graft.ops.AnnIndex.build(emb, "vec_id", "embedding", nCentroids = 4, dir = ann)
+    graft.ops.AnnIndex.buildPq(spark, ann, m = 2, ksub = 16, dims = 8)
+    // members and codes carry the inferred `bucket` partition column
+    parity(ann, Seq("assignments", "centroids", "members", "codes", "pqseed"))
+    assert(Layout.readTable(spark, s"$ann/members").columns.last == "bucket")
+  }
+
+  test("readTable: a dir without a data file behaves exactly as spark.read.parquet") {
+    val empty = Files.createTempDirectory("layout_read_empty")
+    Files.createFile(empty.resolve("_SUCCESS"))
+    val missing = empty.resolve("absent").toString
+    for (p <- Seq(empty.toString, missing)) {
+      val plain = intercept[Exception](spark.read.parquet(p))
+      val footer = intercept[Exception](Layout.readTable(spark, p))
+      assert(footer.getClass == plain.getClass && footer.getMessage == plain.getMessage,
+        s"$p: ${footer.getMessage} vs ${plain.getMessage}")
+    }
+  }
 }

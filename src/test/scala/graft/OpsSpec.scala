@@ -886,6 +886,34 @@ class OpsSpec extends SparkSpec {
       graft.ops.AnnIndex.build(emb.filter(col("vec_id") < 3), "vec_id",
         "embedding", nCentroids = 4, dir = java.nio.file.Files
           .createTempDirectory("ann_idx_bad").toString))
+    // ties: every vector appears three times (ids i, i+40, i+80), so
+    // cosines tie and vec_id decides the rank; k = 4 cuts inside a tied
+    // triple. The index's members scan spans several partitions, so
+    // the per-partition top-k sets must merge to the direct ranking
+    val tied = (0L until 120L)
+      .map(i => (i, Array.tabulate(6)(d => math.sin((i % 40) * 2.7 + d).toFloat)))
+      .toDF("vec_id", "embedding").repartition(8)
+    val tiedDir = java.nio.file.Files.createTempDirectory("ann_idx_tied").toString
+    graft.ops.AnnIndex.build(tied, "vec_id", "embedding", nCentroids = 4, dir = tiedDir)
+    graft.ops.AnnIndex.buildPq(spark, tiedDir, m = 2, ksub = 16, dims = 6)
+    assert(spark.read.parquet(s"$tiedDir/members").rdd.getNumPartitions > 1,
+      "the tie check needs a members scan over several partitions")
+    val spread = pmod(col("vec_id"), lit(7)) === 0
+    val tiedDirect = Similarity.ivfTopK(tied, "vec_id", "embedding",
+      nCentroids = 4, spread, k = 4)
+    val tiedIndexed = graft.ops.AnnIndex.probe(spark, tiedDir, spread, k = 4)
+    assert(tiedIndexed.count() == tiedDirect.count() && tiedDirect.count() > 0)
+    assert(tiedIndexed.except(tiedDirect).count() == 0 &&
+      tiedDirect.except(tiedIndexed).count() == 0,
+      "tied cosines must rank by vec_id exactly as the direct window does")
+    val tiedPqDirect = Similarity.ivfPqTopK(tied, "vec_id", "embedding",
+      nCentroids = 4, spread, k = 4, m = 2, ksub = 16, dims = 6)
+    val tiedPq = graft.ops.AnnIndex.probePq(spark, tiedDir, spread, k = 4,
+      m = 2, ksub = 16)
+    assert(tiedPq.count() == tiedPqDirect.count())
+    assert(tiedPq.except(tiedPqDirect).count() == 0 &&
+      tiedPqDirect.except(tiedPq).count() == 0,
+      "tied ADC scores must rank by neighbor_id exactly as ivfPqTopK does")
   }
 
   test("ivfadc: all-buckets probe equals pqTopK exactly; nprobe bounds candidate buckets") {

@@ -10,6 +10,26 @@ class PlansSpec extends SparkSpec {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, sf).queryExecution.executedPlan.toString
 
+  /** Root paths of every file scan in `df`'s physical plan, AQE stages
+    * and subqueries included — read from the scan nodes themselves:
+    * the plan STRING cuts a scan's Location at 100 characters, so a
+    * path check against it would depend on the temp dir's length.
+    */
+  private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    new AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toUri.getPath)
+      }.flatten
+  }
+
+  /** `root` is `dir` or lies under it. */
+  private def under(dir: String)(root: String): Boolean = {
+    val d = new java.io.File(dir).getAbsolutePath
+    root == d || root.startsWith(d + "/")
+  }
+
   test("filter_outliers: predicate pushed to the parquet scan, columns pruned") {
     val p = plan("filter_outliers")
     assert(p.contains("PushedFilters: [IsNotNull"), "expected pushed filters")
@@ -215,14 +235,15 @@ class PlansSpec extends SparkSpec {
     val df = graft.ops.DedupIndex.dedupBatch(spark,
       spark.read.parquet(batchDir), idxDir, "doc_id", "text", 3, 0.5)
     val p = df.queryExecution.executedPlan.toString
+    val roots = scanRoots(df)
     // the whole point of the index: daily dedup scans the batch and the
     // 8-byte-hash index tables, never the corpus text
-    assert(p.contains(new java.io.File(idxDir).getName),
-      "expected the index tables in the scan set")
-    assert(p.contains(new java.io.File(batchDir).getName),
-      "expected the batch in the scan set")
-    assert(!p.contains(new java.io.File(corpusDir).getName),
-      "the corpus relation must NOT be scanned by the indexed dedup")
+    assert(roots.exists(under(idxDir)),
+      s"expected the index tables in the scan set: $roots")
+    assert(roots.exists(under(batchDir)),
+      s"expected the batch in the scan set: $roots")
+    assert(!roots.exists(under(corpusDir)),
+      s"the corpus relation must NOT be scanned by the indexed dedup: $roots")
     // and the removals keep the anti-join/equi-join discipline of the
     // direct form
     assert("LeftAnti".r.findAllIn(p).size >= 2)
@@ -242,12 +263,23 @@ class PlansSpec extends SparkSpec {
     val df = graft.ops.AnnIndex.probe(spark, idxDir,
       org.apache.spark.sql.functions.col("vec_id").between(10, 12), k = 3)
     val p = df.queryExecution.executedPlan.toString
+    val roots = scanRoots(df)
     // the point of the persisted index: the probe never re-reads (or
     // re-clusters) the embeddings corpus — only the index tables
-    assert(p.contains(new java.io.File(idxDir).getName),
-      "expected the index tables in the scan set")
-    assert(!p.contains(new java.io.File(embDir).getName),
-      "the embeddings corpus must NOT be scanned by the indexed probe")
+    assert(roots.exists(under(idxDir)),
+      s"expected the index tables in the scan set: $roots")
+    assert(!roots.exists(under(embDir)),
+      s"the embeddings corpus must NOT be scanned by the indexed probe: $roots")
+    // the probe set, its vectors and the centroid model are bounded
+    // driver collects, so the scoring query scans members alone, once
+    assert(roots == Seq(new java.io.File(s"$idxDir/members").getAbsolutePath),
+      s"the scoring query must scan only members/: $roots")
+    // candidates are scored by a per-partition top-k per probe, not a
+    // probe x candidate join feeding a sort of every pair; the window
+    // ranks the survivors
+    assert(p.contains("MapPartitions") && p.contains("Window"),
+      s"expected per-partition scoring under the rank window:\n$p")
+    assert(!p.contains("Join"), s"the scoring query must not join:\n$p")
     // the candidate fetch is directory-level STATIC partition pruning:
     // the probed-bucket set (bounded by the centroid count) becomes an
     // IN filter on the partition column at plan time — unlike DPP, it
@@ -629,5 +661,71 @@ class PlansSpec extends SparkSpec {
     val p = merged.queryExecution.executedPlan.toString
     assert(p.contains("Coalesce"), "expected narrow coalesce")
     assert(!p.contains("Exchange"), "compaction must not shuffle the data it merges")
+  }
+
+  /** Names of the SQL executions `body` runs, in order. Executions reach
+    * listeners on the async listener bus in order, so a marker query
+    * before and after `body` bounds the window exactly.
+    */
+  private def sqlExecutions(body: => Unit): Seq[String] = {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add((f, qe))
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add((f, qe))
+    }
+    def marker(name: String): Unit = {
+      spark.range(1).toDF(name).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.toArray.exists(_.asInstanceOf[(String, QueryExecution)]._2
+          .analyzed.output.exists(_.name == name))) {
+        assert(System.nanoTime() < deadline, s"marker $name never reached the listener")
+        Thread.sleep(20)
+      }
+    }
+    spark.listenerManager.register(listener)
+    try {
+      marker("__window_start")
+      body
+      marker("__window_end")
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+      .dropWhile(!_._2.analyzed.output.exists(_.name == "__window_start")).drop(1)
+      .takeWhile(!_._2.analyzed.output.exists(_.name == "__window_end"))
+      .map(_._1)
+  }
+
+  private def annIndexFixture(n: Long): (String, org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val emb = (0L until n)
+      .map(i => (i, Array.tabulate(8)(d => math.sin(i * 1.3 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_ann_q").toString
+    (dir, emb)
+  }
+
+  test("AnnIndex.probe: one collect runs at most 4 SQL executions") {
+    import org.apache.spark.sql.functions.col
+    val (dir, emb) = annIndexFixture(80L)
+    graft.ops.AnnIndex.build(emb, "vec_id", "embedding", nCentroids = 4, dir = dir)
+    val names = sqlExecutions {
+      graft.ops.AnnIndex.probe(spark, dir, col("vec_id").between(10, 30), k = 3)
+        .collect()
+    }
+    // probe set, probe vectors, centroids, and the scoring query
+    assert(names.size <= 4, s"expected at most 4 SQL executions, got ${names.mkString(", ")}")
+  }
+
+  test("AnnIndex.append: a fresh batch runs at most 5 SQL executions") {
+    import org.apache.spark.sql.functions.col
+    val (dir, emb) = annIndexFixture(80L)
+    graft.ops.AnnIndex.build(emb.filter(col("vec_id") < 60), "vec_id", "embedding",
+      nCentroids = 4, dir = dir)
+    val names = sqlExecutions {
+      graft.ops.AnnIndex.append(emb.filter(col("vec_id") >= 60), "vec_id", "embedding", dir)
+    }
+    assert(names.size <= 5, s"expected at most 5 SQL executions, got ${names.mkString(", ")}")
   }
 }
