@@ -24,6 +24,45 @@ object Scratch {
       println(s"=== $n ===")
       SparkEntry.queries(n)(spark, dir).explain("formatted")
     }
+    // executed-plan dumps for plan evidence (plans/r{N}): every SQL
+    // execution a registry row runs, in order, as executed — for rows
+    // whose work happens in checkpoints, collects and stage writes,
+    // which `explain:` shows as a Scan ExistingRDD stub or not at all.
+    // `executed:quality_metrics` dumps Quality.qualityMetrics(..).head()
+    // over the pipeline_e2e batch.
+    args.filter(_.startsWith("executed:")).foreach { a =>
+      import scala.jdk.CollectionConverters._
+      import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+      import org.apache.spark.sql.util.QueryExecutionListener
+      val n = a.stripPrefix("executed:")
+      val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
+      val listener = new QueryExecutionListener {
+        def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add((f, qe))
+        def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add((f, qe))
+      }
+      // listeners run on an async bus: a marker query's arrival means
+      // every execution before it has arrived too
+      def drain(): Unit = {
+        val m = s"__marker_${System.nanoTime}"
+        spark.range(1).toDF(m).collect()
+        while (!seen.asScala.exists(_._2.analyzed.output.exists(_.name == m))) Thread.sleep(20)
+      }
+      spark.listenerManager.register(listener)
+      n match {
+        case "quality_metrics" =>
+          val batch = SparkEntry.queries("pipeline_e2e")(spark, dir)
+          drain(); seen.clear()
+          graft.etl.Quality.qualityMetrics(batch, 1000L).head()
+        case q => SparkEntry.queries(q)(spark, dir).collect()
+      }
+      drain()
+      spark.listenerManager.unregister(listener)
+      seen.asScala.filterNot(_._2.analyzed.output.exists(_.name.startsWith("__marker_")))
+        .zipWithIndex.foreach { case ((f, qe), i) =>
+          println(s"=== executed:$n #${i + 1} ($f) ===")
+          println(qe.explainString(FormattedMode))
+        }
+    }
     // operator-subplan explain for plan-evidence dumps (plans/r{N}):
     // the registry rows for these operators return checkpointed or
     // loop-truncated results, so explain:<registry name> shows a
@@ -444,7 +483,7 @@ object Scratch {
     }
     val names = args.filterNot(a =>
       a.startsWith("explain:") || a.startsWith("bpe:") || a.startsWith("full:") ||
-      a.startsWith("opplan:") ||
+      a.startsWith("opplan:") || a.startsWith("executed:") ||
       a == "bktprobe" || a == "tailprobe" || a == "msprobe" ||
       a == "cbprobe" || a == "dcprobe" ||
       a == "decontamprobe" ||

@@ -1,7 +1,8 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Cleaning stage (reference: src/transform.py:81-123). */
 object Clean {
@@ -59,6 +60,20 @@ object Clean {
     df.crossJoin(broadcast(med))
       .withColumn(c, coalesce(col(c), col("__med")))
       .drop("__med")
+  }
+
+  /** null → `value`, a median computed elsewhere (e.g. observed while
+    * the batch was materialized). The value rides a one-row broadcast
+    * relation, as in [[fillMedianLazy]], so it reaches the rows as data:
+    * a literal would be compiled into the generated code, and every
+    * batch with a new median would compile a new class.
+    */
+  def fillWith(df: DataFrame, c: String, value: java.lang.Double): DataFrame = {
+    val v = df.sparkSession.createDataFrame(java.util.List.of(Row(value)),
+      StructType(Seq(StructField("__fill", DoubleType))))
+    df.crossJoin(broadcast(v))
+      .withColumn(c, coalesce(col(c), col("__fill")))
+      .drop("__fill")
   }
 
   /** drop_null_critical (reference: src/transform.py:114-123). */

@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -169,16 +169,22 @@ object Sinks {
     */
   def upsert(existing: DataFrame, updates: DataFrame, keys: Seq[String],
              updatePriority: Seq[String] = Nil): DataFrame = {
-    val ord = (updatePriority.map(c => col(c).desc) ++ keys.map(col(_).asc))
-    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
-    val dedupedUpdates = updates
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1).drop("__rn")
+    val dedupedUpdates = firstPerKey(updates, keys, updatePriority)
       // auxiliary columns (e.g. priority) don't survive into the target
       .select(existing.columns.toIndexedSeq.map(col): _*)
     existing
       .join(dedupedUpdates.select(keys.map(col): _*), keys, "left_anti")
       .unionByName(dedupedUpdates)
+  }
+
+  /** [[upsert]]'s in-batch winner per key: the first row under
+    * `updatePriority` descending, then the key. */
+  private def firstPerKey(updates: DataFrame, keys: Seq[String],
+                          updatePriority: Seq[String]): DataFrame = {
+    val ord = (updatePriority.map(c => col(c).desc) ++ keys.map(col(_).asc))
+    val w = Window.partitionBy(keys.map(col): _*).orderBy(ord: _*)
+    updates.withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
   }
 
   /** ddl_create analogue (reference: src/load.py:80-263,
@@ -545,7 +551,13 @@ object Sinks {
     // transform over a live source) is evaluated once and every step
     // sees the same rows. Bounded by the batch itself.
     val batch = materialized(updates)
-    lazy val spread = partitionSpread(batch, keys, partitionCol)
+    val spread = partitionSpread(batch, keys, partitionCol)
+    // the batch deduped by key, derived once for the whole merge: the
+    // batch itself when every key has one row (a transformed batch
+    // does), else ONE window pass into a checkpoint
+    lazy val winners =
+      if (!spread.dupKeys) batch
+      else firstPerKey(batch, keys, updatePriority).localCheckpoint()
     if (!keys.contains(partitionCol)) {
       require(!spread.keyMoves,
         s"upsertPartitioned: a key maps to multiple '$partitionCol' values " +
@@ -591,9 +603,8 @@ object Sinks {
     def partitioned(df: DataFrame): DataFrame =
       df.repartition(col(partitionCol))
     if (!targetExists) {
-      // first batch dedups by key too (several rows per key must pick
-      // the same winner a merge would)
-      partitioned(upsert(batch.limit(0), batch, keys, updatePriority))
+      // the first batch writes the same per-key winners a merge would
+      partitioned(winners)
         .write.mode(SaveMode.Overwrite)
         .partitionBy(partitionCol).parquet(path)
       Manifest.commit(spark, path)
@@ -617,7 +628,8 @@ object Sinks {
       // no materialization barrier needed on the target: the stage
       // write reads its partitions while they are still fully intact —
       // the target is only touched by the post-write metadata renames
-      val merged = upsert(existing, batch, keys, updatePriority)
+      val merged = existing.join(spread.perKey.select(keys.map(col): _*), keys, "left_anti")
+        .unionByName(winners)
       // stage the ENTIRE merge first (crash here: target untouched,
       // stage discarded next run), then commit via the txn marker
       val stage = new org.apache.hadoop.fs.Path(root, UpsertStageName)
@@ -639,30 +651,40 @@ object Sinks {
       case _ => df.localCheckpoint()
     }
 
-  /** What a batch says about its partition column: the distinct values
-    * it touches (NULL included) and whether some key spans several
-    * non-NULL values.
+  /** What a batch says about its keys and partition column: one
+    * materialized row per key, the distinct partition values it touches
+    * (NULL included), whether some key spans several non-NULL values,
+    * and whether some key has more than one row.
     */
-  private final case class PartitionSpread(values: Array[Any], keyMoves: Boolean)
+  private final case class PartitionSpread(perKey: DataFrame, values: Array[Any],
+                                           keyMoves: Boolean, dupKeys: Boolean)
 
-  /** One aggregate pass for both sides of [[upsertPartitioned]]'s
-    * contract: per key, the least and greatest partition value and
-    * whether any is NULL (least != greatest is exactly "more than one
-    * distinct non-NULL value"), then one row per least value. The
-    * result is bounded by the distinct partition values of the batch.
+  /** [[upsertPartitioned]]'s key-grouped pass: one checkpointed row per
+    * key of the batch, with the rest of its [[PartitionSpread]]
+    * observed on the same pass. Per key it takes the
+    * row count, the least and greatest partition value and whether any
+    * is NULL (least != greatest is exactly "more than one distinct
+    * non-NULL value"); the observed set of least values is bounded by
+    * the distinct partition values of the batch.
     */
   private def partitionSpread(batch: DataFrame, keys: Seq[String],
                               partitionCol: String): PartitionSpread = {
     val p = col(partitionCol)
-    val rows = batch.groupBy(keys.map(col): _*)
-      .agg(min(p).as("__lo"), max(p).as("__hi"), max(p.isNull).as("__null"))
-      .groupBy(col("__lo"))
-      .agg(max(coalesce(col("__lo") =!= col("__hi"), lit(false))).as("__moves"),
-        max(col("__null")).as("__null"))
-      .collect()
-    val values = rows.map(_.get(0)) ++
-      (if (rows.exists(_.getBoolean(2))) Array[Any](null) else Array.empty[Any])
-    PartitionSpread(values.distinct, rows.exists(_.getBoolean(1)))
+    val obs = new Observation()
+    val perKey = batch.groupBy(keys.map(col): _*)
+      .agg(min(p).as("__lo"), max(p).as("__hi"), max(p.isNull).as("__null"),
+        count(lit(1)).as("__n"))
+      .observe(obs, max(coalesce(col("__lo") =!= col("__hi"), lit(false))).as("moves"),
+        max(col("__null")).as("anyNull"), max(col("__n")).as("n"),
+        collect_set(col("__lo")).as("values"))
+      .localCheckpoint()
+    // over an empty batch every max is NULL and the set is empty
+    val m = obs.get
+    def flag(name: String) = m(name) == true
+    val values = m("values").asInstanceOf[Seq[Any]] ++
+      (if (flag("anyNull")) Seq(null) else Nil)
+    PartitionSpread(perKey, values.toArray, flag("moves"),
+      Option(m("n")).exists(_.asInstanceOf[Long] > 1))
   }
 
   /** The commit half of the staged-partition protocol, shared by

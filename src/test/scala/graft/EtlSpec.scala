@@ -127,4 +127,66 @@ class EtlSpec extends SparkSpec {
     assert(r.getAs[Row]("loading").getAs[Long]("records_loaded") ==
       metrics.getAs[Long]("records_after_cleaning"))
   }
+
+  test("transform materializes the same rows as the lazy fold of its stages") {
+    val events = io.Sources.table(spark, sf, "events")
+    val weather = Pipeline.weatherFromEvents(events)
+    assert(weather.filter(col("visibility").isNull).count() > 0,
+      "the fixture must exercise the median fill")
+    Seq(Nil, Seq("temperature", "humidity")).foreach { tieBreak =>
+      val folded = Pipeline.stages(tieBreak).foldLeft(weather)((d, st) => st(d))
+      val out = Pipeline.transform(weather, tieBreak)
+      assert(out.schema == folded.schema)
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+      assert(rows(out) == rows(folded))
+    }
+  }
+
+  /** qualityMetrics as it was planned with `countDistinct` and the input
+    * count as literals: the reference for the parity test below.
+    */
+  private def countDistinctMetrics(df: org.apache.spark.sql.DataFrame,
+                                   inputCount: Long): org.apache.spark.sql.DataFrame = {
+    val nullCols = df.columns.map(c =>
+      sum(when(col(c).isNull, 1L).otherwise(0L))).reduce(_ + _)
+    df.agg(
+      count(lit(1)).as("records_after_cleaning"),
+      avg(col("quality_score")).as("avg_quality_score"),
+      countDistinct(col("city")).as("cities_count"),
+      countDistinct(col("country")).as("countries_count"),
+      min(col("timestamp")).as("date_range_start"),
+      max(col("timestamp")).as("date_range_end"),
+      nullCols.as("total_nulls"))
+      .withColumn("total_records_processed", lit(inputCount))
+      .withColumn("data_retention_rate",
+        when(lit(inputCount) > 0,
+          col("records_after_cleaning") / lit(inputCount.toDouble)).otherwise(0.0))
+  }
+
+  test("qualityMetrics: distinct counts, ratios and schema equal the countDistinct form") {
+    val t = ts("2023-11-07 12:00:00")
+    val t2 = ts("2023-11-08 06:00:00")
+    def batch(rows: (String, String, Timestamp, Option[Double])*) =
+      rows.toDF("city", "country", "timestamp", "quality_score")
+    val nulls = batch(("London", "GB", t, Some(90.0)), (null, "GB", t2, Some(80.0)),
+      ("Paris", null, null, None), (null, null, t, Some(70.0)))
+    val dupCities = batch(("London", "GB", t, Some(90.0)), ("London", "CA", t, Some(85.0)),
+      ("London", "GB", t2, Some(80.0)), ("Lima", "PE", t2, Some(75.0)))
+    val one = batch(("Cairo", "EG", t, Some(100.0)))
+    val empty = batch()
+    val transformed = Pipeline.transform(Pipeline.weatherFromEvents(
+      io.Sources.table(spark, sf, "events")))
+    val cases = Seq(nulls -> 10L, nulls -> 0L, dupCities -> 4L, one -> 1L, one -> 0L,
+      empty -> 0L, empty -> 3L, transformed -> 1000L)
+    cases.foreach { case (df, inputCount) =>
+      val got = etl.Quality.qualityMetrics(df, inputCount)
+      val want = countDistinctMetrics(df, inputCount)
+      assert(got.schema == want.schema)
+      assert(got.collect().toSeq == want.collect().toSeq, s"inputCount $inputCount")
+    }
+    val r = etl.Quality.qualityMetrics(nulls, 10L).head()
+    assert(r.getAs[Long]("cities_count") == 2L && r.getAs[Long]("countries_count") == 1L)
+    assert(etl.Quality.qualityMetrics(dupCities, 4L).head().getAs[Long]("cities_count") == 2L)
+  }
 }

@@ -663,11 +663,15 @@ class PlansSpec extends SparkSpec {
     assert(!p.contains("Exchange"), "compaction must not shuffle the data it merges")
   }
 
-  /** Names of the SQL executions `body` runs, in order. Executions reach
+  /** Names of the SQL executions `body` runs, in order. */
+  private def sqlExecutions(body: => Unit): Seq[String] = executions(body).map(_._1)
+
+  /** The SQL executions `body` runs, in order. Executions reach
     * listeners on the async listener bus in order, so a marker query
     * before and after `body` bounds the window exactly.
     */
-  private def sqlExecutions(body: => Unit): Seq[String] = {
+  private def executions(body: => Unit)
+      : Seq[(String, org.apache.spark.sql.execution.QueryExecution)] = {
     import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.util.QueryExecutionListener
     val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
@@ -694,7 +698,6 @@ class PlansSpec extends SparkSpec {
     seen.asScala.toSeq
       .dropWhile(!_._2.analyzed.output.exists(_.name == "__window_start")).drop(1)
       .takeWhile(!_._2.analyzed.output.exists(_.name == "__window_end"))
-      .map(_._1)
   }
 
   private def annIndexFixture(n: Long): (String, org.apache.spark.sql.DataFrame) = {
@@ -727,5 +730,34 @@ class PlansSpec extends SparkSpec {
       graft.ops.AnnIndex.append(emb.filter(col("vec_id") >= 60), "vec_id", "embedding", dir)
     }
     assert(names.size <= 5, s"expected at most 5 SQL executions, got ${names.mkString(", ")}")
+  }
+
+  test("partitioned upsert: the batch's row_number window runs at most once per merge") {
+    import org.apache.spark.sql.catalyst.expressions.RowNumber
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.window.WindowExec
+    import spark.implicits._
+    def rowNumberWindows(body: => Unit): Int = executions(body).map { case (_, qe) =>
+      new AdaptiveSparkPlanHelper {}.collectWithSubqueries(qe.executedPlan) {
+        case w: WindowExec if w.windowExpression.exists(_.exists(_.isInstanceOf[RowNumber])) => w
+      }.size
+    }.sum
+    val dir = java.nio.file.Files.createTempDirectory("graft_upsert_windows").toString + "/t"
+    Seq(("a", 1L, 1.0, "2023-11-01"), ("b", 2L, 2.0, "2023-11-02"))
+      .toDF("k", "ts", "v", "date")
+      .write.partitionBy("date").parquet(dir)
+    val keys = Seq("k", "ts")
+    // two rows for key (a, 1): the merge must pick one, in one window pass
+    val dup = Seq(("a", 1L, 3.0, "2023-11-01"), ("a", 1L, 4.0, "2023-11-01"),
+      ("c", 3L, 5.0, "2023-11-03")).toDF("k", "ts", "v", "date")
+    val withDup = rowNumberWindows(
+      graft.io.Sinks.upsertPartitioned(spark, dup, dir, keys, "date", updatePriority = Seq("v")))
+    assert(withDup == 1, s"a batch with a duplicate key ran $withDup row_number windows")
+    val unique = Seq(("b", 2L, 6.0, "2023-11-02")).toDF("k", "ts", "v", "date")
+    val unique1 = rowNumberWindows(
+      graft.io.Sinks.upsertPartitioned(spark, unique, dir, keys, "date"))
+    assert(unique1 <= 1, s"a batch with unique keys ran $unique1 row_number windows")
+    val got = spark.read.parquet(dir).select("k", "v").as[(String, Double)].collect().toMap
+    assert(got == Map("a" -> 4.0, "b" -> 6.0, "c" -> 5.0))
   }
 }
