@@ -29,16 +29,27 @@ object Scratch {
     // whose work happens in checkpoints, collects and stage writes,
     // which `explain:` shows as a Scan ExistingRDD stub or not at all.
     // `executed:quality_metrics` dumps Quality.qualityMetrics(..).head()
-    // over the pipeline_e2e batch.
+    // over the pipeline_e2e batch; `executed:dedup_batch` one
+    // DedupIndex.dedupBatch(..).collect() over opplan:dedup_batch's
+    // index and batch. Jobs that run outside any SQL execution (typed
+    // passes over a plan's RDD, driver-side collects of its rows) are
+    // listed after the executions by their call sites.
     args.filter(_.startsWith("executed:")).foreach { a =>
       import scala.jdk.CollectionConverters._
-      import org.apache.spark.sql.execution.{FormattedMode, QueryExecution}
+      import org.apache.spark.sql.execution.{FormattedMode, QueryExecution, SQLExecution}
+      import org.apache.spark.sql.functions._
       import org.apache.spark.sql.util.QueryExecutionListener
       val n = a.stripPrefix("executed:")
       val seen = new java.util.concurrent.LinkedBlockingQueue[(String, QueryExecution)]()
       val listener = new QueryExecutionListener {
         def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add((f, qe))
         def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add((f, qe))
+      }
+      val plainJobs = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val jobs = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).forall(_.getProperty(SQLExecution.EXECUTION_ID_KEY) == null))
+            plainJobs.add(e.stageInfos.headOption.map(_.name).getOrElse("?"))
       }
       // listeners run on an async bus: a marker query's arrival means
       // every execution before it has arrived too
@@ -48,20 +59,32 @@ object Scratch {
         while (!seen.asScala.exists(_._2.analyzed.output.exists(_.name == m))) Thread.sleep(20)
       }
       spark.listenerManager.register(listener)
+      spark.sparkContext.addSparkListener(jobs)
       n match {
         case "quality_metrics" =>
           val batch = SparkEntry.queries("pipeline_e2e")(spark, dir)
           drain(); seen.clear()
           graft.etl.Quality.qualityMetrics(batch, 1000L).head()
+        case "dedup_batch" =>
+          val docs = graft.io.Sources.table(spark, dir, "documents")
+          val idx = graft.ops.DedupIndex.ensureBuilt(spark, dir,
+            docs.filter(pmod(col("doc_id"), lit(5)) =!= 0), "doc_id", "text", 3)
+          drain(); seen.clear(); plainJobs.clear()
+          graft.ops.DedupIndex.dedupBatch(spark, docs.filter(pmod(col("doc_id"), lit(5)) === 0),
+            idx, "doc_id", "text", 3, 0.5).collect()
         case q => SparkEntry.queries(q)(spark, dir).collect()
       }
       drain()
       spark.listenerManager.unregister(listener)
+      spark.sparkContext.removeSparkListener(jobs)
       seen.asScala.filterNot(_._2.analyzed.output.exists(_.name.startsWith("__marker_")))
         .zipWithIndex.foreach { case ((f, qe), i) =>
           println(s"=== executed:$n #${i + 1} ($f) ===")
           println(qe.explainString(FormattedMode))
         }
+      plainJobs.asScala.zipWithIndex.foreach { case (site, i) =>
+        println(s"=== executed:$n job without a SQL execution #${i + 1}: $site ===")
+      }
     }
     // operator-subplan explain for plan-evidence dumps (plans/r{N}):
     // the registry rows for these operators return checkpointed or

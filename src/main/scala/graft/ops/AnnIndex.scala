@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -90,21 +91,34 @@ object AnnIndex {
     // rebalance/relayout left stranded in trash siblings — repair the
     // root and both sub-tables before touching them
     recoverAll(spark, dir)
-    // every count below rides on a checkpoint that runs anyway (an
-    // Observation resolves with the eager checkpoint's action)
+    // ONE pass over the batch, checkpointed, feeds every check and both
+    // writes: each vector's bucket against the STORED trained model
+    // (broadcast-sized by construction: the corpus is never re-read),
+    // with the exact build-time assignment arithmetic
+    // (Similarity.nearestBuckets(v, cent, 1) is assignTo's max_by for
+    // one vector; a NULL vector, whose every cosine is NULL, goes to the
+    // lowest cid), so an appended vector lands in the bucket a rebuild
+    // with these centroids would give it. The row count and the batch's
+    // distinct non-NULL ids (batch-bounded) ride on the checkpoint's
+    // action as an Observation
+    val cent = spark.sparkContext.broadcast(centroids(spark, dir))
+    val bucketOf = udf((v: Seq[Double]) =>
+      if (v == null) cent.value.map(_._1).min
+      else Similarity.nearestBuckets(v.toArray, cent.value, 1).head)
     val sizes = new Observation()
     val all = Similarity.prepared(batch, idCol, vecCol)
-      .observe(sizes, count(lit(1)).as("n")).localCheckpoint(true)
+      .withColumn("bucket", bucketOf(col("v")))
+      .observe(sizes, count(lit(1)).as("n"), collect_set(col("vec_id")).as("ids"))
+      .localCheckpoint(true)
     val nAll = sizes.get("n").asInstanceOf[Long]
-    // duplicate ids within the batch would collapse to one row in the
-    // assignment aggregate but fan back out in the asg.join(all)
-    // members write — duplicate member rows (a probe returns one
-    // neighbor at several ranks, exactly what the retry state machine
-    // below exists to prevent) and skewed nPrior/nBatch retry counts.
-    // Same countDistinct discipline as build's centroid seeding; the
-    // fresh path reads the distinct count off the assignment aggregate
-    // (one row per vec_id), checked before either write.
-    def requireDistinct(nDistinct: Long): Unit = require(nDistinct == nAll,
+    val ids = sizes.get("ids").asInstanceOf[Seq[Any]]
+    // duplicate ids within the batch would write duplicate member rows
+    // (a probe returns one neighbor at several ranks, exactly what the
+    // retry state machine below exists to prevent) and skew the
+    // nPrior/nBatch retry counts. Same countDistinct discipline as
+    // build's centroid seeding (a NULL id counts as a duplicate),
+    // checked before either write.
+    require(ids.size == nAll,
       "append: batch contains duplicate vec_ids — dedupe the batch " +
         "before indexing (duplicate member rows would corrupt probe ranks)")
     // RETRY state machine. A crashed-and-rerun ingest job must neither
@@ -121,20 +135,26 @@ object AnnIndex {
     //     already-committed assignments;
     //   - anything partial    → not a state this protocol produces —
     //     refuse loudly rather than guess.
-    val prior = new Observation()
-    val priorAsg = Layout.readTable(spark, s"$dir/assignments")
-      .join(all.select("vec_id"), "vec_id")
-      .observe(prior, count(lit(1)).as("n")).localCheckpoint(true)
-    val nPrior = prior.get("n").asInstanceOf[Long]
+    // The batch's rows already in assignments/ come from one pass over
+    // its (vec_id, bucket) column pair against the broadcast id set
+    val asgTable = Layout.readTable(spark, s"$dir/assignments").select("vec_id", "bucket")
+    val idType = asgTable.schema("vec_id").dataType
+    val batchIds = spark.sparkContext.broadcast(
+      ids.map(CatalystTypeConverters.createToCatalystConverter(idType)).toSet)
+    val prior = Layout.withRows(asgTable)(_.mapPartitions { rows =>
+      val id = CatalystTypeConverters.createToScalaConverter(idType)
+      rows.filter(r => !r.isNullAt(0) && batchIds.value(r.get(0, idType)))
+        .map(r => Row(id(r.get(0, idType)), if (r.isNullAt(1)) null else r.getLong(1)))
+    }.collect())
+    val nPrior = prior.length.toLong
+    val priorAsg = spark.createDataFrame(java.util.Arrays.asList(prior: _*), asgTable.schema)
     if (nPrior > 0) {
-      requireDistinct(all.agg(countDistinct(col("vec_id"))).head().getLong(0))
       val nBatch = nAll
       require(nPrior == nBatch,
         s"append: $nPrior of $nBatch batch vec_ids are already assigned — " +
           "a mix of new and indexed ids is neither a fresh batch nor a " +
           "retry; split the batch or rebuild the index")
-      val buckets = priorAsg.select("bucket").distinct()
-        .collect().map(_.getLong(0))
+      val buckets = prior.map(_.getLong(1)).distinct
       // membership check pruned to the batch's own buckets — never a
       // full members scan
       val nInMembers = Layout.readTable(spark, s"$dir/members")
@@ -147,28 +167,25 @@ object AnnIndex {
         s"append: batch is half-present in members/ ($nInMembers of " +
           s"$nBatch) — not a crash state this protocol produces; " +
           "rebuild the index")
-      priorAsg.join(all, "vec_id").select("vec_id", "v", "nrm", "bucket")
+      priorAsg.join(all.drop("bucket"), "vec_id").select("vec_id", "v", "nrm", "bucket")
         .repartition(col("bucket"))
         .write.mode("append").partitionBy("bucket").parquet(s"$dir/members")
       return
     }
-    val cent = Layout.readTable(spark, s"$dir/centroids").select("cid", "cv")
-    // the exact build-time assignment aggregate against the stored
-    // trained model — an appended vector lands in the same bucket a
-    // rebuild-with-these-centroids would give it.
-    // one materialization feeds both writes: the assignment aggregate
-    // must not replan per sink, and the members write must never read
-    // assignments/ files mid-append
-    val assigned = new Observation()
-    val asg = Similarity.assignTo(all.select("vec_id", "v"), cent)
-      .observe(assigned, count(col("vec_id")).as("n")).localCheckpoint(true)
-    requireDistinct(assigned.get("n").asInstanceOf[Long])
-    asg.sortWithinPartitions("vec_id")
+    // both writes read the one checkpoint: the members write never
+    // reads assignments/ files mid-append
+    all.select("vec_id", "bucket").sortWithinPartitions("vec_id")
       .write.mode("append").parquet(s"$dir/assignments")
-    asg.join(all, "vec_id").select("vec_id", "v", "nrm", "bucket")
-      .repartition(col("bucket"))
+    all.repartition(col("bucket"))
       .write.mode("append").partitionBy("bucket").parquet(s"$dir/members")
   }
+
+  /** The stored trained model as (cid, cv) — bounded by the centroid
+    * count — read in the scan's own tasks.
+    */
+  private def centroids(spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
+    Layout.collectRows(Layout.readTable(spark, s"$dir/centroids").select("cid", "cv"))
+      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray()))
 
   /** The full crash-recovery preamble every index entry point runs
     * before reading: restore a ROOT swap stranded by a crashed
@@ -293,28 +310,45 @@ object AnnIndex {
     *
     * The bucket ranking is planned on the driver ([[planProbes]]); the
     * candidates are scored in ONE members scan where each partition
-    * keeps a bounded top-k per probe, so the final window ranks at
-    * most k × probes × partitions rows instead of every (probe,
-    * candidate) pair.
+    * keeps a bounded top-k per probe, and the partitions' top-k sets
+    * are merged on the driver as they arrive (an RDD fold), so the
+    * driver holds at most 2 × k × probes candidates.
+    *
+    * EAGER: the scan runs when `probe` is called, and the result is a
+    * local relation of at most k × probes rows with the schema of the
+    * ranked form: (q_id, neighbor_id) of members' vec_id type, bucket
+    * and rank bigint, cos double.
     */
   def probe(spark: SparkSession, indexPath: String, probePred: Column,
             k: Int, maxProbes: Long = 100000L, nprobe: Int = 3): DataFrame = {
     val plan = planProbes(spark, indexPath, probePred, maxProbes, nprobe,
       "probe", "probes are broadcast, so the predicate must pick a small probe set")
-    import spark.implicits._
     val bcProbes = spark.sparkContext.broadcast(plan.probes)
     val idType = plan.members.schema("vec_id").dataType
-    val scored = plan.members.filter(col("bucket").isin(plan.buckets: _*))
-      .select("vec_id", "bucket", "v").as[(Long, Long, Array[Double])]
-      .mapPartitions(rows => topKPerProbe(bcProbes.value, rows, k))
-      .toDF("q_id", "vec_id", "bucket", "cos")
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
+    // one heap-ordered candidate list per probe; merging two keeps the
+    // k best under (cos DESC, vec_id ASC)
+    type TopK = Map[Long, Seq[(Double, Long, Long)]]
+    def merge(a: TopK, b: TopK): TopK = b.foldLeft(a) { case (m, (q, cs)) =>
+      m.updated(q, (m.getOrElse(q, Nil) ++ cs)
+        .sortWith((x, y) => Similarity.rankCompare(x._1, x._2, y._1, y._2) < 0).take(k))
+    }
+    val top = Layout.withRows(plan.members.filter(col("bucket").isin(plan.buckets: _*))
+        .select(col("vec_id").cast("long"), col("bucket"), col("v")))(
+      _.mapPartitions(rows => Iterator(topKPerProbe(bcProbes.value,
+        rows.map(r => (r.getLong(0), r.getLong(1), r.getArray(2).toDoubleArray())), k)))
+        .fold(Map.empty)(merge))
+    import scala.jdk.CollectionConverters._
+    val rows = top.toSeq.sortBy(_._1).flatMap { case (q, cs) =>
+      cs.zipWithIndex.map { case ((c, id, b), r) => Row(q, id, b, c, r + 1L) }
+    }
+    // the id casts fold into the local relation at optimization time
+    spark.createDataFrame(rows.asJava, new org.apache.spark.sql.types.StructType()
+        .add("q_id", "long", nullable = false).add("neighbor_id", "long", nullable = false)
+        .add("bucket", "long", nullable = false).add("cos", "double", nullable = false)
+        .add("rank", "long", nullable = false))
       .select(col("q_id").cast(idType).as("q_id"),
-        col("vec_id").cast(idType).as("neighbor_id"), col("bucket"),
-        col("cos"), col("rank").cast("long").as("rank"))
+        col("neighbor_id").cast(idType).as("neighbor_id"), col("bucket"),
+        col("cos"), col("rank"))
   }
 
   /** The probes as (q_id, vector, its `nprobe` nearest buckets best
@@ -342,22 +376,21 @@ object AnnIndex {
     // side listing checks only; a stranded dir would otherwise fail
     // the read)
     recoverAll(spark, indexPath)
-    import spark.implicits._
     val members = Layout.readTable(spark, s"$indexPath/members")
       .withColumn("bucket", col("bucket").cast("long"))
     val selected = Layout.readTable(spark, s"$indexPath/assignments")
       .filter(probePred)
-    val asg = selected.select("vec_id", "bucket")
-      .limit(math.min(maxProbes, Int.MaxValue - 1L).toInt + 1)
-      .as[(Long, Long)].collect()
+    val asg = Layout.collectRows(selected.select(col("vec_id").cast("long"), col("bucket"))
+        .limit(math.min(maxProbes, Int.MaxValue - 1L).toInt + 1))
+      .map(r => (r.getLong(0), r.getLong(1)))
     require(asg.length <= maxProbes,
       s"$caller: probePred selected ${selected.count()} probes (> $maxProbes); $why")
-    val vecs = members
-      .filter(col("bucket").isin(asg.map(_._2).distinct.toSeq: _*) &&
-        col("vec_id").isin(asg.map(_._1).toSeq: _*))
-      .select("vec_id", "v").as[(Long, Array[Double])].collect().sortBy(_._1)
-    val cent = Layout.readTable(spark, s"$indexPath/centroids")
-      .select("cid", "cv").as[(Long, Array[Double])].collect()
+    val vecs = Layout.collectRows(members
+        .filter(col("bucket").isin(asg.map(_._2).distinct.toSeq: _*) &&
+          col("vec_id").isin(asg.map(_._1).toSeq: _*))
+        .select(col("vec_id").cast("long"), col("v")))
+      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray())).sortBy(_._1)
+    val cent = centroids(spark, indexPath)
     ProbePlan(members, vecs.map { case (qid, qv) =>
       (qid, qv, Similarity.nearestBuckets(qv, cent, nprobe)) })
   }
@@ -365,13 +398,13 @@ object AnnIndex {
   /** One members partition scored against every probe that searches
     * the row's bucket (a member lives in one bucket, so each (probe,
     * member) pair scores at most once), keeping each probe's k best
-    * under (cos DESC, vec_id ASC): returns (q_id, vec_id, bucket, cos).
+    * (cos, vec_id, bucket) under (cos DESC, vec_id ASC), unordered.
     * The global top-k of a probe is contained in the union of these
     * per-partition top-k sets.
     */
   private def topKPerProbe(probes: Array[(Long, Array[Double], Array[Long])],
                            rows: Iterator[(Long, Long, Array[Double])],
-                           k: Int): Iterator[(Long, Long, Long, Double)] = {
+                           k: Int): Map[Long, Seq[(Double, Long, Long)]] = {
     val byBucket = probes.indices
       .flatMap(i => probes(i)._3.map(_ -> i)).groupMap(_._1)(_._2)
     // heap head = the kept (cos, vec_id, bucket) that ranks last
@@ -393,9 +426,9 @@ object AnnIndex {
       }
     }
     import scala.jdk.CollectionConverters._
-    heaps.iterator.zip(probes.iterator).flatMap { case (h, (qid, _, _)) =>
-      h.iterator.asScala.map { case (c, id, b) => (qid, id, b, c) }
-    }
+    heaps.iterator.zip(probes.iterator).collect {
+      case (h, (qid, _, _)) if !h.isEmpty => qid -> h.asScala.toSeq
+    }.toMap
   }
 
   /** PQ sidecar for a built index — the IVFADC serving layout: every

@@ -1,6 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Parity
@@ -24,30 +28,53 @@ object Dedup {
     * shuffle moves fixed-width keys; the winner is pinned by the
     * MINIMUM id, never dropDuplicates (shuffle-order-dependent).
     *
-    * The winner is a `min_by(struct(row), id)` AGGREGATE, not a
-    * fingerprint-partitioned row_number window: an aggregate has a
-    * partial (map-side) phase, so a text duplicated across a large
-    * fraction of the corpus contributes one candidate row per map
-    * partition to the exchange — a window has no partial phase, so
-    * the same input would land every copy of the hot text in a
-    * single task (linear, but a one-task straggler at 100 TB — the
-    * same class of pileup the gram pipelines eliminated with
-    * map-side-combined df counts). Deterministic because ids are
-    * unique within a duplicate group (min_by ties would otherwise be
-    * shuffle-order-dependent) — same tieBreak-uniqueness contract as
-    * [[graft.etl.Clean.dedupFirstPerKeyHour]]. The ordering key is
-    * struct-wrapped so a NULL id orders nulls-first exactly like the
-    * row_number window shape this replaced (a bare-column min_by
-    * would silently EXCLUDE null-id rows from winning); at most one
-    * null id per group keeps the winner deterministic, the same way
-    * uniqueness does for non-null ids.
+    * The winner is kept by a two-phase typed pass with the shape of a
+    * partial/final aggregate: each partition keeps one row per
+    * fingerprint, the survivors are hash-partitioned by fingerprint, and
+    * each partition keeps one row per fingerprint again. The partial
+    * phase is what a fingerprint-partitioned row_number window lacks: a
+    * text duplicated across a large fraction of the corpus contributes
+    * one candidate row per map partition to the exchange, where a
+    * window would land every copy of the hot text in a single task
+    * (linear, but a one-task straggler at 100 TB — the same class of
+    * pileup the gram pipelines eliminated with map-side-combined df
+    * counts). It keeps the row `min_by(struct(row), struct(id))` keeps,
+    * and compiles to a few generated classes where that SortAggregate
+    * (a struct buffer: no hash aggregate) compiles over a dozen.
+    * Deterministic because ids are unique within a duplicate group
+    * (ties would otherwise be shuffle-order-dependent) — same
+    * tieBreak-uniqueness contract as
+    * [[graft.etl.Clean.dedupFirstPerKeyHour]]. A NULL id orders first,
+    * exactly like the row_number window shape this replaced (a
+    * bare-column min_by would silently EXCLUDE null-id rows from
+    * winning); at most one null id per group keeps the winner
+    * deterministic, the same way uniqueness does for non-null ids.
     */
   def exact(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val cols = docs.columns.toSeq
-    docs
-      .groupBy(TextOps.fingerprint(col(textCol)).as("__fp"))
-      .agg(min_by(struct(cols.map(col): _*), struct(col(idCol))).as("__w"))
-      .select(cols.map(c => col("__w").getField(c).as(c)): _*)
+    val withFp = docs.withColumn("__fp", TextOps.fingerprint(col(textCol)))
+    val schema = withFp.schema
+    val (fpAt, idAt) = (schema.fieldIndex("__fp"), schema.fieldIndex(idCol))
+    val idType = schema(idCol).dataType
+    // the row min_by keeps: a later row replaces the kept one unless
+    // the kept id orders strictly first (NULL before every id), in
+    // Spark's own ordering of the id type
+    def winners(rows: Iterator[Row]): Iterator[Row] = {
+      val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
+      val ord = TypeUtils.getInterpretedOrdering(idType)
+      def first(a: Row, b: Row): Boolean =
+        if (a.isNullAt(idAt)) !b.isNullAt(idAt)
+        else !b.isNullAt(idAt) && ord.lt(toCatalyst(a.get(idAt)), toCatalyst(b.get(idAt)))
+      val kept = new java.util.HashMap[Any, Row]()
+      rows.foreach { r =>
+        val k = kept.get(r.get(fpAt))
+        if (k == null || !first(k, r)) kept.put(r.get(fpAt), r)
+      }
+      kept.values.iterator.asScala
+    }
+    val enc = Encoders.row(schema)
+    withFp.mapPartitions(winners)(enc)
+      .repartition(col("__fp")).mapPartitions(winners)(enc)
+      .drop("__fp")
   }
 
   /** Word n-grams over an ALREADY-MATERIALIZED token-array column.
@@ -831,6 +858,111 @@ object Dedup {
   private[ops] def sigArrays(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id"),
       array((0 until DedupIndex.SigK).map(i => col(s"s$i")): _*).as("sig"))
+
+  /** The schema of [[sigArrays]] for a doc id of type `idType`. */
+  private[ops] def sigSchema(idType: org.apache.spark.sql.types.DataType) = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(StructField("doc_id", idType),
+      StructField("sig", ArrayType(LongType, containsNull = true), nullable = false)))
+  }
+
+  /** [[sigArrays]] of [[minhashSignaturesOfHashedGrams]] over a BOUNDED
+    * (one batch's) hashed gram relation, on the JVM: each partition
+    * keeps per-doc partial minima and the driver merges them — the
+    * same values (the same coefficients and `pmod` arithmetic, no
+    * 64-bit overflow below P²), without a SigK-aggregate query to plan
+    * and compile per batch. Returns doc id → (SigK-component
+    * signature, the doc's count of grams not in `hot`, a sorted array
+    * of gram hashes).
+    */
+  private[ops] def localSignatures(grams: DataFrame,
+                                   hot: Array[Long] = Array.emptyLongArray)
+      : Map[Any, (Array[Long], Long)] = {
+    val k = DedupIndex.SigK
+    val (a, b) = hashCoeffs(k).toArray.unzip
+    type Sigs = scala.collection.mutable.HashMap[Any, (Array[Long], Array[Long])]
+    def merge(x: Sigs, y: Sigs): Sigs = {
+      y.foreachEntry { (id, s) =>
+        x.get(id) match {
+          case Some(t) =>
+            var i = 0; while (i < k) { t._1(i) = math.min(t._1(i), s._1(i)); i += 1 }
+            t._2(0) += s._2(0)
+          case None => x(id) = s
+        }
+      }
+      x
+    }
+    val idType = grams.schema("doc_id").dataType
+    val bcHot = grams.sparkSession.sparkContext.broadcast(hot)
+    Layout.withRows(grams.select("doc_id", "gram"))(_.mapPartitions { rows =>
+      val id = CatalystTypeConverters.createToScalaConverter(idType)
+      val hotGrams = bcHot.value
+      val sigs = new Sigs
+      rows.foreach { r =>
+        if (!r.isNullAt(1)) {
+          val g = r.getLong(1)
+          val h = g % P
+          val (s, kept) = sigs.getOrElseUpdate(id(r.get(0, idType)),
+            (Array.fill(k)(Long.MaxValue), Array(0L)))
+          var i = 0
+          while (i < k) {
+            val m = (a(i) * h + b(i)) % P
+            s(i) = math.min(s(i), if (m < 0) m + P else m)
+            i += 1
+          }
+          if (java.util.Arrays.binarySearch(hotGrams, g) < 0) kept(0) += 1
+        }
+      }
+      Iterator(sigs)
+    }.fold(new Sigs)(merge)).iterator.map { case (id, (s, kept)) => id -> (s, kept(0)) }.toMap
+  }
+
+  /** Ids of the batch docs with a band candidate among `corpusSigs`
+    * (doc_id, sig) whose estimated Jaccard reaches `threshold` — the
+    * left ids of [[bandedPairsFromBands]] over [[bandsOfSigs]] of both
+    * sides, computed in ONE pass over the corpus signatures against a
+    * broadcast of the batch's band keys and signatures (bounded by the
+    * batch: SigK longs a doc), instead of posexploding both sides into
+    * a band join. Band keys and the estimate are those of the SQL form:
+    * the comma-joined decimal components of each SigBandSize slice
+    * (NULL components skipped, as `concat_ws` does), and the fraction of
+    * the SigK positions where both signatures hold the same non-NULL
+    * value.
+    */
+  private[ops] def bandedHits(batchSigs: Map[Any, (Array[Long], Long)],
+                              corpusSigs: DataFrame,
+                              threshold: Double): Set[Any] = {
+    import DedupIndex.{SigBandSize, SigK}
+    val nBands = SigK / SigBandSize
+    def bandKey(sig: Int => java.lang.Long, band: Int): String =
+      (band * SigBandSize until (band + 1) * SigBandSize).map(sig)
+        .filter(_ != null).mkString(",")
+    val bands: Map[(Int, String), Seq[(Any, Array[Long])]] =
+      batchSigs.toSeq.flatMap { case (id, (sig, _)) =>
+        (0 until nBands).map(band => (band, bandKey(i => sig(i), band)) -> (id, sig))
+      }.groupMap(_._1)(_._2)
+    val bc = corpusSigs.sparkSession.sparkContext.broadcast(bands)
+    Layout.withRows(corpusSigs.select("sig"))(_.mapPartitions { rows =>
+      val byBand = bc.value
+      val hits = scala.collection.mutable.HashSet.empty[Any]
+      rows.foreach { r =>
+        val sig = r.getArray(0)
+        def at(i: Int): java.lang.Long = if (sig.isNullAt(i)) null else sig.getLong(i)
+        (0 until nBands).foreach { band =>
+          byBand.getOrElse((band, bandKey(at, band)), Nil).foreach { case (id, left) =>
+            var same = 0
+            var i = 0
+            while (i < SigK) {
+              if (!sig.isNullAt(i) && sig.getLong(i) == left(i)) same += 1
+              i += 1
+            }
+            if (same.toDouble / SigK.toDouble >= threshold) hits += id
+          }
+        }
+      }
+      Iterator(hits)
+    }.fold(scala.collection.mutable.HashSet.empty[Any])(_ ++= _)).toSet
+  }
 
   /** MinHash+LSH near-dup pairs (doc_a < doc_b, est_jaccard ≥
     * threshold): [[DedupIndex.SigK]]-component signatures banded in

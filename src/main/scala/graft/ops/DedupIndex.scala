@@ -39,10 +39,12 @@ import org.apache.spark.sql.functions._
   *     construction (at most |corpus grams| / maxDf rows): the batch
   *     side anti-joins it so both sides compute Jaccard over the same
   *     capped sets;
-  *   - `bloom/` — one row (nbits, word→bits map): a Bloom filter over
-  *     `fps/`, rebuilt from it after every mutation (derived state,
-  *     swap-protocol writes). `dedupBatch(useBloom = true)` probes it
-  *     to route definitely-new batch rows AROUND the membership anti
+  *   - `bloom/` — one row (word→bits map, nbits, nkeys): a Bloom filter
+  *     over `fps/` (derived state, swap-protocol writes), built from it
+  *     at [[build]]; each [[append]] ORs its batch's bits in, and only
+  *     a key count past the next power-of-two size step rebuilds it from
+  *     `fps/` ([[bloomSizeBits]]). `dedupBatch(useBloom = true)` probes
+  *     it to route definitely-new batch rows AROUND the membership anti
   *     join — no false negatives, positives verified exactly, so the
   *     output is byte-identical with or without it.
   *
@@ -62,45 +64,84 @@ import org.apache.spark.sql.functions._
   */
 object DedupIndex {
 
-  /** Bits-per-fingerprint sizing for the `bloom/` sidecar: 16 bits/key
-    * at 3 hashes ≈ 0.5% false positives, rounded up to a word multiple,
-    * floored so tiny corpora still get a real filter, and CAPPED at
-    * 2^27 bits (16 MB broadcast — a bounded driver/executor object at
-    * any corpus size). Past ~8M fingerprints the cap degrades the
-    * false-positive rate gracefully: the filter prunes less but the
-    * exact anti join downstream still guarantees byte-identical
-    * output, so the cap trades speed, never correctness.
+  /** Bits-per-fingerprint sizing for the `bloom/` sidecar: at least 16
+    * bits/key at 3 hashes (≈ 0.5% false positives or fewer), rounded UP
+    * to a power of two, floored so tiny corpora still get a real
+    * filter, and CAPPED at 2^27 bits (16 MB broadcast — a bounded
+    * driver/executor object at any corpus size). Power-of-two steps
+    * keep one size for every key count up to twice the last step, so
+    * [[append]] ORs a batch's bits into the sidecar and re-sizes (a
+    * rebuild from `fps/`) only O(log n) times as the corpus grows. Past
+    * ~8M fingerprints the cap degrades the false-positive rate
+    * gracefully: the filter prunes less but the exact anti join
+    * downstream still guarantees byte-identical output, so the cap
+    * trades speed, never correctness.
     */
   def bloomSizeBits(nKeys: Long): Int = {
     val want = math.max(1024L, 16L * math.max(nKeys, 1L))
-    val capped = math.min(want, 1L << 27)
-    (((capped + 63) / 64) * 64).toInt
+    math.min(java.lang.Long.highestOneBit(want - 1) << 1, 1L << 27).toInt
   }
 
   /** Rebuild the `bloom/` sidecar from the durable `fps/` table — one
-    * row (nbits, word→bits map). Derived state: recomputing from fps
-    * after every mutation (one scan of the 8-byte-hash table, never of
-    * corpus text) is simpler and drift-proof vs OR-merging bits, and
-    * the rewrite goes through the swap protocol so a crash leaves the
-    * old sidecar intact.
+    * row (bloom: word→bits map, nbits, nkeys = the fps/ row count). One
+    * distributed pass over the 8-byte-hash table, never over corpus
+    * text: at [[build]], and at [[append]]s that cross a size step.
     */
   private def rebuildBloom(spark: SparkSession, path: String): Unit = {
     val fps = Layout.readTable(spark, s"$path/fps")
-    val nBits = bloomSizeBits(fps.count())
-    def writeTo(dst: String): Unit =
+    val nKeys = fps.count()
+    val nBits = bloomSizeBits(nKeys)
+    writeBloom(spark, path)(
       RuntimeFilter.bloomBits(fps, "fp", nBits)
-        .withColumn("nbits", lit(nBits))
-        .coalesce(1).write.mode("overwrite").parquet(dst)
+        .withColumn("nbits", lit(nBits)).withColumn("nkeys", lit(nKeys)))
+  }
+
+  /** The sidecar after `fps/` grew by the fingerprints `added`: while
+    * the grown key count keeps the sidecar's size step,
+    * the batch's bits ([[RuntimeFilter.bloomWords]], bit-identical to a
+    * rebuild's) are ORed into the stored word map on the driver and the
+    * one row is written back — work in the batch plus the sidecar's
+    * nbits/8 bytes, never a scan of `fps/`. A sidecar without `nkeys`
+    * (written before the count was stored) or a grown count past the
+    * step is rebuilt.
+    */
+  private def mergeBloom(spark: SparkSession, path: String,
+                         added: collection.Set[java.lang.Long]): Unit = {
+    Layout.restoreIfCrashed(spark, s"$path/bloom")
+    val sidecar = Layout.readTable(spark, s"$path/bloom")
+    val stored = Option.when(sidecar.columns.contains("nkeys")) {
+      val r = Layout.collectRows(sidecar.select("bloom", "nbits", "nkeys")).head
+      val (w, b) = (r.getMap(0).keyArray(), r.getMap(0).valueArray())
+      ((0 until w.numElements()).map(i => w.getInt(i) -> b.getLong(i)).toMap,
+        r.getInt(1), r.getLong(2) + added.size)
+    }
+    stored match {
+      case Some((words, nBits, nKeys)) if bloomSizeBits(nKeys) == nBits =>
+        val merged = RuntimeFilter.bloomWords(added, nBits).foldLeft(words) {
+          case (m, (w, bits)) => m.updated(w, m.getOrElse(w, 0L) | bits)
+        }
+        writeBloom(spark, path)(spark.createDataFrame(
+          java.util.List.of(org.apache.spark.sql.Row(merged, nBits, nKeys)),
+          sidecar.select("bloom", "nbits", "nkeys").schema))
+      case _ => rebuildBloom(spark, path)
+    }
+  }
+
+  /** Writes the one-row sidecar: the first write straight into `bloom/`
+    * (its inputs are durable and distinct from the target, so a crash
+    * mid-write leaves a partial sidecar the next rebuild overwrites),
+    * every later one through the swap protocol
+    * ([[Layout.rewriteInPlace]]), so a crash leaves the old sidecar or
+    * the new one.
+    */
+  private def writeBloom(spark: SparkSession, path: String)(row: DataFrame): Unit = {
+    def writeTo(dst: String): Unit =
+      row.coalesce(1).write.mode("overwrite").parquet(dst)
     Layout.restoreIfCrashed(spark, s"$path/bloom")
     val target = new org.apache.hadoop.fs.Path(s"$path/bloom")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(target))
-      // first build: the input (fps/) is durable and distinct from the
-      // target, so a crash mid-write just leaves a partial sidecar the
-      // next rebuild overwrites — no swap needed
-      writeTo(target.toString)
-    else
-      Layout.rewriteInPlace(spark, s"$path/bloom", commitManifest = false)(writeTo)
+    if (!fs.exists(target)) writeTo(target.toString)
+    else Layout.rewriteInPlace(spark, s"$path/bloom", commitManifest = false)(writeTo)
   }
 
   /** MinHash signature width / band slice of every banded candidate
@@ -183,47 +224,74 @@ object DedupIndex {
     // left grams/ or fps/ stranded in a trash sibling, appending here
     // would fork the index (batch-only tables) and the next relayout
     // would delete the stranded originals — restore first
-    val spark0 = survivors.sparkSession
-    Layout.restoreIfCrashed(spark0, s"$path/grams")
-    Layout.restoreIfCrashed(spark0, s"$path/fps")
-    Layout.restoreIfCrashed(spark0, s"$path/sigs")
+    val spark = survivors.sparkSession
+    Layout.restoreIfCrashed(spark, s"$path/grams")
+    Layout.restoreIfCrashed(spark, s"$path/fps")
+    Layout.restoreIfCrashed(spark, s"$path/sigs")
     // materialize the survivors ONCE: their lineage is typically the
     // whole batch-dedup pipeline (which itself reads this index), so
-    // running it lazily under each of the two writes would both double
-    // the daily cost and re-read $path/fps mid-append
+    // running it lazily under each write would both multiply the daily
+    // cost and re-read $path/fps mid-append
     val s = survivors.select(col(idCol), col(textCol)).localCheckpoint(true)
-    val spark = survivors.sparkSession
-    // the three appended tables derive independently from the
-    // checkpointed survivors and write to disjoint directories — run
-    // them as concurrent jobs (guide §2.6: actions are only sequential
-    // because the driver calls them sequentially) so the next job's
-    // tasks back-fill the tail of the previous one; per-append wall
-    // drops from the SUM of three small jobs to roughly the max.
-    // Job descriptions/locality are thread-local, so each branch runs
-    // on its own thread; only the bloom rebuild orders AFTER fps.
+    // the survivors' distinct fingerprints (batch-bounded) are gathered
+    // on the driver: the fps/ rows to append and the keys of the bloom
+    // merge
+    val fps = Layout.withRows(s.select(TextOps.fingerprint(col(textCol))))(_.mapPartitions { rows =>
+      val keys = scala.collection.mutable.HashSet.empty[java.lang.Long]
+      rows.foreach(r => keys += (if (r.isNullAt(0)) null else r.getLong(0)))
+      Iterator(keys)
+    }.fold(scala.collection.mutable.HashSet.empty[java.lang.Long])(_ ++= _))
+    // ONE tokenization feeds grams/ and sigs/ (the hashed gram relation
+    // dedupBatch also derives both from), and ONE pass over it gives
+    // each survivor's signature and capped gram count (batch-bounded,
+    // on the driver). The cap is enforced as of the last build:
+    // appended docs drop the KNOWN hot grams (so their n_grams agree
+    // with the corpus's capped sets), while grams whose df crosses
+    // maxDf only via appends stay until the next build — the same
+    // degrade-then-re-layout contract as the range layout above. The
+    // hot set is read to the driver: at most |corpus grams| / maxDf
+    // rows, the corpus's boilerplate vocabulary, broadcast-sized by
+    // construction ([[Dedup.cappedGrams]])
+    val raw = Dedup.hashedGramTable(s, idCol, textCol, n).localCheckpoint(true)
+    val hot = Layout.withRows(Layout.readTable(spark, s"$path/hot").select("gram"))(
+      _.mapPartitions(_.filter(!_.isNullAt(0)).map(_.getLong(0))).collect()).sorted
+    val docs = Dedup.localSignatures(raw, hot)
+    // the three appended tables derive independently and write to
+    // disjoint directories — run them as concurrent jobs (guide §2.6:
+    // actions are only sequential because the driver calls them
+    // sequentially) so the next job's tasks back-fill the tail of the
+    // previous one; per-append wall drops from the SUM of three small
+    // jobs to roughly the max. Job descriptions/locality are
+    // thread-local, so each branch runs on its own thread; only the
+    // bloom merge orders AFTER fps. fps/ and sigs/ are batch-bounded and
+    // written from the driver, one file each
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructType}
+    val idType = s.schema(idCol).dataType
     val fFps = Future {
-      s.select(TextOps.fingerprint(col(textCol)).as("fp")).distinct()
-        .write.mode("append").parquet(s"$path/fps")
+      spark.createDataFrame(fps.toSeq.map(fp => Row(fp)).asJava,
+          new StructType().add("fp", LongType))
+        .coalesce(1).write.mode("append").parquet(s"$path/fps")
     }
-    // the cap is enforced as of the last build: appended docs drop the
-    // KNOWN hot grams (so their n_grams agree with the corpus's capped
-    // sets), while grams whose df crosses maxDf only via appends stay
-    // until the next build — the same degrade-then-re-layout contract
-    // as the range layout above
     val fGrams = Future {
-      Dedup.hashedGramTable(s, idCol, textCol, n)
-        .join(Layout.readTable(spark, s"$path/hot"), Seq("gram"), "left_anti")
-        .withColumn("n_grams",
-          count(lit(1)).over(Window.partitionBy(col("doc_id"))))
+      val bc = spark.sparkContext.broadcast((hot, docs.map { case (id, (_, k)) => id -> k }))
+      raw.mapPartitions { rows =>
+          val (hotGrams, nGrams) = bc.value
+          rows.filter(r => java.util.Arrays.binarySearch(hotGrams, r.getLong(1)) < 0)
+            .map(r => Row(r.get(0), r.getLong(1), nGrams(r.get(0))))
+        }(org.apache.spark.sql.Encoders.row(new StructType().add("doc_id", idType)
+          .add("gram", LongType).add("n_grams", LongType, nullable = false)))
         .sortWithinPartitions("gram")
         .write.mode("append").parquet(s"$path/grams")
     }
     val fSigs = Future {
-      Dedup.sigArrays(Dedup.minhashSignatures(s, idCol, textCol, n, SigK))
-        .write.mode("append").parquet(s"$path/sigs")
+      spark.createDataFrame(docs.toSeq.map { case (id, (sig, _)) => Row(id, sig.toSeq) }.asJava,
+          Dedup.sigSchema(idType))
+        .coalesce(1).write.mode("append").parquet(s"$path/sigs")
     }
     // await ALL THREE before surfacing any failure (ADVICE r19): an
     // early throw on the first await would propagate while the other
@@ -233,7 +301,10 @@ object DedupIndex {
     // sigs} appended — not only ordered prefixes as before the
     // concurrent overlap — so a caller retry must treat the index as
     // needing rebuild/relayout, exactly as for a mid-append crash
-    // (CrashMonkeySpec pins restore semantics).
+    // (CrashMonkeySpec pins restore semantics). The same holds for the
+    // bloom merge below: a crash after the fps write leaves a sidecar
+    // without this batch's bits until the batch is appended again or
+    // the index is rebuilt.
     import scala.util.{Failure, Try}
     val results = Seq("fps" -> fFps, "grams" -> fGrams, "sigs" -> fSigs)
       .map { case (nm, f) => nm -> Try(Await.result(f, Duration.Inf)) }
@@ -243,9 +314,8 @@ object DedupIndex {
         if (e ne first) first.addSuppressed(e) }
       throw first
     }
-    // fps/ grew — refresh the derived membership filter from it (the
-    // sidecar's nbits re-sizes as the fingerprint set grows)
-    rebuildBloom(spark, path)
+    // fps/ grew — OR the batch's bits into the membership filter
+    mergeBloom(spark, path, fps)
   }
 
   /** Restore the gram table's range layout after a run of [[append]]s
@@ -371,13 +441,15 @@ object DedupIndex {
     // ONE materialization of the batch's hashed gram relation feeds
     // the decision AND the selected stage (signatures on the banded
     // path, capped batch grams on the gram path). Batch-sized (long,
-    // long) rows, executor-resident; the eager localCheckpoint is the
-    // one action that resolves the folded batch-count and gram-count
-    // Observations.
+    // long) rows, executor-resident, tokenized from a checkpoint of the
+    // batch's (id, text) — the code [[append]] compiles to tokenize its
+    // checkpointed survivors; the eager localCheckpoints are the actions
+    // that resolve the folded batch-count and gram-count Observations.
     val obs = new Observation()
     val gramObs = new Observation()
     lazy val bGrams = Dedup.hashedGramTable(
-        batch.observe(obs, count(lit(1)).as("n")), idCol, textCol, n)
+        batch.select(col(idCol), col(textCol)).observe(obs, count(lit(1)).as("n"))
+          .localCheckpoint(true), idCol, textCol, n)
       .observe(gramObs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     val useBanded = candidates match {
@@ -407,16 +479,17 @@ object DedupIndex {
     // re-executing it there
     val hits =
       if (useBanded) {
-        // MinHash-estimate membership: both sides band through
-        // Dedup.bandsOfSigs; batch signatures come from the shared gram
-        // checkpoint (values identical to minhashSignatures by
-        // construction)
-        val corpusBands = Dedup.bandsOfSigs(corpus.sigs, "right_id")
-        val batchBands = Dedup.bandsOfSigs(
-          Dedup.sigArrays(Dedup.minhashSignaturesOfHashedGrams(bGrams, SigK)),
-          "left_id")
-        Dedup.bandedPairsFromBands(batchBands, corpusBands, threshold)
-          .select(col("left_id").as(idCol)).distinct()
+        // MinHash-estimate membership: the batch's signatures, from the
+        // shared gram checkpoint (values identical to minhashSignatures
+        // by construction), probe the corpus signatures in one pass; the
+        // batch-bounded hit ids come back as a local relation, so no
+        // per-batch value reaches generated code
+        import scala.jdk.CollectionConverters._
+        val ids = Dedup.bandedHits(Dedup.localSignatures(bGrams), corpus.sigs, threshold)
+        batch.sparkSession.createDataFrame(
+          ids.toSeq.map(id => org.apache.spark.sql.Row(id)).asJava,
+          new org.apache.spark.sql.types.StructType()
+            .add(idCol, batch.schema(idCol).dataType))
       } else {
         // hot corpus grams are dropped BEFORE the size window so the
         // batch's n_grams match the corpus's capped sets
@@ -464,25 +537,45 @@ object DedupIndex {
     * CONTRACT (ADVICE r19/r20): `batchGrams` must already be
     * materialized — both callers pass the eager checkpoint — and
     * `nBatchGrams` is its row count, which both callers read off an
-    * `Observation` resolved by that checkpoint. The body runs ONE
-    * action over the input (`.head()` of the sum); over an
-    * un-materialized input that action would re-run the gram pipeline.
+    * `Observation` resolved by that checkpoint. The body reads the
+    * input ONCE (the per-gram counts); over an un-materialized input
+    * that read would re-run the gram pipeline.
     */
   private[ops] def predictedIndexJoinCandidatesOfGrams(
       batchGrams: DataFrame, nBatchGrams: Long, corpusGrams: DataFrame): Long = {
-    val bdf = batchGrams.groupBy("gram").agg(count(lit(1)).as("dfl"))
-    // bounded broadcast WITHOUT boundedBroadcast's own checkpoint +
-    // count jobs (r20): |bdf| ≤ |batchGrams| by construction (one row
-    // per distinct gram), so the materialized input's row count bounds
-    // the broadcast. Over the bound, the join degrades to the
-    // AQE-planned shuffle exactly like boundedBroadcast.
-    val bdfSide =
-      if (nBatchGrams <= Dedup.HotBroadcastMaxRows) broadcast(bdf)
-      else bdf
-    val predicted = corpusGrams
-      .join(bdfSide, "gram")
-      .agg(sum(col("dfl")).as("s2")).head()
-    if (predicted.isNullAt(0)) 0L else predicted.getLong(0)
+    if (nBatchGrams <= Dedup.HotBroadcastMaxRows) {
+      // |distinct batch grams| ≤ |batchGrams| rows, so the materialized
+      // input's row count bounds the per-gram counts: counted on the JVM
+      // (per-partition maps merged on the driver), broadcast, and summed
+      // over ONE typed pass of the corpus gram column — no aggregate or
+      // join query to plan and compile per batch
+      import scala.collection.mutable.LongMap
+      def add(a: LongMap[Long], b: LongMap[Long]): LongMap[Long] = {
+        b.foreachEntry((g, c) => a(g) = a.getOrElse(g, 0L) + c)
+        a
+      }
+      // (doc_id, gram) rows: the pass over the checkpoint compiles to
+      // the code of the batch-signature pass over it
+      val dfl = Layout.withRows(batchGrams.select("doc_id", "gram"))(_.mapPartitions { rows =>
+        val m = LongMap.empty[Long]
+        rows.foreach(r => if (!r.isNullAt(1)) m(r.getLong(1)) = m.getOrElse(r.getLong(1), 0L) + 1)
+        Iterator(m)
+      }.fold(LongMap.empty[Long])(add))
+      val bc = corpusGrams.sparkSession.sparkContext.broadcast(dfl)
+      Layout.withRows(corpusGrams.select("gram"))(_.mapPartitions { rows =>
+        val m = bc.value
+        var sum = 0L
+        rows.foreach(r => if (!r.isNullAt(0)) sum += m.getOrElse(r.getLong(0), 0L))
+        Iterator(sum)
+      }.fold(0L)(_ + _))
+    } else {
+      // past the bound the per-gram counts stay distributed: the
+      // AQE-planned shuffle join, as boundedBroadcast degrades
+      val predicted = corpusGrams
+        .join(batchGrams.groupBy("gram").agg(count(lit(1)).as("dfl")), "gram")
+        .agg(sum(col("dfl")).as("s2")).head()
+      if (predicted.isNullAt(0)) 0L else predicted.getLong(0)
+    }
   }
 
   /** One built index per (application, cache key): the registry query

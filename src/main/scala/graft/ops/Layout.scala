@@ -6,7 +6,10 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetReadSupport
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -142,6 +145,25 @@ object Layout {
       .collect { case schema: StructType => spark.read.schema(schema).parquet(path) }
       .getOrElse(spark.read.parquet(path))
   }
+
+  /** `f` over `df`'s rows as its plan produces them, run as one SQL
+    * execution of `df` (listed and reported to query-execution
+    * listeners like any action) — for typed passes whose result is
+    * reduced on the driver. The rows are the plan's internal rows: no
+    * conversion to external rows, so no deserializer class is
+    * generated for the pass, and a row's values must be read before
+    * the iterator advances.
+    */
+  private[ops] def withRows[T](df: DataFrame)(f: RDD[InternalRow] => T): T = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("withRows"))(f(qe.toRdd))
+  }
+
+  /** A bounded relation's rows on the driver, as its plan returns them
+    * (copies of the internal rows; no deserializer class generated).
+    */
+  private[ops] def collectRows(df: DataFrame): Array[InternalRow] =
+    df.queryExecution.executedPlan.executeCollect()
 
   /** Deterministic seeded key for a reproducible global shuffle:
     * the 60-bit digest of `seed:id`. Changing the seed re-deals the

@@ -73,13 +73,19 @@ object Similarity {
 
   /** A probe's `nprobe` nearest centroids (cid, cv), best first: the
     * (ccos DESC, cid ASC) row_number of [[ivfTopK]]'s bucket window,
-    * computed on the driver over the bounded model.
+    * computed on the driver over the bounded model. With `nprobe` 1 it
+    * is [[assignTo]]'s `max_by(cid, struct(ccos, -cid))` for one vector
+    * (NaN ranks first, -0.0 equals 0.0, ties to the lowest cid), and
+    * like `cosine_sim` it refuses vectors of another length.
     */
   private[ops] def nearestBuckets(qv: Array[Double],
                                   cent: Array[(Long, Array[Double])],
                                   nprobe: Int): Array[Long] =
-    cent.map { case (cid, cv) => (cosK(qv, cv), cid) }
-      .sortWith { case ((ca, ia), (cb, ib)) => rankCompare(ca, ia, cb, ib) < 0 }
+    cent.map { case (cid, cv) =>
+      if (cv.length != qv.length) throw new IllegalArgumentException(
+        s"cosine_sim: vector lengths differ: ${qv.length} vs ${cv.length}")
+      (cosK(qv, cv), cid)
+    }.sortWith { case ((ca, ia), (cb, ib)) => rankCompare(ca, ia, cb, ib) < 0 }
       .take(nprobe).map(_._2)
 
   /** Typed corpus: (vec_id, double vector). */

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path}
 import java.sql.Timestamp
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types.StructType
 
@@ -11,13 +10,10 @@ import graft.etl.{Pipeline, Quality}
 import graft.io.{Sinks, Sources}
 import graft.model.Schemas
 
-/** The generated-class working set of the daily job. Spark keeps the
-  * classes it compiles for whole-stage codegen, projections and
-  * orderings in one JVM-wide cache (`spark.sql.codegen.cache.maxEntries`,
-  * 100 by default, split into LRU segments), keyed by the generated
-  * source. A day whose plans need more entries than the cache holds, or
-  * whose generated source carries a per-day value, recompiles classes
-  * the previous day had already compiled.
+/** The generated-class working set of the daily job ([[GeneratedClasses]]):
+  * a day whose plans need more entries than the cache holds, or whose
+  * generated source carries a per-day value, recompiles classes the
+  * previous day had already compiled.
   *
   * One load here is the daily job over file fixtures: a JSON-lines
   * ingest unioned with a `graft-weather` poll and counted,
@@ -26,7 +22,7 @@ import graft.model.Schemas
   * the metrics and load-history appends. Each day has a different raw
   * count and different readings.
   */
-class CodegenWorkingSetSpec extends SparkSpec {
+class CodegenWorkingSetSpec extends SparkSpec with GeneratedClasses {
 
   private val Day0 = 1699315200L // 2023-11-07T00:00:00Z
   private val Cities = (0 until 12).map(i => (s"City$i", s"C${i % 4}"))
@@ -90,61 +86,6 @@ class CodegenWorkingSetSpec extends SparkSpec {
       root.resolve("history").toString)
   }
 
-  /** Classes compiled (generated-class cache misses) while `body` runs. */
-  private def compiles(body: => Unit): Long = {
-    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
-    body
-    CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
-  }
-
-  /** The sources of the classes compiled while `body` runs: the
-    * `CodeGenerator` logger prints each one at DEBUG, captured here
-    * without reaching the other appenders.
-    */
-  private def compiledSources(body: => Unit): Set[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val sources = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new AbstractAppender("compiled-sources", null, null, true,
-        Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        val m = e.getMessage.getFormattedMessage
-        if (m.contains(" generate(Object[] references)")) sources.add(m)
-      }
-    }
-    val logger = LogManager.getLogger(
-      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator").asInstanceOf[Logger]
-    val (level, additive) = (logger.getLevel, logger.isAdditive)
-    appender.start()
-    logger.addAppender(appender)
-    logger.setAdditive(false)
-    logger.setLevel(Level.DEBUG)
-    try body finally {
-      logger.setLevel(level)
-      logger.setAdditive(additive)
-      logger.removeAppender(appender)
-      appender.stop()
-    }
-    import scala.jdk.CollectionConverters._
-    sources.asScala.toSet
-  }
-
-  /** Empties Spark's generated-class cache: a private member of the
-    * `CodeGenerator` object wrapping a shaded Guava cache, reached by
-    * reflection.
-    */
-  private def clearCodegenCache(): Unit = {
-    val cg = org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
-    val m = cg.getClass.getDeclaredMethod("cache")
-    m.setAccessible(true)
-    val cache = m.invoke(cg)
-    val guava = cache.getClass.getMethod("cache").invoke(cache)
-    Class.forName("org.sparkproject.guava.cache.Cache").getMethod("invalidateAll")
-      .invoke(guava)
-  }
-
   test("one daily load into an existing table compiles at most 75 generated classes") {
     val root = Files.createTempDirectory("graft_codegen_ws")
     load(root, 0)
@@ -164,9 +105,9 @@ class CodegenWorkingSetSpec extends SparkSpec {
     load(root, 0)
     val first = compiledSources { clearCodegenCache(); load(root, 1) }
     val second = compiledSources(load(root, 2))
-    val fresh = second -- first
+    val fresh = second.toSet -- first
     assert(fresh.isEmpty, s"${fresh.size} classes of the second load have a new source:\n" +
-      fresh.map(_.linesIterator.take(12).mkString("\n")).mkString("\n---\n"))
+      heads(fresh))
     assert(spark.read.parquet(root.resolve("weather").toString).count() ==
       Cities.size * (24 + 23 + 22))
   }

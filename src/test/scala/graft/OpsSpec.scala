@@ -1067,6 +1067,37 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("duplicate"))
   }
 
+  test("AnnIndex.append buckets equal assignTo's: ties, zero and NaN vectors, -0.0") {
+    val dir = java.nio.file.Files.createTempDirectory("ann_idx_parity").toString
+    val base = (0 until 12).map(i =>
+      (i.toLong, Array(math.sin(i).toFloat, math.cos(i).toFloat))).toDF("vec_id", "embedding")
+    graft.ops.AnnIndex.build(base, "vec_id", "embedding", nCentroids = 3, dir = dir)
+    // a model with exact ties: cids 1 and 3 point the same way, and
+    // (3, 3) is as close to (1, 0) as to (0, 1); rows out of cid order
+    val model = Seq((3L, Array(2.0, 0.0)), (2L, Array(0.0, 1.0)), (1L, Array(1.0, 0.0)),
+        (0L, Array(-1.0, -1.0)))
+      .toDF("cid", "cv").withColumn("cnrm", Similarity.norm(col("cv")))
+    model.write.mode("overwrite").parquet(s"$dir/centroids")
+    val batch = Seq(
+      (100L, Array(1.0f, 0.0f)),      // tie between cids 1 and 3
+      (101L, Array(0.0f, 0.0f)),      // zero vector: every cosine is NaN
+      (102L, Array(-0.0f, 1.0f)),
+      (103L, Array(0.5f, -0.0f)),
+      (104L, Array(3.0f, 3.0f)),      // tie between cids 1, 2 and 3
+      (105L, Array(Float.NaN, 1.0f)), // NaN component
+      (106L, Array(-0.0f, -0.0f)),
+      (107L, Array(-2.0f, -2.1f))
+    ).toDF("vec_id", "embedding")
+    graft.ops.AnnIndex.append(batch, "vec_id", "embedding", dir)
+    val appended = spark.read.parquet(s"$dir/assignments")
+      .filter(col("vec_id") >= 100).as[(Long, Long)].collect().toMap
+    val direct = Similarity.assignTo(
+        Similarity.prepared(batch, "vec_id", "embedding").select("vec_id", "v"), model)
+      .as[(Long, Long)].collect().toMap
+    assert(appended == direct)
+    assert(appended.size == 8 && appended(100L) == 1L && appended(101L) == 0L)
+  }
+
   test("AnnIndex.append resumes a crash between the two index writes") {
     val mk = (r: Range) => r
       .map(i => (i.toLong, Array.tabulate(6)(d => math.sin(i * 1.9 + d).toFloat)))
@@ -1737,6 +1768,86 @@ class OpsSpec extends SparkSpec {
     assert(falseNegatives() == 0L, "appended fingerprints missing from the refreshed sidecar")
     assert(ids(DedupIndex.dedupBatch(spark, batch2, dir, "doc_id", "text", 3, 0.5,
       useBloom = true)) == Seq(21L))
+
+    // appends OR their batch's bits into the sidecar; only a key count
+    // past the size step re-sizes it (a rebuild from fps/). After every
+    // append the sidecar is, bit for bit, the filter a rebuild from
+    // fps/ at its nbits would write, and nbits is the size step of the
+    // fps/ row count
+    def sidecar(): (Map[Int, Long], Int, Long) = {
+      val r = spark.read.parquet(s"$dir/bloom").head()
+      (r.getMap[Int, Long](r.fieldIndex("bloom")).toMap, r.getAs[Int]("nbits"),
+        r.getAs[Long]("nkeys"))
+    }
+    val words = Seq("ka", "ro", "vel", "mi", "tor", "an", "su", "del", "bri", "on")
+    def batchOf(lo: Int, n: Int) = (lo until lo + n).map(i => (i.toLong,
+      s"fresh ${words(i % 10)} ${words(i / 10 % 10)} ${words(i / 100 % 10)} number $i"))
+      .toDF("doc_id", "text")
+    val steps = Seq(batch2, batchOf(100, 70), batchOf(300, 3)).map { b =>
+      val before = sidecar()
+      val plain = ids(DedupIndex.dedupBatch(spark, b, dir, "doc_id", "text", 3, 0.5))
+      val survivors = DedupIndex.dedupBatch(spark, b, dir, "doc_id", "text", 3, 0.5,
+        useBloom = true).localCheckpoint(true)
+      assert(ids(survivors) == plain, "the probed path must keep the plain path's rows")
+      DedupIndex.append(survivors, "doc_id", "text", 3, dir)
+      val (bits, nBits, nKeys) = sidecar()
+      val fps = spark.read.parquet(s"$dir/fps")
+      assert(nKeys == fps.count())
+      assert(nBits == DedupIndex.bloomSizeBits(nKeys))
+      assert(bits == RuntimeFilter.bloomBits(fps, "fp", nBits).head()
+        .getMap[Int, Long](0).toMap, s"merged sidecar differs from a rebuild at $nBits bits")
+      assert(falseNegatives() == 0L)
+      (before._2, nBits, before._3 < nKeys)
+    }
+    // one append crossed the 64-key step (1024 → 2048 bits), the others
+    // grew the key count within a step and kept nbits
+    assert(steps.map { case (b, a, _) => (b, a) } ==
+      Seq((1024, 1024), (1024, 2048), (2048, 2048)) && steps.forall(_._3),
+      s"expected one re-size among the appends, got $steps")
+  }
+
+  test("bloom sidecar: a crash at any filesystem call of an append leaves old or new") {
+    import graft.ops.DedupIndex
+    import org.apache.commons.io.FileUtils
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.monkey.impl", classOf[MonkeyFileSystem].getName)
+    val corpus = Seq(
+      (10L, "the quick brown fox jumps over the lazy dog"),
+      (11L, "lorem ipsum dolor sit amet consectetur")
+    ).toDF("doc_id", "text")
+    val batch = (0 until 6).map(i => (i.toLong, s"a new document number $i about pipelines"))
+      .toDF("doc_id", "text").localCheckpoint(true)
+    val root = java.nio.file.Files.createTempDirectory("dedup_idx_bloom_crash")
+    val pristine = root.resolve("pristine").toFile
+    DedupIndex.build(corpus, "doc_id", "text", 3, pristine.toString, nFiles = 2)
+    def sidecar(dir: String): (Map[Int, Long], Int, Long) = {
+      graft.ops.Layout.restoreIfCrashed(spark, s"$dir/bloom")
+      val r = spark.read.parquet(s"$dir/bloom").head()
+      (r.getMap[Int, Long](r.fieldIndex("bloom")).toMap, r.getAs[Int]("nbits"),
+        r.getAs[Long]("nkeys"))
+    }
+    def fresh(name: String): String = {
+      val d = root.resolve(name).toFile
+      FileUtils.copyDirectory(pristine, d)
+      s"monkey://$d"
+    }
+    val old = sidecar(pristine.toString)
+    val whole = fresh("whole")
+    MonkeyFileSystem.resetCount()
+    DedupIndex.append(batch, "doc_id", "text", 3, whole)
+    val nCalls = MonkeyFileSystem.disarm()
+    val updated = sidecar(whole)
+    assert(updated != old)
+    (1L to nCalls).foreach { k =>
+      val dir = fresh(s"kill$k")
+      MonkeyFileSystem.arm(k)
+      try DedupIndex.append(batch, "doc_id", "text", 3, dir)
+      catch { case t: Throwable if MonkeyFileSystem.killed(t) => }
+      finally MonkeyFileSystem.disarm()
+      val after = sidecar(dir)
+      assert(after == old || after == updated,
+        s"a crash at call $k of $nCalls left a sidecar that is neither the old nor the new one")
+    }
   }
 
   test("samplePerKey: bounded per key, equals the window form, partitioning-invariant, seed re-deals") {

@@ -15,11 +15,14 @@ class PlansSpec extends SparkSpec {
     * the plan STRING cuts a scan's Location at 100 characters, so a
     * path check against it would depend on the temp dir's length.
     */
-  private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] = {
+  private def scanRoots(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    scanRoots(df.queryExecution.executedPlan)
+
+  private def scanRoots(plan: org.apache.spark.sql.execution.SparkPlan): Seq[String] = {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     new AdaptiveSparkPlanHelper {}
-      .collectWithSubqueries(df.queryExecution.executedPlan) {
+      .collectWithSubqueries(plan) {
         case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.toUri.getPath)
       }.flatten
   }
@@ -250,7 +253,7 @@ class PlansSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("ann_ivf_indexed: probes read only the index, members partition-pruned statically") {
+  test("ann_ivf_indexed: scoring reads only members/, statically pruned, top-k merged") {
     val embDir = java.nio.file.Files
       .createTempDirectory("graft_plan_emb").toString
     val idxDir = java.nio.file.Files
@@ -260,26 +263,32 @@ class PlansSpec extends SparkSpec {
       .toDF("vec_id", "embedding").write.mode("overwrite").parquet(embDir)
     graft.ops.AnnIndex.build(spark.read.parquet(embDir),
       "vec_id", "embedding", nCentroids = 4, dir = idxDir)
-    val df = graft.ops.AnnIndex.probe(spark, idxDir,
-      org.apache.spark.sql.functions.col("vec_id").between(10, 12), k = 3)
-    val p = df.queryExecution.executedPlan.toString
-    val roots = scanRoots(df)
+    // the probe is eager: the probe set, its vectors and the centroid
+    // model are bounded driver collects, and its one SQL execution is
+    // the scoring pass; the result is a local relation
+    val runs = executions {
+      graft.ops.AnnIndex.probe(spark, idxDir,
+        org.apache.spark.sql.functions.col("vec_id").between(10, 12), k = 3)
+    }
+    assert(runs.size == 1, s"expected one scoring execution, got ${runs.map(_._1)}")
+    val scoring = runs.head._2.executedPlan
+    val p = scoring.toString
+    val roots = scanRoots(scoring)
     // the point of the persisted index: the probe never re-reads (or
     // re-clusters) the embeddings corpus — only the index tables
     assert(roots.exists(under(idxDir)),
       s"expected the index tables in the scan set: $roots")
     assert(!roots.exists(under(embDir)),
       s"the embeddings corpus must NOT be scanned by the indexed probe: $roots")
-    // the probe set, its vectors and the centroid model are bounded
-    // driver collects, so the scoring query scans members alone, once
+    // the scoring query scans members alone, once
     assert(roots == Seq(new java.io.File(s"$idxDir/members").getAbsolutePath),
       s"the scoring query must scan only members/: $roots")
-    // candidates are scored by a per-partition top-k per probe, not a
-    // probe x candidate join feeding a sort of every pair; the window
-    // ranks the survivors
-    assert(p.contains("MapPartitions") && p.contains("Window"),
-      s"expected per-partition scoring under the rank window:\n$p")
+    // candidates are scored by a per-partition top-k per probe, merged
+    // on the driver: no probe x candidate join, no exchange, no rank
+    // window over the pairs
     assert(!p.contains("Join"), s"the scoring query must not join:\n$p")
+    assert(!p.contains("Exchange") && !p.contains("Window"),
+      s"the scoring query must be a pruned scan, ranked without a window:\n$p")
     // the candidate fetch is directory-level STATIC partition pruning:
     // the probed-bucket set (bounded by the centroid count) becomes an
     // IN filter on the partition column at plan time — unlike DPP, it
