@@ -28,19 +28,25 @@ object Dedup {
     * shuffle moves fixed-width keys; the winner is pinned by the
     * MINIMUM id, never dropDuplicates (shuffle-order-dependent).
     *
-    * The winner is kept by a two-phase typed pass with the shape of a
-    * partial/final aggregate: each partition keeps one row per
-    * fingerprint, the survivors are hash-partitioned by fingerprint, and
-    * each partition keeps one row per fingerprint again. The partial
-    * phase is what a fingerprint-partitioned row_number window lacks: a
-    * text duplicated across a large fraction of the corpus contributes
-    * one candidate row per map partition to the exchange, where a
-    * window would land every copy of the hot text in a single task
-    * (linear, but a one-task straggler at 100 TB — the same class of
-    * pileup the gram pipelines eliminated with map-side-combined df
-    * counts). It keeps the row `min_by(struct(row), struct(id))` keeps,
-    * and compiles to a few generated classes where that SortAggregate
-    * (a struct buffer: no hash aggregate) compiles over a dozen.
+    * The winner is kept by a typed pass with the shape of a
+    * partial/final aggregate, in bounded memory:
+    *  - partial: each partition is read in chunks of
+    *    [[ExactPartialRows]] rows and each chunk keeps one row per
+    *    fingerprint (the lowest id), so a text duplicated across a
+    *    large fraction of the corpus reaches the exchange as about one
+    *    row per chunk instead of every copy — the map-side combine a
+    *    fingerprint-partitioned row_number window lacks (a one-task
+    *    straggler at 100 TB: the same class of pileup the gram
+    *    pipelines eliminated with map-side-combined df counts). A chunk
+    *    holds at most [[ExactPartialRows]] rows, whatever the partition
+    *    size;
+    *  - final: the candidates are hash-partitioned by fingerprint and
+    *    sorted by (fingerprint, id) within each partition — a sort that
+    *    spills, as `min_by`'s SortAggregate did — and the first row of
+    *    each fingerprint run is streamed out, holding no row.
+    * It keeps the row `min_by(struct(row), struct(id))` keeps, and
+    * compiles to a few generated classes where that SortAggregate (a
+    * struct buffer: no hash aggregate) compiles over a dozen.
     * Deterministic because ids are unique within a duplicate group
     * (ties would otherwise be shuffle-order-dependent) — same
     * tieBreak-uniqueness contract as
@@ -55,10 +61,10 @@ object Dedup {
     val schema = withFp.schema
     val (fpAt, idAt) = (schema.fieldIndex("__fp"), schema.fieldIndex(idCol))
     val idType = schema(idCol).dataType
-    // the row min_by keeps: a later row replaces the kept one unless
+    // one chunk's candidates: a later row replaces the kept one unless
     // the kept id orders strictly first (NULL before every id), in
     // Spark's own ordering of the id type
-    def winners(rows: Iterator[Row]): Iterator[Row] = {
+    def chunkWinners(rows: Seq[Row]): Iterator[Row] = {
       val toCatalyst = CatalystTypeConverters.createToCatalystConverter(idType)
       val ord = TypeUtils.getInterpretedOrdering(idType)
       def first(a: Row, b: Row): Boolean =
@@ -71,11 +77,27 @@ object Dedup {
       }
       kept.values.iterator.asScala
     }
+    // rows arrive sorted by (fingerprint, id): the first of each run wins
+    def firstOfRuns(rows: Iterator[Row]): Iterator[Row] = {
+      var prev: Option[Any] = None
+      rows.filter { r =>
+        val fp = Some(r.get(fpAt))
+        val isFirst = prev != fp
+        prev = fp
+        isFirst
+      }
+    }
     val enc = Encoders.row(schema)
-    withFp.mapPartitions(winners)(enc)
-      .repartition(col("__fp")).mapPartitions(winners)(enc)
+    withFp.mapPartitions(_.grouped(ExactPartialRows).flatMap(chunkWinners))(enc)
+      .repartition(col("__fp")).sortWithinPartitions(col("__fp"), col(idCol).asc_nulls_first)
+      .mapPartitions(firstOfRuns)(enc)
       .drop("__fp")
   }
+
+  /** Rows per chunk of [[exact]]'s partial phase: the most rows (text
+    * included) one task holds at a time.
+    */
+  private val ExactPartialRows = 1024
 
   /** Word n-grams over an ALREADY-MATERIALIZED token-array column.
     *
@@ -872,8 +894,10 @@ object Dedup {
     * same values (the same coefficients and `pmod` arithmetic, no
     * 64-bit overflow below P²), without a SigK-aggregate query to plan
     * and compile per batch. Returns doc id → (SigK-component
-    * signature, the doc's count of grams not in `hot`, a sorted array
-    * of gram hashes).
+    * signature, the doc's count of grams not in the sorted `hot`).
+    * Each doc's signature is the `sig` of [[sigArrays]] over
+    * [[minhashSignaturesOfHashedGrams]] on the same grams (pinned in
+    * BatchPassSpec), and the two write the same `sigs/` table.
     */
   private[ops] def localSignatures(grams: DataFrame,
                                    hot: Array[Long] = Array.emptyLongArray)

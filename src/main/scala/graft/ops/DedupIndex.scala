@@ -41,12 +41,15 @@ import org.apache.spark.sql.functions._
   *     capped sets;
   *   - `bloom/` — one row (word→bits map, nbits, nkeys): a Bloom filter
   *     over `fps/` (derived state, swap-protocol writes), built from it
-  *     at [[build]]; each [[append]] ORs its batch's bits in, and only
-  *     a key count past the next power-of-two size step rebuilds it from
-  *     `fps/` ([[bloomSizeBits]]). `dedupBatch(useBloom = true)` probes
-  *     it to route definitely-new batch rows AROUND the membership anti
-  *     join — no false negatives, positives verified exactly, so the
-  *     output is byte-identical with or without it.
+  *     at [[build]] and [[relayout]]; each [[append]] ORs its batch's
+  *     bits in, and rebuilds it from `fps/` only at a key count past the
+  *     next power-of-two size step ([[bloomSizeBits]]) or when `nkeys`
+  *     disagrees with `fps/`'s row count (a crash between an append's
+  *     `fps/` write and its merge). `dedupBatch(useBloom = true)` probes
+  *     it, when `nkeys` equals `fps/`'s row count, to route
+  *     definitely-new batch rows AROUND the membership anti join — no
+  *     false negatives, positives verified exactly, so the output is
+  *     byte-identical with or without it.
   *
   * Neither table stores text — 8-byte hashes only, so the index is a
   * small fixed fraction of the corpus and the daily join shuffles
@@ -83,13 +86,15 @@ object DedupIndex {
   }
 
   /** Rebuild the `bloom/` sidecar from the durable `fps/` table — one
-    * row (bloom: word→bits map, nbits, nkeys = the fps/ row count). One
-    * distributed pass over the 8-byte-hash table, never over corpus
-    * text: at [[build]], and at [[append]]s that cross a size step.
+    * row (bloom: word→bits map, nbits, nkeys = the fps/ row count, read
+    * from its parquet footers). One distributed pass over the
+    * 8-byte-hash table, never over corpus text: at [[build]] and
+    * [[relayout]], and at [[append]]s that cross a size step or find
+    * the sidecar behind `fps/`.
     */
   private def rebuildBloom(spark: SparkSession, path: String): Unit = {
     val fps = Layout.readTable(spark, s"$path/fps")
-    val nKeys = fps.count()
+    val nKeys = Layout.footerRowCount(spark, s"$path/fps")
     val nBits = bloomSizeBits(nKeys)
     writeBloom(spark, path)(
       RuntimeFilter.bloomBits(fps, "fp", nBits)
@@ -101,9 +106,12 @@ object DedupIndex {
     * the batch's bits ([[RuntimeFilter.bloomWords]], bit-identical to a
     * rebuild's) are ORed into the stored word map on the driver and the
     * one row is written back — work in the batch plus the sidecar's
-    * nbits/8 bytes, never a scan of `fps/`. A sidecar without `nkeys`
-    * (written before the count was stored) or a grown count past the
-    * step is rebuilt.
+    * nbits/8 bytes, never a scan of `fps/`. The sidecar is rebuilt
+    * instead when the grown count is past the step, when the sidecar
+    * has no `nkeys` (written before the count was stored), or when the
+    * grown count is not `fps/`'s row count: an earlier append was
+    * killed between its `fps/` write and its merge, so `fps/` holds
+    * keys the sidecar lacks.
     */
   private def mergeBloom(spark: SparkSession, path: String,
                          added: collection.Set[java.lang.Long]): Unit = {
@@ -116,7 +124,8 @@ object DedupIndex {
         r.getInt(1), r.getLong(2) + added.size)
     }
     stored match {
-      case Some((words, nBits, nKeys)) if bloomSizeBits(nKeys) == nBits =>
+      case Some((words, nBits, nKeys)) if bloomSizeBits(nKeys) == nBits &&
+          nKeys == Layout.footerRowCount(spark, s"$path/fps") =>
         val merged = RuntimeFilter.bloomWords(added, nBits).foldLeft(words) {
           case (m, (w, bits)) => m.updated(w, m.getOrElse(w, 0L) | bits)
         }
@@ -142,6 +151,21 @@ object DedupIndex {
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(target)) writeTo(target.toString)
     else Layout.rewriteInPlace(spark, s"$path/bloom", commitManifest = false)(writeTo)
+  }
+
+  /** The sidecar and its nbits when it covers every row of `fps/`: its
+    * `nkeys` equals `fps/`'s row count, read from the parquet footers
+    * (metadata only). None for a sidecar an append's crash left behind
+    * `fps/` (killed between its `fps/` write and its merge), or one
+    * written before the count was stored: the exact anti join alone
+    * then decides membership, with the same output.
+    */
+  private def coveringBloom(spark: SparkSession, path: String): Option[(DataFrame, Int)] = {
+    val sidecar = Layout.readTable(spark, s"$path/bloom")
+    Option.when(sidecar.columns.contains("nkeys"))(
+        Layout.collectRows(sidecar.select("nbits", "nkeys")).head)
+      .collect { case r if r.getLong(1) == Layout.footerRowCount(spark, s"$path/fps") =>
+        (sidecar, r.getInt(0)) }
   }
 
   /** MinHash signature width / band slice of every banded candidate
@@ -215,8 +239,23 @@ object DedupIndex {
     Layout.writeRangeSorted(st.grams, s"$path/grams", nFiles, "gram")
   }
 
+  /** The most rows one batch-bounded step takes: the survivors of an
+    * [[append]], and a batch whose near-dups [[dedupBatch]] (or
+    * [[Dedup.incremental]]) finds on the banded edge. Both gather each
+    * row's SigK-long MinHash signature on the driver (append also its
+    * fingerprint and gram count, and writes `fps/` and `sigs/` from
+    * there; the banded edge broadcasts the batch's band keys) — about
+    * 1 KB of driver memory a row, so the bound keeps that state near
+    * 0.5 GB.
+    */
+  val BatchMaxRows: Long = 500000L
+
   /** Write a deduped batch's state back into the index (append) — the
     * daily write-back that keeps the index current without a rebuild.
+    * Batch-bounded: refuses more than [[BatchMaxRows]] survivor rows
+    * before writing anything. A larger backfill is appended in slices
+    * of at most that many rows, or indexed by a [[build]] over the
+    * grown corpus.
     */
   def append(survivors: DataFrame, idCol: String, textCol: String, n: Int,
              path: String): Unit = {
@@ -232,7 +271,13 @@ object DedupIndex {
     // whole batch-dedup pipeline (which itself reads this index), so
     // running it lazily under each write would both multiply the daily
     // cost and re-read $path/fps mid-append
-    val s = survivors.select(col(idCol), col(textCol)).localCheckpoint(true)
+    val nSurvivors = new Observation()
+    val s = survivors.select(col(idCol), col(textCol))
+      .observe(nSurvivors, count(lit(1)).as("n")).localCheckpoint(true)
+    val nRows = nSurvivors.get("n").asInstanceOf[Long]
+    require(nRows <= BatchMaxRows,
+      s"DedupIndex.append: $nRows survivor rows (> $BatchMaxRows); append them in " +
+        "slices of at most that many rows, or build the index over the grown corpus")
     // the survivors' distinct fingerprints (batch-bounded) are gathered
     // on the driver: the fps/ rows to append and the keys of the bloom
     // merge
@@ -301,10 +346,10 @@ object DedupIndex {
     // sigs} appended — not only ordered prefixes as before the
     // concurrent overlap — so a caller retry must treat the index as
     // needing rebuild/relayout, exactly as for a mid-append crash
-    // (CrashMonkeySpec pins restore semantics). The same holds for the
-    // bloom merge below: a crash after the fps write leaves a sidecar
-    // without this batch's bits until the batch is appended again or
-    // the index is rebuilt.
+    // (CrashMonkeySpec pins restore semantics). A crash after the fps
+    // write leaves a sidecar without this batch's bits: its nkeys then
+    // disagrees with fps/'s row count, so dedupBatch does not probe it
+    // and the next append's merge rebuilds it from fps/.
     import scala.util.{Failure, Try}
     val results = Seq("fps" -> fFps, "grams" -> fGrams, "sigs" -> fSigs)
       .map { case (nm, f) => nm -> Try(Await.result(f, Duration.Inf)) }
@@ -321,7 +366,8 @@ object DedupIndex {
   /** Restore the gram table's range layout after a run of [[append]]s
     * (appended files overlap the original gram ranges — pruning
     * degrades gracefully but monotonically until re-layout) and
-    * compact the fingerprint set's accumulated per-day files. Reads
+    * compact the fingerprint set's accumulated per-day files, then
+    * rebuild the `bloom/` sidecar from the compacted `fps/`. Reads
     * only the index; corpus text is never rescanned. Swaps are
     * crash-safe via [[Layout.rewriteInPlace]].
     */
@@ -337,6 +383,7 @@ object DedupIndex {
     Layout.rewriteInPlace(spark, s"$path/sigs") { tmp =>
       Compaction.compact(spark, s"$path/sigs", tmp, fpTargetBytes)
     }
+    rebuildBloom(spark, path)
   }
 
   /** [[Dedup.incremental]] against the PERSISTED index instead of the
@@ -362,7 +409,7 @@ object DedupIndex {
     Layout.restoreIfCrashed(spark, s"$indexPath/sigs")
     dedupAgainst(batch, indexState(spark, indexPath), idCol, textCol, n,
       threshold, candidates, "dedup_index",
-      bloom = Option.when(useBloom)(Layout.readTable(spark, s"$indexPath/bloom")))
+      bloom = if (useBloom) coveringBloom(spark, indexPath) else None)
   }
 
   /** The batch-vs-corpus dedup kernel behind [[dedupBatch]] (persisted
@@ -371,13 +418,14 @@ object DedupIndex {
     * with the candidate stage chosen per `candidates`. The auto
     * decision's statistic and selected edge are recorded under
     * `attr` ("<attr>.decision", ".batch_cand_per_doc", ".edge_banded").
-    * `bloom`, when given, is the persisted sidecar row over `fps`.
+    * `bloom`, when given, is the persisted sidecar row over `fps` and
+    * its nbits.
     */
   private[ops] def dedupAgainst(batch: DataFrame, corpus: CorpusState,
                                 idCol: String, textCol: String, n: Int,
                                 threshold: Double, candidates: String,
                                 attr: String,
-                                bloom: Option[DataFrame] = None): DataFrame = {
+                                bloom: Option[(DataFrame, Int)] = None): DataFrame = {
     Dedup.requireCandidates(candidates)
     // no .distinct() on the fps relation (r20): it only ever feeds
     // LeftAnti probes (directly, or through the bloom-pruned path),
@@ -405,8 +453,7 @@ object DedupIndex {
     //     around the join entirely, so the probe side carries only
     //     true duplicates plus ~0.5% false positives.
     val b2 = bloom match {
-      case Some(bloomRow) =>
-        val nBits = bloomRow.select("nbits").head().getInt(0)
+      case Some((bloomRow, nBits)) =>
         // b1 feeds the corpus-side filter build AND both branches of
         // the union below — materialize the (batch-sized) winner set
         // once rather than re-running the exact-dedup aggregate three
@@ -485,7 +532,12 @@ object DedupIndex {
         // batch-bounded hit ids come back as a local relation, so no
         // per-batch value reaches generated code
         import scala.jdk.CollectionConverters._
-        val ids = Dedup.bandedHits(Dedup.localSignatures(bGrams), corpus.sigs, threshold)
+        val batchGrams = bGrams // its checkpoint resolves the batch count
+        val nBatch = obs.get.getOrElse("n", 0L).asInstanceOf[Long]
+        require(nBatch <= BatchMaxRows,
+          s"$attr: $nBatch batch rows (> $BatchMaxRows) for the banded edge; dedup them " +
+            "in slices of at most that many rows")
+        val ids = Dedup.bandedHits(Dedup.localSignatures(batchGrams), corpus.sigs, threshold)
         batch.sparkSession.createDataFrame(
           ids.toSeq.map(id => org.apache.spark.sql.Row(id)).asJava,
           new org.apache.spark.sql.types.StructType()

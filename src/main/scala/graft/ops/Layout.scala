@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.util.Try
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -131,19 +131,38 @@ object Layout {
   def readTable(spark: SparkSession, path: String): DataFrame = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = new Path(path).getFileSystem(conf)
-    def firstFile(s: FileStatus): Option[FileStatus] =
-      if (s.isFile) Some(s)
-      else fs.listStatus(s.getPath).filter { c =>
-        val n = c.getPath.getName
-        !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
-      }.sortBy(_.getPath.getName).iterator.flatMap(firstFile).nextOption()
-    Try(fs.getFileStatus(new Path(path))).toOption.flatMap(firstFile)
+    Try(fs.getFileStatus(new Path(path))).toOption
+      .flatMap(dataFiles(fs, _).nextOption())
       .flatMap(f => Try(DataType.fromJson(ParquetFileReader.readFooter(
           HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
         .getFileMetaData.getKeyValueMetaData
         .get(ParquetReadSupport.SPARK_METADATA_KEY))).toOption)
       .collect { case schema: StructType => spark.read.schema(schema).parquet(path) }
       .getOrElse(spark.read.parquet(path))
+  }
+
+  /** The data files under `s` in name order, as Spark's file index
+    * lists them: no `_`/`.` names but `k=v` dirs.
+    */
+  private def dataFiles(fs: FileSystem, s: FileStatus): Iterator[FileStatus] =
+    if (s.isFile) Iterator(s)
+    else fs.listStatus(s.getPath).filter { c =>
+      val n = c.getPath.getName
+      !n.startsWith(".") && (!n.startsWith("_") || n.contains("="))
+    }.sortBy(_.getPath.getName).iterator.flatMap(dataFiles(fs, _))
+
+  /** The row count of the parquet table under `path`, summed from its
+    * data files' footers (the files [[readTable]] would read): metadata
+    * only, no Spark job. 0 for a missing dir.
+    */
+  private[ops] def footerRowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = new Path(path).getFileSystem(conf)
+    Try(fs.getFileStatus(new Path(path))).toOption.iterator.flatMap(dataFiles(fs, _))
+      .map(f => ParquetFileReader.readFooter(HadoopInputFile.fromStatus(f, conf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.stream()
+        .mapToLong(_.getRowCount).sum())
+      .sum
   }
 
   /** `f` over `df`'s rows as its plan produces them, run as one SQL

@@ -91,12 +91,12 @@ class CorpusWorkingSetSpec extends SparkSpec with GeneratedClasses {
     (root, batches)
   }
 
-  test("one corpus op compiles at most 80 generated classes from an empty cache") {
+  test("one corpus op compiles at most 83 generated classes from an empty cache") {
     val (root, batches) = setUp("graft_corpus_ws")
     clearCodegenCache()
     val n = compiles(op(root, batches, 1))
     info(s"one corpus op compiled $n classes from an empty cache")
-    assert(n <= 80, s"one corpus op compiled $n classes from an empty cache")
+    assert(n <= 83, s"one corpus op compiled $n classes from an empty cache")
   }
 
   /** The probe's own predicate (`vec_id BETWEEN lo AND hi`) is compiled

@@ -19,6 +19,33 @@ class OpsSpec extends SparkSpec {
     assert(out.toSeq == Seq(1L, 3L, 4L))
   }
 
+  test("exact dedup: min_by's winners past the partial chunk, a spillable sort under the final pass") {
+    import org.apache.spark.sql.execution.SortExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    // two partitions of 3,000 rows: each holds several partial chunks,
+    // and every text recurs in every chunk; one NULL id wins its text,
+    // and NULL texts form one group, as groupBy's NULL key does
+    val many = spark.range(0, 6000, 1, 2).select(
+      when(col("id") =!= 4321L, col("id")).as("doc_id"),
+      when(col("id") % 997 =!= 17L, concat(lit("t"), (col("id") * 7919 % 37).cast("string")))
+        .as("text"),
+      (col("id") % 5).as("aux"))
+    val viaMinBy = many
+      .groupBy(TextOps.fingerprint(col("text")).as("__fp"))
+      .agg(min_by(struct(many.columns.map(col): _*), struct(col("doc_id"))).as("__w"))
+      .select(many.columns.map(c => col("__w").getField(c).as(c)): _*)
+    val out = Dedup.exact(many, "doc_id", "text")
+    val got = out.collect().map(_.toSeq).toSet
+    assert(got == viaMinBy.collect().map(_.toSeq).toSet)
+    assert(got.size == 38 && got.exists(_.head == null) && got.exists(_(1) == null))
+    // the final pass reads its fingerprint partitions through a Sort,
+    // which spills: no task holds a whole partition's rows
+    val sorts = new AdaptiveSparkPlanHelper {}.collect(out.queryExecution.executedPlan) {
+      case s: SortExec if s.sortOrder.headOption.exists(_.child.references.exists(_.name == "__fp")) => s
+    }
+    assert(sorts.size == 1, out.queryExecution.executedPlan.toString)
+  }
+
   test("ngram jaccard: dup pair = 1.0, near-dup high, unrelated absent") {
     val pairs = Dedup.jaccardPairs(docs, "doc_id", "text", 3, 0.3,
         candidates = "gram")
@@ -1807,7 +1834,7 @@ class OpsSpec extends SparkSpec {
   }
 
   test("bloom sidecar: a crash at any filesystem call of an append leaves old or new") {
-    import graft.ops.DedupIndex
+    import graft.ops.{DedupIndex, RuntimeFilter}
     import org.apache.commons.io.FileUtils
     spark.sparkContext.hadoopConfiguration
       .set("fs.monkey.impl", classOf[MonkeyFileSystem].getName)
@@ -1817,6 +1844,10 @@ class OpsSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     val batch = (0 until 6).map(i => (i.toLong, s"a new document number $i about pipelines"))
       .toDF("doc_id", "text").localCheckpoint(true)
+    val next = (6 until 9).map(i => (i.toLong, s"one more text, number $i, unlike the rest"))
+      .toDF("doc_id", "text").localCheckpoint(true)
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").as[Long].collect().sorted.toSeq
     val root = java.nio.file.Files.createTempDirectory("dedup_idx_bloom_crash")
     val pristine = root.resolve("pristine").toFile
     DedupIndex.build(corpus, "doc_id", "text", 3, pristine.toString, nFiles = 2)
@@ -1847,6 +1878,22 @@ class OpsSpec extends SparkSpec {
       val after = sidecar(dir)
       assert(after == old || after == updated,
         s"a crash at call $k of $nCalls left a sidecar that is neither the old nor the new one")
+      // a crash after the fps/ write leaves the sidecar behind fps/:
+      // the probed dedup must not trust it, and the next append must
+      // bring it back to a rebuild from fps/
+      assert(ids(DedupIndex.dedupBatch(spark, batch, dir, "doc_id", "text", 3, 0.5,
+          useBloom = true)) == ids(DedupIndex.dedupBatch(spark, batch, dir, "doc_id", "text",
+          3, 0.5)), s"after a crash at call $k the probed dedup differs from the plain one")
+      DedupIndex.append(next, "doc_id", "text", 3, dir)
+      val (bits, nBits, nKeys) = sidecar(dir)
+      val fps = spark.read.parquet(s"$dir/fps")
+      assert(nKeys == fps.count() && nBits == DedupIndex.bloomSizeBits(nKeys),
+        s"after a crash at call $k and another append: nkeys $nKeys, nbits $nBits")
+      assert(bits == RuntimeFilter.bloomBits(fps, "fp", nBits).head().getMap[Int, Long](0).toMap,
+        s"after a crash at call $k and another append the sidecar differs from a rebuild")
+      assert(fps.withColumnRenamed("fp", "__fp")
+        .crossJoin(broadcast(spark.read.parquet(s"$dir/bloom").select("bloom")))
+        .filter(!RuntimeFilter.bloomProbe("__fp", nBits)).isEmpty)
     }
   }
 
