@@ -338,37 +338,25 @@ object Scratch {
     // embedding corpora are clustered, that is why IVF works) for the
     // seed assignment (steps=0) vs the trained model (steps=2), at
     // the registry's nlist=16 and at the sizing rule's nlistFor(n).
-    args.filter(_ == "annprobe").foreach { _ =>
+    //
+    // `annprobe_raw` runs the same spread probe over the RAW embeddings
+    // table (no clustered mixture transform) — for corpora whose
+    // embeddings are ALREADY hostile, e.g. gen_skew.py's hot-cluster
+    // mixture (55% of vectors in one tight cluster). Reports seed vs
+    // trained occupancy at the registry nlist and the √n rule, the
+    // numbers the skew artifact records for the ANN family.
+    Seq("annprobe" -> "clustered", "annprobe_raw" -> dir)
+      .filter(p => args.contains(p._1)).foreach { case (probe, corpus) =>
       import graft.ops.Similarity
-      val emb = graft.queries.ExtensionQueries.clusteredEmb(spark, dir)
+      val emb = if (probe == "annprobe") graft.queries.ExtensionQueries.clusteredEmb(spark, dir)
+        else graft.io.Sources.table(spark, dir, "embeddings")
       val n = emb.count()
       for ((steps, label) <- Seq((0, "seed"), (1, "lloyd1"), (2, "trained"));
            k <- Seq(16, Similarity.nlistFor(n)).distinct) {
         val asg = Similarity.ivfAssignTrained(emb, "vec_id", "embedding",
           nCentroids = k, steps = steps)
         val (nb, mx, med, ratio) = Similarity.bucketSpread(asg)
-        println(f"""{"probe":"annprobe","corpus":"clustered","n":$n,""" +
-          f""""nlist":$k,"model":"$label","buckets":$nb,"max_occ":$mx,""" +
-          f""""median_occ":$med,"max_over_median":$ratio%.2f,""" +
-          f""""needs_rebalance":${Similarity.needsRebalance(ratio)}}""")
-      }
-    }
-    // Same spread probe over the RAW embeddings table (no clustered
-    // mixture transform) — for corpora whose embeddings are ALREADY
-    // hostile, e.g. gen_skew.py's hot-cluster mixture (55% of vectors
-    // in one tight cluster). Reports seed vs trained occupancy at the
-    // registry nlist and the √n rule, the numbers the skew artifact
-    // records for the ANN family.
-    args.filter(_ == "annprobe_raw").foreach { _ =>
-      import graft.ops.Similarity
-      val emb = graft.io.Sources.table(spark, dir, "embeddings")
-      val n = emb.count()
-      for ((steps, label) <- Seq((0, "seed"), (1, "lloyd1"), (2, "trained"));
-           k <- Seq(16, Similarity.nlistFor(n)).distinct) {
-        val asg = Similarity.ivfAssignTrained(emb, "vec_id", "embedding",
-          nCentroids = k, steps = steps)
-        val (nb, mx, med, ratio) = Similarity.bucketSpread(asg)
-        println(f"""{"probe":"annprobe_raw","corpus":"$dir","n":$n,""" +
+        println(f"""{"probe":"$probe","corpus":"$corpus","n":$n,""" +
           f""""nlist":$k,"model":"$label","buckets":$nb,"max_occ":$mx,""" +
           f""""median_occ":$med,"max_over_median":$ratio%.2f,""" +
           f""""needs_rebalance":${Similarity.needsRebalance(ratio)}}""")

@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF index — the production serving shape of
@@ -309,10 +308,8 @@ object AnnIndex {
     * multi-probe expansion, same cosine arithmetic and tie order).
     *
     * The bucket ranking is planned on the driver ([[planProbes]]); the
-    * candidates are scored in ONE members scan where each partition
-    * keeps a bounded top-k per probe, and the partitions' top-k sets
-    * are merged on the driver as they arrive (an RDD fold), so the
-    * driver holds at most 2 × k × probes candidates.
+    * candidates are scored in ONE members scan by [[ProbeTopK.topK]],
+    * the family's per-partition top-k with a driver merge.
     *
     * EAGER: the scan runs when `probe` is called, and the result is a
     * local relation of at most k × probes rows with the schema of the
@@ -323,32 +320,9 @@ object AnnIndex {
             k: Int, maxProbes: Long = 100000L, nprobe: Int = 3): DataFrame = {
     val plan = planProbes(spark, indexPath, probePred, maxProbes, nprobe,
       "probe", "probes are broadcast, so the predicate must pick a small probe set")
-    val bcProbes = spark.sparkContext.broadcast(plan.probes)
-    val idType = plan.members.schema("vec_id").dataType
-    // one heap-ordered candidate list per probe; merging two keeps the
-    // k best under (cos DESC, vec_id ASC)
-    type TopK = Map[Long, Seq[(Double, Long, Long)]]
-    def merge(a: TopK, b: TopK): TopK = b.foldLeft(a) { case (m, (q, cs)) =>
-      m.updated(q, (m.getOrElse(q, Nil) ++ cs)
-        .sortWith((x, y) => Similarity.rankCompare(x._1, x._2, y._1, y._2) < 0).take(k))
-    }
-    val top = Layout.withRows(plan.members.filter(col("bucket").isin(plan.buckets: _*))
-        .select(col("vec_id").cast("long"), col("bucket"), col("v")))(
-      _.mapPartitions(rows => Iterator(topKPerProbe(bcProbes.value,
-        rows.map(r => (r.getLong(0), r.getLong(1), r.getArray(2).toDoubleArray())), k)))
-        .fold(Map.empty)(merge))
-    import scala.jdk.CollectionConverters._
-    val rows = top.toSeq.sortBy(_._1).flatMap { case (q, cs) =>
-      cs.zipWithIndex.map { case ((c, id, b), r) => Row(q, id, b, c, r + 1L) }
-    }
-    // the id casts fold into the local relation at optimization time
-    spark.createDataFrame(rows.asJava, new org.apache.spark.sql.types.StructType()
-        .add("q_id", "long", nullable = false).add("neighbor_id", "long", nullable = false)
-        .add("bucket", "long", nullable = false).add("cos", "double", nullable = false)
-        .add("rank", "long", nullable = false))
-      .select(col("q_id").cast(idType).as("q_id"),
-        col("neighbor_id").cast(idType).as("neighbor_id"), col("bucket"),
-        col("cos"), col("rank"))
+    val top = ProbeTopK.byCosine(plan.members.filter(col("bucket").isin(plan.buckets: _*))
+      .select(col("vec_id").cast("long"), col("bucket"), col("v")), plan.probes, k)
+    ProbeTopK.relation(spark, top, plan.members.schema("vec_id").dataType, Some("bucket"), "cos")
   }
 
   /** The probes as (q_id, vector, its `nprobe` nearest buckets best
@@ -358,16 +332,14 @@ object AnnIndex {
     * a static IN filter on the partition column at plan time, which
     * unlike dynamic pruning can never decline into a full members scan.
     */
-  private final case class ProbePlan(members: DataFrame,
-                                     probes: Array[(Long, Array[Double], Array[Long])]) {
+  private final case class ProbePlan(members: DataFrame, probes: Array[ProbeTopK.Probe]) {
     def buckets: Seq[Long] = probes.flatMap(_._3).distinct.sorted.toSeq
   }
 
   /** [[probe]] and [[probePq]]'s driver-side planning: three bounded
-    * collects — the probe set (`limit(maxProbes + 1)`; only a set past
-    * the bound is counted, so the refusal names its exact size), the
-    * probe vectors from their own bucket partitions, the centroids —
-    * then each probe's buckets ranked by [[Similarity.nearestBuckets]].
+    * collects — the probe set ([[ProbeTopK.probeSet]]), the probe
+    * vectors from their own bucket partitions, the centroids — then
+    * each probe's buckets ranked by [[Similarity.nearestBuckets]].
     */
   private def planProbes(spark: SparkSession, indexPath: String,
                          probePred: Column, maxProbes: Long, nprobe: Int,
@@ -378,13 +350,10 @@ object AnnIndex {
     recoverAll(spark, indexPath)
     val members = Layout.readTable(spark, s"$indexPath/members")
       .withColumn("bucket", col("bucket").cast("long"))
-    val selected = Layout.readTable(spark, s"$indexPath/assignments")
-      .filter(probePred)
-    val asg = Layout.collectRows(selected.select(col("vec_id").cast("long"), col("bucket"))
-        .limit(math.min(maxProbes, Int.MaxValue - 1L).toInt + 1))
+    val asg = ProbeTopK.probeSet(Layout.readTable(spark, s"$indexPath/assignments")
+        .filter(probePred).select(col("vec_id").cast("long"), col("bucket")),
+        maxProbes, caller, why)
       .map(r => (r.getLong(0), r.getLong(1)))
-    require(asg.length <= maxProbes,
-      s"$caller: probePred selected ${selected.count()} probes (> $maxProbes); $why")
     val vecs = Layout.collectRows(members
         .filter(col("bucket").isin(asg.map(_._2).distinct.toSeq: _*) &&
           col("vec_id").isin(asg.map(_._1).toSeq: _*))
@@ -393,42 +362,6 @@ object AnnIndex {
     val cent = centroids(spark, indexPath)
     ProbePlan(members, vecs.map { case (qid, qv) =>
       (qid, qv, Similarity.nearestBuckets(qv, cent, nprobe)) })
-  }
-
-  /** One members partition scored against every probe that searches
-    * the row's bucket (a member lives in one bucket, so each (probe,
-    * member) pair scores at most once), keeping each probe's k best
-    * (cos, vec_id, bucket) under (cos DESC, vec_id ASC), unordered.
-    * The global top-k of a probe is contained in the union of these
-    * per-partition top-k sets.
-    */
-  private def topKPerProbe(probes: Array[(Long, Array[Double], Array[Long])],
-                           rows: Iterator[(Long, Long, Array[Double])],
-                           k: Int): Map[Long, Seq[(Double, Long, Long)]] = {
-    val byBucket = probes.indices
-      .flatMap(i => probes(i)._3.map(_ -> i)).groupMap(_._1)(_._2)
-    // heap head = the kept (cos, vec_id, bucket) that ranks last
-    val worstFirst: java.util.Comparator[(Double, Long, Long)] =
-      (a, b) => Similarity.rankCompare(b._1, b._2, a._1, a._2)
-    val heaps = Array.fill(probes.length)(
-      new java.util.PriorityQueue[(Double, Long, Long)](worstFirst))
-    rows.foreach { case (id, bucket, v) =>
-      byBucket.getOrElse(bucket, Nil).foreach { i =>
-        val (qid, qv, _) = probes(i)
-        if (qid != id) {
-          val cand = (Similarity.cosK(qv, v), id, bucket)
-          val h = heaps(i)
-          if (h.size < k) h.add(cand)
-          else if (k > 0 && worstFirst.compare(cand, h.peek) > 0) {
-            h.poll(); h.add(cand)
-          }
-        }
-      }
-    }
-    import scala.jdk.CollectionConverters._
-    heaps.iterator.zip(probes.iterator).collect {
-      case (h, (qid, _, _)) if !h.isEmpty => qid -> h.asScala.toSeq
-    }.toMap
   }
 
   /** PQ sidecar for a built index — the IVFADC serving layout: every
@@ -511,15 +444,15 @@ object AnnIndex {
     * bucket partitions, bucket ranking against the stored trained
     * model, candidates read as partition-pruned PQ CODES (~8 bytes
     * each — the corpus vectors are never touched), scored by ADC
-    * lookups. Output schema and values match [[Similarity.ivfPqTopK]]
-    * exactly.
+    * lookups and ranked by [[ProbeTopK.topK]]. Output schema and values
+    * match [[Similarity.ivfPqTopK]] exactly. EAGER, like [[probe]]: a
+    * local relation of at most k × probes rows.
     */
   def probePq(spark: SparkSession, indexPath: String, probePred: Column,
               k: Int, maxProbes: Long = 100000L, nprobe: Int = 3,
               m: Int = 8, ksub: Int = 256): DataFrame = {
     val plan = planProbes(spark, indexPath, probePred, maxProbes, nprobe,
-      "probePq", "probes are collected and broadcast, so the predicate " +
-        "must pick a small probe set")
+      "probePq", ProbeTopK.Collected)
     import spark.implicits._
     // the stored encoding's parameters are AUTHORITATIVE: a caller m
     // that merely divides dims would pass every shape check below yet
@@ -548,29 +481,14 @@ object AnnIndex {
     val cb = Array.tabulate(m, ksub, dsub)((mm, c, d) => seed(c)._2(mm * dsub + d))
     // per-probe ADC LUT over the planned buckets — identical rule and
     // arithmetic to ivfPqTopK
-    val bcPlan = spark.sparkContext.broadcast(plan.probes.map {
-      case (qid, qv, buckets) =>
-        (qid, buckets.toSet, Similarity.adcLutK(qv, cb, m, ksub, dsub))
-    })
+    val luts = plan.probes.map(p => Similarity.adcLutK(p._2, cb, m, ksub, dsub))
     val codes = Layout.readTable(spark, s"$indexPath/codes")
       .withColumn("bucket", col("bucket").cast("long"))
       .filter(col("bucket").isin(plan.buckets: _*))
-      .select("vec_id", "bucket", "code").as[(Long, Long, Array[Int])]
-    val scored = codes.mapPartitions { rows =>
-      val qs = bcPlan.value
-      rows.flatMap { case (id, bucket, code) =>
-        qs.iterator.collect {
-          case (qid, bks, lut) if qid != id && bks(bucket) =>
-            (qid, id, bucket, Similarity.adcSumK(lut, code, m))
-        }
-      }
-    }.toDF("q_id", "neighbor_id", "bucket", "adc_dot")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dot").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("bucket"),
-        col("adc_dot"), col("rank").cast("long").as("rank"))
+      .select(col("vec_id").cast("long"), col("bucket"), col("code"))
+    val top = ProbeTopK.topK(codes, plan.probes, k)((_, _, r) => r.getArray(2).toIntArray())(
+      (i, _, code) => Similarity.adcSumK(luts(i), code, m))
+    ProbeTopK.relation(spark, top, org.apache.spark.sql.types.LongType, Some("bucket"), "adc_dot")
   }
 
   /** Build the PQ sidecar once per index dir (idempotent — presence of

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Similarity search over an embedding column (Array[Float]).
   *
@@ -10,8 +11,12 @@ import org.apache.spark.sql.functions._
   * (cast from float, exact), starting at 0.0 — bit-identical to the
   * DuckDB oracle's list_reduce. Floats are never multiplied as floats.
   *
+  * Top-k entry points are eager: one guarded probe-set collect, a
+  * driver-side plan and one [[ProbeTopK]] scoring pass; each returns a
+  * local relation of at most k × probes rows.
+  *
   * Scale path: brute-force top-k is the correctness baseline (probe
-  * set × corpus, a broadcast-able nested loop); random-hyperplane LSH
+  * set × corpus, the corpus streamed once); random-hyperplane LSH
   * bounds the pair space for corpus-vs-corpus near-dup search — the
   * candidate join is an equi-join on (band, signature), so the shuffle
   * is (rows × bands), never O(n²).
@@ -71,9 +76,9 @@ object Similarity {
     if (c != 0) c else java.lang.Long.compare(idA, idB)
   }
 
-  /** A probe's `nprobe` nearest centroids (cid, cv), best first: the
-    * (ccos DESC, cid ASC) row_number of [[ivfTopK]]'s bucket window,
-    * computed on the driver over the bounded model. With `nprobe` 1 it
+  /** A probe's `nprobe` nearest centroids (cid, cv), best first under
+    * (ccos DESC, cid ASC), computed on the driver over the bounded
+    * model: the bucket ranking of every IVF path. With `nprobe` 1 it
     * is [[assignTo]]'s `max_by(cid, struct(ccos, -cid))` for one vector
     * (NaN ranks first, -0.0 equals 0.0, ties to the lowest cid), and
     * like `cosine_sim` it refuses vectors of another length.
@@ -96,47 +101,40 @@ object Similarity {
   }
 
   /** Brute-force cosine top-k: the probe set is collected and
-    * broadcast (the build side of a broadcast nested-loop join); the
-    * corpus streams through a compiled scoring kernel without
-    * shuffling; only (probes × corpus) score rows reach the top-k
-    * window.
+    * broadcast, and the corpus streams once through the compiled
+    * scoring kernel into [[ProbeTopK.topK]], without shuffling. EAGER:
+    * a local relation (q_id, neighbor_id, cos, rank), ≤ k × probes rows.
     *
     * The probe set must be SMALL — it is collected to the driver and
     * broadcast — so an over-broad `probePred` is refused loudly
-    * (counted before the collect, same contract as [[ivfTopK]]): a
-    * corpus-sized predicate here would OOM the driver instead of
-    * degrading.
+    * (same contract as [[ivfTopK]]): a corpus-sized predicate here
+    * would OOM the driver instead of degrading.
     */
   def cosineTopK(emb: DataFrame, idCol: String, vecCol: String,
                  probePred: Column, k: Int,
                  maxProbes: Long = 100000L): DataFrame = {
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val all = typed(emb, idCol, vecCol)
-    val probeDs = typed(emb.filter(probePred), idCol, vecCol)
-    val nProbes = probeDs.count()
-    require(nProbes <= maxProbes,
-      s"cosineTopK: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are collected and broadcast, so the predicate must pick " +
-        "a small probe set")
-    val probes = probeDs.collect().map { case (id, v) => (id, v, normK(v)) }
-    val bc = spark.sparkContext.broadcast(probes)
-    val scored = all.mapPartitions { rows =>
-      val qs = bc.value
-      rows.flatMap { case (idc, vc) =>
-        val nc = normK(vc)
-        qs.iterator.collect { case (idq, vq, nq) if idq != idc =>
-          (idq, idc, dotK(vq, vc) / (nq * nc))
-        }
-      }
-    }.toDF("q_id", "neighbor_id", "cos")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"),
-        col("cos"), col("rank").cast("long").as("rank"))
+    val probes = probeVectors(typedRows(emb.filter(probePred), idCol, vecCol),
+      maxProbes, "cosineTopK")
+    val nq = probes.map(p => normK(p._2))
+    val top = ProbeTopK.topK(oneKey(emb, idCol, vecCol), probes, k)(
+      (_, _, r) => { val v = r.getArray(2).toDoubleArray(); (v, normK(v)) })(
+      (i, _, c) => dotK(probes(i)._2, c._1) / (nq(i) * c._2))
+    ProbeTopK.relation(emb.sparkSession, top, LongType, None, "cos")
   }
+
+  /** The guarded probe rows (vec_id: long, v), searching [[oneKey]]'s key. */
+  private def probeVectors(selected: DataFrame, maxProbes: Long, caller: String,
+                           why: String = ProbeTopK.Collected): Array[ProbeTopK.Probe] =
+    ProbeTopK.probeSet(selected, maxProbes, caller, why)
+      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray(), Array(0L)))
+
+  /** (vec_id: long, v: array<double>) of `emb`. */
+  private def typedRows(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long"), asDouble(col(vecCol)))
+
+  /** Full-corpus [[ProbeTopK]] rows: every row under the one key 0. */
+  private def oneKey(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
+    emb.select(col(idCol).cast("long"), lit(0L), asDouble(col(vecCol)))
 
   /** All-pairs cosine near-duplicates above a threshold — the exact
     * BASELINE, declared as a self-join on `vec_a < vec_b` scored by the
@@ -360,74 +358,68 @@ object Similarity {
     * CONTRACT for `probePred`: it is evaluated against the ids-only
     * assignment relation, so it may reference ONLY `vec_id` and
     * `bucket` (not the vector column), and it must select a SMALL
-    * probe set — probes and the probed-bucket list are force-broadcast
-    * (that is what bounds per-probe work to nprobe buckets), so a
-    * predicate matching a large fraction of the corpus belongs in
-    * [[cosineTopK]] instead. Enforced with a driver-side size check
-    * before the broadcast.
+    * probe set — probes are collected and broadcast (that is what
+    * bounds per-probe work to nprobe buckets), so a predicate matching
+    * a large fraction of the corpus belongs in [[cosineTopK]] instead.
+    * Enforced by the family's probe guard ([[ProbeTopK.probeSet]]).
+    *
+    * EAGER: buckets are ranked on the driver ([[nearestBuckets]]) and
+    * the probed buckets scored in one [[ProbeTopK.topK]] pass; a local
+    * relation (q_id, neighbor_id, bucket, cos, rank), ≤ k × probes rows.
     */
   def ivfTopK(emb: DataFrame, idCol: String, vecCol: String,
               nCentroids: Int, probePred: Column, k: Int,
               maxProbes: Long = 100000L, trainSteps: Int = 2,
               nprobe: Int = 3, trainOn: DataFrame = null,
               model: DataFrame = null): DataFrame = {
+    val plan = ivfPlan(emb, idCol, vecCol, nCentroids, probePred, maxProbes,
+      trainSteps, nprobe, trainOn, model, "ivfTopK", "probes are broadcast, so " +
+        "the predicate must pick a small probe set — use cosineTopK for " +
+        "corpus-scale scoring", onAssignment = true)
+    val top = ProbeTopK.byCosine(plan.candidates, plan.probes, k)
+    // nullable as the ranked join's were: ids and cos as the corpus's
+    // ids and vectors, the assignment's bucket
+    val in = prepared(emb, idCol, vecCol).schema
+    ProbeTopK.relation(emb.sparkSession, top, in("vec_id").dataType, Some("bucket"), "cos",
+      Set("bucket") ++ Set("q_id", "neighbor_id").filter(_ => in("vec_id").nullable) ++
+        Set("cos").filter(_ => in("v").nullable))
+  }
+
+  /** The IVF paths' driver-side plan: the trained model (cid, cv),
+    * collected (bounded: nCentroids × dims); the probes with their
+    * `nprobe` nearest buckets; and the probed buckets' candidates
+    * (vec_id, bucket, v), the [[assignTo]] assignment under a plan-time
+    * bucket IN filter (directory pruning at scale, never a full scan).
+    */
+  private final case class IvfPlan(cent: Array[(Long, Array[Double])],
+                                   probes: Array[ProbeTopK.Probe], candidates: DataFrame)
+
+  /** [[IvfPlan]] for `emb`. `model` short-circuits training (the serving
+    * shape: no trainSteps corpus scans per call); otherwise the model is
+    * trained on `trainOn` (default the corpus). `probePred` selects from
+    * the assignment (`onAssignment`, [[ivfTopK]]'s contract) or `emb`.
+    */
+  private def ivfPlan(emb: DataFrame, idCol: String, vecCol: String,
+                      nCentroids: Int, probePred: Column, maxProbes: Long,
+                      trainSteps: Int, nprobe: Int, trainOn: DataFrame,
+                      model: DataFrame, caller: String, why: String,
+                      onAssignment: Boolean): IvfPlan = {
     val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val cs = graft.functions.GraftFunctions.cosineSim _
+    import spark.implicits._
     val all = prepared(emb, idCol, vecCol).select("vec_id", "v")
-    // `model` short-circuits training with an ALREADY-TRAINED (cid, cv)
-    // relation — the serving shape (an index stores its model once;
-    // callers serving several probes against one corpus train once and
-    // reuse), and what keeps repeated invocations from re-paying the
-    // trainSteps corpus scans
-    val cent = Option(model).map(_.select("cid", "cv")).getOrElse(
+    val cent = Option(model).getOrElse(
       trainedCentroids(Option(trainOn).getOrElse(emb),
-        idCol, vecCol, nCentroids, trainSteps).select("cid", "cv"))
-    val asg = assignTo(all, cent)
-    // probeAsg is materialized eagerly: it feeds downstream joins (so
-    // the assignment aggregate would otherwise replan twice), and the
-    // materialized count is the size guard that keeps the broadcast
-    // hints honest — a probe set past maxProbes would OOM the driver
-    // instead of degrading, so refuse it loudly.
-    val probeAsg = asg.filter(probePred).localCheckpoint(true)
-    val nProbes = probeAsg.count()
-    require(nProbes <= maxProbes,
-      s"ivfTopK: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are broadcast, so the predicate must pick a small probe " +
-        "set — use cosineTopK for corpus-scale scoring")
-    val probes = probeAsg.select("vec_id").join(all, "vec_id")
-      .select(col("vec_id").as("q_id"), col("v").as("qv"))
-      .localCheckpoint(true)
-    // per-probe nearest-nprobe buckets by centroid cosine (rank 1 is
-    // always the probe's own bucket — assignment IS argmax centroid
-    // cosine), carried with the probe vector so the scoring join
-    // broadcasts one relation
-    val wB = Window.partitionBy(col("q_id"))
-      .orderBy(col("ccos").desc, col("cid").asc)
-    // materialized eagerly: qb (probe-bounded) feeds both the probed-
-    // bucket broadcast and the scoring join — without the barrier the
-    // centroid-ranking window would replan into each branch
-    val qb = probes.crossJoin(broadcast(cent))
-      .select(col("q_id"), col("qv"), col("cid"),
-        cs(col("qv"), col("cv")).as("ccos"))
-      .withColumn("rn", row_number().over(wB)).filter(col("rn") <= nprobe)
-      .select(col("q_id"), col("cid").as("bucket"), col("qv"))
-      .localCheckpoint(true)
-    // a member lives in exactly one bucket and qb's buckets are
-    // distinct per probe, so each (probe, member) pair scores at most
-    // once — no dedup stage needed
-    val members = asg
-      .join(broadcast(qb.select("bucket").distinct()), "bucket")
-      .join(all, "vec_id")
-    val scored = members.join(broadcast(qb), "bucket")
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", cs(col("qv"), col("v")))
-    val wTop = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-    scored.withColumn("rank", row_number().over(wTop))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("vec_id").as("neighbor_id"), col("bucket"),
-        col("cos"), col("rank").cast("long").as("rank"))
+        idCol, vecCol, nCentroids, trainSteps))
+      .select("cid", "cv").as[(Long, Array[Double])].collect().sortBy(_._1)
+    val asg = assignTo(all, cent.toIndexedSeq.toDF("cid", "cv"))
+    val probes = probeVectors(
+      if (onAssignment) asg.filter(probePred).select("vec_id").join(all, "vec_id")
+        .select(col("vec_id").cast("long"), col("v"))
+      else typedRows(emb.filter(probePred), idCol, vecCol), maxProbes, caller, why)
+      .map(p => p.copy(_3 = nearestBuckets(p._2, cent, nprobe)))
+    val buckets = probes.flatMap(_._3).distinct.sorted
+    IvfPlan(cent, probes, all.join(asg.filter(col("bucket").isin(buckets.toIndexedSeq: _*)), "vec_id")
+      .select(col("vec_id").cast("long"), col("bucket"), col("v")))
   }
 
   /** Deterministic ±1 random-hyperplane weights (seed-fixed, mirrored
@@ -595,6 +587,9 @@ object Similarity {
     * 8-byte budget measure 0.56. Encoding cost scales with ksub but
     * is the one-time index-build pass; the per-query ADC lookup is
     * unchanged.
+    *
+    * EAGER: one [[ProbeTopK.topK]] pass encodes and scores the corpus;
+    * a local relation (q_id, neighbor_id, adc_dot, rank), ≤ k × probes.
     */
   def pqTopK(emb: DataFrame, idCol: String, vecCol: String,
              probePred: Column, k: Int, m: Int = 8, ksub: Int = 256,
@@ -602,54 +597,31 @@ object Similarity {
     require(m > 0 && dims % m == 0,
       s"pqTopK: dims ($dims) must split evenly into m ($m) subspaces")
     val dsub = dims / m
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val all = typed(emb, idCol, vecCol)
-    val bcCb = spark.sparkContext.broadcast(
-      pqCodebook(emb, idCol, vecCol, m, ksub, dsub))
-    val codes = all.mapPartitions { rows =>
-      val cbv = bcCb.value
-      rows.map { case (id, v) => (id, pqEncodeK(id, v, cbv, m, ksub, dsub)) }
-    }
-    val probeDs = typed(emb.filter(probePred), idCol, vecCol)
-    val nProbes = probeDs.count()
-    require(nProbes <= maxProbes,
-      s"pqTopK: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are collected and broadcast, so the predicate must pick " +
-        "a small probe set")
-    val bcProbes = spark.sparkContext.broadcast(probeDs.collect())
-    val scored = codes.mapPartitions { rows =>
-      val cbv = bcCb.value
-      val luts = bcProbes.value.map { case (qid, qv) =>
-        (qid, adcLutK(qv, cbv, m, ksub, dsub))
-      }
-      rows.flatMap { case (id, code) =>
-        luts.iterator.collect { case (qid, lut) if qid != id =>
-          (qid, id, adcSumK(lut, code, m))
-        }
-      }
-    }.toDF("q_id", "neighbor_id", "adc_dot")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dot").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("adc_dot"),
-        col("rank").cast("long").as("rank"))
+    val cb = pqCodebook(emb, idCol, vecCol, m, ksub, dsub)
+    val probes = probeVectors(typedRows(emb.filter(probePred), idCol, vecCol),
+      maxProbes, "pqTopK")
+    val luts = probes.map(p => adcLutK(p._2, cb, m, ksub, dsub))
+    val top = ProbeTopK.topK(oneKey(emb, idCol, vecCol), probes, k)(
+      (id, _, r) => pqEncodeK(id, r.getArray(2).toDoubleArray(), cb, m, ksub, dsub))(
+      (i, _, code) => adcSumK(luts(i), code, m))
+    ProbeTopK.relation(emb.sparkSession, top, LongType, None, "adc_dot")
   }
 
   /** PQ codebook: per subspace, the sub-vectors of the ksub lowest-id
     * vectors (same seeding rule as ivfAssign) — shape (m, ksub, dsub),
     * collected to the driver (bounded: ksub × dims doubles) and
-    * broadcast by callers.
+    * broadcast by callers; `encoded` maps a seed to what codes quantize.
     */
   private[ops] def pqCodebook(emb: DataFrame, idCol: String, vecCol: String,
-                         m: Int, ksub: Int,
-                         dsub: Int): Array[Array[Array[Double]]] = {
+                         m: Int, ksub: Int, dsub: Int, what: String = "pq",
+                         encoded: Array[Double] => Array[Double] = identity)
+      : Array[Array[Array[Double]]] = {
     val cbRows = typed(emb.filter(col(idCol) < ksub), idCol, vecCol)
       .collect().sortBy(_._1)
     require(cbRows.length == ksub,
-      s"pq codebook seeding needs vec ids 0..${ksub - 1} present")
-    Array.tabulate(m, ksub, dsub)((mm, c, d) => cbRows(c)._2(mm * dsub + d))
+      s"$what codebook seeding needs vec ids 0..${ksub - 1} present")
+    val seed = cbRows.map(r => encoded(r._2))
+    Array.tabulate(m, ksub, dsub)((mm, c, d) => seed(c)(mm * dsub + d))
   }
 
   /** Per-vector PQ encode kernel: argmin-L2 codebook index per
@@ -717,76 +689,25 @@ object Similarity {
     * remaining gap is quantization, not candidates).
     *
     * Bucket ranking happens driver-side over the collected model (the
-    * same (ccos DESC, cid ASC) rule as ivfTopK's window — the model is
-    * bounded by construction, probes by the maxProbes guard), so the
+    * same (ccos DESC, cid ASC) rule as ivfTopK — the model is bounded
+    * by construction, probes by the maxProbes guard), so the
     * candidate restriction reaches the scan as a static bucket IN
     * filter. Candidates are encoded on the fly here (encode cost =
     * probed buckets only, so cheaper than a full-corpus pass this op
     * would otherwise pay per query); [[AnnIndex]]-style serving
     * precomputes codes at build time — the ADC arithmetic is
-    * identical either way. Returns (q_id, neighbor_id, bucket,
-    * adc_dot, rank).
+    * identical either way. EAGER: a local relation (q_id, neighbor_id,
+    * bucket, adc_dot, rank), ≤ k × probes rows.
     */
   def ivfPqTopK(emb: DataFrame, idCol: String, vecCol: String,
                 nCentroids: Int, probePred: Column, k: Int,
                 m: Int = 8, ksub: Int = 256, dims: Int = 64,
                 maxProbes: Long = 100000L, trainSteps: Int = 2,
                 nprobe: Int = 3, trainOn: DataFrame = null,
-                model: DataFrame = null): DataFrame = {
-    require(m > 0 && dims % m == 0,
-      s"ivfPqTopK: dims ($dims) must split evenly into m ($m) subspaces")
-    val dsub = dims / m
-    val spark = emb.sparkSession
-    import spark.implicits._
-    // trained centroid model (or the caller's pre-trained `model` —
-    // same contract as ivfTopK), collected (bounded: nCentroids × dims)
-    val cent = Option(model).getOrElse(
-      trainedCentroids(Option(trainOn).getOrElse(emb),
-        idCol, vecCol, nCentroids, trainSteps))
-      .select("cid", "cv").as[(Long, Array[Double])].collect().sortBy(_._1)
-    val asg = assignTo(prepared(emb, idCol, vecCol).select("vec_id", "v"),
-      cent.toIndexedSeq.toDF("cid", "cv"))
-    val probeDs = typed(emb.filter(probePred), idCol, vecCol)
-    val nProbes = probeDs.count()
-    require(nProbes <= maxProbes,
-      s"ivfPqTopK: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are collected and broadcast, so the predicate must pick " +
-        "a small probe set")
-    val probes = probeDs.collect()
-    // per-probe nprobe nearest buckets, ranked driver-side with the
-    // SAME fold + (ccos DESC, cid ASC) tie rule as ivfTopK's window
-    val cb = pqCodebook(emb, idCol, vecCol, m, ksub, dsub)
-    val probePlan = probes.map { case (qid, qv) =>
-      (qid, nearestBuckets(qv, cent, nprobe).toSet, adcLutK(qv, cb, m, ksub, dsub))
-    }
-    val bcPlan = spark.sparkContext.broadcast(probePlan)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    // static bucket pruning: the union of probed buckets is a plan-time
-    // IN filter — at scale (bucket-partitioned codes) this is directory
-    // pruning, never a full scan
-    val allowed = probePlan.flatMap(_._2).distinct.sorted
-    val cand = typed(emb, idCol, vecCol).toDF("vec_id", "v")
-      .join(asg.filter(col("bucket").isin(allowed: _*)), "vec_id")
-      .select(col("vec_id"), col("bucket"), col("v"))
-      .as[(Long, Long, Array[Double])]
-    val scored = cand.mapPartitions { rows =>
-      val plan = bcPlan.value
-      val cbv = bcCb.value
-      rows.flatMap { case (id, bucket, v) =>
-        val code = pqEncodeK(id, v, cbv, m, ksub, dsub)
-        plan.iterator.collect {
-          case (qid, bks, lut) if qid != id && bks(bucket) =>
-            (qid, id, bucket, adcSumK(lut, code, m))
-        }
-      }
-    }.toDF("q_id", "neighbor_id", "bucket", "adc_dot")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dot").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("bucket"),
-        col("adc_dot"), col("rank").cast("long").as("rank"))
-  }
+                model: DataFrame = null): DataFrame =
+    ProbeTopK.relation(emb.sparkSession, ivfAdcTopK(emb, idCol, vecCol, nCentroids,
+      probePred, k, m, ksub, dims, maxProbes, trainSteps, nprobe, trainOn, model,
+      "ivfPqTopK", residual = false)._2, LongType, Some("bucket"), "adc_dot")
 
   /** IVFADC with RESIDUAL encoding — the form the IVFADC literature
     * actually ships (Jégou et al. 2011), and the fix for the failure
@@ -805,76 +726,51 @@ object Similarity {
     * discipline as [[ivfPqTopK]]; the codebook seeds from the
     * residuals of the ksub lowest-id vectors (under their trained
     * buckets), mirroring [[pqCodebook]]'s rule so the oracle can
-    * state it. Returns (q_id, neighbor_id, bucket, adc_dot, rank)
-    * with adc_dot the constant-plus-residual estimate of ⟨q, v⟩.
+    * state it. EAGER, like [[ivfPqTopK]]: a local relation (q_id,
+    * neighbor_id, bucket, adc_dot, rank), ≤ k × probes rows, adc_dot
+    * the constant-plus-residual estimate of ⟨q, v⟩.
     */
   def ivfPqResidualTopK(emb: DataFrame, idCol: String, vecCol: String,
                         nCentroids: Int, probePred: Column, k: Int,
                         m: Int = 8, ksub: Int = 256, dims: Int = 64,
                         maxProbes: Long = 100000L, trainSteps: Int = 2,
-                        nprobe: Int = 3, model: DataFrame = null): DataFrame = {
+                        nprobe: Int = 3, model: DataFrame = null): DataFrame =
+    ProbeTopK.relation(emb.sparkSession, ivfAdcTopK(emb, idCol, vecCol, nCentroids,
+      probePred, k, m, ksub, dims, maxProbes, trainSteps, nprobe, null, model,
+      "ivfPqResidualTopK", residual = true)._2, LongType, Some("bucket"), "adc_dot")
+
+  /** The IVFADC ranking [[ivfPqTopK]], [[ivfPqResidualTopK]] and
+    * [[ivfPqRerankTopK]] share: an [[IvfPlan]], one ADC LUT per probe,
+    * candidates encoded on the fly. `residual` differs only in codebook
+    * seed (residuals), encode input (v − c_b) and score offset ⟨q, c_b⟩.
+    */
+  private def ivfAdcTopK(emb: DataFrame, idCol: String, vecCol: String,
+                         nCentroids: Int, probePred: Column, k: Int, m: Int,
+                         ksub: Int, dims: Int, maxProbes: Long, trainSteps: Int,
+                         nprobe: Int, trainOn: DataFrame, model: DataFrame,
+                         caller: String, residual: Boolean)
+      : (IvfPlan, Map[Long, Seq[ProbeTopK.Cand]]) = {
     require(m > 0 && dims % m == 0,
-      s"ivfPqResidualTopK: dims ($dims) must split evenly into m ($m) subspaces")
+      s"$caller: dims ($dims) must split evenly into m ($m) subspaces")
     val dsub = dims / m
-    val spark = emb.sparkSession
-    import spark.implicits._
-    val cent = Option(model).getOrElse(
-      trainedCentroids(emb, idCol, vecCol, nCentroids, trainSteps))
-      .select("cid", "cv").as[(Long, Array[Double])].collect().sortBy(_._1)
-    val centMap = cent.toMap
-    val asg = assignTo(prepared(emb, idCol, vecCol).select("vec_id", "v"),
-      cent.toIndexedSeq.toDF("cid", "cv"))
-    // residual codebook seed: the ksub lowest-id vectors' residuals
-    // under THEIR trained buckets (bounded collect: ksub × dims)
-    val seed = typed(emb.filter(col(idCol) < ksub), idCol, vecCol)
-      .toDF("vec_id", "v").join(asg, "vec_id")
-      .as[(Long, Array[Double], Long)].collect().sortBy(_._1)
-    require(seed.length == ksub,
-      s"residual codebook seeding needs vec ids 0..${ksub - 1} present")
-    val cb = Array.tabulate(m, ksub, dsub) { (mm, c, d) =>
-      val (_, v, b) = seed(c)
-      v(mm * dsub + d) - centMap(b)(mm * dsub + d)
+    val plan = ivfPlan(emb, idCol, vecCol, nCentroids, probePred, maxProbes,
+      trainSteps, nprobe, trainOn, model, caller, ProbeTopK.Collected, onAssignment = false)
+    val cm = if (residual) plan.cent.toMap else Map.empty[Long, Array[Double]]
+    def minus(v: Array[Double], c: Array[Double]) = Array.tabulate(v.length)(i => v(i) - c(i))
+    // a residual seed's bucket: nearestBuckets(v, cent, 1) is assignTo's
+    val cb = if (!residual) pqCodebook(emb, idCol, vecCol, m, ksub, dsub)
+      else pqCodebook(emb, idCol, vecCol, m, ksub, dsub, "residual",
+        v => minus(v, cm(nearestBuckets(v, plan.cent, 1).head)))
+    val luts = plan.probes.map(p => adcLutK(p._2, cb, m, ksub, dsub))
+    val top = ProbeTopK.topK(plan.candidates, plan.probes, k) { (id, b, r) =>
+      val v = r.getArray(2).toDoubleArray()
+      pqEncodeK(id, if (residual) minus(v, cm(b)) else v, cb, m, ksub, dsub)
+    } { (i, b, code) =>
+      // the exact ⟨q, c_b⟩ of the residual form
+      if (residual) dotK(plan.probes(i)._2, cm(b)) + adcSumK(luts(i), code, m)
+      else adcSumK(luts(i), code, m)
     }
-    val probeDs = typed(emb.filter(probePred), idCol, vecCol)
-    val nProbes = probeDs.count()
-    require(nProbes <= maxProbes,
-      s"ivfPqResidualTopK: probePred selected $nProbes probes (> $maxProbes); " +
-        "probes are collected and broadcast, so the predicate must pick " +
-        "a small probe set")
-    val probes = probeDs.collect()
-    val probePlan = probes.map { case (qid, qv) =>
-      val buckets = nearestBuckets(qv, cent, nprobe)
-      val qdotc = buckets.map(b => b -> dotK(qv, centMap(b))).toMap
-      (qid, buckets.toSet, qdotc, adcLutK(qv, cb, m, ksub, dsub))
-    }
-    val bcPlan = spark.sparkContext.broadcast(probePlan)
-    val bcCb = spark.sparkContext.broadcast(cb)
-    val bcCent = spark.sparkContext.broadcast(centMap)
-    val allowed = probePlan.flatMap(_._2).distinct.sorted
-    val cand = typed(emb, idCol, vecCol).toDF("vec_id", "v")
-      .join(asg.filter(col("bucket").isin(allowed: _*)), "vec_id")
-      .select(col("vec_id"), col("bucket"), col("v"))
-      .as[(Long, Long, Array[Double])]
-    val scored = cand.mapPartitions { rows =>
-      val plan = bcPlan.value
-      val cbv = bcCb.value
-      val cm = bcCent.value
-      rows.flatMap { case (id, bucket, v) =>
-        val cv = cm(bucket)
-        val r = Array.tabulate(v.length)(i => v(i) - cv(i))
-        val code = pqEncodeK(id, r, cbv, m, ksub, dsub)
-        plan.iterator.collect {
-          case (qid, bks, qdotc, lut) if qid != id && bks(bucket) =>
-            (qid, id, bucket, qdotc(bucket) + adcSumK(lut, code, m))
-        }
-      }
-    }.toDF("q_id", "neighbor_id", "bucket", "adc_dot")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("adc_dot").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("bucket"),
-        col("adc_dot"), col("rank").cast("long").as("rank"))
+    (plan, top)
   }
 
   /** IVFADC SHORTLIST + exact re-rank — the two-tier serving shape
@@ -893,7 +789,9 @@ object Similarity {
     * (tier 1, the ADC scan) + `shortlist` full-vector fetches by id
     * (tier 2, the re-rank) — the two-tier memory hierarchy that lets
     * a 100 TB index keep full vectors in cold storage and codes hot.
-    * Returns (q_id, neighbor_id, cos, rank) with cos EXACT.
+    * EAGER: both tiers are [[ProbeTopK.topK]] passes, the second keyed
+    * by each probe's shortlisted ids; a local relation (q_id,
+    * neighbor_id, cos, rank), ≤ k × probes rows, cos EXACT.
     */
   def ivfPqRerankTopK(emb: DataFrame, idCol: String, vecCol: String,
                       nCentroids: Int, probePred: Column, k: Int,
@@ -903,23 +801,16 @@ object Similarity {
                       model: DataFrame = null): DataFrame = {
     require(shortlist >= k,
       s"shortlist ($shortlist) must cover the requested top-k ($k)")
-    val spark = emb.sparkSession
-    graft.functions.GraftFunctions.register(spark)
-    val sl = ivfPqResidualTopK(emb, idCol, vecCol, nCentroids, probePred,
-        shortlist, m, ksub, dims, maxProbes, trainSteps, nprobe, model)
-      .select("q_id", "neighbor_id")
-    val pv = prepared(emb, idCol, vecCol)
-      .select(col("vec_id").cast("long").as("vec_id"), col("v"))
-    val scored = sl.join(pv.toDF("q_id", "qv"), "q_id")
-      .join(pv.toDF("neighbor_id", "nv"), "neighbor_id")
-      .withColumn("cos",
-        graft.functions.GraftFunctions.cosineSim(col("qv"), col("nv")))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    val (plan, sl) = ivfAdcTopK(emb, idCol, vecCol, nCentroids, probePred,
+      shortlist, m, ksub, dims, maxProbes, trainSteps, nprobe, null, model,
+      "ivfPqRerankTopK", residual = true)
+    val ids = sl.valuesIterator.flatMap(_.map(_._2)).toSeq.distinct.sorted
+    val rows = prepared(emb, idCol, vecCol).select(col("vec_id").cast("long").as("vec_id"), col("v"))
+      .filter(col("vec_id").isin(ids: _*)).select(col("vec_id"), col("vec_id"), col("v"))
+    val top = ProbeTopK.byCosine(rows, plan.probes.collect {
+      case (q, qv, _) if sl.contains(q) => (q, qv, sl(q).map(_._2).toArray) }, k)
+    ProbeTopK.relation(emb.sparkSession, top, LongType, None, "cos",
+      Set("cos").filter(_ => rows.schema("v").nullable))
   }
 
   /** Recall@k of the approximate ANN paths against the exact
@@ -943,17 +834,9 @@ object Similarity {
                 dims: Int = 64, model: DataFrame = null,
                 pqM: Int = 8): DataFrame = {
     // the exact baseline is the JOIN SIDE of every method row plus the
-    // n_exact denominator — 7 consumers. Its output is tiny by contract
-    // (≤ k × |probes| id pairs), but its PLAN is the full brute-force
-    // probe scan + rank window, and Spark re-evaluates it per consumer
-    // (no exchange reuse across the union's renamed branches): measured
-    // 7 scan+window executions per run at r19 head. Materialize it once
-    // — same localCheckpoint discipline as the dedup pair relations.
+    // n_exact denominator — 7 consumers — and a local relation: its
+    // brute-force pass runs once, when cosineTopK is called
     val exact = cosineTopK(emb, idCol, vecCol, probePred, k)
-      .select(col("q_id"), col("neighbor_id"))
-      .localCheckpoint(true)
-    val ivf = ivfTopK(emb, idCol, vecCol, nCentroids, probePred, k,
-        model = model)
       .select(col("q_id"), col("neighbor_id"))
     val pairs = lshPairs(emb, idCol, vecCol, nPlanes, nBands, threshold, dims)
     // LSH emits undirected prefiltered pairs — direct them both ways,
@@ -974,30 +857,25 @@ object Similarity {
       .select(col(idCol).cast("long").as("vec_id"))
     val lsh = directed.join(broadcast(probeIds), "vec_id")
       .withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
-      .select(col("vec_id").as("q_id"), col("neighbor_id"))
-    val pq = pqTopK(emb, idCol, vecCol, probePred, k, m = pqM, dims = dims)
-      .select(col("q_id"), col("neighbor_id"))
-    val ivfadc = ivfPqTopK(emb, idCol, vecCol, nCentroids, probePred, k,
-        m = pqM, dims = dims, model = model)
-      .select(col("q_id"), col("neighbor_id"))
-    val ivfadcRes = ivfPqResidualTopK(emb, idCol, vecCol, nCentroids,
-        probePred, k, m = pqM, dims = dims, model = model)
-      .select(col("q_id"), col("neighbor_id"))
-    val ivfadcRerank = ivfPqRerankTopK(emb, idCol, vecCol, nCentroids,
-        probePred, k, shortlist = 50, m = pqM, dims = dims, model = model)
-      .select(col("q_id"), col("neighbor_id"))
+      .withColumnRenamed("vec_id", "q_id")
     val nExact = exact.agg(count(lit(1)).as("n_exact"))
     def row(method: String, approx: DataFrame): DataFrame =
-      approx.join(exact, Seq("q_id", "neighbor_id"))
+      approx.select(col("q_id"), col("neighbor_id"))
+        .join(exact, Seq("q_id", "neighbor_id"))
         .agg(count(lit(1)).as("n_hits"))
         .crossJoin(nExact)
         .select(lit(method).as("method"), col("n_hits"), col("n_exact"),
           (col("n_hits").cast("double") / col("n_exact").cast("double"))
             .as("recall"))
-    row("ivf", ivf).unionByName(row("ivfadc", ivfadc))
-      .unionByName(row("ivfadc_res", ivfadcRes))
-      .unionByName(row("ivfadc_rerank", ivfadcRerank))
-      .unionByName(row("lsh", lsh)).unionByName(row("pq", pq))
+    row("ivf", ivfTopK(emb, idCol, vecCol, nCentroids, probePred, k, model = model))
+      .unionByName(row("ivfadc", ivfPqTopK(emb, idCol, vecCol, nCentroids,
+        probePred, k, m = pqM, dims = dims, model = model)))
+      .unionByName(row("ivfadc_res", ivfPqResidualTopK(emb, idCol, vecCol,
+        nCentroids, probePred, k, m = pqM, dims = dims, model = model)))
+      .unionByName(row("ivfadc_rerank", ivfPqRerankTopK(emb, idCol, vecCol,
+        nCentroids, probePred, k, shortlist = 50, m = pqM, dims = dims, model = model)))
+      .unionByName(row("lsh", lsh))
+      .unionByName(row("pq", pqTopK(emb, idCol, vecCol, probePred, k, m = pqM, dims = dims)))
   }
 
   /** Symmetric int8 quantization per vector — the storage/compute

@@ -1876,15 +1876,6 @@ object ExtensionQueries {
         .orderBy("q_id", "rank")
     },
 
-    /** ann_ivf_pq_m16 — IVFADC at 16 subspaces (16 one-byte codes =
-      * 16 B/vector, still 16× smaller than the float32 form): the
-      * MEASURED better point on the recall/bandwidth curve for this
-      * corpus — recall@5 ivfadc 0.54 → 0.70 at the gate scale (0.40 →
-      * 0.52 at sf0.1) for 2× the per-candidate bytes; m=32 reaches
-      * 0.78 but at 32 B/vector exceeds the ≤16 B budget, and the
-      * remaining gap to ivf's exact-cosine 0.88 stays quantization,
-      * not candidate loss (pq m=16 full-corpus ADC = 0.78). Same
-      * trained model, same seeding rule, dsub = 4. */
     /** ann_ivf_pq_rerank — the TWO-TIER serving shape: the residual
       * ADC ranking as a 50-deep SHORTLIST, re-ranked by exact cosine
       * ([[graft.ops.Similarity.ivfPqRerankTopK]]). What the clustered
@@ -1917,6 +1908,15 @@ object ExtensionQueries {
         .orderBy("q_id", "rank")
     },
 
+    /** ann_ivf_pq_m16 — IVFADC at 16 subspaces (16 one-byte codes =
+      * 16 B/vector, still 16× smaller than the float32 form): the
+      * MEASURED better point on the recall/bandwidth curve for this
+      * corpus — recall@5 ivfadc 0.54 → 0.70 at the gate scale (0.40 →
+      * 0.52 at sf0.1) for 2× the per-candidate bytes; m=32 reaches
+      * 0.78 but at 32 B/vector exceeds the ≤16 B budget, and the
+      * remaining gap to ivf's exact-cosine 0.88 stays quantization,
+      * not candidate loss (pq m=16 full-corpus ADC = 0.78). Same
+      * trained model, same seeding rule, dsub = 4. */
     Q("ann_ivf_pq_m16", annIvfPqSqlFor(16)) { (s, dir) =>
       Similarity.ivfPqTopK(table(s, dir, "embeddings"), "vec_id", "embedding",
           nCentroids = NCENT_IVF, col("vec_id").between(100, 109), k = 3,

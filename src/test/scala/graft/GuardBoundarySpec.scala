@@ -26,17 +26,27 @@ class GuardBoundarySpec extends SparkSpec {
       e.getMessage.contains("O(n"), e.getMessage)
   }
 
+  /** A probe guard one past its bound refuses naming its own entry
+    * point, and the shared `limit`-based guard still reports the exact
+    * count.
+    */
+  private def refusesOnePast(tag: String)(f: => Any): Unit = {
+    val e = intercept[IllegalArgumentException](f)
+    assert(e.getMessage.stripPrefix("requirement failed: ").startsWith(
+      s"$tag: probePred selected $nProbes probes (> ${nProbes - 1})"), e.getMessage)
+  }
+
   test("cosineTopK admits maxProbes and refuses maxProbes+1 probes") {
     assert(Similarity.cosineTopK(emb, "vec_id", "embedding", probe, k = 3,
       maxProbes = nProbes).count() > 0)
-    refuses("cosineTopK")(Similarity.cosineTopK(emb, "vec_id", "embedding",
+    refusesOnePast("cosineTopK")(Similarity.cosineTopK(emb, "vec_id", "embedding",
       probe, k = 3, maxProbes = nProbes - 1).count())
   }
 
   test("ivfTopK admits maxProbes and refuses maxProbes+1 probes") {
     assert(Similarity.ivfTopK(emb, "vec_id", "embedding", nCentroids = 4,
       probePred = probe, k = 3, maxProbes = nProbes).count() > 0)
-    refuses("ivfTopK")(Similarity.ivfTopK(emb, "vec_id", "embedding",
+    refusesOnePast("ivfTopK")(Similarity.ivfTopK(emb, "vec_id", "embedding",
       nCentroids = 4, probePred = probe, k = 3,
       maxProbes = nProbes - 1).count())
   }
@@ -44,7 +54,7 @@ class GuardBoundarySpec extends SparkSpec {
   test("pqTopK admits maxProbes and refuses maxProbes+1 probes") {
     assert(Similarity.pqTopK(emb, "vec_id", "embedding", probe, k = 3,
       m = 8, ksub = 16, maxProbes = nProbes).count() > 0)
-    refuses("pqTopK")(Similarity.pqTopK(emb, "vec_id", "embedding", probe,
+    refusesOnePast("pqTopK")(Similarity.pqTopK(emb, "vec_id", "embedding", probe,
       k = 3, m = 8, ksub = 16, maxProbes = nProbes - 1).count())
   }
 
@@ -52,7 +62,7 @@ class GuardBoundarySpec extends SparkSpec {
     assert(Similarity.ivfPqTopK(emb, "vec_id", "embedding", nCentroids = 4,
       probePred = probe, k = 3, m = 8, ksub = 16,
       maxProbes = nProbes).count() > 0)
-    refuses("ivfPqTopK")(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+    refusesOnePast("ivfPqTopK")(Similarity.ivfPqTopK(emb, "vec_id", "embedding",
       nCentroids = 4, probePred = probe, k = 3, m = 8, ksub = 16,
       maxProbes = nProbes - 1).count())
   }
@@ -61,7 +71,16 @@ class GuardBoundarySpec extends SparkSpec {
     assert(Similarity.ivfPqResidualTopK(emb, "vec_id", "embedding",
       nCentroids = 4, probePred = probe, k = 3, m = 8, ksub = 16,
       maxProbes = nProbes).count() > 0)
-    refuses("ivfPqResidualTopK")(Similarity.ivfPqResidualTopK(emb, "vec_id",
+    refusesOnePast("ivfPqResidualTopK")(Similarity.ivfPqResidualTopK(emb, "vec_id",
+      "embedding", nCentroids = 4, probePred = probe, k = 3, m = 8,
+      ksub = 16, maxProbes = nProbes - 1).count())
+  }
+
+  test("ivfPqRerankTopK admits maxProbes and refuses maxProbes+1 probes") {
+    assert(Similarity.ivfPqRerankTopK(emb, "vec_id", "embedding",
+      nCentroids = 4, probePred = probe, k = 3, m = 8, ksub = 16,
+      maxProbes = nProbes).count() > 0)
+    refusesOnePast("ivfPqRerankTopK")(Similarity.ivfPqRerankTopK(emb, "vec_id",
       "embedding", nCentroids = 4, probePred = probe, k = 3, m = 8,
       ksub = 16, maxProbes = nProbes - 1).count())
   }

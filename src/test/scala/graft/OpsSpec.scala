@@ -1006,6 +1006,73 @@ class OpsSpec extends SparkSpec {
     graft.ops.AnnIndex.ensurePq(spark, dir, m = 2, ksub = 16, dims = 6)
   }
 
+  test("ivfPqRerankTopK: a shortlist covering every candidate equals ivfTopK exactly") {
+    val emb = (0L until 60L)
+      .map(i => (i, Array.tabulate(6)(d => math.sin(i * 2.7 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val model = Similarity.trainedCentroids(emb, "vec_id", "embedding", 4, 2)
+    val probe = col("vec_id").between(20, 24)
+    // a shortlist of 60 holds every candidate a probe has in its nprobe
+    // buckets (at most the 59 other vectors), so the exact re-rank of
+    // the shortlist is ivfTopK's exact ranking of the same candidates
+    val exact = Similarity.ivfTopK(emb, "vec_id", "embedding",
+        nCentroids = 4, probe, k = 3, model = model)
+      .select("q_id", "neighbor_id", "cos", "rank")
+    val rerank = Similarity.ivfPqRerankTopK(emb, "vec_id", "embedding",
+      nCentroids = 4, probe, k = 3, shortlist = 60, m = 2, ksub = 16,
+      dims = 6, model = model)
+    assert(exact.count() == 15 && rerank.count() == 15)
+    assert(rerank.except(exact).count() == 0 && exact.except(rerank).count() == 0,
+      "a covering shortlist's re-rank must equal ivfTopK bit for bit")
+    val e = intercept[IllegalArgumentException](Similarity.ivfPqRerankTopK(emb,
+      "vec_id", "embedding", nCentroids = 4, probe, k = 3, shortlist = 2,
+      m = 2, ksub = 16, dims = 6, model = model))
+    assert(e.getMessage.contains("shortlist (2) must cover the requested top-k (3)"),
+      e.getMessage)
+  }
+
+  test("ANN top-k entry points: output column names, types and nullability") {
+    import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+    val emb = (0L until 60L)
+      .map(i => (i, Array.tabulate(6)(d => math.sin(i * 2.7 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val intEmb = emb.withColumn("vec_id", col("vec_id").cast("int"))
+    val probe = col("vec_id").between(20, 24)
+    val dir = java.nio.file.Files.createTempDirectory("ann_idx_schema").toString
+    graft.ops.AnnIndex.build(intEmb, "vec_id", "embedding", nCentroids = 4, dir = dir)
+    graft.ops.AnnIndex.buildPq(spark, dir, m = 2, ksub = 16, dims = 6)
+    def cols(df: org.apache.spark.sql.DataFrame): Seq[(String, DataType, Boolean)] =
+      df.schema.map(f => (f.name, f.dataType, f.nullable))
+    def ranked(id: DataType, key: Boolean, score: String,
+               nullable: Set[String] = Set.empty): Seq[(String, DataType, Boolean)] =
+      (Seq("q_id" -> id, "neighbor_id" -> id) ++ (if (key) Seq("bucket" -> LongType) else Nil) ++
+        Seq(score -> DoubleType, "rank" -> LongType)).map { case (n, t) => (n, t, nullable(n)) }
+    val L = LongType
+    assert(cols(Similarity.cosineTopK(emb, "vec_id", "embedding", probe, 3)) ==
+      ranked(L, key = false, "cos"))
+    // ivfTopK and the index probe keep the corpus id's type
+    for ((e, t) <- Seq(emb -> LongType, intEmb -> IntegerType))
+      assert(cols(Similarity.ivfTopK(e, "vec_id", "embedding", 4, probe, 3)) ==
+        ranked(t, key = true, "cos", Set("bucket", "cos")))
+    assert(cols(Similarity.ivfTopK(emb.withColumn("vec_id",
+        when(col("vec_id") >= 0, col("vec_id"))), "vec_id", "embedding", 4, probe, 3)) ==
+      ranked(L, key = true, "cos", Set("q_id", "neighbor_id", "bucket", "cos")))
+    assert(cols(graft.ops.AnnIndex.probe(spark, dir, probe, 3)) ==
+      ranked(IntegerType, key = true, "cos"))
+    assert(cols(Similarity.pqTopK(emb, "vec_id", "embedding", probe, 3,
+      m = 2, ksub = 16, dims = 6)) == ranked(L, key = false, "adc_dot"))
+    for (e <- Seq(emb, intEmb)) {
+      assert(cols(Similarity.ivfPqTopK(e, "vec_id", "embedding", 4, probe, 3,
+        m = 2, ksub = 16, dims = 6)) == ranked(L, key = true, "adc_dot"))
+      assert(cols(Similarity.ivfPqResidualTopK(e, "vec_id", "embedding", 4, probe, 3,
+        m = 2, ksub = 16, dims = 6)) == ranked(L, key = true, "adc_dot"))
+      assert(cols(Similarity.ivfPqRerankTopK(e, "vec_id", "embedding", 4, probe, 3,
+        m = 2, ksub = 16, dims = 6)) == ranked(L, key = false, "cos", Set("cos")))
+    }
+    assert(cols(graft.ops.AnnIndex.probePq(spark, dir, probe, 3, m = 2, ksub = 16)) ==
+      ranked(L, key = true, "adc_dot"))
+  }
+
   test("AnnIndex.append: no rebuild, only appended buckets written, probe exact") {
     val mk = (r: Range) => r
       .map(i => (i.toLong, Array.tabulate(6)(d => math.sin(i * 2.7 + d).toFloat)))
