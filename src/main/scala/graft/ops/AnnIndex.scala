@@ -36,31 +36,81 @@ object AnnIndex {
     * quantized Lloyd steps ([[Similarity.trainedCentroids]] — exact
     * BIGINT sums, so the trained model is bit-reproducible; training
     * balances bucket population, which is what keeps the bucket
-    * partitions hotspot-free at scale), then one corpus scan for
-    * assignment, one range shuffle + one partitioned write.
-    * trainedCentroids refuses a corpus smaller than nCentroids (an
-    * index with more centroids than vectors is a config error).
+    * partitions hotspot-free at scale), trained on the driver in one
+    * seed collect and one corpus pass per step; then one corpus pass
+    * assigns and range-sorts the assignments, one narrow pass over them
+    * checks the ids, and one partitioned write lays out the members.
+    *
+    * Refused loudly, naming `AnnIndex.build`, before `members/` is
+    * written: a corpus smaller than nCentroids (an index with more
+    * centroids than vectors is a config error), a NULL id, and an id
+    * that occurs twice (it would write one member row per occurrence).
     */
   def build(emb: DataFrame, idCol: String, vecCol: String,
             nCentroids: Int, dir: String, trainSteps: Int = 2): Unit = {
     require(nCentroids > 0, s"nCentroids must be positive, got $nCentroids")
     val spark = emb.sparkSession
     val all = Similarity.prepared(emb, idCol, vecCol)
-    Similarity.trainedCentroids(emb, idCol, vecCol, nCentroids, trainSteps)
+    Similarity.modelRelation(spark, Similarity.trainModel(emb, idCol, vecCol, nCentroids,
+        trainSteps, "AnnIndex.build"))
       .write.mode("overwrite").parquet(s"$dir/centroids")
     // assign against the STORED model (parquet round-trips doubles
-    // exactly), so the written assignments, a later append's
-    // assignments, and a probe's bucket ranking all read the one
-    // committed centroid relation. The corpus-by-centroid assignment
-    // aggregate is the dominant build cost — materialize it ONCE (the
-    // assignments write) and derive the members layout from the
-    // written relation, so the two outputs are also guaranteed
-    // consistent with each other
-    val asg = Similarity.assignTo(all.select("vec_id", "v"),
-      Layout.readTable(spark, s"$dir/centroids"))
-    Layout.writeRangeSorted(asg, s"$dir/assignments", nFiles = 8, keyCol = "vec_id")
+    // exactly) with append's kernel, so the written assignments, a
+    // later append's assignments, and a probe's bucket ranking all read
+    // the one committed centroid relation. The members layout derives
+    // from the written assignments, so the two outputs are consistent
+    // with each other
+    Layout.writeRangeSorted(bucketed(all, centroids(spark, dir)).select("vec_id", "bucket"),
+      s"$dir/assignments", nFiles = 8, keyCol = "vec_id")
+    requireDistinctIds(spark, s"$dir/assignments")
     Layout.readTable(spark, s"$dir/assignments").join(all, "vec_id")
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$dir/members")
+  }
+
+  /** `rows` (with the double vector `v`) and each vector's `bucket`
+    * against the model `cent`, by [[Similarity.bucketOf]]: the
+    * assignment of [[build]] and [[append]]. A NULL element reads as
+    * 0.0, as `cosine_sim` reads it.
+    */
+  private def bucketed(rows: DataFrame, cent: Array[(Long, Array[Double])]): DataFrame = {
+    val model = rows.sparkSession.sparkContext.broadcast(cent)
+    val bucketOf = udf((v: Seq[java.lang.Double]) => Similarity.bucketOf(
+      if (v == null) null else v.iterator.map(x => if (x == null) 0.0 else x.doubleValue).toArray,
+      model.value))
+    rows.withColumn("bucket", bucketOf(col("v")))
+  }
+
+  /** Refuses a build whose range-sorted assignments hold an id twice,
+    * in one narrow pass. A range-sorted write puts equal ids in one
+    * file, in ascending order, so a repeat is adjacent within the file;
+    * each partition also reports its (file, first id, last id) runs,
+    * and the driver finds a repeat at the border of two splits of one
+    * file. NULL ids never get here: the seed collect refuses them.
+    */
+  private def requireDistinctIds(spark: SparkSession, path: String): Unit = {
+    val rows = Layout.readTable(spark, path).select(input_file_name(), col("vec_id").cast("long"))
+    val parts = Layout.withRows(rows)(_.mapPartitions { it =>
+      val runs = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
+      var file: org.apache.spark.unsafe.types.UTF8String = null
+      var repeat = Option.empty[Long]
+      it.foreach { r =>
+        val id = r.getLong(1)
+        if (file != null && r.getUTF8String(0) == file) {
+          if (id == runs.last._3) repeat = repeat.orElse(Some(id))
+          runs(runs.length - 1) = runs.last.copy(_3 = id)
+        } else {
+          file = r.getUTF8String(0).clone()
+          runs += ((file.toString, id, id))
+        }
+      }
+      Iterator((repeat, runs.toArray))
+    }.collect())
+    val repeat = parts.flatMap(_._1).headOption.orElse(
+      parts.flatMap(_._2).groupBy(_._1).values.flatMap(_.sortBy(_._2).sliding(2)
+        .collectFirst { case Array(a, b) if a._3 == b._2 => b._2 }).headOption)
+    repeat.foreach(id => throw new IllegalArgumentException(
+      s"AnnIndex.build: vec_id $id occurs more than once — dedupe the corpus " +
+        "before indexing (each occurrence would write its own member row)"))
   }
 
   /** Append a batch of NEW vectors to an existing index WITHOUT a
@@ -93,20 +143,13 @@ object AnnIndex {
     // ONE pass over the batch, checkpointed, feeds every check and both
     // writes: each vector's bucket against the STORED trained model
     // (broadcast-sized by construction: the corpus is never re-read),
-    // with the exact build-time assignment arithmetic
-    // (Similarity.nearestBuckets(v, cent, 1) is assignTo's max_by for
-    // one vector; a NULL vector, whose every cosine is NULL, goes to the
-    // lowest cid), so an appended vector lands in the bucket a rebuild
-    // with these centroids would give it. The row count and the batch's
-    // distinct non-NULL ids (batch-bounded) ride on the checkpoint's
-    // action as an Observation
-    val cent = spark.sparkContext.broadcast(centroids(spark, dir))
-    val bucketOf = udf((v: Seq[Double]) =>
-      if (v == null) cent.value.map(_._1).min
-      else Similarity.nearestBuckets(v.toArray, cent.value, 1).head)
+    // with build's assignment kernel (Similarity.bucketOf, assignTo's
+    // max_by for one vector), so an appended vector lands in the bucket
+    // a rebuild with these centroids would give it. The row count and
+    // the batch's distinct non-NULL ids (batch-bounded) ride on the
+    // checkpoint's action as an Observation
     val sizes = new Observation()
-    val all = Similarity.prepared(batch, idCol, vecCol)
-      .withColumn("bucket", bucketOf(col("v")))
+    val all = bucketed(Similarity.prepared(batch, idCol, vecCol), centroids(spark, dir))
       .observe(sizes, count(lit(1)).as("n"), collect_set(col("vec_id")).as("ids"))
       .localCheckpoint(true)
     val nAll = sizes.get("n").asInstanceOf[Long]
@@ -114,9 +157,9 @@ object AnnIndex {
     // duplicate ids within the batch would write duplicate member rows
     // (a probe returns one neighbor at several ranks, exactly what the
     // retry state machine below exists to prevent) and skew the
-    // nPrior/nBatch retry counts. Same countDistinct discipline as
-    // build's centroid seeding (a NULL id counts as a duplicate),
-    // checked before either write.
+    // nPrior/nBatch retry counts. The batch's distinct non-NULL ids
+    // must number its rows (a NULL id counts as a duplicate), checked
+    // before either write — the two cases build refuses too.
     require(ids.size == nAll,
       "append: batch contains duplicate vec_ids — dedupe the batch " +
         "before indexing (duplicate member rows would corrupt probe ranks)")
@@ -184,7 +227,7 @@ object AnnIndex {
     */
   private def centroids(spark: SparkSession, dir: String): Array[(Long, Array[Double])] =
     Layout.collectRows(Layout.readTable(spark, s"$dir/centroids").select("cid", "cv"))
-      .map(r => (r.getLong(0), r.getArray(1).toDoubleArray()))
+      .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).toDoubleArray()))
 
   /** The full crash-recovery preamble every index entry point runs
     * before reading: restore a ROOT swap stranded by a crashed

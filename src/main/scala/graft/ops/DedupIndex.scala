@@ -87,19 +87,35 @@ object DedupIndex {
 
   /** Rebuild the `bloom/` sidecar from the durable `fps/` table — one
     * row (bloom: word→bits map, nbits, nkeys = the fps/ row count, read
-    * from its parquet footers). One distributed pass over the
-    * 8-byte-hash table, never over corpus text: at [[build]] and
-    * [[relayout]], and at [[append]]s that cross a size step or find
-    * the sidecar behind `fps/`.
+    * from its parquet footers). One typed pass over the 8-byte-hash
+    * table, never over corpus text: each partition sets its keys' bits
+    * ([[RuntimeFilter.bloomWords]], at most nbits/64 words) and the
+    * driver ORs the partitions' words. At [[build]] and [[relayout]],
+    * and at [[append]]s that cross a size step or find the sidecar
+    * behind `fps/`.
     */
   private def rebuildBloom(spark: SparkSession, path: String): Unit = {
-    val fps = Layout.readTable(spark, s"$path/fps")
     val nKeys = Layout.footerRowCount(spark, s"$path/fps")
     val nBits = bloomSizeBits(nKeys)
-    writeBloom(spark, path)(
-      RuntimeFilter.bloomBits(fps, "fp", nBits)
-        .withColumn("nbits", lit(nBits)).withColumn("nkeys", lit(nKeys)))
+    val words = Layout.withRows(Layout.readTable(spark, s"$path/fps").select("fp"))(
+      _.mapPartitions(rows => Iterator(RuntimeFilter.bloomWords(
+        rows.map(r => if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0))), nBits)))
+        .fold(Map.empty[Int, Long])(orWords))
+    writeBloom(spark, path)(sidecar(spark, words, nBits, nKeys))
   }
+
+  /** The one-row sidecar relation, in the schema [[RuntimeFilter.bloomBits]]' map gives it. */
+  private def sidecar(spark: SparkSession, words: Map[Int, Long], nBits: Int,
+                      nKeys: Long): DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.createDataFrame(java.util.List.of(org.apache.spark.sql.Row(words, nBits, nKeys)),
+      new StructType().add("bloom", MapType(IntegerType, LongType, valueContainsNull = true))
+        .add("nbits", IntegerType, nullable = false).add("nkeys", LongType, nullable = false))
+  }
+
+  /** Two word maps' bitwise OR. */
+  private def orWords(a: Map[Int, Long], b: Map[Int, Long]): Map[Int, Long] =
+    b.foldLeft(a) { case (m, (w, bits)) => m.updated(w, m.getOrElse(w, 0L) | bits) }
 
   /** The sidecar after `fps/` grew by the fingerprints `added`: while
     * the grown key count keeps the sidecar's size step,
@@ -116,9 +132,9 @@ object DedupIndex {
   private def mergeBloom(spark: SparkSession, path: String,
                          added: collection.Set[java.lang.Long]): Unit = {
     Layout.restoreIfCrashed(spark, s"$path/bloom")
-    val sidecar = Layout.readTable(spark, s"$path/bloom")
-    val stored = Option.when(sidecar.columns.contains("nkeys")) {
-      val r = Layout.collectRows(sidecar.select("bloom", "nbits", "nkeys")).head
+    val sidecarRows = Layout.readTable(spark, s"$path/bloom")
+    val stored = Option.when(sidecarRows.columns.contains("nkeys")) {
+      val r = Layout.collectRows(sidecarRows.select("bloom", "nbits", "nkeys")).head
       val (w, b) = (r.getMap(0).keyArray(), r.getMap(0).valueArray())
       ((0 until w.numElements()).map(i => w.getInt(i) -> b.getLong(i)).toMap,
         r.getInt(1), r.getLong(2) + added.size)
@@ -126,12 +142,8 @@ object DedupIndex {
     stored match {
       case Some((words, nBits, nKeys)) if bloomSizeBits(nKeys) == nBits &&
           nKeys == Layout.footerRowCount(spark, s"$path/fps") =>
-        val merged = RuntimeFilter.bloomWords(added, nBits).foldLeft(words) {
-          case (m, (w, bits)) => m.updated(w, m.getOrElse(w, 0L) | bits)
-        }
-        writeBloom(spark, path)(spark.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row(merged, nBits, nKeys)),
-          sidecar.select("bloom", "nbits", "nkeys").schema))
+        writeBloom(spark, path)(
+          sidecar(spark, orWords(words, RuntimeFilter.bloomWords(added, nBits)), nBits, nKeys))
       case _ => rebuildBloom(spark, path)
     }
   }

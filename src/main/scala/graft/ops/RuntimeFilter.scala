@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * bit_or / element_at — so the build is a map-side-combined aggregate
   * (the exchange carries at most nBits/64 (word, bits) rows) and the
   * probe is a codegen'd narrow filter; no driver-side collect, no UDF,
-  * no sketch object to serialize ([[bloomWords]], the same bits for a
-  * batch's keys held on the driver, is the one exception). This is the
+  * no sketch object to serialize ([[bloomWords]], the same bits for
+  * keys held in one task or on the driver, is the one exception). This is the
   * hand-rolled form of the engine-injected runtime filter
   * (spark.sql.optimizer.runtime.bloomFilter.*), usable where the
   * injection heuristics don't fire and portable to a pre-computed,
@@ -59,22 +59,22 @@ object RuntimeFilter {
         .as("bloom"))
   }
 
-  /** [[bloomBits]]' word → bits map over a bounded set of BIGINT keys
-    * held on the driver (one batch's), computed with Spark's own hash
-    * (seed-42 XXH64 over (i, key), the `xxhash64(i, key)` of
-    * [[posCol]]; a NULL key hashes i alone), so the bits are identical
-    * to [[bloomBits]]' and [[bloomProbe]] finds every key — without an
-    * aggregate query to plan and compile for a few thousand keys. A
-    * corpus-sized key set belongs to [[bloomBits]]' distributed
-    * aggregate.
+  /** [[bloomBits]]' word → bits map over BIGINT keys streamed through
+    * one JVM (a batch's on the driver, or one partition's in a task),
+    * computed with Spark's own hash (seed-42 XXH64 over (i, key), the
+    * `xxhash64(i, key)` of [[posCol]]; a NULL key hashes i alone), so
+    * the bits are identical to [[bloomBits]]' and [[bloomProbe]] finds
+    * every key — without an aggregate query to plan and compile. The
+    * map holds at most nBits/64 words whatever the key count; ORing two
+    * maps unions their key sets.
     */
-  private[ops] def bloomWords(keys: Iterable[java.lang.Long], nBits: Int,
+  private[ops] def bloomWords(keys: IterableOnce[java.lang.Long], nBits: Int,
                               nHashes: Int = 3): Map[Int, Long] = {
     require(nBits > 0 && nBits % 64 == 0, s"nBits must be a positive multiple of 64, got $nBits")
     require(nHashes > 0, s"nHashes must be positive, got $nHashes")
     import org.apache.spark.sql.catalyst.expressions.XXH64
     val words = scala.collection.mutable.LongMap.empty[Long]
-    for (key <- keys; i <- 0 until nHashes) {
+    for (key <- keys.iterator; i <- 0 until nHashes) {
       val seed = XXH64.hashInt(i, 42L)
       val h = if (key == null) seed else XXH64.hashLong(key, seed)
       // pmod(h, nBits) exactly as Spark's Pmod computes it on longs

@@ -274,11 +274,12 @@ object Similarity {
 
   /** IVF centroids after `steps` quantized Lloyd refinements of the
     * deterministic seed (the nCentroids lowest-id vectors) — the
-    * trained model [[ivfTopK]] and [[AnnIndex.build]] bucket with.
-    * Each step reassigns the corpus to the current centroids
-    * ([[assignTo]]) and recomputes every centroid as the
-    * PER-DIMENSION MEAN OF ITS MEMBERS' int8-QUANTIZED values
-    * ([[quantizeInt8]]): the sums are exact BIGINTs — no float
+    * trained model [[ivfTopK]] and [[AnnIndex.build]] bucket with, as
+    * a (cid, cv, cnrm) relation over [[trainModel]]'s driver-side
+    * model. Each step reassigns the corpus to the current centroids
+    * (the [[assignTo]] bucket of every vector) and recomputes every
+    * centroid as the PER-DIMENSION MEAN OF ITS MEMBERS' int8-QUANTIZED
+    * values ([[quantizeInt8]]): the sums are exact BIGINTs — no float
     * accumulation-order drift between engines or partitionings — and
     * the mean is one exact IEEE division, so the whole training run
     * is bit-reproducible and each step mirrors as one oracle CTE
@@ -287,44 +288,110 @@ object Similarity {
     *
     * A centroid whose bucket empties drops out of the model (its
     * vectors re-home deterministically next assignment) — same
-    * behavior both engines. Each refined centroid set is collected to
-    * the driver (bounded: nCentroids × dims doubles) and re-broadcast
-    * as a literal, so step t+1's plan never re-executes step t's
-    * aggregation. Cost: steps + 1 corpus scans — the one-time build
-    * pass an IVF index amortizes over every later probe.
-    * Returns (cid, cv, cnrm).
+    * behavior both engines. Cost: one seed collect and one corpus
+    * pass per step, each reduced on the driver — the one-time build
+    * work an IVF index amortizes over every later probe.
+    *
+    * Ids must be unique: a repeated id is outside the contract (the
+    * oracle assigns per id, the passes per row). A NULL id is refused.
     */
   def trainedCentroids(emb: DataFrame, idCol: String, vecCol: String,
-                       nCentroids: Int, steps: Int): DataFrame = {
-    val spark = emb.sparkSession
+                       nCentroids: Int, steps: Int): DataFrame =
+    modelRelation(emb.sparkSession,
+      trainModel(emb, idCol, vecCol, nCentroids, steps, "trainedCentroids"))
+
+  /** A driver-side model as the (cid, cv, cnrm) relation. */
+  private[ops] def modelRelation(spark: org.apache.spark.sql.SparkSession,
+                                 model: Array[(Long, Array[Double])]): DataFrame = {
     import spark.implicits._
-    val all = prepared(emb, idCol, vecCol).select("vec_id", "v")
-    val q = quantizeInt8(emb, idCol, vecCol).select("vec_id", "q")
-    // seed = the nCentroids lowest-id vectors (same rule as ivfAssign
-    // — any id space works); collected (bounded by nCentroids) so the
-    // refused case is loud instead of a silently-tiny model
-    val seed = all.orderBy(col("vec_id").asc).limit(nCentroids)
-      .as[(Long, Array[Double])].collect()
+    model.toIndexedSeq.toDF("cid", "cv").withColumn("cnrm", norm(col("cv")))
+  }
+
+  /** [[trainedCentroids]]' model on the driver, (cid, cv) in cid order.
+    * The seed is one bounded collect (the nCentroids lowest ids, NULLs
+    * first, so a NULL id anywhere is refused here, naming `caller`).
+    * Each Lloyd step is ONE typed pass over the projection
+    * (vec_id, v, q), q being [[quantizeInt8]]'s expression: a row goes
+    * to its [[bucketOf]] against the broadcast centroids, and each
+    * partition adds exact Long sums and counts per (bucket, dim) —
+    * nCentroids × dims of each — which the driver merges before one
+    * `s / cnt` division per dim. A NULL element of q counts but adds
+    * nothing, as SQL's count(1) and sum do; a NULL vector adds nothing.
+    * A NULL element of v scores as 0.0, as `cosine_sim` reads it, so a
+    * seed vector with one, or a dim that every member of a bucket
+    * leaves NULL (a NULL mean in SQL), trains as 0.0.
+    */
+  private[ops] def trainModel(emb: DataFrame, idCol: String, vecCol: String,
+                              nCentroids: Int, steps: Int,
+                              caller: String): Array[(Long, Array[Double])] = {
+    val all = prepared(emb, idCol, vecCol)
+    val seed = Layout.collectRows(all.orderBy(col("vec_id").asc).limit(nCentroids)
+        .select(col("vec_id").cast("long"), col("v")))
+    if (seed.exists(_.isNullAt(0))) throw new IllegalArgumentException(
+      s"$caller: the corpus has a NULL vec_id — every vector needs an id")
     require(seed.length == nCentroids,
-      s"trainedCentroids: corpus has only ${seed.length} vectors " +
+      s"$caller: corpus has only ${seed.length} vectors " +
         s"(< $nCentroids centroids)")
-    var cent = seed.toIndexedSeq.toDF("cid", "cv")
-    for (_ <- 1 to steps) {
-      val next = q.join(assignTo(all, cent), "vec_id")
-        .select(col("bucket").as("cid"),
-          posexplode(col("q")).as(Seq("dim", "x")))
-        .groupBy("cid", "dim")
-        .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
-        .select(col("cid"), col("dim"),
-          (col("s").cast("double") / col("cnt").cast("double")).as("c"))
-        .groupBy("cid")
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("c")))),
-          d => d.getField("c")).as("cv"))
-        .as[(Long, Array[Double])].collect().sortBy(_._1)
-      cent = next.toIndexedSeq.toDF("cid", "cv")
+    var cent = seed.map(r =>
+      (r.getLong(0), if (r.isNullAt(1)) null else r.getArray(1).toDoubleArray()))
+    val rows = all.select(col("v"), int8Of(col("v"), scale_of(col("v"))).as("q"))
+    for (_ <- 1 to steps if cent.nonEmpty) {
+      val bc = emb.sparkSession.sparkContext.broadcast(cent)
+      val sums = Layout.withRows(rows)(_.mapPartitions { it =>
+        val model = bc.value
+        val slot = model.map(_._1).zipWithIndex.toMap
+        val acc = new LloydSums(model.length)
+        it.filter(!_.isNullAt(1)).foreach { r =>
+          val v = if (r.isNullAt(0)) null else r.getArray(0).toDoubleArray()
+          acc.add(slot(bucketOf(v, model)), r.getArray(1))
+        }
+        Iterator(acc)
+      }.fold(new LloydSums(cent.length))(_ merge _))
+      cent = cent.indices.filter(sums.cnt(_).nonEmpty).map { i =>
+        val (s, n) = (sums.sum(i), sums.cnt(i))
+        (cent(i)._1, Array.tabulate(n.length)(d => s(d).toDouble / n(d).toDouble))
+      }.toArray
     }
-    cent.withColumn("cnrm", norm(col("cv")))
+    cent
+  }
+
+  /** Per (bucket slot, dim) exact sums and member counts of int8 codes. */
+  private final class LloydSums(k: Int) extends Serializable {
+    val sum: Array[Array[Long]] = Array.fill(k)(Array.emptyLongArray)
+    val cnt: Array[Array[Long]] = Array.fill(k)(Array.emptyLongArray)
+
+    private def widen(i: Int, n: Int): Unit = if (cnt(i).length < n) {
+      sum(i) = java.util.Arrays.copyOf(sum(i), n)
+      cnt(i) = java.util.Arrays.copyOf(cnt(i), n)
+    }
+
+    def add(i: Int, q: org.apache.spark.sql.catalyst.util.ArrayData): Unit = {
+      widen(i, q.numElements())
+      var d = 0
+      while (d < q.numElements()) {
+        if (!q.isNullAt(d)) sum(i)(d) += q.getLong(d)
+        cnt(i)(d) += 1; d += 1
+      }
+    }
+
+    def merge(o: LloydSums): LloydSums = {
+      for (i <- 0 until k) {
+        widen(i, o.cnt(i).length)
+        for (d <- o.cnt(i).indices) { sum(i)(d) += o.sum(i)(d); cnt(i)(d) += o.cnt(i)(d) }
+      }
+      this
+    }
+  }
+
+  /** The bucket of one vector: [[nearestBuckets]]`(v, cent, 1)` over the
+    * centroids with a vector, else the lowest cid — [[assignTo]]'s
+    * `max_by(cid, struct(ccos, -cid))` for one row, where a NULL
+    * cosine (a NULL vector on either side) ranks below every number.
+    * The assignment of index builds, appends and Lloyd steps.
+    */
+  private[ops] def bucketOf(v: Array[Double], cent: Array[(Long, Array[Double])]): Long = {
+    val scored = if (v == null) Array.empty[(Long, Array[Double])] else cent.filter(_._2 != null)
+    if (scored.isEmpty) cent.map(_._1).min else nearestBuckets(v, scored, 1).head
   }
 
   /** [[ivfAssign]] with `steps` Lloyd refinements of the seed
@@ -407,10 +474,10 @@ object Similarity {
     val spark = emb.sparkSession
     import spark.implicits._
     val all = prepared(emb, idCol, vecCol).select("vec_id", "v")
-    val cent = Option(model).getOrElse(
-      trainedCentroids(Option(trainOn).getOrElse(emb),
-        idCol, vecCol, nCentroids, trainSteps))
-      .select("cid", "cv").as[(Long, Array[Double])].collect().sortBy(_._1)
+    val cent = Option(model).map(_.select("cid", "cv").as[(Long, Array[Double])]
+        .collect().sortBy(_._1))
+      .getOrElse(trainModel(Option(trainOn).getOrElse(emb),
+        idCol, vecCol, nCentroids, trainSteps, caller))
     val asg = assignTo(all, cent.toIndexedSeq.toDF("cid", "cv"))
     val probes = probeVectors(
       if (onAssignment) asg.filter(probePred).select("vec_id").join(all, "vec_id")
@@ -891,17 +958,17 @@ object Similarity {
     * the identical expression; reconstruction error is bounded by
     * scale/254 per dimension (asserted in the spec, not the oracle).
     */
-  def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame = {
-    val q = when(col("scale") === 0.0,
-        transform(col("__v"), _ => lit(0L)))
-      .otherwise(transform(col("__v"),
-        x => floor(x / col("scale") * 127.0 + 0.5).cast("long")))
+  def quantizeInt8(emb: DataFrame, idCol: String, vecCol: String): DataFrame =
     emb.select(col(idCol).cast("long").as("vec_id"),
         asDouble(col(vecCol)).as("__v"))
       .withColumn("scale", scale_of(col("__v")))
-      .withColumn("q", q)
+      .withColumn("q", int8Of(col("__v"), col("scale")))
       .select("vec_id", "scale", "q")
-  }
+
+  /** [[quantizeInt8]]'s codes of the double vector `v` at `scale`. */
+  private def int8Of(v: Column, scale: Column): Column =
+    when(scale === 0.0, transform(v, _ => lit(0L)))
+      .otherwise(transform(v, x => floor(x / scale * 127.0 + 0.5).cast("long")))
 
   /** max|v_i| of a double-array column (0.0 for empty). */
   private def scale_of(v: Column): Column =

@@ -1161,6 +1161,21 @@ class OpsSpec extends SparkSpec {
     assert(e.getMessage.contains("duplicate"))
   }
 
+  test("AnnIndex.build refuses a NULL or repeated vec_id before writing members/") {
+    val rows = (0 until 40).map(i =>
+      (Option(i.toLong), Array.tabulate(6)(d => math.sin(i * 1.9 + d).toFloat)))
+    val withNull = rows.updated(17, (None, rows(17)._2)).toDF("vec_id", "embedding")
+    val withRepeat = (rows :+ ((Some(7L), rows(30)._2))).toDF("vec_id", "embedding")
+    for ((emb, what) <- Seq(withNull -> "NULL vec_id", withRepeat -> "vec_id 7 occurs")) {
+      val dir = java.nio.file.Files.createTempDirectory("ann_idx_ids").toString
+      val e = intercept[IllegalArgumentException](
+        graft.ops.AnnIndex.build(emb, "vec_id", "embedding", nCentroids = 4, dir = dir))
+      assert(e.getMessage.startsWith("AnnIndex.build:") && e.getMessage.contains(what),
+        e.getMessage)
+      assert(!new java.io.File(s"$dir/members").exists(), s"$what: members/ was written")
+    }
+  }
+
   test("AnnIndex.append buckets equal assignTo's: ties, zero and NaN vectors, -0.0") {
     val dir = java.nio.file.Files.createTempDirectory("ann_idx_parity").toString
     val base = (0 until 12).map(i =>

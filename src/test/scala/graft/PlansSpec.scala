@@ -734,6 +734,20 @@ class PlansSpec extends SparkSpec {
     assert(names.size <= 4, s"expected at most 4 SQL executions, got ${names.mkString(", ")}")
   }
 
+  test("AnnIndex.build: at most 6 SQL executions at two Lloyd steps, none an aggregate") {
+    val (dir, emb) = annIndexFixture(80L)
+    val runs = executions {
+      graft.ops.AnnIndex.build(emb, "vec_id", "embedding", nCentroids = 4, dir = dir)
+    }
+    val names = runs.map(_._1)
+    info(s"${names.size} SQL executions: ${names.mkString(", ")}")
+    assert(names.size <= 6, s"expected at most 6 SQL executions, got ${names.mkString(", ")}")
+    // the Lloyd steps and the assignment bucket each vector on its own
+    // against the broadcast model and reduce on the driver
+    val aggregates = runs.filter(_._2.executedPlan.toString.contains("Aggregate")).map(_._1)
+    assert(aggregates.isEmpty, s"no execution may aggregate, got ${aggregates.mkString(", ")}")
+  }
+
   test("AnnIndex.append: a fresh batch runs at most 5 SQL executions") {
     import org.apache.spark.sql.functions.col
     val (dir, emb) = annIndexFixture(80L)

@@ -91,6 +91,82 @@ class BatchPassSpec extends graft.SparkSpec {
       Seq(0L, 1L, 1L, 5L, 30L).toDF("gram")) == 3L + 2L + 2L + 2L)
   }
 
+  /** The SQL trainer `Similarity.trainModel` replaced, kept as its
+    * reference: the seed is the nCentroids lowest-id vectors, and each
+    * Lloyd step joins the int8 codes to the assignTo aggregate,
+    * posexplodes them and averages per (bucket, dim) in two group-bys.
+    */
+  private def sqlModel(emb: DataFrame, nCentroids: Int, steps: Int): Array[(Long, Array[Double])] = {
+    val all = Similarity.prepared(emb, "vec_id", "embedding").select("vec_id", "v")
+    val q = Similarity.quantizeInt8(emb, "vec_id", "embedding").select("vec_id", "q")
+    var cent = all.orderBy(col("vec_id").asc).limit(nCentroids)
+      .as[(Long, Array[Double])].collect()
+    for (_ <- 1 to steps) {
+      cent = q.join(Similarity.assignTo(all, cent.toIndexedSeq.toDF("cid", "cv")), "vec_id")
+        .select(col("bucket").as("cid"), posexplode(col("q")).as(Seq("dim", "x")))
+        .groupBy("cid", "dim")
+        .agg(sum(col("x")).as("s"), count(lit(1)).as("cnt"))
+        .select(col("cid"), col("dim"),
+          (col("s").cast("double") / col("cnt").cast("double")).as("c"))
+        .groupBy("cid")
+        .agg(transform(array_sort(collect_list(struct(col("dim"), col("c")))),
+          d => d.getField("c")).as("cv"))
+        .as[(Long, Array[Double])].collect().sortBy(_._1)
+    }
+    cent
+  }
+
+  /** 40 four-dim vectors with ids `10 * i` as `idType`: ids 0 and 10
+    * share a vector (tied centroids, so the second one's bucket empties
+    * at the first step), and the rows at positions `special` are a zero
+    * vector, a vector with a NaN, a NULL vector and a vector with a NULL
+    * element. The last is never a seed: the SQL trainer's seed collect
+    * refuses a NULL element.
+    */
+  private def annRows(idType: String, special: Seq[Int]): DataFrame = {
+    val vecs = (0 until 40).map { i =>
+      val j = if (i == 1) 0 else i
+      Seq.tabulate(4)(d => Option(math.sin(j * 1.7 + d * 0.9).toFloat))
+    }.toArray
+    val Seq(zero, nan, nul, hole) = special
+    vecs(zero) = Seq.fill(4)(Some(0.0f))
+    vecs(nan) = vecs(nan).updated(2, Some(Float.NaN))
+    vecs(nul) = null
+    vecs(hole) = vecs(hole).updated(1, None)
+    vecs.indices.map(i => (10L * i, vecs(i))).toDF("vec_id", "embedding")
+      .withColumn("vec_id", col("vec_id").cast(idType))
+  }
+
+  private def bits(m: Array[(Long, Array[Double])]): Seq[(Long, Seq[Long])] =
+    m.toSeq.map { case (c, v) =>
+      (c, Option(v).map(_.toSeq.map(java.lang.Double.doubleToRawLongBits)).orNull) }
+
+  test("trainModel equals the SQL Lloyd trainer bit for bit: ids, ties, special vectors, empty buckets") {
+    for (idType <- Seq("int", "bigint"); special <- Seq(Seq(20, 21, 22, 23), Seq(2, 3, 4, 25))) {
+      val emb = annRows(idType, special)
+      for (steps <- 0 to 2) {
+        val got = Similarity.trainModel(emb, "vec_id", "embedding", 6, steps, "test")
+        val want = sqlModel(emb, 6, steps)
+        assert(bits(got) == bits(want), s"$idType ids, special rows $special, $steps steps")
+        if (steps == 1) assert(got.length < 6, "the tied centroid's bucket must empty")
+      }
+    }
+  }
+
+  test("AnnIndex.build's assignments equal assignTo over the stored centroids") {
+    for (special <- Seq(Seq(20, 21, 22, 23), Seq(2, 3, 4, 25)); steps <- Seq(0, 2)) {
+      val emb = annRows("int", special)
+      val dir = java.nio.file.Files.createTempDirectory("ann_build_asg").toString
+      AnnIndex.build(emb, "vec_id", "embedding", 6, dir, trainSteps = steps)
+      val written = spark.read.parquet(s"$dir/assignments").as[(Int, Long)].collect().sorted
+      val want = Similarity.assignTo(
+          Similarity.prepared(emb, "vec_id", "embedding").select("vec_id", "v"),
+          spark.read.parquet(s"$dir/centroids"))
+        .as[(Int, Long)].collect().sorted
+      assert(written.toSeq == want.toSeq, s"special rows $special, $steps steps")
+    }
+  }
+
   test("append and the banded edge refuse more than BatchMaxRows rows, before any write") {
     val dir = java.nio.file.Files.createTempDirectory("dedup_idx_bound").toString
     DedupIndex.build(docs("bigint").filter(col("doc_id").isNotNull), "doc_id", "text", 3,
