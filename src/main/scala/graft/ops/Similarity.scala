@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -301,7 +301,7 @@ object Similarity {
       trainModel(emb, idCol, vecCol, nCentroids, steps, "trainedCentroids"))
 
   /** A driver-side model as the (cid, cv, cnrm) relation. */
-  private[ops] def modelRelation(spark: org.apache.spark.sql.SparkSession,
+  private[ops] def modelRelation(spark: SparkSession,
                                  model: Array[(Long, Array[Double])]): DataFrame = {
     import spark.implicits._
     model.toIndexedSeq.toDF("cid", "cv").withColumn("cnrm", norm(col("cv")))

@@ -42,7 +42,7 @@ public class CorpusSetupProbe {
   }
 
   /** Runs one step and prints its cost on one line. */
-  private static double[] measure(SparkSession spark, String label, Step step)
+  private static void measure(SparkSession spark, String label, Step step)
       throws Exception {
     spark.sparkContext().listenerBus().waitUntilEmpty();
     int jobs0 = jobs.get();
@@ -57,7 +57,6 @@ public class CorpusSetupProbe {
     int n = jobs.get() - jobs0;
     System.out.printf("%-22s wall_s %6.2f  cpu_s %6.2f  jobs %3d  compiles %4d%n",
         label, wall, cpu, n, compiles);
-    return new double[] {wall, cpu, n, compiles};
   }
 
   public static void main(String[] args) throws Exception {
